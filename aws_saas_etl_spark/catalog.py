@@ -72,7 +72,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 #: 2 stages of pure sizing overhead per arm; the ladder staleness report's
 #: 11 arms paid it 11×). A row count is a catalog statistic (parquet
 #: footers carry it; every warehouse serves it from table stats), so it is
-#: computed once per (applicationId, table) on the RAW scan — Spark's
+#: computed once per session per table on the RAW scan — Spark's
 #: count over an unmodified parquet scan reads footer metadata, no data
 #: pass — and cached. traced=False: cleared by clear_session_memos (cold
 #: reps re-pay the one metadata job) but not a stored-artifact regime the
@@ -89,12 +89,9 @@ def table_row_count(spark: SparkSession, sf_dir: str, name: str) -> int:
     value is identical to counting any row-preserving derivation of the
     scan, so swapping a ``df.count()`` sizing probe for this changes no
     query result."""
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir), name)
-    got = _ROW_COUNTS.get(key)
-    if got is None:
-        got = load_table(spark, sf_dir, name).count()
-        _ROW_COUNTS[key] = got
-    return got
+    return _ROW_COUNTS.get_or_build(
+        spark, sf_dir, name, build=lambda: load_table(spark, sf_dir, name).count()
+    )
 
 
 def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> DataFrame:

@@ -4,19 +4,37 @@ Several operators model a STORED artifact (content clusters, shingle
 table, fitted IVF centroids, manifest frames): in production each is
 written once and read back from object storage, so computing it once per
 session is the faithful serving shape. Every such cache is a
-``MemoDict`` — a plain dict that (a) registers itself in a module-level
-registry so ``session.clear_session_memos`` and the scale/plan tools can
-purge ALL stored state without hand-curating a list, and (b) records
-reads and writes while a ``track()`` context is active so ``bench.py``
-can DERIVE which registered queries are memo-backed (two-regime
-cold/warm cost) instead of maintaining the set by hand (VERDICT r7 #4:
-the hand-curated six missed ``ann_index_staleness_report`` and its
-10.4 s canary spread masqueraded as noise).
+``MemoDict`` and every lookup goes through one method::
+
+    memo.get_or_build(spark, sf_dir, *parts, build=lambda: ...)
+
+- **Key.** ``(applicationId, os.path.abspath(sf_dir), *parts)``. The
+  application id scopes an entry to one SparkContext (entries of a
+  stopped context can never be hit again, so nothing is invalidated);
+  ``abspath`` makes ``d``, ``d/`` and a relative spelling of ``d`` one
+  key. Variants of one corpus (the stale ``"base"`` fit, a gate name)
+  are separate ``parts``, never suffixes glued onto the path.
+- **Miss.** A private sentinel, not ``None``: a cached ``None`` (or any
+  falsy scalar) is a hit, and ``build()`` runs once per key per session.
+- **Tracing contract.** Each call makes exactly one ``self.get(key,
+  _MISS)`` and, on a miss only, one ``self[key] = value`` after
+  ``build()`` returns. Those two calls are what ``track()`` records and
+  what an external tracer may patch on the class to time builds (the
+  miss-get → set interval on one key).
+
+The registry lets ``session.clear_session_memos`` and the scale/plan
+tools purge ALL stored state without hand-curating a list, and
+``track()`` lets ``bench.py`` DERIVE which registered queries are
+memo-backed (two-regime cold/warm cost) instead of maintaining the set by
+hand (VERDICT r7 #4: the hand-curated six missed
+``ann_index_staleness_report`` and its 10.4 s canary spread masqueraded
+as noise).
 """
 
 from __future__ import annotations
 
-from typing import Any
+import os
+from typing import Any, Callable, Hashable
 
 _REGISTRY: list["MemoDict"] = []
 
@@ -48,6 +66,9 @@ class Touches(list):
         self.sizing: list[str] = []
 
 
+_MISS = object()
+
+
 class MemoDict(dict):
     """dict + self-registration + read/write tracing.
 
@@ -73,6 +94,18 @@ class MemoDict(dict):
                 _TRACE.append(self.name)
         elif _TRACE_SIZING is not None:
             _TRACE_SIZING.append(self.name)
+
+    def get_or_build(
+        self, spark, sf_dir: str, *parts: Hashable, build: Callable[[], Any]
+    ) -> Any:
+        """The session's artifact for ``(sf_dir, *parts)``, built by
+        ``build()`` on the first call and served from the memo after."""
+        key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir), *parts)
+        got = self.get(key, _MISS)
+        if got is _MISS:
+            got = build()
+            self[key] = got
+        return got
 
     def get(self, key: Any, default: Any = None) -> Any:
         self._trace()
@@ -107,17 +140,6 @@ def all_memos() -> list[MemoDict]:
 #: untraced (no cold/warm membership change; surfaced via the sizing
 #: trace), cleared with the session memos so cold reps re-pay it.
 _DERIVED_CUT_CACHE = MemoDict("derived_cut", traced=False)
-
-
-def derived_scalar_cached(spark, tag: tuple, build):
-    """Session-cache a bounded sizing SCALAR (an id cut, a doc count)
-    keyed by (applicationId, *tag); ``build()`` runs once per session."""
-    key = (spark.sparkContext.applicationId, *tag)
-    got = _DERIVED_CUT_CACHE.get(key)
-    if got is None:
-        got = build()
-        _DERIVED_CUT_CACHE[key] = got
-    return got
 
 
 class track:

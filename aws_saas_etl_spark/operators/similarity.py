@@ -16,7 +16,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from aws_saas_etl_spark.memo import MemoDict, derived_scalar_cached
+from aws_saas_etl_spark.memo import _DERIVED_CUT_CACHE, MemoDict
 from aws_saas_etl_spark.catalog import (
     ensure_parallelism,
     load_tables,
@@ -416,8 +416,7 @@ def ivf_fit_cells(emb: DataFrame, n_cells: int, iters: int = IVF_ITERS) -> DataF
     return centroids.localCheckpoint()
 
 
-#: Session-scoped cache of fitted IVF centroids, keyed by
-#: (applicationId, sf_dir, n_cells, iters). A trained ANN index is a
+#: Session-scoped cache of fitted IVF centroids. A trained ANN index is a
 #: stored artifact in any real vector store — queries pay probe cost,
 #: never re-fit — and the fit (6+ serial Lloyd stages against the
 #: ~0.4 s/stage local floor, with GC-sensitive wall clock) was the
@@ -431,13 +430,21 @@ def ivf_fit_cells(emb: DataFrame, n_cells: int, iters: int = IVF_ITERS) -> DataF
 _IVF_CACHE = MemoDict("ivf_centroids")
 
 
-def _ivf_centroids_cached(spark, sf_dir, emb, n_cells, iters=IVF_ITERS) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, n_cells, iters)
-    got = _IVF_CACHE.get(key)
-    if got is None:
-        got = ivf_fit_cells(emb, n_cells, iters)
-        _IVF_CACHE[key] = got
-    return got
+def _fit_slot(base: DataFrame | None) -> tuple[str, ...]:
+    """Key parts naming the corpus slice a fit was trained on: none for
+    the full corpus, ``"base"`` for the stale pre-arrival slice."""
+    return () if base is None else ("base",)
+
+
+def _ivf_centroids_cached(
+    spark, sf_dir, emb, n_cells, base: DataFrame | None = None
+) -> DataFrame:
+    """Centroids fitted on ``emb`` — or, given ``base``, on that
+    pre-arrival slice (the stale index, its own memo slot)."""
+    return _IVF_CACHE.get_or_build(
+        spark, sf_dir, *_fit_slot(base), n_cells,
+        build=lambda: ivf_fit_cells(emb if base is None else base, n_cells),
+    )
 
 
 #: Session cache of the corpus→cell ASSIGNMENT per fitted centroid table
@@ -447,29 +454,32 @@ def _ivf_centroids_cached(spark, sf_dir, emb, n_cells, iters=IVF_ITERS) -> DataF
 #: vector store persists both. Until r14 every serving path re-ran the
 #: corpus × n_cells assignment pass per query construction: the ladder
 #: staleness report paid it 4× per run (fresh IVF + fresh IVF-PQ against
-#: the full fit, stale IVF + stale IVF-PQ against the ::base fit), the
-#: recall report 2×. One checkpointed assignment per (applicationId,
-#: corpus key, n_cells, iters) serves every consumer; filtered corpora
-#: (deletion repair) filter the cached frame — assignment is a per-row
-#: argmax, so filtering rows after assigning ≡ assigning the filtered
-#: corpus (bit-identical values). traced=True: the cache is a stored-
-#: artifact regime, so its queries keep honest cold/warm rows and
-#: clear_session_memos re-pays the pass on cold reps.
+#: the full fit, stale IVF + stale IVF-PQ against the "base" fit), the
+#: recall report 2×. One checkpointed assignment per fit serves every
+#: consumer; filtered corpora (deletion repair) filter the cached
+#: frame — assignment is a per-row argmax, so filtering rows after
+#: assigning ≡ assigning the filtered corpus (bit-identical values).
+#: traced=True: the cache is a stored-artifact regime, so its queries
+#: keep honest cold/warm rows and clear_session_memos re-pays the pass
+#: on cold reps.
 _ASSIGN_CACHE = MemoDict("ivf_assignment")
 
 
-def _corpus_cells_cached(
-    spark, cache_key: str, emb: DataFrame, centroids: DataFrame, n_cells: int,
-    iters: int = IVF_ITERS,
-) -> DataFrame:
-    key = (spark.sparkContext.applicationId, cache_key, n_cells, iters)
-    got = _ASSIGN_CACHE.get(key)
-    if got is None:
-        got = _assign_cells(
+def _ivf_index_cached(
+    spark, sf_dir, emb: DataFrame, n_cells: int, base: DataFrame | None = None
+) -> tuple[DataFrame, DataFrame]:
+    """Both stored halves of the IVF index over ``emb``: the centroids
+    (see ``_ivf_centroids_cached``) and ``emb``'s corpus→cell assignment
+    against exactly those centroids. The assignment is keyed by its
+    fit's key parts, so it can never be stored beside another fit."""
+    centroids = _ivf_centroids_cached(spark, sf_dir, emb, n_cells, base)
+    cells = _ASSIGN_CACHE.get_or_build(
+        spark, sf_dir, *_fit_slot(base), n_cells,
+        build=lambda: _assign_cells(
             emb.select("vec_id", "embedding"), centroids
-        ).localCheckpoint()
-        _ASSIGN_CACHE[key] = got
-    return got
+        ).localCheckpoint(),
+    )
+    return centroids, cells
 
 
 def ann_ivf_topk(
@@ -517,8 +527,7 @@ def ann_ivf_topk(
         # on binary representation — an engine-neutral twin can't reproduce
         # that reliably (e.g. 25*0.1 rounds to 2 in Python, 3 in DuckDB).
         nprobe = max(2, -(-n_cells // IVF_NPROBE_DIV))
-    centroids = _ivf_centroids_cached(spark, sf_dir, emb, n_cells)
-    cells = _corpus_cells_cached(spark, sf_dir, emb, centroids, n_cells)
+    centroids, cells = _ivf_index_cached(spark, sf_dir, emb, n_cells)
     return _ivf_probe(emb, centroids, nprobe, k, corpus_cells=cells)
 
 
@@ -536,7 +545,7 @@ def _ivf_probe(
     plan the in-session fit does.
 
     ``corpus_cells`` (r14): an already-assigned (vec_id, embedding, cell)
-    frame — the session-cached invlists (``_corpus_cells_cached``).
+    frame — the session-cached invlists (``_ivf_index_cached``).
     Default None recomputes the assignment in-plan, which the store
     roundtrip keeps so its probe consumes ONLY what came back from
     storage (the memo-bypass convention)."""
@@ -675,12 +684,10 @@ def ann_ivf_incremental_append(spark, sf_dir: str, k: int = TOP_K) -> DataFrame:
     base = emb.where(F.col("vec_id") <= F.lit(cut))
     n_cells = ivf_cells_for(n_base)
     nprobe = max(2, -(-n_cells // IVF_NPROBE_DIV))
-    # distinct memo slot from the full-corpus fit (same helper — the
-    # "::base" suffix keys the stale index separately)
-    centroids = _ivf_centroids_cached(spark, f"{sf_dir}::base", base, n_cells)
-    # the FULL corpus assigned into the stale cells — the invlists of the
-    # stale index; shared with the stale IVF-PQ arm (r14)
-    cells = _corpus_cells_cached(spark, f"{sf_dir}::base", emb, centroids, n_cells)
+    # the stale fit (its own "base" memo slot) and the FULL corpus
+    # assigned into its cells — the invlists of the stale index; shared
+    # with the stale IVF-PQ arm (r14)
+    centroids, cells = _ivf_index_cached(spark, sf_dir, emb, n_cells, base)
     return _ivf_probe(emb, centroids, nprobe, k, corpus_cells=cells)
 
 
@@ -708,16 +715,14 @@ def ann_ivf_deletion_repair(spark, sf_dir: str, k: int = TOP_K) -> DataFrame:
     emb = ensure_parallelism(load_tables(spark, sf_dir).embeddings)
     n_cells = ivf_cells_for(table_row_count(spark, sf_dir, "embeddings"))
     nprobe = max(2, -(-n_cells // IVF_NPROBE_DIV))
-    # the stored index: same memo slot the batch query fit (fit sees the
-    # full corpus — deletions arrive AFTER the nightly fit)
-    centroids = _ivf_centroids_cached(spark, sf_dir, emb, n_cells)
+    # the stored index: same memo slots the batch query uses (fit sees
+    # the full corpus — deletions arrive AFTER the nightly fit)
+    centroids, cells = _ivf_index_cached(spark, sf_dir, emb, n_cells)
     surviving = emb.where(F.col("vec_id") % VEC_DELETION_MOD != 0)
     # postings repair = anti-join on the stored invlists (r14): assignment
     # is a per-row argmax, so filtering the cached assignment is
     # bit-identical to assigning the filtered corpus
-    cells = _corpus_cells_cached(spark, sf_dir, emb, centroids, n_cells).where(
-        F.col("vec_id") % VEC_DELETION_MOD != 0
-    )
+    cells = cells.where(F.col("vec_id") % VEC_DELETION_MOD != 0)
     return _ivf_probe(surviving, centroids, nprobe, k, corpus_cells=cells)
 
 
@@ -813,8 +818,7 @@ def ann_ivf_filtered_topk(spark, sf_dir: str, k: int = TOP_K) -> DataFrame:
     emb = ensure_parallelism(load_tables(spark, sf_dir).embeddings)
     n_cells = ivf_cells_for(table_row_count(spark, sf_dir, "embeddings"))
     nprobe = max(2, -(-n_cells // IVF_NPROBE_DIV))
-    centroids = _ivf_centroids_cached(spark, sf_dir, emb, n_cells)
-    cells = _corpus_cells_cached(spark, sf_dir, emb, centroids, n_cells)
+    centroids, cells = _ivf_index_cached(spark, sf_dir, emb, n_cells)
     return _ivf_filtered_serve(
         emb, centroids, nprobe, _filter_queries(emb), k, corpus_cells=cells
     )
@@ -931,11 +935,10 @@ def ann_filtered_switch_topk(
     q_post = qb.where(is_post).select(*q_cols)
     n_cells = ivf_cells_for(n)
     nprobe = max(2, -(-n_cells // IVF_NPROBE_DIV))
-    centroids = _ivf_centroids_cached(spark, sf_dir, emb, n_cells)
+    centroids, cells = _ivf_index_cached(spark, sf_dir, emb, n_cells)
     pre = _knn_filtered_serve(emb, q_pre, k).withColumn(
         "branch", F.lit("pre")
     )
-    cells = _corpus_cells_cached(spark, sf_dir, emb, centroids, n_cells)
     post = _ivf_filtered_serve(
         emb, centroids, nprobe, q_post, k, corpus_cells=cells
     ).withColumn("branch", F.lit("post"))
@@ -1120,16 +1123,12 @@ _TRUTH_CACHE = MemoDict("audit_truth_topk")
 
 
 def _truth_topk_cached(spark, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, TOP_K)
-    got = _TRUTH_CACHE.get(key)
-    if got is None:
-        got = (
-            knn_bruteforce(spark, sf_dir)
-            .select("query_id", "neighbor_id")
-            .localCheckpoint()
-        )
-        _TRUTH_CACHE[key] = got
-    return got
+    return _TRUTH_CACHE.get_or_build(
+        spark, sf_dir, TOP_K,
+        build=lambda: knn_bruteforce(spark, sf_dir)
+        .select("query_id", "neighbor_id")
+        .localCheckpoint(),
+    )
 
 
 def _hit_count_report(
@@ -1195,7 +1194,7 @@ def ann_ladder_staleness_report(spark, sf_dir: str) -> DataFrame:
     Scale shape: eleven already-bounded top-k frames (≤ queries × k
     rows) joined on bounded keys; every trained artifact comes from its
     session memo / stored table (the stale IVF-PQ arm reuses the SAME
-    ``::base`` fits as the per-rung appends), so the report costs
+    ``"base"`` fits as the per-rung appends), so the report costs
     nothing beyond the serving paths it audits. Measured at sf0.1:
     19.4 s cold (bench r10), 26.1 s cold / 26.0 s warm (r11 local, a
     +2-audit session) — the sum of eleven serving chains plus the two
@@ -1402,7 +1401,7 @@ def doc_lexical_topk_indexed(spark, sf_dir: str, k: int = TOP_K) -> DataFrame:
 #: READ of the frame: the indexed serve alone reads postings twice plus
 #: sizes (3 tokenize passes), the pruned form adds the df aggregate and
 #: the pruned sizes (5), and the hybrid-stored capstone re-built it
-#: beside them. One checkpoint per (applicationId, corpus); sizes
+#: beside them. One checkpoint per session per corpus; sizes
 #: re-derive from the checkpointed rows exactly like the store
 #: roundtrip's proven read-back derivation (tokens are distinct per
 #: doc, so n_tk IS the postings row count).
@@ -1413,23 +1412,18 @@ def _lexical_postings(spark, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """The token POSTINGS table (doc_id, token — one row per DISTINCT
     token per document) and the per-doc size table, from the session
     cache (see ``_POSTINGS_CACHE``)."""
-    import os
-
     from aws_saas_etl_spark.functions import text as T
 
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    postings = _POSTINGS_CACHE.get(key)
-    if postings is None:
+    def build() -> DataFrame:
         docs = ensure_parallelism(load_tables(spark, sf_dir).documents).na.drop(
             "any"
         )
         toks = docs.select(
             "doc_id", F.array_distinct(T.tokens("text")).alias("tk")
         ).where(F.size("tk") > 0)
-        postings = toks.select(
-            "doc_id", F.explode("tk").alias("token")
-        ).localCheckpoint()
-        _POSTINGS_CACHE[key] = postings
+        return toks.select("doc_id", F.explode("tk").alias("token")).localCheckpoint()
+
+    postings = _POSTINGS_CACHE.get_or_build(spark, sf_dir, build=build)
     # the store roundtrip's proven size derivation, over the checkpoint
     sizes = postings.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_tk"))
     return postings, sizes
@@ -1551,14 +1545,12 @@ def doc_lexical_topk_pruned(spark, sf_dir: str, k: int = TOP_K) -> DataFrame:
     candidate join inherits the indexed form's broadcast-query-postings
     shape with its worst fan-out amputated.
     """
-    import os
-
     postings, _ = _lexical_postings(spark, sf_dir)
     # corpus doc count over the postings id set — session-cached sizing
     # scalar (r14, VERDICT r13 #4)
-    n_docs = derived_scalar_cached(
-        spark, (os.path.abspath(sf_dir), "lex_ndocs"),
-        lambda: postings.select("doc_id").distinct().count(),
+    n_docs = _DERIVED_CUT_CACHE.get_or_build(
+        spark, sf_dir, "lex_ndocs",
+        build=lambda: postings.select("doc_id").distinct().count(),
     )
     hot = (
         postings.groupBy("token")
@@ -1608,8 +1600,8 @@ def doc_lexical_incremental_append(spark, sf_dir: str, k: int = TOP_K) -> DataFr
             ids.orderBy("doc_id").limit(n - n // 10).agg(F.max("doc_id")).first()[0]
         )
 
-    cut = derived_scalar_cached(
-        spark, (os.path.abspath(sf_dir), "lex_postings_cut"), _cut
+    cut = _DERIVED_CUT_CACHE.get_or_build(
+        spark, sf_dir, "lex_postings_cut", build=_cut
     )
     base = postings.where(F.col("doc_id") <= F.lit(cut))
     path = proc_dir("lex_postings_base", os.path.abspath(sf_dir), cut)
@@ -2212,13 +2204,15 @@ def _pq_fit_from_subs(subs: DataFrame) -> DataFrame:
     return cb.localCheckpoint()
 
 
-def _pq_codebooks_cached(spark, sf_dir: str, emb: DataFrame) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, PQ_M, PQ_K, PQ_ITERS)
-    got = _PQ_CACHE.get(key)
-    if got is None:
-        got = pq_fit_codebooks(emb)
-        _PQ_CACHE[key] = got
-    return got
+def _pq_codebooks_cached(
+    spark, sf_dir: str, emb: DataFrame, base: DataFrame | None = None
+) -> DataFrame:
+    """Codebooks fitted on ``emb`` — or, given ``base``, on that
+    pre-arrival slice (the stale codebooks, their own memo slot)."""
+    return _PQ_CACHE.get_or_build(
+        spark, sf_dir, *_fit_slot(base),
+        build=lambda: pq_fit_codebooks(emb if base is None else base),
+    )
 
 
 #: Session cache of the corpus CODE TABLE per fitted codebook (r14,
@@ -2227,11 +2221,11 @@ def _pq_codebooks_cached(spark, sf_dir: str, emb: DataFrame) -> DataFrame:
 #: n·M uint8 codes and never re-encodes the corpus per query; only this
 #: repo's every-construction re-encode (a corpus × M×K broadcast argmin
 #: window) re-paid it. One checkpointed (vec_id, m, code) table per
-#: (applicationId, codebook key) serves every consumer of that codebook:
+#: codebook serves every consumer of that codebook:
 #: the fresh codes feed ``ann_pq_adc_topk``, ``ann_ivfpq_topk``,
 #: ``ann_ivfpq_filtered_topk`` and the deletion repair (encoding is
 #: per-row, so filtering cached codes ≡ encoding the filtered corpus);
-#: the ``::base`` codes feed both stale arms (PQ and IVF-PQ appends).
+#: the ``"base"`` codes feed both stale arms (PQ and IVF-PQ appends).
 #: The store roundtrip keeps its in-plan re-encode from the STORED
 #: codebook (memo-bypass convention — its hash proves the storage leg).
 #: traced=True: stored-artifact regime, honest cold/warm rows, cleared
@@ -2239,17 +2233,21 @@ def _pq_codebooks_cached(spark, sf_dir: str, emb: DataFrame) -> DataFrame:
 _PQ_CODES_CACHE = MemoDict("pq_codes")
 
 
-def _pq_codes_cached(spark, cache_key: str, emb: DataFrame, cb: DataFrame) -> DataFrame:
-    key = (spark.sparkContext.applicationId, cache_key, PQ_M, PQ_K, PQ_ITERS)
-    got = _PQ_CODES_CACHE.get(key)
-    if got is None:
-        got = (
-            _pq_argmin(_pq_subvectors(emb), cb)
-            .select("vec_id", "m", "code")
-            .localCheckpoint()
-        )
-        _PQ_CODES_CACHE[key] = got
-    return got
+def _pq_index_cached(
+    spark, sf_dir: str, emb: DataFrame, base: DataFrame | None = None
+) -> tuple[DataFrame, DataFrame]:
+    """Both stored halves of the PQ index over ``emb``: the codebooks
+    (see ``_pq_codebooks_cached``) and ``emb``'s code table encoded with
+    exactly those codebooks. The code table is keyed by its codebook's
+    key parts, so it can never be stored beside another fit."""
+    cb = _pq_codebooks_cached(spark, sf_dir, emb, base)
+    codes = _PQ_CODES_CACHE.get_or_build(
+        spark, sf_dir, *_fit_slot(base),
+        build=lambda: _pq_argmin(_pq_subvectors(emb), cb)
+        .select("vec_id", "m", "code")
+        .localCheckpoint(),
+    )
+    return cb, codes
 
 
 def ann_pq_adc_topk(spark, sf_dir: str, k: int = TOP_K) -> DataFrame:
@@ -2276,8 +2274,7 @@ def ann_pq_adc_topk(spark, sf_dir: str, k: int = TOP_K) -> DataFrame:
     codebook is session-memoized like every trained artifact.
     """
     emb = ensure_parallelism(load_tables(spark, sf_dir).embeddings)
-    cb = _pq_codebooks_cached(spark, sf_dir, emb)
-    codes = _pq_codes_cached(spark, sf_dir, emb, cb)
+    cb, codes = _pq_index_cached(spark, sf_dir, emb)
     return _pq_adc_refined(emb, cb, k, codes=codes)
 
 
@@ -2290,7 +2287,7 @@ def _pq_adc_refined(
     in-session fit does (the ``_ivf_probe`` convention).
 
     ``codes`` (r14): an already-encoded (vec_id, m, code) table — the
-    session-cached stored codes (``_pq_codes_cached``). Default None
+    session-cached stored codes (``_pq_index_cached``). Default None
     re-encodes in-plan, which the store roundtrip keeps so its serve
     consumes ONLY codes derived from the stored codebook."""
     if codes is None:
@@ -2367,13 +2364,11 @@ def ann_ivfpq_topk(spark, sf_dir: str, k: int = TOP_K) -> DataFrame:
     emb = ensure_parallelism(load_tables(spark, sf_dir).embeddings)
     n_cells = ivf_cells_for(table_row_count(spark, sf_dir, "embeddings"))
     nprobe = max(2, -(-n_cells // IVF_NPROBE_DIV))
-    coarse = _ivf_centroids_cached(spark, sf_dir, emb, n_cells)
-    cb = _pq_codebooks_cached(spark, sf_dir, emb)
     # both persisted halves of the composed index, from their session
     # caches (r14): the SAME invlists ann_ivf_topk probes and the SAME
     # code table ann_pq_adc_topk scans
-    cells = _corpus_cells_cached(spark, sf_dir, emb, coarse, n_cells)
-    codes = _pq_codes_cached(spark, sf_dir, emb, cb)
+    coarse, cells = _ivf_index_cached(spark, sf_dir, emb, n_cells)
+    cb, codes = _pq_index_cached(spark, sf_dir, emb)
     return _ivfpq_serve(emb, coarse, nprobe, cb, k, corpus_cells=cells, codes=codes)
 
 
@@ -2393,8 +2388,8 @@ def _ivfpq_serve(
     ``_ivf_probe``/``_pq_adc_refined`` convention).
 
     ``corpus_cells`` / ``codes`` (r14): the session-cached invlists
-    (``_corpus_cells_cached``) and stored code table
-    (``_pq_codes_cached``) — the two persisted halves of an IVF-PQ
+    (``_ivf_index_cached``) and stored code table
+    (``_pq_index_cached``) — the two persisted halves of an IVF-PQ
     index. Defaults recompute in-plan."""
     if corpus_cells is None:
         corpus_cells = _assign_cells(emb.select("vec_id", "embedding"), coarse)
@@ -2483,7 +2478,7 @@ def ann_ivfpq_incremental_append(spark, sf_dir: str, k: int = TOP_K) -> DataFram
     vs the fresh composition is the composed-staleness quantity the
     ladder report bounds per-rung.
 
-    Both stale artifacts come from the SAME ``::base`` memo slots the
+    Both stale artifacts come from the SAME ``"base"`` memo slots the
     per-rung append queries use (one shared base fit, not a third), and
     everything downstream is the shared ``_ivfpq_serve`` plan. The twin
     composes the two proven stale chains: the IVF graph with
@@ -2499,13 +2494,11 @@ def ann_ivfpq_incremental_append(spark, sf_dir: str, k: int = TOP_K) -> DataFram
     base = emb.where(F.col("vec_id") <= F.lit(cut))
     n_cells = ivf_cells_for(n_base)
     nprobe = max(2, -(-n_cells // IVF_NPROBE_DIV))
-    coarse = _ivf_centroids_cached(spark, f"{sf_dir}::base", base, n_cells)
-    cb = _pq_codebooks_cached(spark, f"{sf_dir}::base", base)
     # the SAME stale invlists / stale code table the per-rung appends
     # serve from (r14) — one shared assignment + encode per session, not
     # a third copy of each
-    cells = _corpus_cells_cached(spark, f"{sf_dir}::base", emb, coarse, n_cells)
-    codes = _pq_codes_cached(spark, f"{sf_dir}::base", emb, cb)
+    coarse, cells = _ivf_index_cached(spark, sf_dir, emb, n_cells, base)
+    cb, codes = _pq_index_cached(spark, sf_dir, emb, base)
     return _ivfpq_serve(emb, coarse, nprobe, cb, k, corpus_cells=cells, codes=codes)
 
 
@@ -2534,12 +2527,12 @@ def ann_ivfpq_filtered_topk(spark, sf_dir: str, k: int = TOP_K) -> DataFrame:
     emb = ensure_parallelism(load_tables(spark, sf_dir).embeddings)
     n_cells = ivf_cells_for(table_row_count(spark, sf_dir, "embeddings"))
     nprobe = max(2, -(-n_cells // IVF_NPROBE_DIV))
-    coarse = _ivf_centroids_cached(spark, sf_dir, emb, n_cells)
     # session-cached invlists (r14) — the same fresh assignment every
     # serving path over this index probes
-    corpus_cells = _corpus_cells_cached(
-        spark, sf_dir, emb, coarse, n_cells
-    ).select(F.col("vec_id").alias("neighbor_id"), "cell")
+    coarse, corpus_cells = _ivf_index_cached(spark, sf_dir, emb, n_cells)
+    corpus_cells = corpus_cells.select(
+        F.col("vec_id").alias("neighbor_id"), "cell"
+    )
     q_w = Window.partitionBy("query_id").orderBy(F.desc("cell_sim"), F.asc("cell"))
     probe_cells = (
         emb.where(F.col("vec_id") < N_QUERY_VECS)
@@ -2559,12 +2552,10 @@ def ann_ivfpq_filtered_topk(spark, sf_dir: str, k: int = TOP_K) -> DataFrame:
         .where(F.col("probe_rank") <= nprobe)
         .select("query_id", "q_label", "cell")
     )
-    cb = _pq_codebooks_cached(spark, sf_dir, emb)
     # session-cached stored code table (r14) — the same fresh codes the
     # plain PQ and IVF-PQ paths scan
-    codes = _pq_codes_cached(spark, sf_dir, emb, cb).select(
-        F.col("vec_id").alias("neighbor_id"), "m", "code"
-    )
+    cb, codes = _pq_index_cached(spark, sf_dir, emb)
+    codes = codes.select(F.col("vec_id").alias("neighbor_id"), "m", "code")
     qsubs = _pq_subvectors(emb.where(F.col("vec_id") < N_QUERY_VECS)).select(
         F.col("vec_id").alias("query_id"), "m", "sub"
     )
@@ -2657,7 +2648,10 @@ def ann_ivfpq_residual_topk(spark, sf_dir: str, k: int = TOP_K) -> DataFrame:
     emb = ensure_parallelism(load_tables(spark, sf_dir).embeddings)
     n_cells = ivf_cells_for(table_row_count(spark, sf_dir, "embeddings"))
     nprobe = max(2, -(-n_cells // IVF_NPROBE_DIV))
-    coarse = _ivf_centroids_cached(spark, sf_dir, emb, n_cells)
+    # session-cached invlists (r14) — the same fresh assignment every
+    # serving path over this coarse index probes
+    coarse, assigned = _ivf_index_cached(spark, sf_dir, emb, n_cells)
+    assigned = assigned.select("vec_id", "cell")
     ncent = coarse.select(
         "cell",
         F.transform(
@@ -2671,11 +2665,6 @@ def ann_ivfpq_residual_topk(spark, sf_dir: str, k: int = TOP_K) -> DataFrame:
         / F.sqrt(dot(F.col("embedding"), F.col("embedding"))),
     )
     normed = emb.select("vec_id", unit.alias("u"))
-    # session-cached invlists (r14) — the same fresh assignment every
-    # serving path over this coarse index probes
-    assigned = _corpus_cells_cached(spark, sf_dir, emb, coarse, n_cells).select(
-        "vec_id", "cell"
-    )
     resid = (
         normed.join(assigned, "vec_id")
         .join(F.broadcast(ncent), "cell")
@@ -2686,27 +2675,21 @@ def ann_ivfpq_residual_topk(spark, sf_dir: str, k: int = TOP_K) -> DataFrame:
         )
     )
     rsubs = _subspace_slices(resid, "r", extra=("cell",))
-    key = (spark.sparkContext.applicationId, sf_dir, PQ_M, PQ_K, PQ_ITERS, "res")
-    cb = _PQ_RES_CACHE.get(key)
-    if cb is None:
-        cb = _pq_fit_from_subs(rsubs.select("vec_id", "m", "sub"))
-        _PQ_RES_CACHE[key] = cb
+    cb = _PQ_RES_CACHE.get_or_build(
+        spark, sf_dir, n_cells, "res",
+        build=lambda: _pq_fit_from_subs(rsubs.select("vec_id", "m", "sub")),
+    )
     # the residual code table, session-cached like every stored code
     # table (r14): per-(vec, m) argmin against the residual codebook +
     # the cell tag — what a residual-PQ store persists per vector
-    ckey = (
-        spark.sparkContext.applicationId, sf_dir, PQ_M, PQ_K, PQ_ITERS, "rescodes",
+    codes = _PQ_RES_CACHE.get_or_build(
+        spark, sf_dir, n_cells, "rescodes",
+        build=lambda: _pq_argmin(rsubs.select("vec_id", "m", "sub"), cb)
+        .select("vec_id", "m", "code")
+        .join(assigned, "vec_id")
+        .select(F.col("vec_id").alias("neighbor_id"), "cell", "m", "code")
+        .localCheckpoint(),
     )
-    codes = _PQ_RES_CACHE.get(ckey)
-    if codes is None:
-        codes = (
-            _pq_argmin(rsubs.select("vec_id", "m", "sub"), cb)
-            .select("vec_id", "m", "code")
-            .join(assigned, "vec_id")
-            .select(F.col("vec_id").alias("neighbor_id"), "cell", "m", "code")
-            .localCheckpoint()
-        )
-        _PQ_RES_CACHE[ckey] = codes
     q_w = Window.partitionBy("query_id").orderBy(F.desc("cell_sim"), F.asc("cell"))
     probe_cells = (
         emb.where(F.col("vec_id") < N_QUERY_VECS)
@@ -2844,10 +2827,10 @@ def ann_pq_incremental_append(spark, sf_dir: str, k: int = TOP_K) -> DataFrame:
     emb = ensure_parallelism(load_tables(spark, sf_dir).embeddings)
     cut = _append_cut(spark, sf_dir, emb)
     base = emb.where(F.col("vec_id") <= F.lit(cut))
-    cb = _pq_codebooks_cached(spark, f"{sf_dir}::base", base)
-    # the FULL corpus encoded with the stale codebooks — the stored code
-    # table of the stale index; shared with the stale IVF-PQ arm (r14)
-    codes = _pq_codes_cached(spark, f"{sf_dir}::base", emb, cb)
+    # the stale codebooks (their own "base" memo slot) and the FULL
+    # corpus encoded with them — the stored code table of the stale
+    # index; shared with the stale IVF-PQ arm (r14)
+    cb, codes = _pq_index_cached(spark, sf_dir, emb, base)
     return _pq_adc_refined(emb, cb, k, codes=codes)
 
 
@@ -2868,15 +2851,13 @@ def ann_pq_deletion_repair(spark, sf_dir: str, k: int = TOP_K) -> DataFrame:
     to survivors (``ANN_PQ_DELETION_SQL``).
     """
     emb = ensure_parallelism(load_tables(spark, sf_dir).embeddings)
-    cb = _pq_codebooks_cached(spark, sf_dir, emb)
+    cb, codes = _pq_index_cached(spark, sf_dir, emb)
     surviving = emb.where(F.col("vec_id") % VEC_DELETION_MOD != 0)
     # code-table repair = anti-join on the stored codes (r14): encoding
     # is per-row, so filtering the cached code table is bit-identical to
     # encoding the surviving corpus — the equivalence the docstring
     # documents, now executed as the stored-artifact anti-join it is
-    codes = _pq_codes_cached(spark, sf_dir, emb, cb).where(
-        F.col("vec_id") % VEC_DELETION_MOD != 0
-    )
+    codes = codes.where(F.col("vec_id") % VEC_DELETION_MOD != 0)
     return _pq_adc_refined(surviving, cb, k, codes=codes)
 
 
@@ -2996,22 +2977,19 @@ def _append_cut(spark, sf_dir: str, emb: DataFrame) -> int:
     smallest — an exact integer-rank cut (no float percentile), so both
     engines agree on which vectors are 'arrivals'. Derived once per
     session (see ``_APPEND_CUT_CACHE``)."""
-    import os
 
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    got = _APPEND_CUT_CACHE.get(key)
-    if got is None:
+    def build() -> int:
         n = table_row_count(spark, sf_dir, "embeddings")
         n_base = n - n // 10
-        got = (
+        return (
             emb.select("vec_id")
             .orderBy("vec_id")
             .limit(n_base)
             .agg(F.max("vec_id"))
             .first()[0]
         )
-        _APPEND_CUT_CACHE[key] = got
-    return got
+
+    return _APPEND_CUT_CACHE.get_or_build(spark, sf_dir, build=build)
 
 
 def ann_sq8_incremental_append(spark, sf_dir: str, k: int = TOP_K) -> DataFrame:

@@ -1093,20 +1093,16 @@ SUBSTR_DUP_K = 8  # token k-gram width for cross-document substring dedup
 #: and the funnel row), same regime as curation's _full_manifest:
 #: computed once per session, checkpointed (corpus rows × 5 narrow
 #: columns), consumed by the registered query and the funnel alike.
-from aws_saas_etl_spark.memo import MemoDict
+from aws_saas_etl_spark.memo import _DERIVED_CUT_CACHE, MemoDict
 
 _SPAN_CACHE = MemoDict("crossdoc_span")
 
 
 def _crossdoc_span_cached(spark, sf_dir: str) -> DataFrame:
-    import os
-
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir), SUBSTR_DUP_K)
-    got = _SPAN_CACHE.get(key)
-    if got is None:
-        got = _crossdoc_span_table(spark, sf_dir).localCheckpoint()
-        _SPAN_CACHE[key] = got
-    return got
+    return _SPAN_CACHE.get_or_build(
+        spark, sf_dir, SUBSTR_DUP_K,
+        build=lambda: _crossdoc_span_table(spark, sf_dir).localCheckpoint(),
+    )
 
 
 def doc_crossdoc_duplication(spark, sf_dir: str) -> DataFrame:
@@ -1355,11 +1351,7 @@ def span_gram_index_incremental(spark, sf_dir: str) -> DataFrame:
         n_base = n_docs - n_docs // 10
         return ids.orderBy("doc_id").limit(n_base).agg(F.max("doc_id")).first()[0]
 
-    from aws_saas_etl_spark.memo import derived_scalar_cached
-
-    cut = derived_scalar_cached(
-        spark, (os.path.abspath(sf_dir), "span_gram_cut"), _cut
-    )
+    cut = _DERIVED_CUT_CACHE.get_or_build(spark, sf_dir, "span_gram_cut", build=_cut)
     hist = grams.where(F.col("doc_id") <= F.lit(cut))
     path = proc_dir("span_gram_index", os.path.abspath(sf_dir), cut)
     hist.write.format("manifest_parquet").option("path", path).mode(
@@ -1654,13 +1646,7 @@ def bpe_staleness_report(
             .first()[0]
         )
 
-    import os
-
-    from aws_saas_etl_spark.memo import derived_scalar_cached
-
-    cut = derived_scalar_cached(
-        spark, (os.path.abspath(sf_dir), "bpe_stale_cut"), _cut
-    )
+    cut = _DERIVED_CUT_CACHE.get_or_build(spark, sf_dir, "bpe_stale_cut", build=_cut)
 
     fresh_rules = bpe_merges(docs, n_merges).localCheckpoint()
     stale_rules = bpe_merges(

@@ -24,6 +24,9 @@ SF_CORRECTNESS = "/root/testdata/sf0.01"
 
 
 def run_slow_enabled(config=None) -> bool:
+    """Whether the slow suites run. Without ``config`` (module import
+    time, e.g. a hypothesis budget) this reads the env var, which
+    ``pytest_configure`` sets when ``--runslow`` was given."""
     if os.environ.get("SPARK_GRAFT_RUN_SLOW"):
         return True
     if config is not None:
@@ -44,6 +47,8 @@ def pytest_addoption(parser):
 
 
 def pytest_configure(config):
+    if run_slow_enabled(config):
+        os.environ["SPARK_GRAFT_RUN_SLOW"] = "1"
     config.addinivalue_line(
         "markers",
         "slow: long-running opt-in suite (enable with --runslow or SPARK_GRAFT_RUN_SLOW=1)",

@@ -101,3 +101,109 @@ def test_sizing_caches_are_registered_untraced():
     for expected in ("table_row_counts", "append_cut"):
         assert expected in by_name, expected
         assert by_name[expected].traced is False, expected
+
+
+def _stub_spark(app_id: str):
+    """Just enough of a SparkSession for ``get_or_build``'s key."""
+    from types import SimpleNamespace
+
+    return SimpleNamespace(sparkContext=SimpleNamespace(applicationId=app_id))
+
+
+def test_get_or_build_normalizes_path_spellings(tmp_path, monkeypatch):
+    """``d``, ``d/`` and a relative spelling of ``d`` are one key: the
+    artifact is built once, not once per spelling."""
+    d = tmp_path / "sf"
+    d.mkdir()
+    monkeypatch.chdir(tmp_path)
+    m = memo.MemoDict("t_spelling")
+    spark = _stub_spark("app-spelling")
+    calls = []
+
+    def build():
+        calls.append(1)
+        return "artifact"
+
+    for spelling in (str(d), str(d) + "/", "sf", "./sf/"):
+        assert m.get_or_build(spark, spelling, "base", build=build) == "artifact"
+    assert len(calls) == 1
+    assert list(m) == [("app-spelling", str(d), "base")]
+    # another application id, or another part, is another artifact
+    m.get_or_build(_stub_spark("app-other"), str(d), "base", build=build)
+    m.get_or_build(spark, str(d), build=build)
+    assert len(calls) == 3
+
+
+def test_get_or_build_caches_none_and_traces_the_hit():
+    """A build that returns None runs once: the miss test is a sentinel,
+    not ``is None``. Each call makes one traced ``get``; only the miss
+    adds a ``set`` — the contract a tracer patching get/set relies on."""
+    m = memo.MemoDict("t_none")
+    spark = _stub_spark("app-none")
+    calls = []
+
+    def build():
+        calls.append(1)
+        return None
+
+    with memo.track() as cold:
+        assert m.get_or_build(spark, "/sf", build=build) is None
+    with memo.track() as warm:
+        assert m.get_or_build(spark, "/sf", build=build) is None
+    assert len(calls) == 1
+    assert cold == ["t_none", "t_none"]  # one get (miss) + one set
+    assert warm == ["t_none"]  # one get (hit), no set
+
+
+def test_assignment_and_codes_are_keyed_by_their_fit(monkeypatch):
+    """The IVF assignment and the PQ code table are stored under the key
+    of the fit they were encoded against: the fresh and the stale
+    ("base") fits each get their own assignment/codes, and a warm call
+    serves each with its own fit — never one fit's codes beside another's."""
+    from aws_saas_etl_spark.operators import similarity as S
+
+    class Frame:
+        """Stands in for a DataFrame; ``tag`` records its lineage."""
+
+        def __init__(self, tag):
+            self.tag = tag
+
+        def select(self, *cols):
+            return self
+
+        def localCheckpoint(self):
+            return self
+
+    monkeypatch.setattr(S, "ivf_fit_cells", lambda emb, n: Frame(("ivf", emb.tag, n)))
+    monkeypatch.setattr(S, "_assign_cells", lambda emb, c: Frame(("cells", emb.tag, c.tag)))
+    monkeypatch.setattr(S, "pq_fit_codebooks", lambda emb: Frame(("pq", emb.tag)))
+    monkeypatch.setattr(S, "_pq_subvectors", lambda emb: emb)
+    monkeypatch.setattr(S, "_pq_argmin", lambda subs, cb: Frame(("codes", subs.tag, cb.tag)))
+    app = "app-fit-keys"
+    spark = _stub_spark(app)
+    emb, base = Frame("emb"), Frame("base")
+    caches = (S._IVF_CACHE, S._ASSIGN_CACHE, S._PQ_CACHE, S._PQ_CODES_CACHE)
+    try:
+        for _ in range(2):  # cold, then warm
+            fresh = S._ivf_index_cached(spark, "/sf", emb, 4)
+            stale = S._ivf_index_cached(spark, "/sf/", emb, 4, base)
+            assert fresh[0].tag == ("ivf", "emb", 4)
+            assert fresh[1].tag == ("cells", "emb", fresh[0].tag)
+            assert stale[0].tag == ("ivf", "base", 4)
+            assert stale[1].tag == ("cells", "emb", stale[0].tag)
+            cb, codes = S._pq_index_cached(spark, "/sf", emb)
+            scb, scodes = S._pq_index_cached(spark, "/sf/../sf", emb, base)
+            assert codes.tag == ("codes", "emb", cb.tag) == ("codes", "emb", ("pq", "emb"))
+            assert scodes.tag == ("codes", "emb", scb.tag) == ("codes", "emb", ("pq", "base"))
+
+        def keys(cache):
+            return {k for k in cache if k[0] == app}
+
+        assert keys(S._ASSIGN_CACHE) == keys(S._IVF_CACHE)
+        assert len(keys(S._IVF_CACHE)) == 2
+        assert keys(S._PQ_CODES_CACHE) == keys(S._PQ_CACHE)
+        assert len(keys(S._PQ_CACHE)) == 2
+    finally:
+        for cache in caches:
+            for k in [k for k in cache if k[0] == app]:
+                del cache[k]

@@ -91,6 +91,21 @@ SMOKE_QUERIES = [
     "csv_roundtrip_stats",
     "supplier_pagerank",
     "stream_session_stats",
+    # session-memo paths the list above leaves unexercised: the residual
+    # PQ codebook and codes, lexical postings and a derived sizing cut,
+    # the manifest's per-gate sets, the standalone span table, the base
+    # cluster labels, the base verdicts/manifest and the doc delta cut,
+    # the audit ground truth, and the stale ("base") IVF fit, assignment
+    # and append cut
+    "ann_ivfpq_residual_topk",
+    "doc_lexical_topk_pruned",
+    "training_manifest_full_pipeline",
+    "manifest_gateset_version_diff",
+    "doc_crossdoc_duplication",
+    "dedup_clusters_incremental_merge",
+    "training_manifest_incremental",
+    "ann_index_staleness_report",
+    "ann_ivf_incremental_append",
 ]
 
 

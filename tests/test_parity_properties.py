@@ -47,11 +47,9 @@ _money = st.one_of(
 # the final tree). Generation stays derandomized in both regimes, and the
 # fast budget's examples are a PREFIX of the slow budget's (same seed), so
 # the default run never explores inputs the full run doesn't.
-import os as _os
+from tests.conftest import run_slow_enabled  # noqa: E402
 
-_FULL_BUDGET = bool(
-    _os.environ.get("SPARK_GRAFT_RUN_SLOW")
-) or "--runslow" in _os.sys.argv
+_FULL_BUDGET = run_slow_enabled()
 
 _SETTINGS = dict(
     max_examples=20 if _FULL_BUDGET else 3,
