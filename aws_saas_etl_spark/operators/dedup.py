@@ -1101,6 +1101,8 @@ def cluster_store_roundtrip(spark, sf_dir: str) -> DataFrame:
     in object storage between batches; only the delta's pair space is
     ever recomputed.
     """
+    import os
+
     from aws_saas_etl_spark.sources.custom import (
         proc_dir,
         read_manifest_parquet,
@@ -1112,7 +1114,7 @@ def cluster_store_roundtrip(spark, sf_dir: str) -> DataFrame:
     tagged = _tag_arrivals(sh)
     base_labels = _base_assignment(spark, sf_dir)
 
-    path = proc_dir("cluster_store", sf_dir)
+    path = proc_dir("cluster_store", os.path.abspath(sf_dir))
     base_labels.write.format("manifest_parquet").option("path", path).mode(
         "overwrite"
     ).save()

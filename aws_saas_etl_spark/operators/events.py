@@ -732,7 +732,7 @@ def events_partition_pruned_rollup(spark, sf_dir: str) -> DataFrame:
     from aws_saas_etl_spark.sources.io import write_partitioned
 
     ev = load_tables(spark, sf_dir).events.na.drop(subset=["ts"])
-    path = proc_dir("events_by_date", sf_dir)
+    path = proc_dir("events_by_date", os.path.abspath(sf_dir))
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         write_partitioned(
             ev.select(

@@ -1,16 +1,30 @@
 """Similarity search over the ``embeddings`` table (SURVEY §2b).
 
-- Brute-force cosine top-k: the exact baseline. Query set broadcast, one
-  pass over the corpus, per-query top-k via window — O(corpus × queries)
-  but embarrassingly parallel and shuffle-light (only (query, k) rows move).
-- LSH-bucketed ANN: the 100 TB scale path. Deterministic random-hyperplane
-  signatures bucket the corpus; search touches only colliding buckets.
+- Brute-force cosine top-k (``knn_bruteforce``): the exact baseline and
+  the ground truth every approximate rung is audited against.
+- LSH-bucketed ANN (``ann_lsh_topk``): data-oblivious hyperplane buckets.
+- The ANN ladder — IVF, SQ8, PQ, IVF-PQ (plain, filtered, residual) and
+  BQ — with its store / append / deletion lifecycle queries.
+
+Every ANN rung is one filter-and-refine pipeline, and each stage is
+written once (beside ``ivf_cells_for``); a new rung composes them:
+
+1. probe — ``_probe_cells`` routes each query to its ``ivf_nprobe_for``
+   nearest IVF cells; candidates are the vectors stored in those cells.
+   ``_same_label`` is the filtered-search post-filter on candidate pairs.
+2. shortlist — rank candidates by a cheap code-space score and keep a
+   refine budget per query: ``_adc_table`` + ``_adc_shortlist`` for PQ
+   codes (exact integer ADC sums), ``_scan_shortlist`` for SQ8/BQ scans.
+3. refine — ``_exact_rerank`` re-ranks the shortlist by exact float
+   cosine and keeps the top k.
 
 All vector math is built-in (``zip_with`` + ``aggregate``) — stays in the
 JVM, no Python per row.
 """
 
 from __future__ import annotations
+
+import os
 
 import numpy as np
 from pyspark.sql import Column, DataFrame, Window
@@ -78,9 +92,7 @@ def knn_bruteforce(spark, sf_dir: str, k: int = TOP_K) -> DataFrame:
     # r13: norms precomputed per row, not per pair (see _assign_cells —
     # measured 0.66 → 0.28 s best-of-3 on the inflated knn shape, values
     # bit-identical: same dot/(q_n·c_n) expression graph)
-    queries = emb.where(F.col("vec_id") < N_QUERY_VECS).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
-    ).withColumn("q_n", norm(F.col("q_emb")))
+    queries = _query_vectors(emb).withColumn("q_n", norm(F.col("q_emb")))
     corpus = emb.select(
         F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_emb")
     ).withColumn("c_n", norm(F.col("c_emb")))
@@ -261,6 +273,146 @@ def ivf_cells_for(n_rows: int) -> int:
     import math
 
     return max(2, min(IVF_CELLS_MAX, math.ceil(math.sqrt(n_rows))))
+
+
+def ivf_nprobe_for(n_cells: int) -> int:
+    """Cells probed per query: ceil(n_cells/10), at least 2.
+
+    Integer ceil via -(-n // d): Python's round() is half-even ON THE
+    DOUBLE n_cells*0.1, whose nearness to .5 depends on binary
+    representation — an engine-neutral twin can't reproduce that
+    reliably (e.g. 25*0.1 rounds to 2 in Python, 3 in DuckDB). The
+    oracle's form is ``greatest(2, (n + 9) // 10)``."""
+    return max(2, -(-n_cells // IVF_NPROBE_DIV))
+
+
+# --- The shared ANN serving stages: probe → shortlist → refine ------------
+
+
+def _query_vectors(emb: DataFrame) -> DataFrame:
+    """The deterministic demo query set as (query_id, q_emb)."""
+    return emb.where(F.col("vec_id") < N_QUERY_VECS).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
+    )
+
+
+def _probe_cells(queries: DataFrame, centroids: DataFrame, nprobe: int) -> DataFrame:
+    """Probe stage: route each query (query_id, q_emb, ...) to its
+    ``nprobe`` nearest cells by cosine, ties to the lower cell id. Returns
+    the query's columns plus ``q_n`` and ``cell``, one row per probed
+    (query, cell). r13: norms are per row (the _assign_cells
+    measurement) — query rows and broadcast centroids each carry theirs
+    once, and every cosine keeps the identical dot/(n_a·n_b) graph."""
+    queries = queries.withColumn("q_n", norm(F.col("q_emb")))
+    cols = queries.columns
+    cents = centroids.withColumn("_cn", norm(F.col("centroid")))
+    q_w = Window.partitionBy("query_id").orderBy(F.desc("cell_sim"), F.asc("cell"))
+    return (
+        queries.crossJoin(F.broadcast(cents))
+        .select(
+            *cols,
+            "cell",
+            (
+                dot(F.col("q_emb"), F.col("centroid"))
+                / (F.col("q_n") * F.col("_cn"))
+            ).alias("cell_sim"),
+        )
+        .withColumn("probe_rank", F.row_number().over(q_w))
+        .where(F.col("probe_rank") <= nprobe)
+        .select(*cols, "cell")
+    )
+
+
+def _same_label(cands: DataFrame, emb: DataFrame) -> DataFrame:
+    """Filtered-search post-filter on candidate pairs: keep the pairs
+    whose neighbor carries the query's ``q_label``, adding the
+    neighbor's ``label``. Applied before any shortlist, so the refine
+    budget is spent only on matching candidates — filtering after the
+    shortlist would let non-matching vectors crowd out true results (the
+    classic filtered-ANN recall bug)."""
+    labels = emb.select(F.col("vec_id").alias("neighbor_id"), "label")
+    return cands.join(labels, "neighbor_id").where(
+        F.col("label") == F.col("q_label")
+    )
+
+
+def _adc_table(qsubs: DataFrame, cb: DataFrame) -> DataFrame:
+    """Shortlist stage, PQ form: the per-query ADC distance table. From
+    query subvectors (vec_id[, cell], m, sub) and a codebook, one
+    (query_id[, cell], m, code) row per codeword holding
+    floor(PQ_QUANT·‖sub − codeword‖²) as BIGINT, so every ADC distance
+    is an exact integer sum."""
+    keys = [c for c in qsubs.columns if c not in ("vec_id", "sub")]
+    return qsubs.join(F.broadcast(cb), "m").select(
+        F.col("vec_id").alias("query_id"),
+        *keys,
+        "code",
+        F.floor(_l2sq(F.col("sub"), F.col("centroid")) * F.lit(float(PQ_QUANT)))
+        .cast("long")
+        .alias("dint"),
+    )
+
+
+def _adc_shortlist(pairs: DataFrame, *carry: str) -> DataFrame:
+    """Shortlist stage, PQ form: sum each (query, neighbor)'s table
+    entries (``pairs`` holds one ``dint`` row per subspace) into its ADC
+    distance and keep the PQ_REFINE nearest per query, ties to the lower
+    neighbor id. ``carry`` columns ride along to the refine."""
+    adc_w = Window.partitionBy("query_id").orderBy(
+        F.asc("adc_dist"), F.asc("neighbor_id")
+    )
+    return (
+        pairs.groupBy("query_id", "neighbor_id", *carry)
+        .agg(F.sum("dint").alias("adc_dist"))
+        .where(F.col("neighbor_id") != F.col("query_id"))
+        .withColumn("adc_rank", F.row_number().over(adc_w))
+        .where(F.col("adc_rank") <= PQ_REFINE)
+    )
+
+
+def _scan_shortlist(
+    corpus: DataFrame, queries: DataFrame, score: Column, order: Column, n: int
+) -> DataFrame:
+    """Shortlist stage, scan form (SQ8 / BQ): score every (broadcast
+    query, corpus code row) pair with a cheap code-space ``score`` and
+    keep the ``n`` best per query by ``order``, ties to the lower
+    neighbor id."""
+    short_w = Window.partitionBy("query_id").orderBy(order, F.asc("neighbor_id"))
+    return (
+        corpus.crossJoin(F.broadcast(queries))
+        .where(F.col("neighbor_id") != F.col("query_id"))
+        .select("query_id", "neighbor_id", score)
+        .withColumn("short_rank", F.row_number().over(short_w))
+        .where(F.col("short_rank") <= n)
+    )
+
+
+def _exact_rerank(
+    emb: DataFrame, shortlist: DataFrame, k: int, *carry: str
+) -> DataFrame:
+    """Refine stage (FAISS's "refine"): re-rank a (query_id, neighbor_id,
+    *carry) shortlist by exact float cosine against ``emb``'s vectors and
+    keep the top k, ties to the lower neighbor id. Per query this is a
+    bounded shortlist-row join, never a corpus scan."""
+    nbrs = emb.select(
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_emb")
+    )
+    ref_w = Window.partitionBy("query_id").orderBy(
+        F.desc("cos_sim"), F.asc("neighbor_id")
+    )
+    return (
+        shortlist.join(nbrs, "neighbor_id")
+        .join(F.broadcast(_query_vectors(emb)), "query_id")
+        .select(
+            "query_id",
+            "neighbor_id",
+            *carry,
+            F.round(cosine(F.col("q_emb"), F.col("c_emb")), 6).alias("cos_sim"),
+        )
+        .withColumn("rank", F.row_number().over(ref_w))
+        .where(F.col("rank") <= k)
+        .orderBy("query_id", "rank")
+    )
 
 
 def _assign_cells(vectors: DataFrame, centroids: DataFrame) -> DataFrame:
@@ -522,11 +674,7 @@ def ann_ivf_topk(
     if n_cells is None:
         n_cells = ivf_cells_for(table_row_count(spark, sf_dir, "embeddings"))
     if nprobe is None:
-        # ceil(n_cells/10) via integer arithmetic: Python's round() is
-        # half-even ON THE DOUBLE n_cells*0.1, whose nearness to .5 depends
-        # on binary representation — an engine-neutral twin can't reproduce
-        # that reliably (e.g. 25*0.1 rounds to 2 in Python, 3 in DuckDB).
-        nprobe = max(2, -(-n_cells // IVF_NPROBE_DIV))
+        nprobe = ivf_nprobe_for(n_cells)
     centroids, cells = _ivf_index_cached(spark, sf_dir, emb, n_cells)
     return _ivf_probe(emb, centroids, nprobe, k, corpus_cells=cells)
 
@@ -537,6 +685,7 @@ def _ivf_probe(
     nprobe: int,
     k: int,
     corpus_cells: DataFrame | None = None,
+    queries: DataFrame | None = None,
 ) -> DataFrame:
     """The IVF serving path over an already-fitted centroid table: one
     corpus assignment pass, per-query nprobe cell routing, exact re-rank
@@ -548,46 +697,35 @@ def _ivf_probe(
     frame — the session-cached invlists (``_ivf_index_cached``).
     Default None recomputes the assignment in-plan, which the store
     roundtrip keeps so its probe consumes ONLY what came back from
-    storage (the memo-bypass convention)."""
-    # r13: per-row norms (the _assign_cells measurement) — corpus rows,
-    # query rows, and broadcast centroids each carry their norm once;
-    # every cosine below keeps the identical dot/(n_a·n_b) graph
+    storage (the memo-bypass convention).
+
+    ``queries`` defaults to the demo query set. A query set carrying
+    ``q_label`` (``_filter_queries``) serves the POST-FILTER contract:
+    only same-label candidates rank, and rows carry ``label``. Per-query
+    results are independent (window partitioned by query_id), so a
+    query subset never changes a retained query's rows."""
+    # r13: per-row norms (the _assign_cells measurement), as in the probe
     if corpus_cells is None:
         corpus_cells = _assign_cells(emb.select("vec_id", "embedding"), centroids)
+    if queries is None:
+        queries = _query_vectors(emb)
     corpus = corpus_cells.select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("embedding").alias("c_emb"),
         norm(F.col("embedding")).alias("c_n"),
         "cell",
     )
-    q_w = Window.partitionBy("query_id").orderBy(F.desc("cell_sim"), F.asc("cell"))
-    queries = (
-        emb.where(F.col("vec_id") < N_QUERY_VECS)
-        .select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb"))
-        .withColumn("q_n", norm(F.col("q_emb")))
-        .crossJoin(F.broadcast(centroids.withColumn("_cn", norm(F.col("centroid")))))
-        .select(
-            "query_id",
-            "q_emb",
-            "q_n",
-            "cell",
-            (
-                dot(F.col("q_emb"), F.col("centroid"))
-                / (F.col("q_n") * F.col("_cn"))
-            ).alias("cell_sim"),
-        )
-        .withColumn("probe_rank", F.row_number().over(q_w))
-        .where(F.col("probe_rank") <= nprobe)
-        .select("query_id", "q_emb", "q_n", "cell")
-    )
+    cands = corpus.join(F.broadcast(_probe_cells(queries, centroids, nprobe)), "cell")
+    carry = ()
+    if "q_label" in queries.columns:
+        cands, carry = _same_label(cands, emb), ("label",)
     sim = F.round(
         dot(F.col("q_emb"), F.col("c_emb")) / (F.col("q_n") * F.col("c_n")), 6
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
     return (
-        corpus.join(F.broadcast(queries), "cell")
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", sim.alias("cos_sim"))
+        cands.where(F.col("neighbor_id") != F.col("query_id"))
+        .select("query_id", "neighbor_id", *carry, sim.alias("cos_sim"))
         .withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
         .orderBy("query_id", "rank")
@@ -624,10 +762,10 @@ def ann_ivf_store_roundtrip(spark, sf_dir: str) -> DataFrame:
     register_sink(spark)
     emb = ensure_parallelism(load_tables(spark, sf_dir).embeddings)
     n_cells = ivf_cells_for(table_row_count(spark, sf_dir, "embeddings"))
-    nprobe = max(2, -(-n_cells // IVF_NPROBE_DIV))
+    nprobe = ivf_nprobe_for(n_cells)
     fitted = _ivf_centroids_cached(spark, sf_dir, emb, n_cells)
 
-    path = proc_dir("ivf_index", sf_dir, n_cells)
+    path = proc_dir("ivf_index", os.path.abspath(sf_dir), n_cells)
     fitted.write.format("manifest_parquet").option("path", path).mode(
         "overwrite"
     ).save()
@@ -683,7 +821,7 @@ def ann_ivf_incremental_append(spark, sf_dir: str, k: int = TOP_K) -> DataFrame:
     cut = _append_cut(spark, sf_dir, emb)
     base = emb.where(F.col("vec_id") <= F.lit(cut))
     n_cells = ivf_cells_for(n_base)
-    nprobe = max(2, -(-n_cells // IVF_NPROBE_DIV))
+    nprobe = ivf_nprobe_for(n_cells)
     # the stale fit (its own "base" memo slot) and the FULL corpus
     # assigned into its cells — the invlists of the stale index; shared
     # with the stale IVF-PQ arm (r14)
@@ -714,7 +852,7 @@ def ann_ivf_deletion_repair(spark, sf_dir: str, k: int = TOP_K) -> DataFrame:
     """
     emb = ensure_parallelism(load_tables(spark, sf_dir).embeddings)
     n_cells = ivf_cells_for(table_row_count(spark, sf_dir, "embeddings"))
-    nprobe = max(2, -(-n_cells // IVF_NPROBE_DIV))
+    nprobe = ivf_nprobe_for(n_cells)
     # the stored index: same memo slots the batch query uses (fit sees
     # the full corpus — deletions arrive AFTER the nightly fit)
     centroids, cells = _ivf_index_cached(spark, sf_dir, emb, n_cells)
@@ -817,81 +955,10 @@ def ann_ivf_filtered_topk(spark, sf_dir: str, k: int = TOP_K) -> DataFrame:
     """
     emb = ensure_parallelism(load_tables(spark, sf_dir).embeddings)
     n_cells = ivf_cells_for(table_row_count(spark, sf_dir, "embeddings"))
-    nprobe = max(2, -(-n_cells // IVF_NPROBE_DIV))
+    nprobe = ivf_nprobe_for(n_cells)
     centroids, cells = _ivf_index_cached(spark, sf_dir, emb, n_cells)
-    return _ivf_filtered_serve(
-        emb, centroids, nprobe, _filter_queries(emb), k, corpus_cells=cells
-    )
-
-
-def _ivf_filtered_serve(
-    emb: DataFrame,
-    centroids: DataFrame,
-    nprobe: int,
-    queries: DataFrame,
-    k: int,
-    corpus_cells: DataFrame | None = None,
-) -> DataFrame:
-    """The POST-FILTER serving plan over an explicit query set — split
-    from ``ann_ivf_filtered_topk`` for the selectivity switch (the
-    ``_knn_filtered_serve`` convention). ``corpus_cells`` (r14): the
-    session-cached invlists; default None recomputes in-plan."""
-    # r13: per-row norms, not per-pair (the _assign_cells measurement)
-    if corpus_cells is None:
-        corpus_cells = _assign_cells(emb.select("vec_id", "embedding"), centroids)
-    corpus = corpus_cells.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("c_emb"),
-        norm(F.col("embedding")).alias("c_n"),
-        "cell",
-    ).join(
-        emb.select(
-            F.col("vec_id").alias("neighbor_id"), F.col("label").alias("n_label")
-        ),
-        "neighbor_id",
-    )
-    q_w = Window.partitionBy("query_id").orderBy(F.desc("cell_sim"), F.asc("cell"))
-    probed = (
-        queries.withColumn("q_n", norm(F.col("q_emb")))
-        .crossJoin(F.broadcast(centroids.withColumn("_cn", norm(F.col("centroid")))))
-        .select(
-            "query_id",
-            "q_emb",
-            "q_n",
-            "q_label",
-            "cell",
-            (
-                dot(F.col("q_emb"), F.col("centroid"))
-                / (F.col("q_n") * F.col("_cn"))
-            ).alias("cell_sim"),
-        )
-        .withColumn("probe_rank", F.row_number().over(q_w))
-        .where(F.col("probe_rank") <= nprobe)
-        .select("query_id", "q_emb", "q_n", "q_label", "cell")
-    )
-    sim = F.round(
-        dot(F.col("q_emb"), F.col("c_emb")) / (F.col("q_n") * F.col("c_n")), 6
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
-    return (
-        corpus.join(F.broadcast(probed), "cell")
-        .where(
-            (F.col("neighbor_id") != F.col("query_id"))
-            & (F.col("n_label") == F.col("q_label"))
-        )
-        .select("query_id", "neighbor_id", "n_label", sim.alias("cos_sim"))
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("n_label").alias("label"),
-            "cos_sim",
-            "rank",
-        )
-        .orderBy("query_id", "rank")
+    return _ivf_probe(
+        emb, centroids, nprobe, k, corpus_cells=cells, queries=_filter_queries(emb)
     )
 
 
@@ -908,7 +975,7 @@ def ann_filtered_switch_topk(
     the rest take the PRE-FILTER exact scan (the slice is small enough
     to scan exactly). Each branch serves its query subset through the
     IDENTICAL hash-proven branch plan (``_knn_filtered_serve`` /
-    ``_ivf_filtered_serve`` — per-query independence makes the
+    ``_ivf_probe`` — per-query independence makes the
     restriction sound), and the emitted ``branch`` column makes the
     decision driver-visible. ``switch_scale`` exists for the pytest that
     pins the threshold behavior (0 → all post ≡ the post-filter query;
@@ -934,13 +1001,13 @@ def ann_filtered_switch_topk(
     q_pre = qb.where(~is_post).select(*q_cols)
     q_post = qb.where(is_post).select(*q_cols)
     n_cells = ivf_cells_for(n)
-    nprobe = max(2, -(-n_cells // IVF_NPROBE_DIV))
+    nprobe = ivf_nprobe_for(n_cells)
     centroids, cells = _ivf_index_cached(spark, sf_dir, emb, n_cells)
     pre = _knn_filtered_serve(emb, q_pre, k).withColumn(
         "branch", F.lit("pre")
     )
-    post = _ivf_filtered_serve(
-        emb, centroids, nprobe, q_post, k, corpus_cells=cells
+    post = _ivf_probe(
+        emb, centroids, nprobe, k, corpus_cells=cells, queries=q_post
     ).withColumn("branch", F.lit("post"))
     return pre.unionByName(post).orderBy("query_id", "rank")
 
@@ -1490,8 +1557,6 @@ def doc_lexical_store_roundtrip(spark, sf_dir: str, k: int = TOP_K) -> DataFrame
     ANN indexes), stored partitioned, and probed by broadcast query
     postings — this query proves exactly that serve-from-storage leg.
     """
-    import os
-
     from aws_saas_etl_spark.sources.custom import (
         proc_dir,
         read_manifest_parquet,
@@ -1580,8 +1645,6 @@ def doc_lexical_incremental_append(spark, sf_dir: str, k: int = TOP_K) -> DataFr
     Measured at sf0.1 (bench r10): 3.7 s including the base-postings
     store write; the serve leg matches ``doc_lexical_topk_indexed``.
     """
-    import os
-
     from aws_saas_etl_spark.sources.custom import (
         proc_dir,
         read_manifest_parquet,
@@ -1735,8 +1798,6 @@ def ann_hybrid_rrf_stored(spark, sf_dir: str, k: int = TOP_K) -> DataFrame:
     the in-session hybrid's 4.7 s — the storage premium is the two
     manifest roundtrips, not the serving plans.
     """
-    import os
-
     from aws_saas_etl_spark.sources.custom import (
         proc_dir,
         read_manifest_parquet,
@@ -1746,9 +1807,9 @@ def ann_hybrid_rrf_stored(spark, sf_dir: str, k: int = TOP_K) -> DataFrame:
     register_sink(spark)
     emb = ensure_parallelism(load_tables(spark, sf_dir).embeddings)
     n_cells = ivf_cells_for(table_row_count(spark, sf_dir, "embeddings"))
-    nprobe = max(2, -(-n_cells // IVF_NPROBE_DIV))
+    nprobe = ivf_nprobe_for(n_cells)
     fitted = _ivf_centroids_cached(spark, sf_dir, emb, n_cells)
-    ipath = proc_dir("ivf_index", sf_dir, n_cells)
+    ipath = proc_dir("ivf_index", os.path.abspath(sf_dir), n_cells)
     fitted.write.format("manifest_parquet").option("path", ipath).mode(
         "overwrite"
     ).save()
@@ -2085,6 +2146,14 @@ PQ_QUANT = 10**9
 PQ_REFINE = 10 * TOP_K
 
 
+def _unit(emb_col: str) -> Column:
+    """The L2-normalized vector, components cast to double."""
+    return F.transform(
+        F.col(emb_col),
+        lambda x: x.cast("double") / F.sqrt(dot(F.col(emb_col), F.col(emb_col))),
+    )
+
+
 def _pq_subvectors(emb: DataFrame) -> DataFrame:
     """(vec_id, m, sub) — the corpus L2-NORMALIZED and exploded into
     per-subspace slices, components cast to double once so every
@@ -2096,12 +2165,7 @@ def _pq_subvectors(emb: DataFrame) -> DataFrame:
     collapses to near-random on mixed-norm corpora (measured 0.06 on the
     fixture before this; the standard FAISS metric=INNER_PRODUCT
     preprocessing)."""
-    unit = F.transform(
-        F.col("embedding"),
-        lambda x: x.cast("double") / F.sqrt(dot(F.col("embedding"), F.col("embedding"))),
-    )
-    normed = emb.select("vec_id", unit.alias("u"))
-    return _subspace_slices(normed, "u")
+    return _subspace_slices(emb.select("vec_id", _unit("embedding").alias("u")), "u")
 
 
 def _subspace_slices(df: DataFrame, col: str, extra: tuple = ()) -> DataFrame:
@@ -2243,11 +2307,14 @@ def _pq_index_cached(
     cb = _pq_codebooks_cached(spark, sf_dir, emb, base)
     codes = _PQ_CODES_CACHE.get_or_build(
         spark, sf_dir, *_fit_slot(base),
-        build=lambda: _pq_argmin(_pq_subvectors(emb), cb)
-        .select("vec_id", "m", "code")
-        .localCheckpoint(),
+        build=lambda: _pq_encode(emb, cb).localCheckpoint(),
     )
     return cb, codes
+
+
+def _pq_encode(emb: DataFrame, cb: DataFrame) -> DataFrame:
+    """``emb``'s (vec_id, m, code) table against codebook ``cb``."""
+    return _pq_argmin(_pq_subvectors(emb), cb).select("vec_id", "m", "code")
 
 
 def ann_pq_adc_topk(spark, sf_dir: str, k: int = TOP_K) -> DataFrame:
@@ -2291,50 +2358,12 @@ def _pq_adc_refined(
     re-encodes in-plan, which the store roundtrip keeps so its serve
     consumes ONLY codes derived from the stored codebook."""
     if codes is None:
-        codes = _pq_argmin(_pq_subvectors(emb), cb).select("vec_id", "m", "code")
-    qsubs = _pq_subvectors(emb.where(F.col("vec_id") < N_QUERY_VECS)).select(
-        F.col("vec_id").alias("query_id"), "m", "sub"
+        codes = _pq_encode(emb, cb)
+    qtab = _adc_table(_pq_subvectors(emb.where(F.col("vec_id") < N_QUERY_VECS)), cb)
+    pairs = codes.select(F.col("vec_id").alias("neighbor_id"), "m", "code").join(
+        F.broadcast(qtab), ["m", "code"]
     )
-    qtab = qsubs.join(F.broadcast(cb), "m").select(
-        "query_id",
-        "m",
-        "code",
-        F.floor(_l2sq(F.col("sub"), F.col("centroid")) * F.lit(float(PQ_QUANT)))
-        .cast("long")
-        .alias("dint"),
-    )
-    adc_w = Window.partitionBy("query_id").orderBy(
-        F.asc("adc_dist"), F.asc("neighbor_id")
-    )
-    shortlist = (
-        codes.join(F.broadcast(qtab), ["m", "code"])
-        .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
-        .agg(F.sum("dint").alias("adc_dist"))
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("adc_rank", F.row_number().over(adc_w))
-        .where(F.col("adc_rank") <= PQ_REFINE)
-    )
-    nbrs = emb.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_emb")
-    )
-    qv = emb.where(F.col("vec_id") < N_QUERY_VECS).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
-    )
-    ref_w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
-    return (
-        shortlist.join(nbrs, "neighbor_id")
-        .join(F.broadcast(qv), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("q_emb"), F.col("c_emb")), 6).alias("cos_sim"),
-        )
-        .withColumn("rank", F.row_number().over(ref_w))
-        .where(F.col("rank") <= k)
-        .orderBy("query_id", "rank")
-    )
+    return _exact_rerank(emb, _adc_shortlist(pairs), k)
 
 
 def ann_ivfpq_topk(spark, sf_dir: str, k: int = TOP_K) -> DataFrame:
@@ -2363,7 +2392,7 @@ def ann_ivfpq_topk(spark, sf_dir: str, k: int = TOP_K) -> DataFrame:
     """
     emb = ensure_parallelism(load_tables(spark, sf_dir).embeddings)
     n_cells = ivf_cells_for(table_row_count(spark, sf_dir, "embeddings"))
-    nprobe = max(2, -(-n_cells // IVF_NPROBE_DIV))
+    nprobe = ivf_nprobe_for(n_cells)
     # both persisted halves of the composed index, from their session
     # caches (r14): the SAME invlists ann_ivf_topk probes and the SAME
     # code table ann_pq_adc_topk scans
@@ -2380,6 +2409,7 @@ def _ivfpq_serve(
     k: int,
     corpus_cells: DataFrame | None = None,
     codes: DataFrame | None = None,
+    queries: DataFrame | None = None,
 ) -> DataFrame:
     """The composed IVF-PQ serving path over already-fitted artifacts —
     split from ``ann_ivfpq_topk`` so the STALE composition
@@ -2390,79 +2420,33 @@ def _ivfpq_serve(
     ``corpus_cells`` / ``codes`` (r14): the session-cached invlists
     (``_ivf_index_cached``) and stored code table
     (``_pq_index_cached``) — the two persisted halves of an IVF-PQ
-    index. Defaults recompute in-plan."""
+    index. Defaults recompute in-plan. ``queries``: as in
+    ``_ivf_probe`` — a ``q_label``-carrying set serves the post-filter
+    contract (``ann_ivfpq_filtered_topk``)."""
     if corpus_cells is None:
         corpus_cells = _assign_cells(emb.select("vec_id", "embedding"), coarse)
-    corpus_cells = corpus_cells.select(
-        F.col("vec_id").alias("neighbor_id"), "cell"
-    )
-    q_w = Window.partitionBy("query_id").orderBy(F.desc("cell_sim"), F.asc("cell"))
-    probe_cells = (
-        emb.where(F.col("vec_id") < N_QUERY_VECS)
-        .select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb"))
-        .crossJoin(F.broadcast(coarse))
-        .select(
-            "query_id",
-            "cell",
-            cosine(F.col("q_emb"), F.col("centroid")).alias("cell_sim"),
-        )
-        .withColumn("probe_rank", F.row_number().over(q_w))
-        .where(F.col("probe_rank") <= nprobe)
-        .select("query_id", "cell")
-    )
     if codes is None:
-        codes = _pq_argmin(_pq_subvectors(emb), cb).select("vec_id", "m", "code")
-    codes = codes.select(F.col("vec_id").alias("neighbor_id"), "m", "code")
-    qsubs = _pq_subvectors(emb.where(F.col("vec_id") < N_QUERY_VECS)).select(
-        F.col("vec_id").alias("query_id"), "m", "sub"
+        codes = _pq_encode(emb, cb)
+    if queries is None:
+        queries = _query_vectors(emb)
+    probed = _probe_cells(queries, coarse, nprobe).drop("q_emb", "q_n")
+    cands = corpus_cells.select(F.col("vec_id").alias("neighbor_id"), "cell").join(
+        F.broadcast(probed), "cell"
     )
-    qtab = qsubs.join(F.broadcast(cb), "m").select(
-        "query_id",
-        "m",
-        "code",
-        F.floor(_l2sq(F.col("sub"), F.col("centroid")) * F.lit(float(PQ_QUANT)))
-        .cast("long")
-        .alias("dint"),
-    )
+    carry = ()
+    if "q_label" in queries.columns:
+        cands, carry = _same_label(cands, emb), ("label",)
+    qtab = _adc_table(_pq_subvectors(emb.where(F.col("vec_id") < N_QUERY_VECS)), cb)
     # candidates FIRST (probed-cell-sized), then codes, then the table —
     # joining codes×qtab before the cell filter would rebuild the full
     # ADC scan the coarse index exists to avoid
-    cand_pairs = corpus_cells.join(F.broadcast(probe_cells), "cell").select(
-        "query_id", "neighbor_id"
-    )
-    adc_w = Window.partitionBy("query_id").orderBy(
-        F.asc("adc_dist"), F.asc("neighbor_id")
-    )
-    shortlist = (
-        cand_pairs.join(codes, "neighbor_id")
+    codes = codes.select(F.col("vec_id").alias("neighbor_id"), "m", "code")
+    pairs = (
+        cands.select("query_id", "neighbor_id", *carry)
+        .join(codes, "neighbor_id")
         .join(F.broadcast(qtab), ["query_id", "m", "code"])
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.sum("dint").alias("adc_dist"))
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("adc_rank", F.row_number().over(adc_w))
-        .where(F.col("adc_rank") <= PQ_REFINE)
     )
-    nbrs = emb.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_emb")
-    )
-    qv = emb.where(F.col("vec_id") < N_QUERY_VECS).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
-    )
-    ref_w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
-    return (
-        shortlist.join(nbrs, "neighbor_id")
-        .join(F.broadcast(qv), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("q_emb"), F.col("c_emb")), 6).alias("cos_sim"),
-        )
-        .withColumn("rank", F.row_number().over(ref_w))
-        .where(F.col("rank") <= k)
-        .orderBy("query_id", "rank")
-    )
+    return _exact_rerank(emb, _adc_shortlist(pairs, *carry), k, *carry)
 
 
 def ann_ivfpq_incremental_append(spark, sf_dir: str, k: int = TOP_K) -> DataFrame:
@@ -2493,7 +2477,7 @@ def ann_ivfpq_incremental_append(spark, sf_dir: str, k: int = TOP_K) -> DataFram
     cut = _append_cut(spark, sf_dir, emb)
     base = emb.where(F.col("vec_id") <= F.lit(cut))
     n_cells = ivf_cells_for(n_base)
-    nprobe = max(2, -(-n_cells // IVF_NPROBE_DIV))
+    nprobe = ivf_nprobe_for(n_cells)
     # the SAME stale invlists / stale code table the per-rung appends
     # serve from (r14) — one shared assignment + encode per session, not
     # a third copy of each
@@ -2526,92 +2510,14 @@ def ann_ivfpq_filtered_topk(spark, sf_dir: str, k: int = TOP_K) -> DataFrame:
     """
     emb = ensure_parallelism(load_tables(spark, sf_dir).embeddings)
     n_cells = ivf_cells_for(table_row_count(spark, sf_dir, "embeddings"))
-    nprobe = max(2, -(-n_cells // IVF_NPROBE_DIV))
-    # session-cached invlists (r14) — the same fresh assignment every
-    # serving path over this index probes
-    coarse, corpus_cells = _ivf_index_cached(spark, sf_dir, emb, n_cells)
-    corpus_cells = corpus_cells.select(
-        F.col("vec_id").alias("neighbor_id"), "cell"
-    )
-    q_w = Window.partitionBy("query_id").orderBy(F.desc("cell_sim"), F.asc("cell"))
-    probe_cells = (
-        emb.where(F.col("vec_id") < N_QUERY_VECS)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_emb"),
-            F.col("label").alias("q_label"),
-        )
-        .crossJoin(F.broadcast(coarse))
-        .select(
-            "query_id",
-            "q_label",
-            "cell",
-            cosine(F.col("q_emb"), F.col("centroid")).alias("cell_sim"),
-        )
-        .withColumn("probe_rank", F.row_number().over(q_w))
-        .where(F.col("probe_rank") <= nprobe)
-        .select("query_id", "q_label", "cell")
-    )
-    # session-cached stored code table (r14) — the same fresh codes the
-    # plain PQ and IVF-PQ paths scan
+    nprobe = ivf_nprobe_for(n_cells)
+    # the session-cached invlists and code table (r14) — the same fresh
+    # artifacts the plain IVF-PQ path serves from
+    coarse, cells = _ivf_index_cached(spark, sf_dir, emb, n_cells)
     cb, codes = _pq_index_cached(spark, sf_dir, emb)
-    codes = codes.select(F.col("vec_id").alias("neighbor_id"), "m", "code")
-    qsubs = _pq_subvectors(emb.where(F.col("vec_id") < N_QUERY_VECS)).select(
-        F.col("vec_id").alias("query_id"), "m", "sub"
-    )
-    qtab = qsubs.join(F.broadcast(cb), "m").select(
-        "query_id",
-        "m",
-        "code",
-        F.floor(_l2sq(F.col("sub"), F.col("centroid")) * F.lit(float(PQ_QUANT)))
-        .cast("long")
-        .alias("dint"),
-    )
-    # the label predicate lands on the candidate PAIRS (probed-cell-
-    # sized), before any code row is touched — the post-filter applied
-    # at the cheapest point that still protects the refine budget
-    labels = emb.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("label").alias("n_label")
-    )
-    cand_pairs = (
-        corpus_cells.join(F.broadcast(probe_cells), "cell")
-        .join(labels, "neighbor_id")
-        .where(F.col("n_label") == F.col("q_label"))
-        .select("query_id", "neighbor_id", "n_label")
-    )
-    adc_w = Window.partitionBy("query_id").orderBy(
-        F.asc("adc_dist"), F.asc("neighbor_id")
-    )
-    shortlist = (
-        cand_pairs.join(codes, "neighbor_id")
-        .join(F.broadcast(qtab), ["query_id", "m", "code"])
-        .groupBy("query_id", "neighbor_id", "n_label")
-        .agg(F.sum("dint").alias("adc_dist"))
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("adc_rank", F.row_number().over(adc_w))
-        .where(F.col("adc_rank") <= PQ_REFINE)
-    )
-    nbrs = emb.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_emb")
-    )
-    qv = emb.where(F.col("vec_id") < N_QUERY_VECS).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
-    )
-    ref_w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
-    return (
-        shortlist.join(nbrs, "neighbor_id")
-        .join(F.broadcast(qv), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("n_label").alias("label"),
-            F.round(cosine(F.col("q_emb"), F.col("c_emb")), 6).alias("cos_sim"),
-        )
-        .withColumn("rank", F.row_number().over(ref_w))
-        .where(F.col("rank") <= k)
-        .orderBy("query_id", "rank")
+    return _ivfpq_serve(
+        emb, coarse, nprobe, cb, k, corpus_cells=cells, codes=codes,
+        queries=_filter_queries(emb),
     )
 
 
@@ -2647,7 +2553,7 @@ def ann_ivfpq_residual_topk(spark, sf_dir: str, k: int = TOP_K) -> DataFrame:
     """
     emb = ensure_parallelism(load_tables(spark, sf_dir).embeddings)
     n_cells = ivf_cells_for(table_row_count(spark, sf_dir, "embeddings"))
-    nprobe = max(2, -(-n_cells // IVF_NPROBE_DIV))
+    nprobe = ivf_nprobe_for(n_cells)
     # session-cached invlists (r14) — the same fresh assignment every
     # serving path over this coarse index probes
     coarse, assigned = _ivf_index_cached(spark, sf_dir, emb, n_cells)
@@ -2659,12 +2565,7 @@ def ann_ivfpq_residual_topk(spark, sf_dir: str, k: int = TOP_K) -> DataFrame:
             lambda x: x / F.sqrt(dot(F.col("centroid"), F.col("centroid"))),
         ).alias("nc"),
     )
-    unit = F.transform(
-        F.col("embedding"),
-        lambda x: x.cast("double")
-        / F.sqrt(dot(F.col("embedding"), F.col("embedding"))),
-    )
-    normed = emb.select("vec_id", unit.alias("u"))
+    normed = emb.select("vec_id", _unit("embedding").alias("u"))
     resid = (
         normed.join(assigned, "vec_id")
         .join(F.broadcast(ncent), "cell")
@@ -2690,19 +2591,8 @@ def ann_ivfpq_residual_topk(spark, sf_dir: str, k: int = TOP_K) -> DataFrame:
         .select(F.col("vec_id").alias("neighbor_id"), "cell", "m", "code")
         .localCheckpoint(),
     )
-    q_w = Window.partitionBy("query_id").orderBy(F.desc("cell_sim"), F.asc("cell"))
-    probe_cells = (
-        emb.where(F.col("vec_id") < N_QUERY_VECS)
-        .select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb"))
-        .crossJoin(F.broadcast(coarse))
-        .select(
-            "query_id",
-            "cell",
-            cosine(F.col("q_emb"), F.col("centroid")).alias("cell_sim"),
-        )
-        .withColumn("probe_rank", F.row_number().over(q_w))
-        .where(F.col("probe_rank") <= nprobe)
-        .select("query_id", "cell")
+    probe_cells = _probe_cells(_query_vectors(emb), coarse, nprobe).select(
+        "query_id", "cell"
     )
     q_resid = (
         normed.where(F.col("vec_id") < N_QUERY_VECS)
@@ -2715,53 +2605,12 @@ def ann_ivfpq_residual_topk(spark, sf_dir: str, k: int = TOP_K) -> DataFrame:
             F.zip_with("u", "nc", lambda a, b: a - b).alias("r"),
         )
     )
-    qrsubs = _subspace_slices(q_resid, "r", extra=("cell",)).select(
-        F.col("vec_id").alias("query_id"), "cell", "m", "sub"
-    )
-    qtab = qrsubs.join(F.broadcast(cb), "m").select(
-        "query_id",
-        "cell",
-        "m",
-        "code",
-        F.floor(_l2sq(F.col("sub"), F.col("centroid")) * F.lit(float(PQ_QUANT)))
-        .cast("long")
-        .alias("dint"),
-    )
+    qtab = _adc_table(_subspace_slices(q_resid, "r", extra=("cell",)), cb)
     # the (cell, m, code) equality against the broadcast query table IS
     # the probe filter: qtab only contains probed (query, cell) pairs,
     # so the join emits probed-candidates × M rows, never corpus × M
-    adc_w = Window.partitionBy("query_id").orderBy(
-        F.asc("adc_dist"), F.asc("neighbor_id")
-    )
-    shortlist = (
-        codes.join(F.broadcast(qtab), ["cell", "m", "code"])
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.sum("dint").alias("adc_dist"))
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("adc_rank", F.row_number().over(adc_w))
-        .where(F.col("adc_rank") <= PQ_REFINE)
-    )
-    nbrs = emb.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_emb")
-    )
-    qv = emb.where(F.col("vec_id") < N_QUERY_VECS).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
-    )
-    ref_w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
-    return (
-        shortlist.join(nbrs, "neighbor_id")
-        .join(F.broadcast(qv), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("q_emb"), F.col("c_emb")), 6).alias("cos_sim"),
-        )
-        .withColumn("rank", F.row_number().over(ref_w))
-        .where(F.col("rank") <= k)
-        .orderBy("query_id", "rank")
-    )
+    pairs = codes.join(F.broadcast(qtab), ["cell", "m", "code"])
+    return _exact_rerank(emb, _adc_shortlist(pairs), k)
 
 
 def ann_pq_store_roundtrip(spark, sf_dir: str, k: int = TOP_K) -> DataFrame:
@@ -2787,7 +2636,7 @@ def ann_pq_store_roundtrip(spark, sf_dir: str, k: int = TOP_K) -> DataFrame:
     register_sink(spark)
     emb = ensure_parallelism(load_tables(spark, sf_dir).embeddings)
     fitted = _pq_codebooks_cached(spark, sf_dir, emb)
-    path = proc_dir("pq_codebook", sf_dir, PQ_M, PQ_K)
+    path = proc_dir("pq_codebook", os.path.abspath(sf_dir), PQ_M, PQ_K)
     fitted.write.format("manifest_parquet").option("path", path).mode(
         "overwrite"
     ).save()
@@ -2876,12 +2725,9 @@ def _sq8_codes(emb_col):
     makes the approximate score a PURE INTEGER dot product — per-dim
     scales (``embedding_int8_quantization``'s storage shape) would pull
     doubles back into the hot loop."""
-    unit = F.transform(
-        F.col(emb_col),
-        lambda x: x.cast("double")
-        / F.sqrt(dot(F.col(emb_col), F.col(emb_col))),
+    return F.transform(
+        _unit(emb_col), lambda x: F.floor(x * 127.0 + 0.5).cast("long")
     )
-    return F.transform(unit, lambda x: F.floor(x * 127.0 + 0.5).cast("long"))
 
 
 def ann_sq8_topk(spark, sf_dir: str, k: int = TOP_K) -> DataFrame:
@@ -2927,37 +2773,10 @@ def _sq8_serve(emb: DataFrame, corpus: DataFrame, k: int) -> DataFrame:
         F.lit(0).cast("long"),
         lambda acc, v: acc + v,
     )
-    short_w = Window.partitionBy("query_id").orderBy(
-        F.desc("int_dot"), F.asc("neighbor_id")
+    shortlist = _scan_shortlist(
+        corpus, queries, idot.alias("int_dot"), F.desc("int_dot"), SQ_REFINE
     )
-    shortlist = (
-        corpus.crossJoin(F.broadcast(queries))
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", idot.alias("int_dot"))
-        .withColumn("sq_rank", F.row_number().over(short_w))
-        .where(F.col("sq_rank") <= SQ_REFINE)
-    )
-    nbrs = emb.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_emb")
-    )
-    qv = emb.where(F.col("vec_id") < N_QUERY_VECS).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
-    )
-    ref_w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
-    return (
-        shortlist.join(nbrs, "neighbor_id")
-        .join(F.broadcast(qv), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("q_emb"), F.col("c_emb")), 6).alias("cos_sim"),
-        )
-        .withColumn("rank", F.row_number().over(ref_w))
-        .where(F.col("rank") <= k)
-        .orderBy("query_id", "rank")
-    )
+    return _exact_rerank(emb, shortlist, k)
 
 
 #: Session cache for the historical/arrival boundary (r13 optimization):
@@ -3015,8 +2834,6 @@ def ann_sq8_incremental_append(spark, sf_dir: str, k: int = TOP_K) -> DataFrame:
     write, vs the fresh scan's 1.0–1.6 s — maintenance costs one store
     roundtrip, never a refit.
     """
-    import os
-
     from aws_saas_etl_spark.sources.custom import (
         proc_dir,
         read_manifest_parquet,
@@ -3139,37 +2956,8 @@ def _bq_serve(emb: DataFrame, corpus: DataFrame, k: int) -> DataFrame:
         F.bit_count(F.col("sig_lo").bitwiseXOR(F.col("q_lo")))
         + F.bit_count(F.col("sig_hi").bitwiseXOR(F.col("q_hi")))
     ).alias("hamming")
-    short_w = Window.partitionBy("query_id").orderBy(
-        F.asc("hamming"), F.asc("neighbor_id")
-    )
-    shortlist = (
-        corpus.crossJoin(F.broadcast(queries))
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", ham)
-        .withColumn("bq_rank", F.row_number().over(short_w))
-        .where(F.col("bq_rank") <= BQ_REFINE)
-    )
-    nbrs = emb.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_emb")
-    )
-    qv = emb.where(F.col("vec_id") < N_QUERY_VECS).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
-    )
-    ref_w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
-    return (
-        shortlist.join(nbrs, "neighbor_id")
-        .join(F.broadcast(qv), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("q_emb"), F.col("c_emb")), 6).alias("cos_sim"),
-        )
-        .withColumn("rank", F.row_number().over(ref_w))
-        .where(F.col("rank") <= k)
-        .orderBy("query_id", "rank")
-    )
+    shortlist = _scan_shortlist(corpus, queries, ham, F.asc("hamming"), BQ_REFINE)
+    return _exact_rerank(emb, shortlist, k)
 
 
 def ann_bq_store_roundtrip(spark, sf_dir: str, k: int = TOP_K) -> DataFrame:
@@ -3187,8 +2975,6 @@ def ann_bq_store_roundtrip(spark, sf_dir: str, k: int = TOP_K) -> DataFrame:
     the same ANN_BQ_HAMMING_SQL gate proves write → read → serve is
     lossless end to end.
     """
-    import os
-
     from aws_saas_etl_spark.sources.custom import (
         proc_dir,
         read_manifest_parquet,
@@ -3229,8 +3015,6 @@ def ann_bq_incremental_append(spark, sf_dir: str, k: int = TOP_K) -> DataFrame:
     Scale shape: the maintenance write is |delta| × 16 B — one narrow
     sign pass, no corpus scan, no refit ever.
     """
-    import os
-
     from aws_saas_etl_spark.sources.custom import (
         proc_dir,
         read_manifest_parquet,

@@ -36,26 +36,54 @@ from aws_saas_etl_spark.streaming import pipelines as P
 
 _STAGE_FILES = 3
 _run_seq = count()
-_stage_cache: dict[tuple[str, ...], str] = {}
+#: Staged stream inputs per (session, abspath(sf_dir), *parts). A plain
+#: dict outside ``clear_session_memos``: the staged copies are stream
+#: inputs, not session artifacts, and clearing them would move the
+#: staging cost into a stream query's cold pass.
+_stage_cache: dict[tuple, str] = {}
 
 
-def _staged_events_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Stage fixture events as a 3-file parquet directory (µs timestamps,
-    one file per micro-batch). Cached per (session, sf_dir)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
+def _staged_dir(spark: SparkSession, sf_dir: str, *parts, write) -> str:
+    """A fixture slice staged as a multi-file parquet directory (one
+    file per micro-batch), written once per (session, abspath(sf_dir),
+    *parts) by ``write(path)`` — so ``d`` and ``d/`` share one copy."""
+    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir), *parts)
     path = _stage_cache.get(key)
     if path and os.path.isdir(path):
         return path
-    path = tempfile.mkdtemp(prefix="etl_spark_stream_")
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id", "ts", "user_id", "event_type", "value", "props"
-    )
-    # EVENT_SCHEMA carries a zoned timestamp; the session is pinned UTC so
-    # the cast is a type tag change, not a clock shift.
-    ev = ev.withColumn("ts", F.col("ts").cast("timestamp"))
-    ev.repartition(_STAGE_FILES).write.mode("overwrite").parquet(path)
+    path = tempfile.mkdtemp(prefix=f"etl_spark_stream_{parts[0]}_")
+    write(path)
     _stage_cache[key] = path
     return path
+
+
+def _staged_events_dir(spark: SparkSession, sf_dir: str) -> str:
+    """Fixture events staged as 3 parquet files (µs timestamps)."""
+
+    def write(path: str) -> None:
+        ev = load_table(spark, sf_dir, "events").select(
+            "event_id", "ts", "user_id", "event_type", "value", "props"
+        )
+        # EVENT_SCHEMA carries a zoned timestamp; the session is pinned UTC
+        # so the cast is a type tag change, not a clock shift.
+        ev = ev.withColumn("ts", F.col("ts").cast("timestamp"))
+        ev.repartition(_STAGE_FILES).write.mode("overwrite").parquet(path)
+
+    return _staged_dir(spark, sf_dir, "events", write=write)
+
+
+def _staged_table_dir(spark: SparkSession, sf_dir: str, table: str) -> str:
+    """A whole fixture table staged as 3 parquet files — shared by every
+    embedding- and document-stream ingest rung."""
+    return _staged_dir(
+        spark,
+        sf_dir,
+        table,
+        write=lambda path: load_table(spark, sf_dir, table)
+        .repartition(_STAGE_FILES)
+        .write.mode("overwrite")
+        .parquet(path),
+    )
 
 
 def _drain(stream_df: DataFrame, output_mode: str) -> DataFrame:
@@ -450,22 +478,6 @@ def stream_custom_sink_ingest(spark, sf_dir: str) -> DataFrame:
     )
 
 
-def _staged_embeddings_dir(spark, sf_dir: str) -> str:
-    """Stage fixture embeddings as a multi-file parquet directory (one
-    file per micro-batch). Cached per (session, sf_dir) — shared by
-    every embedding-stream ingest rung."""
-    key = (spark.sparkContext.applicationId, sf_dir, "emb")
-    path = _stage_cache.get(key)
-    if path and os.path.isdir(path):
-        return path
-    path = tempfile.mkdtemp(prefix="etl_spark_stream_emb_")
-    load_table(spark, sf_dir, "embeddings").repartition(
-        _STAGE_FILES
-    ).write.mode("overwrite").parquet(path)
-    _stage_cache[key] = path
-    return path
-
-
 def stream_sq8_code_ingest(spark, sf_dir: str) -> DataFrame:
     """STREAMING SQ8-code maintenance — the second rung proving the
     streaming-maintenance pattern generalizes across the quantization
@@ -486,7 +498,7 @@ def stream_sq8_code_ingest(spark, sf_dir: str) -> DataFrame:
     """
     from aws_saas_etl_spark.operators.similarity import _sq8_codes
 
-    path = _staged_embeddings_dir(spark, sf_dir)
+    path = _staged_table_dir(spark, sf_dir, "embeddings")
     stream = (
         spark.readStream.schema(spark.read.parquet(path).schema)
         .option("maxFilesPerTrigger", 1)
@@ -532,7 +544,7 @@ def stream_bq_signature_ingest(spark, sf_dir: str) -> DataFrame:
     """
     from aws_saas_etl_spark.operators.similarity import _bq_sig_exprs
 
-    path = _staged_embeddings_dir(spark, sf_dir)
+    path = _staged_table_dir(spark, sf_dir, "embeddings")
     # Schema comes from the staged batch frame's parquet footers (ADVICE
     # r9) — a hardcoded DDL would desync from a regenerated fixture (e.g.
     # double embeddings) on the streaming rung alone.
@@ -552,21 +564,6 @@ def stream_bq_signature_ingest(spark, sf_dir: str) -> DataFrame:
         )
         .orderBy("label")
     )
-
-
-def _staged_documents_dir(spark, sf_dir: str) -> str:
-    """Stage fixture documents as a multi-file parquet directory (one
-    file per micro-batch). Cached per (session, sf_dir)."""
-    key = (spark.sparkContext.applicationId, sf_dir, "docs")
-    path = _stage_cache.get(key)
-    if path and os.path.isdir(path):
-        return path
-    path = tempfile.mkdtemp(prefix="etl_spark_stream_docs_")
-    load_table(spark, sf_dir, "documents").repartition(_STAGE_FILES).write.mode(
-        "overwrite"
-    ).parquet(path)
-    _stage_cache[key] = path
-    return path
 
 
 def stream_logreg_score_ingest(spark, sf_dir: str) -> DataFrame:
@@ -600,7 +597,7 @@ def stream_logreg_score_ingest(spark, sf_dir: str) -> DataFrame:
     wrow = _logreg_artifacts(spark, sf_dir)[1].collect()[0]
     w = {j: F.lit(float(wrow[f"w{j}"])) for j in (1, 2, 3, 4)}
 
-    path = _staged_documents_dir(spark, sf_dir)
+    path = _staged_table_dir(spark, sf_dir, "documents")
     stream = (
         spark.readStream.schema(spark.read.parquet(path).schema)
         .option("maxFilesPerTrigger", 1)
@@ -734,7 +731,7 @@ def stream_minhash_signature_ingest(spark, sf_dir: str) -> DataFrame:
             {"sig_sum": sig_sum, "h_first": h_first, "h_last": h_last}
         )
 
-    path = _staged_documents_dir(spark, sf_dir)
+    path = _staged_table_dir(spark, sf_dir, "documents")
     stream = (
         spark.readStream.schema(spark.read.parquet(path).schema)
         .option("maxFilesPerTrigger", 1)
@@ -791,7 +788,7 @@ def stream_lexical_postings_ingest(spark, sf_dir: str) -> DataFrame:
     from aws_saas_etl_spark.functions import text as T
     from aws_saas_etl_spark.operators.dedup import md60
 
-    path = _staged_documents_dir(spark, sf_dir)
+    path = _staged_table_dir(spark, sf_dir, "documents")
     stream = (
         spark.readStream.schema(spark.read.parquet(path).schema)
         .option("maxFilesPerTrigger", 1)
@@ -821,27 +818,20 @@ def stream_lexical_postings_ingest(spark, sf_dir: str) -> DataFrame:
 def _staged_delta_documents_dir(spark, sf_dir: str, cut: float) -> str:
     """Stage the ARRIVING document slice (doc_id > the shared
     shingle-percentile cut — the same base/delta boundary the batch
-    incremental manifest uses) as a multi-file parquet directory.
-    Cached per (session, abspath(sf_dir), cut) — cut is part of the key
-    (ADVICE r12: omitting it would silently serve a stale slice if
-    DELTA_DOC_FRACTION were varied in-session, and a relative-path alias
-    of the same sf_dir would re-stage), matching the abspath convention
-    of the sibling caches in operators/curation.py."""
-    key = (
-        spark.sparkContext.applicationId,
-        os.path.abspath(sf_dir),
+    incremental manifest uses) as a multi-file parquet directory. The
+    cut is part of the key (ADVICE r12: omitting it would silently serve
+    a stale slice if DELTA_DOC_FRACTION were varied in-session)."""
+    return _staged_dir(
+        spark,
+        sf_dir,
         "docs_delta",
         cut,
+        write=lambda path: load_table(spark, sf_dir, "documents")
+        .where(F.col("doc_id") > F.lit(cut))
+        .repartition(_STAGE_FILES)
+        .write.mode("overwrite")
+        .parquet(path),
     )
-    path = _stage_cache.get(key)
-    if path and os.path.isdir(path):
-        return path
-    path = tempfile.mkdtemp(prefix="etl_spark_stream_delta_")
-    load_table(spark, sf_dir, "documents").where(
-        F.col("doc_id") > F.lit(cut)
-    ).repartition(_STAGE_FILES).write.mode("overwrite").parquet(path)
-    _stage_cache[key] = path
-    return path
 
 
 def _stream_manifest_delta_rows(spark, sf_dir: str) -> DataFrame:

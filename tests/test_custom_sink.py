@@ -188,3 +188,28 @@ def test_writer_requires_path(spark):
         _events_df(spark).write.format("manifest_parquet").mode(
             "overwrite"
         ).save()
+
+
+def test_operator_store_dirs_are_keyed_on_absolute_paths():
+    """``proc_dir`` names a store by hashing its tags, so a tag holding the
+    raw ``sf_dir`` gives ``d`` and ``d/`` two copies of one store. Every
+    operator call must key on ``os.path.abspath(sf_dir)`` (or a name
+    bound to it) instead of the bare argument."""
+    import ast
+    import glob
+
+    ops = os.path.join(os.path.dirname(custom.__file__), "..", "operators")
+    bare = []
+    for path in sorted(glob.glob(os.path.join(ops, "*.py"))):
+        tree = ast.parse(open(path).read(), path)
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Name)
+                and node.func.id == "proc_dir"
+                and any(
+                    isinstance(a, ast.Name) and a.id == "sf_dir" for a in node.args
+                )
+            ):
+                bare.append(f"{os.path.basename(path)}:{node.lineno}")
+    assert bare == []

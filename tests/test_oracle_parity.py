@@ -106,6 +106,10 @@ SMOKE_QUERIES = [
     "training_manifest_incremental",
     "ann_index_staleness_report",
     "ann_ivf_incremental_append",
+    # the post-filter serving paths: IVF and IVF-PQ probes with a
+    # labelled query set
+    "ann_ivf_filtered_topk",
+    "ann_ivfpq_filtered_topk",
 ]
 
 

@@ -79,18 +79,47 @@ def test_ivf_cells_matches_oracle_integer_characterization():
 
 
 def test_ivf_nprobe_integer_ceil():
-    """nprobe = max(2, ceil(n_cells/10)) via -(-n // 10): pin the integer
-    form against the (n + 9) // 10 the oracle uses, for every legal
-    n_cells."""
+    """nprobe = max(2, ceil(n_cells/10)): pin ``ivf_nprobe_for`` against
+    the oracle's ``greatest(2, (n + 9) // 10)`` as DuckDB evaluates it,
+    for n = 1..IVF_CELLS_MAX."""
+    import duckdb
+
     from aws_saas_etl_spark.operators.similarity import (
         IVF_CELLS_MAX,
         IVF_NPROBE_DIV,
+        ivf_nprobe_for,
     )
 
-    for n_cells in range(2, IVF_CELLS_MAX + 1):
-        assert max(2, -(-n_cells // IVF_NPROBE_DIV)) == max(
-            2, (n_cells + IVF_NPROBE_DIV - 1) // IVF_NPROBE_DIV
-        )
+    rows = duckdb.connect().execute(
+        f"SELECT n, greatest(2, (n + {IVF_NPROBE_DIV - 1}) // {IVF_NPROBE_DIV}) "
+        f"FROM range(1, {IVF_CELLS_MAX + 1}) t(n) ORDER BY n"
+    ).fetchall()
+    assert len(rows) == IVF_CELLS_MAX
+    for n, want in rows:
+        assert ivf_nprobe_for(n) == want, n
+
+
+def test_exact_rerank_of_exhaustive_shortlist_is_bruteforce(spark):
+    """The refine stage over the exhaustive shortlist — every query
+    paired with every other vector — is exact search: it returns
+    exactly ``knn_bruteforce``'s rows."""
+    from aws_saas_etl_spark.operators.similarity import (
+        TOP_K,
+        _exact_rerank,
+        _query_vectors,
+    )
+
+    emb = load_tables(spark, SF_SMOKE).embeddings
+    shortlist = (
+        _query_vectors(emb)
+        .select("query_id")
+        .crossJoin(emb.select(F.col("vec_id").alias("neighbor_id")))
+        .where(F.col("neighbor_id") != F.col("query_id"))
+    )
+    got = _exact_rerank(emb, shortlist, TOP_K).collect()
+    want = knn_bruteforce(spark, SF_SMOKE, TOP_K).collect()
+    assert len(want) > 0
+    assert [r.asDict() for r in got] == [r.asDict() for r in want]
 
 
 def test_bucket_sizes_shrink_as_bits_grow(spark):

@@ -801,3 +801,23 @@ def test_stream_manifest_delta_ingest_matches_merge_keep_set(spark):
         .collect()
     )
     assert streamed == batch and streamed
+
+
+def test_staged_events_dir_stages_once_per_path(spark):
+    """``d`` and ``d/`` name one fixture directory, so the events table is
+    staged once and both spellings stream the same copy."""
+    from aws_saas_etl_spark.streaming import runners as R
+
+    app = spark.sparkContext.applicationId
+
+    def ours():
+        return [
+            k
+            for k in R._stage_cache
+            if k[0] == app and os.path.abspath(k[1]) == os.path.abspath(SF)
+        ]
+
+    for k in ours():
+        del R._stage_cache[k]
+    assert R._staged_events_dir(spark, SF) == R._staged_events_dir(spark, SF + "/")
+    assert len(ours()) == 1
