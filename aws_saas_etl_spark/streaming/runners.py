@@ -30,7 +30,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from aws_saas_etl_spark.catalog import load_table
+from aws_saas_etl_spark.catalog import load_table, parquet_schema
 from aws_saas_etl_spark.sources.custom import proc_dir
 from aws_saas_etl_spark.streaming import pipelines as P
 
@@ -500,7 +500,7 @@ def stream_sq8_code_ingest(spark, sf_dir: str) -> DataFrame:
 
     path = _staged_table_dir(spark, sf_dir, "embeddings")
     stream = (
-        spark.readStream.schema(spark.read.parquet(path).schema)
+        spark.readStream.schema(parquet_schema(spark, path))
         .option("maxFilesPerTrigger", 1)
         .parquet(path)
     )
@@ -549,7 +549,7 @@ def stream_bq_signature_ingest(spark, sf_dir: str) -> DataFrame:
     # r9) — a hardcoded DDL would desync from a regenerated fixture (e.g.
     # double embeddings) on the streaming rung alone.
     stream = (
-        spark.readStream.schema(spark.read.parquet(path).schema)
+        spark.readStream.schema(parquet_schema(spark, path))
         .option("maxFilesPerTrigger", 1)
         .parquet(path)
     )
@@ -599,7 +599,7 @@ def stream_logreg_score_ingest(spark, sf_dir: str) -> DataFrame:
 
     path = _staged_table_dir(spark, sf_dir, "documents")
     stream = (
-        spark.readStream.schema(spark.read.parquet(path).schema)
+        spark.readStream.schema(parquet_schema(spark, path))
         .option("maxFilesPerTrigger", 1)
         .parquet(path)
     )
@@ -733,7 +733,7 @@ def stream_minhash_signature_ingest(spark, sf_dir: str) -> DataFrame:
 
     path = _staged_table_dir(spark, sf_dir, "documents")
     stream = (
-        spark.readStream.schema(spark.read.parquet(path).schema)
+        spark.readStream.schema(parquet_schema(spark, path))
         .option("maxFilesPerTrigger", 1)
         .parquet(path)
     )
@@ -790,7 +790,7 @@ def stream_lexical_postings_ingest(spark, sf_dir: str) -> DataFrame:
 
     path = _staged_table_dir(spark, sf_dir, "documents")
     stream = (
-        spark.readStream.schema(spark.read.parquet(path).schema)
+        spark.readStream.schema(parquet_schema(spark, path))
         .option("maxFilesPerTrigger", 1)
         .parquet(path)
     )
@@ -892,7 +892,7 @@ def _stream_manifest_delta_rows(spark, sf_dir: str) -> DataFrame:
 
     path = _staged_delta_documents_dir(spark, sf_dir, cut)
     stream = (
-        spark.readStream.schema(spark.read.parquet(path).schema)
+        spark.readStream.schema(parquet_schema(spark, path))
         .option("maxFilesPerTrigger", 1)
         .parquet(path)
     )

@@ -98,7 +98,7 @@ def test_sizing_caches_are_registered_untraced():
     from aws_saas_etl_spark.operators import similarity  # noqa: F401
 
     by_name = {m.name: m for m in memo.all_memos()}
-    for expected in ("table_row_counts", "append_cut"):
+    for expected in ("table_row_counts", "append_cut", "table_schemas"):
         assert expected in by_name, expected
         assert by_name[expected].traced is False, expected
 
