@@ -10,6 +10,10 @@ The engine targets multi-executor clusters reading ~100 TB; locally we run
   batches, not pickled rows.
 - UTC session timezone: deterministic timestamp semantics regardless of
   host zone (the DuckDB oracle reads the same parquet in naive UTC).
+- 32 shuffle partitions: a batch upper bound that AQE coalesces down.
+  Streams do not use it: AQE is off inside a stream, so every stream
+  starts through ``streaming.pipelines.run_available_now`` with one
+  state partition per task slot.
 """
 
 from __future__ import annotations
@@ -18,6 +22,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: Batch upper bound, coalesced down by AQE. Streams take one state
+#: partition per task slot instead (see ``run_available_now``).
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
 

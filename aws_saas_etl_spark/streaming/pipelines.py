@@ -17,15 +17,24 @@ mode and run in streaming mode:
 - a custom stateful operator (per-user running aggregates) via
   ``applyInPandasWithState`` — the escape hatch for semantics the
   built-in operators can't express.
+
+Every stream starts through ``run_available_now``, which gives a new
+stream one state partition per task slot instead of the session's batch
+``spark.sql.shuffle.partitions`` (a batch upper bound that AQE coalesces
+down; a stream's shuffle is not coalesced). A memory drain
+(``run_to_memory``) also skips checkpoint checksum files: its checkpoint
+is a temporary directory Spark deletes when the query stops.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterable
+from collections.abc import Iterable, Iterator
+from contextlib import contextmanager
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     DoubleType,
@@ -173,19 +182,70 @@ def running_user_totals(df: DataFrame) -> DataFrame:
     )
 
 
+@contextmanager
+def _session_conf(spark: SparkSession, key: str, value: str) -> Iterator[None]:
+    """Set ``key`` to ``value`` on the caller's session for the block,
+    then restore the caller's value (or unset it), also when the block
+    raises. Like the memo trace (``memo.py``), this assumes one thread
+    drives a session at a time."""
+    previous = spark.conf.get(key, None)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        if previous is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, previous)
+
+
+def run_available_now(writer: DataStreamWriter, spark: SparkSession) -> StreamingQuery:
+    """Start ``writer`` with ``trigger(availableNow=True)``, wait until it
+    has processed all pending input, and return the finished query. Every
+    stream the engine starts goes through here.
+
+    The stream starts with ``spark.sql.shuffle.partitions`` set to the
+    cluster's task slots (``defaultParallelism``), so each micro-batch
+    runs one state-store task per slot rather than the batch default
+    (32 under ``get_spark``, 200 on a plain session): AQE is off inside
+    a stream and cannot coalesce its shuffle. Spark clones the session
+    when the query is created and records the count in the checkpoint's
+    offset metadata, so the count holds for the stream's whole life and
+    the caller's value is restored (or unset) as soon as ``start()``
+    returns or raises. A resumed checkpoint keeps the count it recorded.
+    """
+    slots = str(spark.sparkContext.defaultParallelism)
+    with _session_conf(spark, "spark.sql.shuffle.partitions", slots):
+        q = writer.trigger(availableNow=True).start()
+    q.awaitTermination()
+    return q
+
+
 def run_to_memory(
     stream_df: DataFrame, query_name: str, output_mode: str = "append"
 ) -> None:
     """Drain a stream into an in-memory table (test/debug sink) using
-    availableNow — processes all pending input then stops."""
-    q = (
+    availableNow — processes all pending input then stops.
+
+    A memory sink has no ``checkpointLocation``: Spark checkpoints to a
+    temporary directory and deletes it, file by file, before the query
+    reports termination. So the drain starts with checkpoint checksum
+    files off (``spark.sql.streaming.checkpoint.fileChecksum.enabled``):
+    they would guard files nobody reads again, and each one is an extra
+    file to create, and then delete, inside the drain (two per state
+    partition per micro-batch, plus a thread pool per state store that
+    outlives the query). Streams with a real checkpoint keep Spark's
+    default.
+    """
+    spark = stream_df.sparkSession
+    writer = (
         stream_df.writeStream.format("memory")
         .queryName(query_name)
         .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
+    checksums = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
+    with _session_conf(spark, checksums, "false"):
+        run_available_now(writer, spark)
 
 
 def enriched_event_stream(stream_df: DataFrame, dim_df: DataFrame) -> DataFrame:

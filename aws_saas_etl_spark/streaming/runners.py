@@ -254,15 +254,12 @@ def stream_upsert_state(spark, sf_dir: str) -> DataFrame:
     # resume against another session's file-source checkpoint.
     base = proc_dir("upsert", staged)
     log_path = os.path.join(base, "log")
-    q = (
+    P.run_available_now(
         src.writeStream.foreachBatch(
             lambda b, bid: P.upsert_batch_to_log(b, bid, log_path)
-        )
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+        ).option("checkpointLocation", os.path.join(base, "ckpt")),
+        spark,
     )
-    q.awaitTermination()
     return (
         P.upsert_state(spark, log_path)
         .select("event_id", "user_id", "event_type")
@@ -289,16 +286,14 @@ def stream_hourly_to_parquet(spark, sf_dir: str) -> DataFrame:
     # checkpoint ever resumed against a different staged source path).
     base = proc_dir("fsink", staged)
     out_dir = os.path.join(base, "out")
-    q = (
+    P.run_available_now(
         P.hourly_stats(P.read_event_stream(spark, staged))
         .writeStream.format("parquet")
         .option("path", out_dir)
         .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("append"),
+        spark,
     )
-    q.awaitTermination()
     return (
         spark.read.parquet(out_dir)
         .select(
@@ -399,17 +394,15 @@ def stream_custom_source_ingest(spark, sf_dir: str) -> DataFrame:
     # runs prove the "nothing new → empty batch" steady state
     max_runs = STREAM_TOTAL_ROWS // STREAM_BATCH_ROWS + 2
     for _ in range(max_runs):
-        q = (
+        P.run_available_now(
             spark.readStream.format("synthetic_events_stream")
             .load()
             .writeStream.format("parquet")
             .option("path", out_dir)
             .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+            .outputMode("append"),
+            spark,
         )
-        q.awaitTermination()
     ingested = spark.read.parquet(out_dir)
     return (
         ingested.groupBy("user_id")
@@ -453,17 +446,15 @@ def stream_custom_sink_ingest(spark, sf_dir: str) -> DataFrame:
     ckpt = os.path.join(base, "ckpt")
     max_runs = STREAM_TOTAL_ROWS // STREAM_BATCH_ROWS + 2
     for _ in range(max_runs):
-        q = (
+        P.run_available_now(
             spark.readStream.format("synthetic_events_stream")
             .load()
             .writeStream.format("manifest_parquet")
             .option("path", out_dir)
             .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+            .outputMode("append"),
+            spark,
         )
-        q.awaitTermination()
     ingested = read_manifest_parquet(spark, out_dir)
     return (
         ingested.groupBy((F.col("user_id") % 7).alias("user_band"))

@@ -466,7 +466,12 @@ def test_stream_checkpoint_restart_resumes_state(spark, tmp_path):
     """Kill-and-restart recovery: a watermarked aggregate drained in two
     separate query runs over the SAME checkpoint must end with exactly the
     rows a single uninterrupted drain produces — offsets and window state
-    come back from the checkpoint, nothing is lost or double-counted."""
+    come back from the checkpoint, nothing is lost or double-counted.
+
+    The first run is a raw ``start()`` under the session's 8 shuffle
+    partitions, as a checkpoint written before ``run_available_now``
+    existed would be. The resumed run goes through ``run_available_now``
+    and must keep the 8 state partitions its checkpoint recorded."""
     import os
 
     from aws_saas_etl_spark.streaming import pipelines as P
@@ -485,46 +490,41 @@ def test_stream_checkpoint_restart_resumes_state(spark, tmp_path):
     half_a = ev.where(F.col("ts").cast("double") <= mid)
     half_b = ev.where(F.col("ts").cast("double") > mid)
 
-    def drain(out_dir, ckpt_dir):
+    def writer(out_dir, ckpt_dir, max_files):
         # file sink: the only production sink with full checkpoint recovery
         # (memory sink refuses to resume)
-        stream = P.read_event_stream(spark, src, max_files_per_trigger=1)
-        q = (
+        stream = P.read_event_stream(spark, src, max_files_per_trigger=max_files)
+        return (
             P.hourly_stats(stream)
             .writeStream.format("parquet")
             .option("path", out_dir)
             .option("checkpointLocation", ckpt_dir)
             .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination()
+
+    def state_partitions(q):
+        return q.lastProgress["stateOperators"][0]["numShufflePartitions"]
 
     half_a.coalesce(1).write.mode("append").parquet(src)
-    drain(out, ckpt)
+    q = writer(out, ckpt, 1).trigger(availableNow=True).start()
+    q.awaitTermination()
+    assert state_partitions(q) == 8
     first = spark.read.parquet(out).collect()
     # second batch of files arrives while the query is DOWN; the restarted
     # query resumes from the SAME checkpoint + sink
     half_b.coalesce(1).write.mode("append").parquet(src)
-    drain(out, ckpt)
+    resumed_q = P.run_available_now(writer(out, ckpt, 1), spark)
     resumed = spark.read.parquet(out).collect()
 
     # reference: one uninterrupted drain over all files, fresh checkpoint
     ref_out, ref_ckpt = str(tmp_path / "ref_out"), str(tmp_path / "ref_ckpt")
-    stream = P.read_event_stream(spark, src, max_files_per_trigger=10)
-    q = (
-        P.hourly_stats(stream)
-        .writeStream.format("parquet")
-        .option("path", ref_out)
-        .option("checkpointLocation", ref_ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    ref_q = P.run_available_now(writer(ref_out, ref_ckpt, 10), spark)
     want = spark.read.parquet(ref_out).collect()
     assert sorted(tuple(r) for r in resumed) == sorted(tuple(r) for r in want)
     assert len(resumed) > len(first), "restart must emit the newly closed windows"
+    # the checkpoint's recorded count wins over the conf the helper sets
+    assert state_partitions(resumed_q) == 8
+    assert state_partitions(ref_q) == spark.sparkContext.defaultParallelism
 
 
 def test_stream_topk_trending_matches_batch(spark):
@@ -821,3 +821,118 @@ def test_staged_events_dir_stages_once_per_path(spark):
         del R._stage_cache[k]
     assert R._staged_events_dir(spark, SF) == R._staged_events_dir(spark, SF + "/")
     assert len(ours()) == 1
+
+
+def test_available_now_takes_one_state_partition_per_task_slot(spark, event_dir):
+    """A new stream started through ``run_available_now`` runs one state
+    partition per task slot, not the session's batch shuffle partitions,
+    and the caller's conf reads the same after the drain — and after a
+    ``start()`` that raises."""
+    from pyspark.errors import AnalysisException
+
+    key = "spark.sql.shuffle.partitions"
+    assert spark.conf.get(key) == "8"
+    stream = P.read_event_stream(spark, event_dir)
+    q = P.run_available_now(
+        P.session_stats(stream)
+        .writeStream.format("memory")
+        .queryName("slot_partitions_out")
+        .outputMode("append"),
+        spark,
+    )
+    slots = spark.sparkContext.defaultParallelism
+    assert slots == 4
+    assert q.lastProgress["stateOperators"][0]["numShufflePartitions"] == slots
+    assert spark.table("slot_partitions_out").count() > 0
+    assert spark.conf.get(key) == "8"
+
+    # append mode over an aggregation with no watermark is refused at start()
+    with pytest.raises(AnalysisException):
+        P.run_available_now(
+            stream.groupBy("user_id")
+            .count()
+            .writeStream.format("memory")
+            .queryName("refused_out")
+            .outputMode("append"),
+            spark,
+        )
+    assert spark.conf.get(key) == "8"
+
+
+def test_memory_drain_starts_without_checkpoint_checksums(spark, event_dir, tmp_path, monkeypatch):
+    """A memory drain's checkpoint is a temporary directory Spark deletes
+    when the query stops, so ``run_to_memory`` starts it with checkpoint
+    checksum files off, and the caller's conf reads the same afterwards.
+    Spark reads the conf when the query starts: a stream started with it
+    off writes no checksum files for its state, one started under the
+    default does."""
+    key = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
+    before = spark.conf.get(key, None)
+    at_start = []
+    run_available_now = P.run_available_now
+
+    def spy(writer, session):
+        at_start.append(session.conf.get(key))
+        return run_available_now(writer, session)
+
+    monkeypatch.setattr(P, "run_available_now", spy)
+    stream = P.read_event_stream(spark, event_dir)
+    P.run_to_memory(P.session_stats(stream), "no_checksum_out")
+    assert at_start == ["false"]
+    assert spark.table("no_checksum_out").count() > 0
+    assert spark.conf.get(key, None) == before
+
+    def checksum_files(name, checksums):
+        ckpt = tmp_path / name
+        writer = (
+            P.hourly_stats(stream)
+            .writeStream.format("parquet")
+            .option("path", str(tmp_path / f"{name}_out"))
+            .option("checkpointLocation", str(ckpt))
+            .outputMode("append")
+        )
+        if checksums:
+            run_available_now(writer, spark)
+        else:
+            with P._session_conf(spark, key, "false"):
+                run_available_now(writer, spark)
+        # Spark's own checksum files sit next to each delta file as
+        # "<version>.delta.crc"; Hadoop's hidden ".<name>.crc" files stay
+        state = (ckpt / "state" / "0" / "0").iterdir()
+        return [f.name for f in state if f.name.endswith(".delta.crc") and f.name[0] != "."]
+
+    assert checksum_files("off", checksums=False) == []
+    assert checksum_files("default", checksums=True) != []
+    assert spark.conf.get(key, None) == before
+
+
+def test_every_engine_stream_starts_through_run_available_now():
+    """A stream started anywhere else would fall back to the session's
+    batch shuffle partitions (32 under ``get_spark``, 200 on a plain
+    session) for its state. No module under ``aws_saas_etl_spark/`` may
+    call ``.start()`` or ``.toTable()`` outside ``run_available_now``."""
+    import ast
+    import glob
+
+    import aws_saas_etl_spark
+
+    root = os.path.dirname(aws_saas_etl_spark.__file__)
+
+    def starts(node, inside):
+        if isinstance(node, ast.FunctionDef) and node.name == "run_available_now":
+            inside = True
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr in ("start", "toTable")
+            and not inside
+        ):
+            yield node.lineno
+        for child in ast.iter_child_nodes(node):
+            yield from starts(child, inside)
+
+    bypass = []
+    for path in sorted(glob.glob(os.path.join(root, "**", "*.py"), recursive=True)):
+        tree = ast.parse(open(path).read(), path)
+        bypass += [f"{os.path.relpath(path, root)}:{n}" for n in starts(tree, False)]
+    assert bypass == []
