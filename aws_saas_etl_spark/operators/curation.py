@@ -352,14 +352,14 @@ def embedding_semdedup_prune(spark, sf_dir: str) -> DataFrame:
     cents = emb.where(F.col("vec_id") < k).select(
         F.col("vec_id").alias("centroid_id"),
         F.col("embedding").alias("c_emb"),
-        norm(F.col("embedding")).alias("c_n"),
+        norm("embedding").alias("c_n"),
     )
     sim = F.round(
-        dot(F.col("embedding"), F.col("c_emb")) / (F.col("l2n") * F.col("c_n")), 6
+        dot("embedding", "c_emb") / (F.col("l2n") * F.col("c_n")), 6
     )
     w = Window.partitionBy("vec_id").orderBy(F.desc("cos_sim"), F.asc("centroid_id"))
     assigned = (
-        emb.select("vec_id", "embedding", norm(F.col("embedding")).alias("l2n"))
+        emb.select("vec_id", "embedding", norm("embedding").alias("l2n"))
         .crossJoin(F.broadcast(cents))
         .select("vec_id", "embedding", "l2n", "centroid_id", sim.alias("cos_sim"))
         .withColumn("rn", F.row_number().over(w))
@@ -378,7 +378,7 @@ def embedding_semdedup_prune(spark, sf_dir: str) -> DataFrame:
         "centroid_id",
         F.col("vec_id_b").alias("vec_id"),
         F.round(
-            dot(F.col("embedding_a"), F.col("embedding_b"))
+            dot("embedding_a", "embedding_b")
             / (F.col("l2n_a") * F.col("l2n_b")),
             6,
         ).alias("cs"),

@@ -65,21 +65,41 @@ def lsh_bits_for(n_rows: int, target_bucket_rows: int = LSH_TARGET_BUCKET_ROWS) 
     )
 
 
-def dot(a, b):
-    """Elementwise product + sum, all JVM-side. Accumulate in double."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
+# Wide vector expressions are written as SQL text and become a Column
+# through ONE ``F.expr`` call. Each PySpark Column call is a handful of
+# py4j round trips (about 10-15 with call-site capture), so a per-dim or
+# per-term Python loop of Column calls costs thousands of round trips per
+# construction; the parsed tree is the same one the loop built.
+
+
+def _fold_sql(a: str, b: str, term: str) -> str:
+    """Left fold of ``term`` over the element pairs (x, y) of array
+    operands ``a`` and ``b``, accumulated in double from 0.0."""
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> {term}), 0.0D, "
+        "(acc, v) -> acc + v)"
     )
 
 
-def norm(a):
-    return F.sqrt(dot(a, a))
+def _dot_sql(a: str, b: str) -> str:
+    return _fold_sql(a, b, "CAST(x AS DOUBLE) * CAST(y AS DOUBLE)")
 
 
-def cosine(a, b):
-    return dot(a, b) / (norm(a) * norm(b))
+def dot(a: str, b: str) -> Column:
+    """Elementwise product + sum of SQL array operands ``a`` and ``b``
+    (column names or array literals), all JVM-side. Accumulate in
+    double."""
+    return F.expr(_dot_sql(a, b))
+
+
+def norm(a: str) -> Column:
+    return F.expr(f"SQRT({_dot_sql(a, a)})")
+
+
+def cosine(a: str, b: str) -> Column:
+    return F.expr(
+        f"{_dot_sql(a, b)} / (SQRT({_dot_sql(a, a)}) * SQRT({_dot_sql(b, b)}))"
+    )
 
 
 def knn_bruteforce(spark, sf_dir: str, k: int = TOP_K) -> DataFrame:
@@ -92,12 +112,12 @@ def knn_bruteforce(spark, sf_dir: str, k: int = TOP_K) -> DataFrame:
     # r13: norms precomputed per row, not per pair (see _assign_cells —
     # measured 0.66 → 0.28 s best-of-3 on the inflated knn shape, values
     # bit-identical: same dot/(q_n·c_n) expression graph)
-    queries = _query_vectors(emb).withColumn("q_n", norm(F.col("q_emb")))
+    queries = _query_vectors(emb).withColumn("q_n", norm("q_emb"))
     corpus = emb.select(
         F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_emb")
-    ).withColumn("c_n", norm(F.col("c_emb")))
+    ).withColumn("c_n", norm("c_emb"))
     sim = F.round(
-        dot(F.col("q_emb"), F.col("c_emb")) / (F.col("q_n") * F.col("c_n")), 6
+        dot("q_emb", "c_emb") / (F.col("q_n") * F.col("c_n")), 6
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
     return (
@@ -115,7 +135,7 @@ def label_centroid_norms(spark, sf_dir: str) -> DataFrame:
     reduce; the shape of per-cluster stats a vector store maintains)."""
     emb = load_tables(spark, sf_dir).embeddings
     return (
-        emb.select("label", norm(F.col("embedding")).alias("l2"))
+        emb.select("label", norm("embedding").alias("l2"))
         .groupBy("label")
         .agg(
             F.count(F.lit(1)).alias("n_vectors"),
@@ -153,11 +173,11 @@ def embedding_neardup_pairs(
     # instead of being re-folded inside every pair's cosine (the
     # _assign_cells measurement; values bit-identical)
     base = emb.select(
-        "vec_id", "label", "embedding", norm(F.col("embedding")).alias("l2n")
+        "vec_id", "label", "embedding", norm("embedding").alias("l2n")
     )
     pairs = bounded_self_pairs(base, ["label"], "vec_id", ["embedding", "l2n"])
     sim = F.round(
-        dot(F.col("embedding_a"), F.col("embedding_b"))
+        dot("embedding_a", "embedding_b")
         / (F.col("l2n_a") * F.col("l2n_b")),
         6,
     )
@@ -182,15 +202,19 @@ def _hyperplanes(n_bits: int) -> list[list[float]]:
     return rng.randn(n_bits, EMBED_DIM).tolist()
 
 
-def lsh_bucket_expr(emb_col, n_bits: int = LSH_BITS_MIN):
+def _double_array_sql(xs) -> str:
+    """An array literal of doubles; ``repr`` round-trips each value."""
+    return "array(" + ", ".join(repr(float(x)) + "D" for x in xs) + ")"
+
+
+def lsh_bucket_expr(emb_col: str, n_bits: int = LSH_BITS_MIN) -> Column:
     """Random-hyperplane signature: bit i = sign(v · h_i). Returns int."""
-    planes = _hyperplanes(n_bits)
-    sig = F.lit(0)
-    for i, plane in enumerate(planes):
-        h = F.array(*[F.lit(float(x)) for x in plane])
-        bit = F.when(dot(emb_col, h) > 0, F.lit(2**i)).otherwise(F.lit(0))
-        sig = sig + bit
-    return sig
+    bits = [
+        f"CASE WHEN {_dot_sql(emb_col, _double_array_sql(plane))} > 0 "
+        f"THEN {2**i} ELSE 0 END"
+        for i, plane in enumerate(_hyperplanes(n_bits))
+    ]
+    return F.expr(" + ".join(["0", *bits]))
 
 
 def ann_lsh_topk(
@@ -215,7 +239,7 @@ def ann_lsh_topk(
         # metadata-only count (parquet row-group stats): one cheap job
         n_bits = lsh_bits_for(table_row_count(spark, sf_dir, "embeddings"))
     bucketed = emb.select(
-        "vec_id", "embedding", lsh_bucket_expr(F.col("embedding"), n_bits).alias("bucket")
+        "vec_id", "embedding", lsh_bucket_expr("embedding", n_bits).alias("bucket")
     )
     probes = [F.col("bucket")]
     if multi_probe:
@@ -230,18 +254,18 @@ def ann_lsh_topk(
         .select(
             F.col("vec_id").alias("query_id"),
             F.col("embedding").alias("q_emb"),
-            norm(F.col("embedding")).alias("q_n"),
+            norm("embedding").alias("q_n"),
             F.explode(F.array(*probes)).alias("q_bucket"),
         )
     )
     corpus = bucketed.select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("embedding").alias("c_emb"),
-        norm(F.col("embedding")).alias("c_n"),
+        norm("embedding").alias("c_n"),
         F.col("bucket").alias("c_bucket"),
     )
     sim = F.round(
-        dot(F.col("q_emb"), F.col("c_emb")) / (F.col("q_n") * F.col("c_n")), 6
+        dot("q_emb", "c_emb") / (F.col("q_n") * F.col("c_n")), 6
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
     return (
@@ -303,9 +327,9 @@ def _probe_cells(queries: DataFrame, centroids: DataFrame, nprobe: int) -> DataF
     (query, cell). r13: norms are per row (the _assign_cells
     measurement) — query rows and broadcast centroids each carry theirs
     once, and every cosine keeps the identical dot/(n_a·n_b) graph."""
-    queries = queries.withColumn("q_n", norm(F.col("q_emb")))
+    queries = queries.withColumn("q_n", norm("q_emb"))
     cols = queries.columns
-    cents = centroids.withColumn("_cn", norm(F.col("centroid")))
+    cents = centroids.withColumn("_cn", norm("centroid"))
     q_w = Window.partitionBy("query_id").orderBy(F.desc("cell_sim"), F.asc("cell"))
     return (
         queries.crossJoin(F.broadcast(cents))
@@ -313,7 +337,7 @@ def _probe_cells(queries: DataFrame, centroids: DataFrame, nprobe: int) -> DataF
             *cols,
             "cell",
             (
-                dot(F.col("q_emb"), F.col("centroid"))
+                dot("q_emb", "centroid")
                 / (F.col("q_n") * F.col("_cn"))
             ).alias("cell_sim"),
         )
@@ -347,7 +371,7 @@ def _adc_table(qsubs: DataFrame, cb: DataFrame) -> DataFrame:
         F.col("vec_id").alias("query_id"),
         *keys,
         "code",
-        F.floor(_l2sq(F.col("sub"), F.col("centroid")) * F.lit(float(PQ_QUANT)))
+        F.floor(_l2sq("sub", "centroid") * F.lit(float(PQ_QUANT)))
         .cast("long")
         .alias("dint"),
     )
@@ -407,7 +431,7 @@ def _exact_rerank(
             "query_id",
             "neighbor_id",
             *carry,
-            F.round(cosine(F.col("q_emb"), F.col("c_emb")), 6).alias("cos_sim"),
+            F.round(cosine("q_emb", "c_emb"), 6).alias("cos_sim"),
         )
         .withColumn("rank", F.row_number().over(ref_w))
         .where(F.col("rank") <= k)
@@ -446,9 +470,9 @@ def _assign_cells(vectors: DataFrame, centroids: DataFrame) -> DataFrame:
     quotient is the same dot/(norm_a × norm_b) expression graph, each
     norm just evaluated in the row's projection instead of the pair's.
     """
-    vec_n = vectors.withColumn("_vn", norm(F.col("embedding")))
-    cent_n = centroids.withColumn("_cn", norm(F.col("centroid")))
-    sim = dot(F.col("embedding"), F.col("centroid")) / (
+    vec_n = vectors.withColumn("_vn", norm("embedding"))
+    cent_n = centroids.withColumn("_cn", norm("centroid"))
+    sim = dot("embedding", "centroid") / (
         F.col("_vn") * F.col("_cn")
     )
     return (
@@ -483,9 +507,27 @@ IVF_QUANT = 10**9
 #: engines. If a component ever made ``x · 1e9`` leave int64, Spark's
 #: floor→LONG saturates while DuckDB's CAST raises — a silent engine
 #: divergence — so the fit VALIDATES the documented |x| ≤ 8 bound instead
-#: of assuming it (ADVICE r7). One bounded-scalar max-abs aggregation per
-#: fit; the fit is memoized, so serving never repays it.
+#: of assuming it (ADVICE r7). The max-abs fold rides the fit's one
+#: validation aggregation (with the empty, null and ragged-size checks);
+#: the fit is memoized, so serving never repays it.
 IVF_MAX_ABS_COMPONENT = 8.0
+
+
+def _quantized_mean(col: str, dim: int, quant: int) -> Column:
+    """The Lloyd mean of a group's ``dim``-wide array column ``col``:
+    per component, the integer sum of ``floor(double(x) · quant)``
+    divided by the group's row count and by ``quant`` (see IVF_QUANT).
+    An aggregate expression for ``groupBy(...).agg``."""
+    q = repr(float(quant)) + "D"
+    return F.expr(
+        "array("
+        + ", ".join(
+            f"CAST(sum(FLOOR(CAST({col}[{i}] AS DOUBLE) * {q})) AS DOUBLE)"
+            f" / CAST(count(1) AS DOUBLE) / {q}"
+            for i in range(dim)
+        )
+        + ")"
+    )
 
 
 def ivf_fit_cells(emb: DataFrame, n_cells: int, iters: int = IVF_ITERS) -> DataFrame:
@@ -515,22 +557,31 @@ def ivf_fit_cells(emb: DataFrame, n_cells: int, iters: int = IVF_ITERS) -> DataF
     broadcast subtree re-executes per consumer (the exchange-reuse
     pitfall measured in doc_tfidf_neighbors)."""
     vectors = emb.select("vec_id", "embedding")
-    first = vectors.select("embedding").first()
-    if first is None or first[0] is None:
+    n_rows, n_vecs, min_dim, dim, max_abs = vectors.agg(
+        F.count(F.lit(1)),
+        F.count("embedding"),
+        F.min(F.size("embedding")),
+        F.max(F.size("embedding")),
+        F.expr(
+            "max(aggregate(embedding, 0.0D, "
+            "(acc, x) -> greatest(acc, abs(CAST(x AS DOUBLE)))))"
+        ),
+    ).first()
+    if n_rows == 0:
         raise ValueError(
-            "ivf_fit_cells: embeddings table is empty (or first embedding "
-            "is null) — cannot derive the vector dimension to fit centroids"
+            "ivf_fit_cells: embeddings table is empty — cannot derive the "
+            "vector dimension to fit centroids"
         )
-    dim = len(first[0])
-    max_abs = vectors.select(
-        F.max(
-            F.aggregate(
-                F.col("embedding"),
-                F.lit(0.0),
-                lambda acc, x: F.greatest(acc, F.abs(x.cast("double"))),
-            )
+    if n_vecs < n_rows:
+        raise ValueError(
+            f"ivf_fit_cells: {n_rows - n_vecs} of {n_rows} embeddings are "
+            "null — every vector needs a value to be assigned a cell"
         )
-    ).first()[0]
+    if min_dim != dim:
+        raise ValueError(
+            f"ivf_fit_cells: embedding sizes range from {min_dim} to {dim} — "
+            "every vector needs the same dimension to average into a centroid"
+        )
     if max_abs is not None and max_abs > IVF_MAX_ABS_COMPONENT:
         raise ValueError(
             f"ivf_fit_cells: max |embedding component| = {max_abs} exceeds "
@@ -548,23 +599,10 @@ def ivf_fit_cells(emb: DataFrame, n_cells: int, iters: int = IVF_ITERS) -> DataF
         (F.row_number().over(Window.orderBy("h", "vec_id")) - 1).alias("cell"),
         F.col("embedding").alias("centroid"),
     )
-    q = F.lit(float(IVF_QUANT))
+    mean = _quantized_mean("embedding", dim, IVF_QUANT).alias("centroid")
     for _ in range(iters):
         assigned = _assign_cells(vectors, centroids)
-        centroids = assigned.groupBy("cell").agg(
-            F.array(
-                *[
-                    (
-                        F.sum(
-                            F.floor(F.col("embedding")[i].cast("double") * q)
-                        ).cast("double")
-                        / F.count(F.lit(1)).cast("double")
-                        / q
-                    )
-                    for i in range(dim)
-                ]
-            ).alias("centroid")
-        )
+        centroids = assigned.groupBy("cell").agg(mean)
     return centroids.localCheckpoint()
 
 
@@ -574,11 +612,12 @@ def ivf_fit_cells(emb: DataFrame, n_cells: int, iters: int = IVF_ITERS) -> DataF
 #: ~0.4 s/stage local floor, with GC-sensitive wall clock) was the
 #: measured source of ann_ivf_topk's canary spread (2.94 s driver /
 #: 1.67 s judge in r5). With the fit memoized, repeat invocations are
-#: probe-only: assignment + one broadcast join + one window. Measured
-#: r6 at sf0.1: cold (fit + probe) ≈ 6.4 s, warm probe-only ≈ 2.0 s —
-#: a canary "spread" of ~4.3 s that is now a deliberate cold/warm
-#: structure (rep 1 trains the index, reps 2+ query it), not run
-#: variance; best-of-3 reads the steady state a serving session sees.
+#: probe-only: one broadcast join + one window over the cached
+#: assignment. Measured at sf0.1 on a 4-core box: cold (fit +
+#: assignment + probe) ≈ 3.4–3.8 s, warm probe-only ≈ 0.6 s — a
+#: deliberate cold/warm structure (rep 1 trains the index, reps 2+
+#: query it), not run variance; best-of-3 reads the steady state a
+#: serving session sees.
 _IVF_CACHE = MemoDict("ivf_centroids")
 
 
@@ -663,12 +702,16 @@ def ann_ivf_topk(
     fixture embeddings are i.i.d.-random (isotropic: centroid routing
     carries little signal; 0.42 is still 4.7× the 9% uniform baseline).
     On clustered real embeddings the curve bends up sharply; the 10%
-    default is the budget knob, not a quality ceiling. Wall clock ≈ 3.9s
-    warm, of which ~2.9s is the Lloyd fit — 6+ serial stages against the
-    ~0.4s/stage local floor (SCALE.md), not data volume; the per-round
-    rebuild was rewritten in r5 from posexplode→(cell,dim)-groupBy (two
-    exchanges of n×dim rows) to one groupBy(cell) with dim parallel
-    avg(embedding[i]) expressions (single exchange of n rows).
+    default is the budget knob, not a quality ceiling. The fit and the
+    corpus assignment are session artifacts (``_ivf_index_cached``), so
+    only a cold call fits. Measured at sf0.1 on a 4-core box (local[4],
+    noop sink, best of 3): cold ≈ 3.4–3.8 s, of which the validation
+    scan and Lloyd fit take ≈ 2.5–2.8 s; warm (probe only) ≈ 0.6 s. The
+    fit is per-stage overhead (SCALE.md), not data volume: each round is
+    one groupBy(cell) whose dim quantized means (``_quantized_mean``)
+    ride a single exchange of n rows — the r5 rewrite of the
+    posexplode→(cell, dim) groupBy, which moved n×dim rows through two
+    exchanges per round.
     """
     emb = ensure_parallelism(load_tables(spark, sf_dir).embeddings)
     if n_cells is None:
@@ -712,7 +755,7 @@ def _ivf_probe(
     corpus = corpus_cells.select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("embedding").alias("c_emb"),
-        norm(F.col("embedding")).alias("c_n"),
+        norm("embedding").alias("c_n"),
         "cell",
     )
     cands = corpus.join(F.broadcast(_probe_cells(queries, centroids, nprobe)), "cell")
@@ -720,7 +763,7 @@ def _ivf_probe(
     if "q_label" in queries.columns:
         cands, carry = _same_label(cands, emb), ("label",)
     sim = F.round(
-        dot(F.col("q_emb"), F.col("c_emb")) / (F.col("q_n") * F.col("c_n")), 6
+        dot("q_emb", "c_emb") / (F.col("q_n") * F.col("c_n")), 6
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
     return (
@@ -907,12 +950,12 @@ def _knn_filtered_serve(emb: DataFrame, queries: DataFrame, k: int) -> DataFrame
     cands = emb.select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("embedding").alias("c_emb"),
-        norm(F.col("embedding")).alias("c_n"),
+        norm("embedding").alias("c_n"),
         F.col("label").alias("label"),
     )
-    queries = queries.withColumn("q_n", norm(F.col("q_emb")))
+    queries = queries.withColumn("q_n", norm("q_emb"))
     sim = F.round(
-        dot(F.col("q_emb"), F.col("c_emb")) / (F.col("q_n") * F.col("c_n")), 6
+        dot("q_emb", "c_emb") / (F.col("q_n") * F.col("c_n")), 6
     )
     w = Window.partitionBy("query_id").orderBy(
         F.desc("cos_sim"), F.asc("neighbor_id")
@@ -1855,17 +1898,17 @@ def embedding_centroid_assign(spark, sf_dir: str, k: int = K_CENTROIDS) -> DataF
     cents = emb.where(F.col("vec_id") < k).select(
         F.col("vec_id").alias("centroid_id"),
         F.col("embedding").alias("c_emb"),
-        norm(F.col("embedding")).alias("c_n"),
+        norm("embedding").alias("c_n"),
     )
     sim = F.round(
-        dot(F.col("q_emb"), F.col("c_emb")) / (F.col("q_n") * F.col("c_n")), 6
+        dot("q_emb", "c_emb") / (F.col("q_n") * F.col("c_n")), 6
     )
     w = Window.partitionBy("vec_id").orderBy(F.desc("cos_sim"), F.asc("centroid_id"))
     return (
         emb.select(
             "vec_id",
             F.col("embedding").alias("q_emb"),
-            norm(F.col("embedding")).alias("q_n"),
+            norm("embedding").alias("q_n"),
         )
         .crossJoin(F.broadcast(cents))
         .select("vec_id", "centroid_id", sim.alias("cos_sim"))
@@ -1949,16 +1992,13 @@ def embedding_random_projection(spark, sf_dir: str) -> DataFrame:
     emb = ensure_parallelism(load_tables(spark, sf_dir).embeddings)
     cols = [F.col("vec_id")]
     for j in range(RP_OUT_DIMS):
-        acc = None
-        for i in range(EMBED_DIM):
-            s = rp_sign(i, j)
-            if s == 0:
-                continue
-            term = F.col("embedding").getItem(i).cast("double")
-            if s < 0:
-                term = -term
-            acc = term if acc is None else acc + term
-        cols.append(dround(acc, 6).alias(f"p{j}"))
+        signs = ((i, rp_sign(i, j)) for i in range(EMBED_DIM))
+        terms = [
+            ("-" if s < 0 else "") + f"CAST(embedding[{i}] AS DOUBLE)"
+            for i, s in signs
+            if s != 0
+        ]
+        cols.append(dround(F.expr(" + ".join(terms)), 6).alias(f"p{j}"))
     return emb.select(*cols)
 
 
@@ -2081,13 +2121,13 @@ def embedding_triplet_mining(spark, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("anchor_id"),
         F.col("label").alias("label"),
         F.col("embedding").alias("q_emb"),
-        norm(F.col("embedding")).alias("q_n"),
+        norm("embedding").alias("q_n"),
     )
     others = emb.select(
         F.col("vec_id").alias("o_id"),
         F.col("label").alias("o_label"),
         F.col("embedding").alias("c_emb"),
-        norm(F.col("embedding")).alias("c_n"),
+        norm("embedding").alias("c_n"),
     )
     pairs = (
         others.join(F.broadcast(anchors), F.col("o_id") != F.col("anchor_id"))
@@ -2097,7 +2137,7 @@ def embedding_triplet_mining(spark, sf_dir: str) -> DataFrame:
             "o_id",
             "o_label",
             F.round(
-                dot(F.col("q_emb"), F.col("c_emb"))
+                dot("q_emb", "c_emb")
                 / (F.col("q_n") * F.col("c_n")),
                 6,
             ).alias("cos_sim"),
@@ -2148,9 +2188,9 @@ PQ_REFINE = 10 * TOP_K
 
 def _unit(emb_col: str) -> Column:
     """The L2-normalized vector, components cast to double."""
-    return F.transform(
-        F.col(emb_col),
-        lambda x: x.cast("double") / F.sqrt(dot(F.col(emb_col), F.col(emb_col))),
+    return F.expr(
+        f"transform({emb_col}, u -> CAST(u AS DOUBLE) "
+        f"/ SQRT({_dot_sql(emb_col, emb_col)}))"
     )
 
 
@@ -2187,14 +2227,11 @@ def _subspace_slices(df: DataFrame, col: str, extra: tuple = ()) -> DataFrame:
     )
 
 
-def _l2sq(a, b):
-    """Squared L2 distance, left-fold double accumulation (the proven
-    zip_with/aggregate ↔ list_transform/list_aggregate twin shape)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+def _l2sq(a: str, b: str) -> Column:
+    """Squared L2 distance between SQL array operands ``a`` and ``b``,
+    left-fold double accumulation (the proven zip_with/aggregate ↔
+    list_transform/list_aggregate twin shape)."""
+    return F.expr(_fold_sql(a, b, "(x - y) * (x - y)"))
 
 
 def _pq_argmin(subs: DataFrame, cb: DataFrame) -> DataFrame:
@@ -2209,7 +2246,7 @@ def _pq_argmin(subs: DataFrame, cb: DataFrame) -> DataFrame:
             "m",
             "sub",
             "code",
-            _l2sq(F.col("sub"), F.col("centroid")).alias("d"),
+            _l2sq("sub", "centroid").alias("d"),
         )
         .withColumn("rn", F.row_number().over(w))
         .where(F.col("rn") == 1)
@@ -2250,21 +2287,10 @@ def _pq_fit_from_subs(subs: DataFrame) -> DataFrame:
     cb = subs.join(F.broadcast(seeds), "vec_id").select(
         "m", "code", F.col("sub").alias("centroid")
     )
-    q = F.lit(float(PQ_QUANT))
+    mean = _quantized_mean("sub", PQ_SUBDIM, PQ_QUANT).alias("centroid")
     for _ in range(PQ_ITERS):
         assigned = _pq_argmin(subs, cb)
-        cb = assigned.groupBy("m", "code").agg(
-            F.array(
-                *[
-                    (
-                        F.sum(F.floor(F.col("sub")[i] * q)).cast("double")
-                        / F.count(F.lit(1)).cast("double")
-                        / q
-                    )
-                    for i in range(PQ_SUBDIM)
-                ]
-            ).alias("centroid")
-        )
+        cb = assigned.groupBy("m", "code").agg(mean)
     return cb.localCheckpoint()
 
 
@@ -2560,10 +2586,7 @@ def ann_ivfpq_residual_topk(spark, sf_dir: str, k: int = TOP_K) -> DataFrame:
     assigned = assigned.select("vec_id", "cell")
     ncent = coarse.select(
         "cell",
-        F.transform(
-            "centroid",
-            lambda x: x / F.sqrt(dot(F.col("centroid"), F.col("centroid"))),
-        ).alias("nc"),
+        _unit("centroid").alias("nc"),
     )
     normed = emb.select("vec_id", _unit("embedding").alias("u"))
     resid = (
@@ -2893,14 +2916,13 @@ def _bq_sig_exprs(emb_col):
     sign bit, where Spark and DuckDB shift/overflow semantics differ.
     Sign of a component is scale-invariant, so the raw column feeds the
     signature directly (no normalization pass needed)."""
-    def half(lo: int) -> object:
-        sig = F.lit(0).cast("long")
-        for i in range(32):
-            bit = F.when(
-                F.col(emb_col)[lo + i].cast("double") > 0, F.lit(2**i)
-            ).otherwise(F.lit(0))
-            sig = sig + bit
-        return sig
+    def half(lo: int) -> Column:
+        bits = [
+            f"CASE WHEN CAST({emb_col}[{lo + i}] AS DOUBLE) > 0 "
+            f"THEN {2**i} ELSE 0 END"
+            for i in range(32)
+        ]
+        return F.expr(" + ".join(["CAST(0 AS BIGINT)", *bits]))
 
     return half(0).alias("sig_lo"), half(32).alias("sig_hi")
 

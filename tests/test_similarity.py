@@ -126,7 +126,7 @@ def test_bucket_sizes_shrink_as_bits_grow(spark):
     emb = load_tables(spark, SF_SMOKE).embeddings
     def max_bucket(bits: int) -> int:
         return (
-            emb.select(lsh_bucket_expr(F.col("embedding"), bits).alias("b"))
+            emb.select(lsh_bucket_expr("embedding", bits).alias("b"))
             .groupBy("b")
             .count()
             .agg(F.max("count"))
@@ -338,7 +338,7 @@ def test_triplet_mining_invariants(spark):
                    F.col("embedding").alias("ce"))
     pairs = (o.crossJoin(a).where(F.col("oid") != F.col("aid"))
              .select("aid", "al", "oid", "ol",
-                     F.round(cosine(F.col("qe"), F.col("ce")), 6).alias("s"))
+                     F.round(cosine("qe", "ce"), 6).alias("s"))
              .collect())
     by_anchor = {}
     for p in pairs:
@@ -641,6 +641,19 @@ def test_ivf_fit_validates_component_range(spark):
     with _pytest.raises(ValueError, match="exceeds"):
         ivf_fit_cells(bad, 1)
 
+    schema = "vec_id BIGINT, embedding ARRAY<DOUBLE>"
+    with _pytest.raises(ValueError, match="empty"):
+        ivf_fit_cells(spark.createDataFrame([], schema), 1)
+    # a null past the first row (the first row is valid)
+    nulls = spark.createDataFrame([(0, [0.5, 1.0]), (1, None), (2, [1.0, 0.0])], schema)
+    with _pytest.raises(ValueError, match="1 of 3 embeddings are null"):
+        ivf_fit_cells(nulls, 1)
+    ragged = spark.createDataFrame(
+        [(0, [0.5, 1.0]), (1, [1.0, 0.0, 2.0]), (2, [1.0, 0.0])], schema
+    )
+    with _pytest.raises(ValueError, match="sizes range from 2 to 3"):
+        ivf_fit_cells(ragged, 1)
+
 
 def test_fixture_embeddings_within_quant_bound(spark):
     """The sf fixtures must satisfy the validated |x| ≤ 8 precondition
@@ -794,7 +807,7 @@ def test_pq_refined_recall_high_on_clustered_embeddings(spark):
     )
     qtab = qsubs.join(F.broadcast(cb), "m").select(
         "query_id", "m", "code",
-        F.floor(_l2sq(F.col("sub"), F.col("centroid")) * F.lit(1e9))
+        F.floor(_l2sq("sub", "centroid") * F.lit(1e9))
         .cast("long").alias("dint"),
     )
     adc_w = Window.partitionBy("query_id").orderBy(
@@ -823,7 +836,7 @@ def test_pq_refined_recall_high_on_clustered_embeddings(spark):
         .join(F.broadcast(qv), "query_id")
         .select(
             "query_id", "neighbor_id",
-            F.round(cosine(F.col("q_emb"), F.col("c_emb")), 6).alias("cos_sim"),
+            F.round(cosine("q_emb", "c_emb"), 6).alias("cos_sim"),
         )
         .withColumn("rank", F.row_number().over(ref_w))
         .where(F.col("rank") <= k)
@@ -869,7 +882,7 @@ def test_residual_codes_cut_reconstruction_error_on_clustered(spark):
         return (
             _pq_argmin(subs, cb)
             .join(cb, ["m", "code"])
-            .agg(F.sum(_l2sq(F.col("sub"), F.col("centroid"))).alias("e"))
+            .agg(F.sum(_l2sq("sub", "centroid")).alias("e"))
             .first()["e"]
         )
 
@@ -880,13 +893,13 @@ def test_residual_codes_cut_reconstruction_error_on_clustered(spark):
         "cell",
         F.transform(
             "centroid",
-            lambda x: x / F.sqrt(dot(F.col("centroid"), F.col("centroid"))),
+            lambda x: x / F.sqrt(dot("centroid", "centroid")),
         ).alias("nc"),
     )
     unit = F.transform(
         F.col("embedding"),
         lambda x: x.cast("double")
-        / F.sqrt(dot(F.col("embedding"), F.col("embedding"))),
+        / F.sqrt(dot("embedding", "embedding")),
     )
     resid = (
         emb.select("vec_id", unit.alias("u"))
@@ -1231,3 +1244,253 @@ def test_sampled_recall_report_equals_full_restricted_queries(spark):
         expected = {q: t for q, t in full.items() if bucket(q) < pct}
         assert sampled == expected, pct
         assert 0 < len(sampled) < len(full), pct
+
+
+# --------------------------------------------------------------------------
+# Vector expressions built as SQL text: the Column-API formulations they
+# replaced are kept below as references. Each rewritten builder must give
+# the reference's optimized plan (expression ids and lambda variable names
+# normalized) and its rows, and must cost one expression's worth of py4j
+# round trips whatever its width.
+# --------------------------------------------------------------------------
+
+
+def _ref_fold(a, b, term):
+    return F.aggregate(F.zip_with(a, b, term), F.lit(0.0), lambda acc, v: acc + v)
+
+
+def _ref_dot(a, b):
+    return _ref_fold(a, b, lambda x, y: x.cast("double") * y.cast("double"))
+
+
+def _ref_norm(a):
+    return F.sqrt(_ref_dot(a, a))
+
+
+def _ref_unit(c):
+    return F.transform(
+        F.col(c),
+        lambda x: x.cast("double") / F.sqrt(_ref_dot(F.col(c), F.col(c))),
+    )
+
+
+def _ref_ivf_mean(dim, quant):
+    q = F.lit(float(quant))
+    return F.array(
+        *[
+            F.sum(F.floor(F.col("embedding")[i].cast("double") * q)).cast("double")
+            / F.count(F.lit(1)).cast("double")
+            / q
+            for i in range(dim)
+        ]
+    )
+
+
+def _ref_pq_mean(dim, quant):
+    q = F.lit(float(quant))
+    return F.array(
+        *[
+            F.sum(F.floor(F.col("sub")[i] * q)).cast("double")
+            / F.count(F.lit(1)).cast("double")
+            / q
+            for i in range(dim)
+        ]
+    )
+
+
+def _ref_lsh(emb_col, n_bits):
+    from aws_saas_etl_spark.operators.similarity import _hyperplanes
+
+    sig = F.lit(0)
+    for i, plane in enumerate(_hyperplanes(n_bits)):
+        h = F.array(*[F.lit(float(x)) for x in plane])
+        sig = sig + F.when(_ref_dot(emb_col, h) > 0, F.lit(2**i)).otherwise(F.lit(0))
+    return sig
+
+
+def _ref_bq_half(emb_col, lo):
+    sig = F.lit(0).cast("long")
+    for i in range(32):
+        sig = sig + F.when(
+            F.col(emb_col)[lo + i].cast("double") > 0, F.lit(2**i)
+        ).otherwise(F.lit(0))
+    return sig
+
+
+def _ref_rp(j):
+    from aws_saas_etl_spark.functions.num import dround
+    from aws_saas_etl_spark.operators.similarity import EMBED_DIM, rp_sign
+
+    acc = None
+    for i in range(EMBED_DIM):
+        s = rp_sign(i, j)
+        if s == 0:
+            continue
+        term = F.col("embedding").getItem(i).cast("double")
+        if s < 0:
+            term = -term
+        acc = term if acc is None else acc + term
+    return dround(acc, 6)
+
+
+def _normalized_plan(df) -> str:
+    """The optimized plan with expression ids blanked and each lambda
+    variable (``x_1`` from PySpark, ``x`` from SQL text) renamed by the
+    order its id first appears, so operand order still counts."""
+    import re
+
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    ids: dict[str, int] = {}
+    plan = re.sub(
+        r"lambda \w+#(\d+)",
+        lambda m: f"lambda v{ids.setdefault(m.group(1), len(ids))}",
+        plan,
+    )
+    return re.sub(r"#\d+", "#", plan)
+
+
+def test_sql_text_builders_keep_the_column_api_tree(spark):
+    """Every vector builder written as SQL text optimizes to the plan
+    its Column-API formulation gave, and returns the same rows on the
+    sf0.001 embeddings: the IVF and PQ Lloyd means, dot / norm / cosine,
+    _l2sq, _unit (on float embeddings and on double centroids), a 12-bit
+    LSH signature, both BQ sign words and every random-projection output
+    dim."""
+    from aws_saas_etl_spark.catalog import ensure_parallelism
+    from aws_saas_etl_spark.operators import similarity as S
+
+    emb = load_tables(spark, SF_SMOKE).embeddings
+    pairs = emb.select(
+        "vec_id",
+        F.col("embedding").alias("a"),
+        F.reverse("embedding").alias("b"),
+        F.col("embedding").cast("array<double>").alias("da"),
+        F.reverse("embedding").cast("array<double>").alias("db"),
+    )
+    cells = emb.withColumn("cell", F.col("vec_id") % 7).groupBy("cell")
+    subs = S._pq_subvectors(emb).groupBy("m")
+    rp = S.embedding_random_projection(spark, SF_SMOKE)
+    cases = {
+        "ivf_mean": (
+            cells.agg(S._quantized_mean("embedding", S.EMBED_DIM, S.IVF_QUANT).alias("c")),
+            cells.agg(_ref_ivf_mean(S.EMBED_DIM, S.IVF_QUANT).alias("c")),
+        ),
+        "pq_mean": (
+            subs.agg(S._quantized_mean("sub", S.PQ_SUBDIM, S.PQ_QUANT).alias("c")),
+            subs.agg(_ref_pq_mean(S.PQ_SUBDIM, S.PQ_QUANT).alias("c")),
+        ),
+        "dot": (
+            pairs.select("vec_id", S.dot("a", "b").alias("v")),
+            pairs.select("vec_id", _ref_dot(F.col("a"), F.col("b")).alias("v")),
+        ),
+        "norm": (
+            pairs.select("vec_id", S.norm("a").alias("v")),
+            pairs.select("vec_id", _ref_norm(F.col("a")).alias("v")),
+        ),
+        "cosine": (
+            pairs.select("vec_id", S.cosine("a", "b").alias("v")),
+            pairs.select(
+                "vec_id",
+                (
+                    _ref_dot(F.col("a"), F.col("b"))
+                    / (_ref_norm(F.col("a")) * _ref_norm(F.col("b")))
+                ).alias("v"),
+            ),
+        ),
+        "l2sq": (
+            pairs.select("vec_id", S._l2sq("da", "db").alias("v")),
+            pairs.select(
+                "vec_id",
+                _ref_fold(
+                    F.col("da"), F.col("db"), lambda x, y: (x - y) * (x - y)
+                ).alias("v"),
+            ),
+        ),
+        "unit": (
+            emb.select("vec_id", S._unit("embedding").alias("u")),
+            emb.select("vec_id", _ref_unit("embedding").alias("u")),
+        ),
+        # the residual path's centroid normalization (double arrays, no cast)
+        "unit_double": (
+            pairs.select("vec_id", S._unit("da").alias("u")),
+            pairs.select(
+                "vec_id",
+                F.transform(
+                    "da", lambda x: x / F.sqrt(_ref_dot(F.col("da"), F.col("da")))
+                ).alias("u"),
+            ),
+        ),
+        "lsh": (
+            emb.select("vec_id", S.lsh_bucket_expr("embedding", 12).alias("b")),
+            emb.select("vec_id", _ref_lsh(F.col("embedding"), 12).alias("b")),
+        ),
+        "bq": (
+            emb.select("vec_id", *S._bq_sig_exprs("embedding")),
+            emb.select(
+                "vec_id",
+                _ref_bq_half("embedding", 0).alias("sig_lo"),
+                _ref_bq_half("embedding", 32).alias("sig_hi"),
+            ),
+        ),
+        "rp": (
+            rp,
+            ensure_parallelism(emb).select(
+                "vec_id", *[_ref_rp(j).alias(f"p{j}") for j in range(S.RP_OUT_DIMS)]
+            ),
+        ),
+    }
+    # plan strings elide long field lists unless this bound covers them
+    spark.conf.set("spark.sql.debug.maxToStringFields", "100000")
+    try:
+        for name, (got, want) in cases.items():
+            plan = _normalized_plan(got)
+            assert "more fields" not in plan, name
+            assert plan == _normalized_plan(want), name
+            key = got.columns[0]
+            assert got.orderBy(key).collect() == want.orderBy(key).collect(), name
+    finally:
+        spark.conf.unset("spark.sql.debug.maxToStringFields")
+
+
+def _py4j_calls(build) -> int:
+    """Python→JVM round trips (py4j ``send_command`` calls) made by
+    ``build()`` on the calling thread. py4j's finalizer thread releases
+    garbage-collected Java references through the same method whenever
+    Python's collector runs; those calls are not ``build()``'s."""
+    import threading
+
+    from py4j.clientserver import ClientServerConnection
+
+    calls = [0]
+    real = ClientServerConnection.send_command
+    me = threading.get_ident()
+
+    def counting(self, command):
+        calls[0] += threading.get_ident() == me
+        return real(self, command)
+
+    ClientServerConnection.send_command = counting
+    try:
+        build()
+    finally:
+        ClientServerConnection.send_command = real
+    return calls[0]
+
+
+def test_vector_builders_cost_one_expression_of_round_trips(spark):
+    """A vector builder's py4j cost does not grow with its width: the
+    Lloyd mean at dim 8 and at dim 64, and ``dot`` against array
+    operands of width 8 and 64, each cost what one ``F.expr`` costs."""
+    from aws_saas_etl_spark.operators.similarity import (
+        _double_array_sql,
+        _quantized_mean,
+        dot,
+    )
+
+    one_expr = _py4j_calls(lambda: F.expr("a + b"))
+    assert one_expr > 0
+    assert _py4j_calls(lambda: _quantized_mean("embedding", 8, 10**9)) == one_expr
+    assert _py4j_calls(lambda: _quantized_mean("embedding", 64, 10**9)) == one_expr
+    assert _py4j_calls(lambda: dot("a", "b")) == one_expr
+    for width in (8, 64):
+        assert _py4j_calls(lambda: dot("a", _double_array_sql([0.5] * width))) == one_expr

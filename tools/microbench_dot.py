@@ -20,7 +20,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from aws_saas_etl_spark.catalog import load_table
-from aws_saas_etl_spark.operators.similarity import EMBED_DIM, cosine, dot
+from aws_saas_etl_spark.operators.similarity import EMBED_DIM, cosine, dot, norm
 from aws_saas_etl_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -80,7 +80,7 @@ def main():
         corpus.limit(200)
         .crossJoin(F.broadcast(queries))
         .select(
-            F.round(cosine(F.col("q_emb"), F.col("c_emb")), 6).alias("h"),
+            F.round(cosine("q_emb", "c_emb"), 6).alias("h"),
             F.round(cosine_unrolled(F.col("q_emb"), F.col("c_emb")), 6).alias("u"),
         )
         .where(~F.col("h").eqNullSafe(F.col("u")))
@@ -102,7 +102,7 @@ def main():
         )
 
     # A: HOF per-pair cosine (current)
-    timeit(knn(cosine(F.col("q_emb"), F.col("c_emb")), corpus, queries), "knn HOF cosine (current)")
+    timeit(knn(cosine("q_emb", "c_emb"), corpus, queries), "knn HOF cosine (current)")
     # B: unrolled per-pair cosine
     timeit(knn(cosine_unrolled(F.col("q_emb"), F.col("c_emb")), corpus, queries), "knn unrolled cosine")
     # C: unrolled dot + precomputed norms
@@ -111,9 +111,9 @@ def main():
     sim_pre = dot_unrolled(F.col("q_emb"), F.col("c_emb")) / (F.col("q_n") * F.col("c_n"))
     timeit(knn(sim_pre, cor_n, q_n), "knn unrolled + precomputed norms")
     # D: HOF dot + precomputed norms (isolate the two effects)
-    cor_nh = corpus.withColumn("c_n", F.sqrt(dot(F.col("c_emb"), F.col("c_emb"))))
-    q_nh = queries.withColumn("q_n", F.sqrt(dot(F.col("q_emb"), F.col("q_emb"))))
-    sim_preh = dot(F.col("q_emb"), F.col("c_emb")) / (F.col("q_n") * F.col("c_n"))
+    cor_nh = corpus.withColumn("c_n", norm("c_emb"))
+    q_nh = queries.withColumn("q_n", norm("q_emb"))
+    sim_preh = dot("q_emb", "c_emb") / (F.col("q_n") * F.col("c_n"))
     timeit(knn(sim_preh, cor_nh, q_nh), "knn HOF + precomputed norms")
 
     # assign_cells shape: corpus x 64 centroids argmax
@@ -133,7 +133,7 @@ def main():
                 ).alias("cell")
             )
         )
-    timeit(assign(cosine(F.col("embedding"), F.col("centroid")), emb, cents), "assign HOF cosine (current)")
+    timeit(assign(cosine("embedding", "centroid"), emb, cents), "assign HOF cosine (current)")
     timeit(assign(cosine_unrolled(F.col("embedding"), F.col("centroid")), emb, cents), "assign unrolled cosine")
     emb_n = emb.withColumn("v_n", F.sqrt(dot_unrolled(F.col("embedding"), F.col("embedding"))))
     cents_n = cents.withColumn("c_n", F.sqrt(dot_unrolled(F.col("centroid"), F.col("centroid"))))
