@@ -75,7 +75,7 @@ class MemoDict(dict):
     ``traced=False`` (r13) registers the memo for ``clear_all`` — so cold
     measurement stays honest: a memo-cleared rep re-pays the cached work —
     WITHOUT reporting touches to ``track()``. Use it for bounded SIZING
-    scalars (table row counts, append-cut ids): they are catalog-statistic
+    scalars (table row counts, base/delta cuts): they are catalog-statistic
     metadata whose recompute cost is one metadata-ish job, not the
     two-regime stored-artifact cost the bench's cold/warm table exists to
     expose, so tracing them would flood that table with rows whose
@@ -132,14 +132,35 @@ def all_memos() -> list[MemoDict]:
 
 
 #: Shared registry for DERIVED-SET sizing scalars (r14, VERDICT r13 #4):
-#: the lifecycle queries' base/delta boundaries over derived id sets
-#: (minhash signature ids, lexical postings ids, span-gram / BPE doc
-#: sets) each cost one count job plus one sort/limit job per
-#: construction — and the minhash one executes the full signature chain
-#: twice just to size it. Same regime as ``similarity._APPEND_CUT_CACHE``:
-#: untraced (no cold/warm membership change; surfaced via the sizing
-#: trace), cleared with the session memos so cold reps re-pay it.
+#: the lifecycle queries' base/delta boundaries (``rank_cut``) over id
+#: sets (vector ids, minhash signature ids, lexical postings ids,
+#: span-gram / BPE / logreg doc sets) each cost a count plus a sort/limit
+#: per derivation — and the minhash one executes the full signature
+#: chain twice just to size it. Untraced (no cold/warm membership
+#: change; surfaced via the sizing trace), cleared with the session memos
+#: so cold reps re-pay it.
 _DERIVED_CUT_CACHE = MemoDict("derived_cut", traced=False)
+
+
+def rank_cut(spark, sf_dir: str, name: str, ids, denom: int = 10) -> int:
+    """The base/delta boundary of an append-only id set: the largest of
+    the ``n − n//denom`` smallest distinct ids in ``ids`` (a one-column
+    frame). An exact integer-rank cut, no float percentile, so both
+    engines agree on which rows are arrivals. It names stored base
+    tables (``proc_dir`` tags embed it), so it is derived once per
+    session per ``name`` in ``_DERIVED_CUT_CACHE``."""
+
+    def build() -> int:
+        from pyspark.sql import functions as F
+
+        col = ids.columns[0]
+        distinct = ids.distinct()
+        n = distinct.count()
+        return (
+            distinct.orderBy(col).limit(n - n // denom).agg(F.max(col)).first()[0]
+        )
+
+    return _DERIVED_CUT_CACHE.get_or_build(spark, sf_dir, name, build=build)
 
 
 class track:

@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from aws_saas_etl_spark.memo import MemoDict
+from aws_saas_etl_spark.memo import MemoDict, rank_cut
 from aws_saas_etl_spark.catalog import (
     ensure_parallelism,
     load_tables,
@@ -36,6 +36,7 @@ from aws_saas_etl_spark.catalog import (
 )
 from aws_saas_etl_spark.functions import num as N
 from aws_saas_etl_spark.functions import text as T
+from aws_saas_etl_spark.sources.custom import proc_dir, store_and_read_back
 
 # Deterministic-shuffle parameters: the salt versions the permutation (a
 # new salt = a fresh epoch order); 16 shards keeps the fixture demo
@@ -1129,6 +1130,36 @@ def _stored_base_manifest(spark, sf_dir: str, cut=None) -> DataFrame:
     return _MANIFEST_CACHE.get_or_build(spark, sf_dir, "base", build=build)
 
 
+def _rerank_touched(stored: DataFrame, new_rows: DataFrame, scope: DataFrame):
+    """The shared tail of the arrival and deletion repairs: stored rows
+    whose ``doc_id`` is in ``scope`` are replaced by ``new_rows``, and
+    ``pos`` re-ranks only in the (split, shard) groups that gained or
+    lost a row. Returns ``(re_ranked, kept_pos, touched)``: the touched
+    shards' re-ranked rows, the untouched shards' rows with their stored
+    pos, and the touched (split, shard) set."""
+    untouched_stored = stored.join(scope, "doc_id", "anti")
+    removed = stored.join(scope, "doc_id", "semi")
+    touched = (
+        new_rows.select("split", "shard")
+        .unionByName(removed.select("split", "shard"))
+        .distinct()
+    )
+    # manifest-sized; materialized once — its two consumers (the touched
+    # re-rank and the untouched pass-through) would otherwise each
+    # re-execute the whole repair subtree
+    combined = untouched_stored.select(
+        "doc_id", "ckey", "n_tokens", "split", "shuffle_key", "shard", "pos"
+    ).unionByName(
+        new_rows.withColumn("pos", F.lit(None).cast("int"))
+    ).localCheckpoint()
+    re_ranked = (
+        combined.join(F.broadcast(touched), ["split", "shard"], "semi")
+        .withColumn("pos", F.row_number().over(_pos_window()))
+    )
+    kept_pos = combined.join(F.broadcast(touched), ["split", "shard"], "anti")
+    return re_ranked, kept_pos, touched
+
+
 def _incremental_merge_parts(spark, sf_dir: str, keep_delta: DataFrame | None = None):
     """Body of the incremental manifest merge, split out so the
     partitioned-store query can write its pieces file-by-file: returns
@@ -1203,14 +1234,9 @@ def _incremental_merge_parts(spark, sf_dir: str, keep_delta: DataFrame | None = 
     )
     aff_nodes = (
         merged.join(F.broadcast(aff_comps), "comp", "semi")
-        .select("node")
+        .select(F.col("node").alias("doc_id"))
         .localCheckpoint()
     )
-
-    untouched_stored = stored.join(
-        aff_nodes, stored["doc_id"] == aff_nodes["node"], "anti"
-    )
-    removed = stored.join(aff_nodes, stored["doc_id"] == aff_nodes["node"], "semi")
 
     # --- re-elect keepers inside affected clusters (+ delta singletons)
     survivors = keep_base.select("doc_id").unionByName(keep_delta.select("doc_id"))
@@ -1240,24 +1266,7 @@ def _incremental_merge_parts(spark, sf_dir: str, keep_delta: DataFrame | None = 
     )
 
     # --- re-rank only touched shards; reuse stored pos elsewhere
-    touched = (
-        new_rows.select("split", "shard")
-        .unionByName(removed.select("split", "shard"))
-        .distinct()
-    )
-    # manifest-sized; materialized once — its two consumers (the touched
-    # re-rank and the untouched pass-through) would otherwise each
-    # re-execute the whole repair subtree
-    combined = untouched_stored.select(
-        "doc_id", "ckey", "n_tokens", "split", "shuffle_key", "shard", "pos"
-    ).unionByName(
-        new_rows.withColumn("pos", F.lit(None).cast("int"))
-    ).localCheckpoint()
-    re_ranked = (
-        combined.join(F.broadcast(touched), ["split", "shard"], "semi")
-        .withColumn("pos", F.row_number().over(_pos_window()))
-    )
-    kept_pos = combined.join(F.broadcast(touched), ["split", "shard"], "anti")
+    re_ranked, kept_pos, touched = _rerank_touched(stored, new_rows, aff_nodes)
     return stored, re_ranked, kept_pos, touched
 
 
@@ -1300,6 +1309,24 @@ def training_manifest_incremental(spark, sf_dir: str) -> DataFrame:
 
 
 MANIFEST_COLS = ["doc_id", "n_tokens", "split", "shard", "pos"]
+
+
+def _read_partitioned_manifest(spark, path: str) -> DataFrame:
+    """Read a (split, shard)-partitioned manifest store back in the
+    manifest's row shape. Partition discovery infers the types of
+    ``split`` and ``shard`` from directory names, so both are cast back
+    to the manifest's column types."""
+    return (
+        spark.read.parquet(path)
+        .select(
+            "doc_id",
+            F.col("split").cast("string").alias("split"),
+            F.col("shard").cast("int").alias("shard"),
+            "pos",
+            "n_tokens",
+        )
+        .orderBy("split", "shard", "pos")
+    )
 
 
 def _overwrite_touched_partitions(re_ranked, touched, path: str) -> None:
@@ -1386,25 +1413,13 @@ def manifest_partitioned_store_roundtrip(spark, sf_dir: str) -> DataFrame:
     """
     import os
 
-    from aws_saas_etl_spark.sources.custom import proc_dir
-
     stored, re_ranked, _, touched = _incremental_merge_parts(spark, sf_dir)
     path = proc_dir("manifest_part", os.path.abspath(sf_dir))
     stored.select(*MANIFEST_COLS).write.partitionBy("split", "shard").mode(
         "overwrite"
     ).parquet(path)
     _overwrite_touched_partitions(re_ranked, touched, path)
-    back = spark.read.parquet(path)
-    return (
-        back.select(
-            "doc_id",
-            F.col("split").cast("string").alias("split"),
-            F.col("shard").cast("int").alias("shard"),
-            "pos",
-            "n_tokens",
-        )
-        .orderBy("split", "shard", "pos")
-    )
+    return _read_partitioned_manifest(spark, path)
 
 
 # Constructing this query's DataFrame EXECUTES two partitioned parquet
@@ -1528,26 +1543,7 @@ def training_manifest_deletion_repair(spark, sf_dir: str) -> DataFrame:
     )
 
     # --- merge with stored rows; re-rank only touched shards
-    untouched_stored = stored.join(scope_ids, "doc_id", "anti")
-    removed = stored.join(scope_ids, "doc_id", "semi")
-    touched = (
-        new_rows.select("split", "shard")
-        .unionByName(removed.select("split", "shard"))
-        .distinct()
-    )
-    # manifest-sized; materialized once — its two consumers (the touched
-    # re-rank and the untouched pass-through) would otherwise each
-    # re-execute the whole repair subtree
-    combined = untouched_stored.select(
-        "doc_id", "ckey", "n_tokens", "split", "shuffle_key", "shard", "pos"
-    ).unionByName(
-        new_rows.withColumn("pos", F.lit(None).cast("int"))
-    ).localCheckpoint()
-    re_ranked = (
-        combined.join(F.broadcast(touched), ["split", "shard"], "semi")
-        .withColumn("pos", F.row_number().over(_pos_window()))
-    )
-    kept_pos = combined.join(F.broadcast(touched), ["split", "shard"], "anti")
+    re_ranked, kept_pos, _ = _rerank_touched(stored, new_rows, scope_ids)
     return (
         re_ranked.unionByName(kept_pos)
         .select("doc_id", "split", "shard", "pos", "n_tokens")
@@ -1579,7 +1575,6 @@ def manifest_store_compaction(spark, sf_dir: str) -> DataFrame:
     """
     import os
 
-    from aws_saas_etl_spark.sources.custom import proc_dir
     from aws_saas_etl_spark.sources.io import compact_parquet
 
     repaired = training_manifest_deletion_repair(spark, sf_dir)
@@ -1591,17 +1586,7 @@ def manifest_store_compaction(spark, sf_dir: str) -> DataFrame:
     ).parquet(src)
     dst = proc_dir("manifest_compacted", os.path.abspath(sf_dir))
     compact_parquet(spark, src, dst, partition_cols=["split", "shard"])
-    back = spark.read.parquet(dst)
-    return (
-        back.select(
-            "doc_id",
-            F.col("split").cast("string").alias("split"),
-            F.col("shard").cast("int").alias("shard"),
-            "pos",
-            "n_tokens",
-        )
-        .orderBy("split", "shard", "pos")
-    )
+    return _read_partitioned_manifest(spark, dst)
 
 
 # Constructing this query's DataFrame EXECUTES the fragmented store write
@@ -1653,7 +1638,6 @@ def manifest_stream_compaction_handoff(spark, sf_dir: str) -> DataFrame:
     """
     import os
 
-    from aws_saas_etl_spark.sources.custom import proc_dir
     from aws_saas_etl_spark.sources.io import compact_parquet
     from aws_saas_etl_spark.streaming.runners import _stream_manifest_delta_rows
 
@@ -1687,17 +1671,7 @@ def manifest_stream_compaction_handoff(spark, sf_dir: str) -> DataFrame:
     merged.write.partitionBy("split", "shard").mode("overwrite").parquet(mid)
     dst = proc_dir("manifest_stream_handoff_compacted", apath)
     compact_parquet(spark, mid, dst, partition_cols=["split", "shard"])
-    return (
-        spark.read.parquet(dst)
-        .select(
-            "doc_id",
-            F.col("split").cast("string").alias("split"),
-            F.col("shard").cast("int").alias("shard"),
-            "pos",
-            "n_tokens",
-        )
-        .orderBy("split", "shard", "pos")
-    )
+    return _read_partitioned_manifest(spark, dst)
 
 
 # Constructing this query's DataFrame EXECUTES the stream drain, both
@@ -1967,24 +1941,10 @@ def logreg_store_roundtrip(spark, sf_dir: str) -> DataFrame:
     Parquet stores the weight DOUBLES verbatim (no decimal rescale), so
     the served scores are bit-identical to the in-plan fit's.
     """
-    import os
-
-    from aws_saas_etl_spark.sources.custom import (
-        proc_dir,
-        read_manifest_parquet,
-        register_sink,
-    )
-
-    register_sink(spark)
     # session-fitted artifact (see _LOGREG_CACHE) — the write proves the
     # storage leg; the stored table, not the memo, is what serves below
     feats, wdf = _logreg_artifacts(spark, sf_dir)
-    path = proc_dir("logreg_weights", os.path.abspath(sf_dir))
-    wdf.write.format("manifest_parquet").option("path", path).mode(
-        "overwrite"
-    ).save()
-    stored = read_manifest_parquet(spark, path)
-    return _logreg_serve(feats, stored)
+    return _logreg_serve(feats, store_and_read_back(wdf, "logreg_weights", sf_dir))
 
 
 # Constructing this query's DataFrame EXECUTES the GD fit and a real
@@ -2181,10 +2141,7 @@ def logreg_staleness_report(spark, sf_dir: str) -> DataFrame:
     # full-corpus feats + fresh fit from the session artifact memo; the
     # stale fit (base slice) is this report's own cost and re-fits
     feats, fresh = _logreg_artifacts(spark, sf_dir)
-    ids = feats.select("doc_id").distinct()
-    n = ids.count()
-    n_base = n - n // 10
-    cut = ids.orderBy("doc_id").limit(n_base).agg(F.max("doc_id")).first()[0]
+    cut = rank_cut(spark, sf_dir, "logreg_cut", feats.select("doc_id"))
 
     stale = logreg_fit(feats.where(F.col("doc_id") <= F.lit(cut))).select(
         *[F.col(f"w{j}").alias(f"v{j}") for j in (1, 2, 3, 4)]

@@ -36,7 +36,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from aws_saas_etl_spark.memo import _DERIVED_CUT_CACHE, MemoDict
+from aws_saas_etl_spark.memo import MemoDict, rank_cut
 from aws_saas_etl_spark.catalog import (
     ensure_parallelism,
     load_tables,
@@ -44,6 +44,7 @@ from aws_saas_etl_spark.catalog import (
 )
 from aws_saas_etl_spark.functions import num as N
 from aws_saas_etl_spark.functions import text as T
+from aws_saas_etl_spark.sources.custom import store_and_read_back
 
 # MinHash parameters: 16 bands × 4 rows = 64 hashes → candidate threshold
 # s ≈ (1/16)^(1/4) ≈ 0.5 Jaccard. Verified pairs filter at JACCARD_MIN.
@@ -415,21 +416,9 @@ def minhash_signature_store_roundtrip(spark, sf_dir: str) -> DataFrame:
     store write — vs 4.4 s for the in-plan pairs path in the same
     session (the stored read is cheaper than re-hashing).
     """
-    import os
-
-    from aws_saas_etl_spark.sources.custom import (
-        proc_dir,
-        read_manifest_parquet,
-        register_sink,
-    )
-
-    register_sink(spark)
     docs = ensure_parallelism(load_tables(spark, sf_dir).documents)
-    path = proc_dir("minhash_signatures", os.path.abspath(sf_dir))
-    minhash_signatures(docs).write.format("manifest_parquet").option(
-        "path", path
-    ).mode("overwrite").save()
-    return _lsh_pairs_serve(read_manifest_parquet(spark, path))
+    sigs = minhash_signatures(docs)
+    return _lsh_pairs_serve(store_and_read_back(sigs, "minhash_signatures", sf_dir))
 
 
 # Constructing this query's DataFrame EXECUTES the signature build and a
@@ -456,37 +445,15 @@ def minhash_lsh_incremental_pairs(spark, sf_dir: str) -> DataFrame:
     Measured (r10): 6.4 s at sf0.1 (best-of-2, noop sink) — the base
     store write + delta hash + merged serve.
     """
-    import os
-
-    from aws_saas_etl_spark.sources.custom import (
-        proc_dir,
-        read_manifest_parquet,
-        register_sink,
-    )
-
-    register_sink(spark)
     docs = ensure_parallelism(load_tables(spark, sf_dir).documents)
     sig = minhash_signatures(docs)
 
     # the base/delta boundary over the SIGNATURE id set — before r14 the
     # count + sort/limit sizing jobs each re-executed the full signature
     # chain per construction (VERDICT r13 #4); one session-cached scalar
-    def _cut() -> int:
-        ids = sig.select("doc_id").distinct()
-        n = ids.count()
-        return (
-            ids.orderBy("doc_id").limit(n - n // 10).agg(F.max("doc_id")).first()[0]
-        )
-
-    cut = _DERIVED_CUT_CACHE.get_or_build(
-        spark, sf_dir, "minhash_sig_cut", build=_cut
-    )
+    cut = rank_cut(spark, sf_dir, "minhash_sig_cut", sig.select("doc_id"))
     base = sig.where(F.col("doc_id") <= F.lit(cut))
-    path = proc_dir("minhash_sig_base", os.path.abspath(sf_dir), cut)
-    base.write.format("manifest_parquet").option("path", path).mode(
-        "overwrite"
-    ).save()
-    stored = read_manifest_parquet(spark, path)
+    stored = store_and_read_back(base, "minhash_sig_base", sf_dir, cut)
     merged = stored.unionByName(sig.where(F.col("doc_id") > F.lit(cut)))
     return _lsh_pairs_serve(merged)
 
@@ -997,7 +964,7 @@ def _tag_arrivals(sh: DataFrame) -> DataFrame:
 
 
 #: Session cache for the document base/delta boundary (r14, VERDICT r13
-#: #4 — the ``_append_cut`` pattern applied to the doc corpus): the cut
+#: #4 — the ``memo.rank_cut`` session cache applied to the doc corpus): the cut
 #: is ARTIFACT METADATA (it names the stored base tables; proc_dir tags
 #: embed it) and a pure function of the corpus, yet every incremental-
 #: manifest / stream-staging construction re-derived it with a full
@@ -1101,30 +1068,13 @@ def cluster_store_roundtrip(spark, sf_dir: str) -> DataFrame:
     in object storage between batches; only the delta's pair space is
     ever recomputed.
     """
-    import os
-
-    from aws_saas_etl_spark.sources.custom import (
-        proc_dir,
-        read_manifest_parquet,
-        register_sink,
-    )
-
-    register_sink(spark)
     sh = _shingle_table(spark, sf_dir)
     tagged = _tag_arrivals(sh)
     base_labels = _base_assignment(spark, sf_dir)
 
-    path = proc_dir("cluster_store", os.path.abspath(sf_dir))
-    base_labels.write.format("manifest_parquet").option("path", path).mode(
-        "overwrite"
-    ).save()
-    stored = read_manifest_parquet(spark, path)
-
+    stored = store_and_read_back(base_labels, "cluster_store", sf_dir)
     merged = _merge_delta_into_labels(stored, tagged, sh)
-    merged.write.format("manifest_parquet").option("path", path).mode(
-        "overwrite"
-    ).save()
-    return _cluster_rows(read_manifest_parquet(spark, path))
+    return _cluster_rows(store_and_read_back(merged, "cluster_store", sf_dir))
 
 
 # Constructing this query's DataFrame EXECUTES two manifest-sink writes

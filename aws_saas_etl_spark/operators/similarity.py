@@ -24,19 +24,18 @@ JVM, no Python per row.
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from aws_saas_etl_spark.memo import _DERIVED_CUT_CACHE, MemoDict
+from aws_saas_etl_spark.memo import _DERIVED_CUT_CACHE, MemoDict, rank_cut
 from aws_saas_etl_spark.catalog import (
     ensure_parallelism,
     load_tables,
     table_row_count,
 )
 from aws_saas_etl_spark.functions.num import davg_rounded, dround
+from aws_saas_etl_spark.sources.custom import store_and_read_back
 
 N_QUERY_VECS = 10  # queries = vec_id < 10 (deterministic demo query set)
 TOP_K = 5
@@ -796,23 +795,12 @@ def ann_ivf_store_roundtrip(spark, sf_dir: str) -> DataFrame:
     sessions — train nightly, serve all day — is the production shape;
     in-session memoization alone (r6) never proved the storage leg.
     """
-    from aws_saas_etl_spark.sources.custom import (
-        proc_dir,
-        read_manifest_parquet,
-        register_sink,
-    )
-
-    register_sink(spark)
     emb = ensure_parallelism(load_tables(spark, sf_dir).embeddings)
     n_cells = ivf_cells_for(table_row_count(spark, sf_dir, "embeddings"))
     nprobe = ivf_nprobe_for(n_cells)
     fitted = _ivf_centroids_cached(spark, sf_dir, emb, n_cells)
 
-    path = proc_dir("ivf_index", os.path.abspath(sf_dir), n_cells)
-    fitted.write.format("manifest_parquet").option("path", path).mode(
-        "overwrite"
-    ).save()
-    stored = read_manifest_parquet(spark, path)
+    stored = store_and_read_back(fitted, "ivf_index", sf_dir, n_cells)
     return _ivf_probe(emb, stored, nprobe, k=TOP_K)
 
 
@@ -860,8 +848,7 @@ def ann_ivf_incremental_append(spark, sf_dir: str, k: int = TOP_K) -> DataFrame:
     n = table_row_count(spark, sf_dir, "embeddings")
     n_base = n - n // 10
     # the n_base-th smallest vec_id — exact integer rank, no percentile
-    # (shared session-cached derivation — see _append_cut)
-    cut = _append_cut(spark, sf_dir, emb)
+    cut = rank_cut(spark, sf_dir, "vec_cut", emb.select("vec_id"))
     base = emb.where(F.col("vec_id") <= F.lit(cut))
     n_cells = ivf_cells_for(n_base)
     nprobe = ivf_nprobe_for(n_cells)
@@ -1600,19 +1587,8 @@ def doc_lexical_store_roundtrip(spark, sf_dir: str, k: int = TOP_K) -> DataFrame
     ANN indexes), stored partitioned, and probed by broadcast query
     postings — this query proves exactly that serve-from-storage leg.
     """
-    from aws_saas_etl_spark.sources.custom import (
-        proc_dir,
-        read_manifest_parquet,
-        register_sink,
-    )
-
-    register_sink(spark)
     postings, _ = _lexical_postings(spark, sf_dir)
-    path = proc_dir("lex_postings", os.path.abspath(sf_dir))
-    postings.write.format("manifest_parquet").option("path", path).mode(
-        "overwrite"
-    ).save()
-    stored = read_manifest_parquet(spark, path)
+    stored = store_and_read_back(postings, "lex_postings", sf_dir)
     sizes = stored.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_tk"))
     return _lexical_indexed_serve(stored, sizes, k)
 
@@ -1688,33 +1664,12 @@ def doc_lexical_incremental_append(spark, sf_dir: str, k: int = TOP_K) -> DataFr
     Measured at sf0.1 (bench r10): 3.7 s including the base-postings
     store write; the serve leg matches ``doc_lexical_topk_indexed``.
     """
-    from aws_saas_etl_spark.sources.custom import (
-        proc_dir,
-        read_manifest_parquet,
-        register_sink,
-    )
-
-    register_sink(spark)
     postings, _ = _lexical_postings(spark, sf_dir)
 
-    # base/delta boundary over the postings id set — session-cached
-    # sizing scalar (r14, VERDICT r13 #4)
-    def _cut() -> int:
-        ids = postings.select("doc_id").distinct()
-        n = ids.count()
-        return (
-            ids.orderBy("doc_id").limit(n - n // 10).agg(F.max("doc_id")).first()[0]
-        )
-
-    cut = _DERIVED_CUT_CACHE.get_or_build(
-        spark, sf_dir, "lex_postings_cut", build=_cut
-    )
+    # base/delta boundary over the postings id set
+    cut = rank_cut(spark, sf_dir, "lex_postings_cut", postings.select("doc_id"))
     base = postings.where(F.col("doc_id") <= F.lit(cut))
-    path = proc_dir("lex_postings_base", os.path.abspath(sf_dir), cut)
-    base.write.format("manifest_parquet").option("path", path).mode(
-        "overwrite"
-    ).save()
-    stored = read_manifest_parquet(spark, path)
+    stored = store_and_read_back(base, "lex_postings_base", sf_dir, cut)
     merged = stored.unionByName(postings.where(F.col("doc_id") > F.lit(cut)))
     sizes = merged.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_tk"))
     return _lexical_indexed_serve(merged, sizes, k)
@@ -1841,30 +1796,16 @@ def ann_hybrid_rrf_stored(spark, sf_dir: str, k: int = TOP_K) -> DataFrame:
     the in-session hybrid's 4.7 s — the storage premium is the two
     manifest roundtrips, not the serving plans.
     """
-    from aws_saas_etl_spark.sources.custom import (
-        proc_dir,
-        read_manifest_parquet,
-        register_sink,
-    )
-
-    register_sink(spark)
     emb = ensure_parallelism(load_tables(spark, sf_dir).embeddings)
     n_cells = ivf_cells_for(table_row_count(spark, sf_dir, "embeddings"))
     nprobe = ivf_nprobe_for(n_cells)
     fitted = _ivf_centroids_cached(spark, sf_dir, emb, n_cells)
-    ipath = proc_dir("ivf_index", os.path.abspath(sf_dir), n_cells)
-    fitted.write.format("manifest_parquet").option("path", ipath).mode(
-        "overwrite"
-    ).save()
-    ivf = _ivf_probe(emb, read_manifest_parquet(spark, ipath), nprobe, k=k).select(
+    stored_i = store_and_read_back(fitted, "ivf_index", sf_dir, n_cells)
+    ivf = _ivf_probe(emb, stored_i, nprobe, k=k).select(
         "query_id", "neighbor_id", F.col("rank").alias("ivf_rank")
     )
     postings, _ = _lexical_postings(spark, sf_dir)
-    ppath = proc_dir("lex_postings", os.path.abspath(sf_dir))
-    postings.write.format("manifest_parquet").option("path", ppath).mode(
-        "overwrite"
-    ).save()
-    stored_p = read_manifest_parquet(spark, ppath)
+    stored_p = store_and_read_back(postings, "lex_postings", sf_dir)
     sizes = stored_p.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_tk"))
     lex = _lexical_indexed_serve(stored_p, sizes, k).select(
         "query_id", "neighbor_id", F.col("rank").alias("lex_rank")
@@ -2499,8 +2440,7 @@ def ann_ivfpq_incremental_append(spark, sf_dir: str, k: int = TOP_K) -> DataFram
     emb = ensure_parallelism(load_tables(spark, sf_dir).embeddings)
     n = table_row_count(spark, sf_dir, "embeddings")
     n_base = n - n // 10
-    # shared session-cached integer-rank cut — see _append_cut
-    cut = _append_cut(spark, sf_dir, emb)
+    cut = rank_cut(spark, sf_dir, "vec_cut", emb.select("vec_id"))
     base = emb.where(F.col("vec_id") <= F.lit(cut))
     n_cells = ivf_cells_for(n_base)
     nprobe = ivf_nprobe_for(n_cells)
@@ -2650,20 +2590,9 @@ def ann_pq_store_roundtrip(spark, sf_dir: str, k: int = TOP_K) -> DataFrame:
     recomputed from the stored centroids, so bit-identical storage
     implies bit-identical serving.
     """
-    from aws_saas_etl_spark.sources.custom import (
-        proc_dir,
-        read_manifest_parquet,
-        register_sink,
-    )
-
-    register_sink(spark)
     emb = ensure_parallelism(load_tables(spark, sf_dir).embeddings)
     fitted = _pq_codebooks_cached(spark, sf_dir, emb)
-    path = proc_dir("pq_codebook", os.path.abspath(sf_dir), PQ_M, PQ_K)
-    fitted.write.format("manifest_parquet").option("path", path).mode(
-        "overwrite"
-    ).save()
-    stored = read_manifest_parquet(spark, path)
+    stored = store_and_read_back(fitted, "pq_codebook", sf_dir, PQ_M, PQ_K)
     return _pq_adc_refined(emb, stored, k)
 
 
@@ -2697,7 +2626,7 @@ def ann_pq_incremental_append(spark, sf_dir: str, k: int = TOP_K) -> DataFrame:
     codes n·M narrow rows, broadcast query tables, bounded refine.
     """
     emb = ensure_parallelism(load_tables(spark, sf_dir).embeddings)
-    cut = _append_cut(spark, sf_dir, emb)
+    cut = rank_cut(spark, sf_dir, "vec_cut", emb.select("vec_id"))
     base = emb.where(F.col("vec_id") <= F.lit(cut))
     # the stale codebooks (their own "base" memo slot) and the FULL
     # corpus encoded with them — the stored code table of the stale
@@ -2802,38 +2731,6 @@ def _sq8_serve(emb: DataFrame, corpus: DataFrame, k: int) -> DataFrame:
     return _exact_rerank(emb, shortlist, k)
 
 
-#: Session cache for the historical/arrival boundary (r13 optimization):
-#: the cut is ARTIFACT METADATA — it names the stored base tables
-#: (proc_dir tags embed it) and is a pure function of the corpus — yet
-#: every *_incremental_append construction re-derived it with a count
-#: job + a sort/limit job; the ladder staleness report's four append
-#: arms paid that 4×. traced=False: cleared with the session memos so
-#: cold reps re-pay the derivation, but not a two-regime artifact the
-#: bench cold/warm table needs a row for.
-_APPEND_CUT_CACHE = MemoDict("append_cut", traced=False)
-
-
-def _append_cut(spark, sf_dir: str, emb: DataFrame) -> int:
-    """The historical/arrival boundary every ``*_incremental_append``
-    lifecycle query uses: the largest vec_id of the ``n − n//10``
-    smallest — an exact integer-rank cut (no float percentile), so both
-    engines agree on which vectors are 'arrivals'. Derived once per
-    session (see ``_APPEND_CUT_CACHE``)."""
-
-    def build() -> int:
-        n = table_row_count(spark, sf_dir, "embeddings")
-        n_base = n - n // 10
-        return (
-            emb.select("vec_id")
-            .orderBy("vec_id")
-            .limit(n_base)
-            .agg(F.max("vec_id"))
-            .first()[0]
-        )
-
-    return _APPEND_CUT_CACHE.get_or_build(spark, sf_dir, build=build)
-
-
 def ann_sq8_incremental_append(spark, sf_dir: str, k: int = TOP_K) -> DataFrame:
     """INCREMENTAL MAINTENANCE of the SQ8 code table — the per-row-code
     end of the lifecycle × rung grid (VERDICT r9 #2): the historical 90%
@@ -2857,23 +2754,12 @@ def ann_sq8_incremental_append(spark, sf_dir: str, k: int = TOP_K) -> DataFrame:
     write, vs the fresh scan's 1.0–1.6 s — maintenance costs one store
     roundtrip, never a refit.
     """
-    from aws_saas_etl_spark.sources.custom import (
-        proc_dir,
-        read_manifest_parquet,
-        register_sink,
-    )
-
-    register_sink(spark)
     emb = ensure_parallelism(load_tables(spark, sf_dir).embeddings)
-    cut = _append_cut(spark, sf_dir, emb)
+    cut = rank_cut(spark, sf_dir, "vec_cut", emb.select("vec_id"))
     base_codes = emb.where(F.col("vec_id") <= F.lit(cut)).select(
         F.col("vec_id").alias("neighbor_id"), _sq8_codes("embedding").alias("c8")
     )
-    path = proc_dir("sq8_codes_base", os.path.abspath(sf_dir), cut)
-    base_codes.write.format("manifest_parquet").option("path", path).mode(
-        "overwrite"
-    ).save()
-    stored = read_manifest_parquet(spark, path)
+    stored = store_and_read_back(base_codes, "sq8_codes_base", sf_dir, cut)
     delta_codes = emb.where(F.col("vec_id") > F.lit(cut)).select(
         F.col("vec_id").alias("neighbor_id"), _sq8_codes("embedding").alias("c8")
     )
@@ -2997,23 +2883,12 @@ def ann_bq_store_roundtrip(spark, sf_dir: str, k: int = TOP_K) -> DataFrame:
     the same ANN_BQ_HAMMING_SQL gate proves write → read → serve is
     lossless end to end.
     """
-    from aws_saas_etl_spark.sources.custom import (
-        proc_dir,
-        read_manifest_parquet,
-        register_sink,
-    )
-
-    register_sink(spark)
     emb = ensure_parallelism(load_tables(spark, sf_dir).embeddings)
     sig_lo, sig_hi = _bq_sig_exprs("embedding")
     corpus = emb.select(
         F.col("vec_id").alias("neighbor_id"), sig_lo, sig_hi
     )
-    path = proc_dir("bq_signatures", os.path.abspath(sf_dir))
-    corpus.write.format("manifest_parquet").option("path", path).mode(
-        "overwrite"
-    ).save()
-    stored = read_manifest_parquet(spark, path)
+    stored = store_and_read_back(corpus, "bq_signatures", sf_dir)
     return _bq_serve(emb, stored, k)
 
 
@@ -3037,24 +2912,13 @@ def ann_bq_incremental_append(spark, sf_dir: str, k: int = TOP_K) -> DataFrame:
     Scale shape: the maintenance write is |delta| × 16 B — one narrow
     sign pass, no corpus scan, no refit ever.
     """
-    from aws_saas_etl_spark.sources.custom import (
-        proc_dir,
-        read_manifest_parquet,
-        register_sink,
-    )
-
-    register_sink(spark)
     emb = ensure_parallelism(load_tables(spark, sf_dir).embeddings)
-    cut = _append_cut(spark, sf_dir, emb)
+    cut = rank_cut(spark, sf_dir, "vec_cut", emb.select("vec_id"))
     sig_lo, sig_hi = _bq_sig_exprs("embedding")
     base_sigs = emb.where(F.col("vec_id") <= F.lit(cut)).select(
         F.col("vec_id").alias("neighbor_id"), sig_lo, sig_hi
     )
-    path = proc_dir("bq_sigs_base", os.path.abspath(sf_dir), cut)
-    base_sigs.write.format("manifest_parquet").option("path", path).mode(
-        "overwrite"
-    ).save()
-    stored = read_manifest_parquet(spark, path)
+    stored = store_and_read_back(base_sigs, "bq_sigs_base", sf_dir, cut)
     delta_sigs = emb.where(F.col("vec_id") > F.lit(cut)).select(
         F.col("vec_id").alias("neighbor_id"), sig_lo, sig_hi
     )

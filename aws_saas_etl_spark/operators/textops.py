@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from aws_saas_etl_spark.catalog import ensure_parallelism, load_tables
 from aws_saas_etl_spark.functions import num as N
 from aws_saas_etl_spark.functions import text as T
+from aws_saas_etl_spark.sources.custom import store_and_read_back
 
 TFIDF_TOP_K = 5
 
@@ -1093,7 +1094,7 @@ SUBSTR_DUP_K = 8  # token k-gram width for cross-document substring dedup
 #: and the funnel row), same regime as curation's _full_manifest:
 #: computed once per session, checkpointed (corpus rows × 5 narrow
 #: columns), consumed by the registered query and the funnel alike.
-from aws_saas_etl_spark.memo import _DERIVED_CUT_CACHE, MemoDict
+from aws_saas_etl_spark.memo import MemoDict, rank_cut
 
 _SPAN_CACHE = MemoDict("crossdoc_span")
 
@@ -1316,15 +1317,6 @@ def span_gram_index_incremental(spark, sf_dir: str) -> DataFrame:
     Measured (r10): 5.9 s at sf0.1 (best-of-2, noop sink) incl. the
     base index write.
     """
-    import os
-
-    from aws_saas_etl_spark.sources.custom import (
-        proc_dir,
-        read_manifest_parquet,
-        register_sink,
-    )
-
-    register_sink(spark)
     docs = ensure_parallelism(load_tables(spark, sf_dir).documents).where(
         F.col("doc_id").isNotNull() & F.col("text").isNotNull()
     )
@@ -1345,19 +1337,9 @@ def span_gram_index_incremental(spark, sf_dir: str) -> DataFrame:
     # base/delta boundary over the doc set — session-cached sizing scalar
     # (r14, VERDICT r13 #4; one count + one sort/limit job per session,
     # not per construction)
-    def _cut() -> int:
-        ids = base.select("doc_id").distinct()
-        n_docs = ids.count()
-        n_base = n_docs - n_docs // 10
-        return ids.orderBy("doc_id").limit(n_base).agg(F.max("doc_id")).first()[0]
-
-    cut = _DERIVED_CUT_CACHE.get_or_build(spark, sf_dir, "span_gram_cut", build=_cut)
+    cut = rank_cut(spark, sf_dir, "span_gram_cut", base.select("doc_id"))
     hist = grams.where(F.col("doc_id") <= F.lit(cut))
-    path = proc_dir("span_gram_index", os.path.abspath(sf_dir), cut)
-    hist.write.format("manifest_parquet").option("path", path).mode(
-        "overwrite"
-    ).save()
-    stored = read_manifest_parquet(spark, path)
+    stored = store_and_read_back(hist, "span_gram_index", sf_dir, cut)
     merged = stored.unionByName(grams.where(F.col("doc_id") > F.lit(cut)))
     return _span_removal_serve(base, merged)
 
@@ -1555,23 +1537,10 @@ def bpe_merges_store_roundtrip(
     property that lets a 100 TB corpus be tokenized by executors that
     never saw the training aggregate (exactly the stored-codebook
     argument of ``ann_pq_store_roundtrip``)."""
-    import os
-
-    from aws_saas_etl_spark.sources.custom import (
-        proc_dir,
-        read_manifest_parquet,
-        register_sink,
-    )
-
-    register_sink(spark)
     docs = ensure_parallelism(load_tables(spark, sf_dir).documents).where(
         F.col("doc_id").isNotNull() & F.col("text").isNotNull()
     )
-    path = proc_dir("bpe_merges", os.path.abspath(sf_dir))
-    bpe_merges(docs, n_merges).write.format("manifest_parquet").option(
-        "path", path
-    ).mode("overwrite").save()
-    stored = read_manifest_parquet(spark, path)
+    stored = store_and_read_back(bpe_merges(docs, n_merges), "bpe_merges", sf_dir)
 
     tok = docs.select("doc_id", F.explode(T.tokens("text")).alias("token"))
     v = _bpe_vocab(docs, with_token=True)
@@ -1636,17 +1605,9 @@ def bpe_staleness_report(
 
     # base/delta boundary over the doc set — session-cached sizing scalar
     # (r14, VERDICT r13 #4)
-    def _cut() -> int:
-        ids = docs.select("doc_id").distinct()
-        n = ids.count()
-        return (
-            ids.orderBy("doc_id")
-            .limit(n - n // BPE_STALE_DENOM)
-            .agg(F.max("doc_id"))
-            .first()[0]
-        )
-
-    cut = _DERIVED_CUT_CACHE.get_or_build(spark, sf_dir, "bpe_stale_cut", build=_cut)
+    cut = rank_cut(
+        spark, sf_dir, "bpe_stale_cut", docs.select("doc_id"), BPE_STALE_DENOM
+    )
 
     fresh_rules = bpe_merges(docs, n_merges).localCheckpoint()
     stale_rules = bpe_merges(

@@ -402,6 +402,30 @@ def proc_dir(kind: str, *tags) -> str:
     return path
 
 
+def store_and_read_back(df, kind: str, sf_dir: str, *tags):
+    """The storage leg of every stored-artifact query: write ``df``
+    through the ``manifest_parquet`` sink and return the stored rows.
+
+    - **Overwrite.** Each call replaces the store's committed content;
+      the read-back holds only this call's rows.
+    - **One dir per (kind, abspath(sf_dir), tags, pid).** The store is
+      ``proc_dir(kind, os.path.abspath(sf_dir), *tags)``, so ``d`` and
+      ``d/`` name one store and concurrent processes never share one.
+    - **Manifest-only read-back.** Only files the manifest commits are
+      read; staged or aborted files stay invisible.
+
+    The write runs inside the call; the returned frame reads the files
+    it committed."""
+    import os
+
+    register_sink(df.sparkSession)
+    path = proc_dir(kind, os.path.abspath(sf_dir), *tags)
+    df.write.format("manifest_parquet").option("path", path).mode(
+        "overwrite"
+    ).save()
+    return read_manifest_parquet(df.sparkSession, path)
+
+
 def custom_sink_roundtrip(spark, sf_dir: str):
     """Registry query for the WRITER half: the synthetic source is pushed
     through the custom ``manifest_parquet`` sink (executor-side Arrow →
@@ -409,19 +433,19 @@ def custom_sink_roundtrip(spark, sf_dir: str):
     manifest, and aggregated — value-hash-provable because write→read is
     lossless and the source is closed-form (``generate_series`` twin).
     ``overwrite`` mode keeps the reused per-pid dir deterministic across
-    repeats. ``sf_dir`` is unused: the source IS the data."""
+    repeats. ``sf_dir`` only keys the store dir: the source IS the data."""
     from pyspark.sql import functions as F
 
     from aws_saas_etl_spark.functions.num import dsum_rounded
 
     register(spark)
-    register_sink(spark)
-    path = proc_dir("sink_rt", DEFAULT_PARTITIONS, DEFAULT_ROWS_PER_PARTITION)
-    df = spark.read.format("synthetic_events").load()
-    df.write.format("manifest_parquet").option("path", path).mode(
-        "overwrite"
-    ).save()
-    back = read_manifest_parquet(spark, path)
+    back = store_and_read_back(
+        spark.read.format("synthetic_events").load(),
+        "sink_rt",
+        sf_dir,
+        DEFAULT_PARTITIONS,
+        DEFAULT_ROWS_PER_PARTITION,
+    )
     return (
         back.groupBy((F.col("event_id") % 13).alias("bucket"))
         .agg(

@@ -213,3 +213,58 @@ def test_operator_store_dirs_are_keyed_on_absolute_paths():
             ):
                 bare.append(f"{os.path.basename(path)}:{node.lineno}")
     assert bare == []
+
+
+_SINK_NAMES = {"register_sink", "read_manifest_parquet"}
+
+
+def test_operator_store_legs_go_through_the_store_helper():
+    """Every operator storage leg is ``store_and_read_back``: no module
+    under ``operators/`` registers the sink, reads a manifest back or
+    names the ``manifest_parquet`` format itself."""
+    import ast
+    import glob
+
+    ops = os.path.join(os.path.dirname(custom.__file__), "..", "operators")
+    found = []
+    for path in sorted(glob.glob(os.path.join(ops, "*.py"))):
+        tree = ast.parse(open(path).read(), path)
+        for node in ast.walk(tree):
+            if (
+                (isinstance(node, ast.Name) and node.id in _SINK_NAMES)
+                or (isinstance(node, ast.Attribute) and node.attr in _SINK_NAMES)
+                or (isinstance(node, ast.alias) and node.name in _SINK_NAMES)
+                or (isinstance(node, ast.Constant) and node.value == "manifest_parquet")
+            ):
+                found.append(f"{os.path.basename(path)}:{node.lineno}")
+    assert found == []
+
+
+def _store_dirs(df) -> set[str]:
+    from urllib.parse import urlparse
+
+    return {os.path.dirname(urlparse(f).path) for f in df.inputFiles()}
+
+
+def test_store_and_read_back_dir_roundtrip_and_overwrite(spark, tmp_path):
+    """The store helper keys its dir on ``abspath(sf_dir)`` (``d`` and
+    ``d/`` are one store), reads back exactly the rows it wrote, and a
+    second call replaces the first call's rows."""
+    d = str(tmp_path / "sf")
+    path = custom.proc_dir("t_store_helper", os.path.abspath(d), 7)
+    try:
+        first = spark.createDataFrame(
+            [(1, 0.1), (2, 2.5e-08), (3, -1.0e300)], "id BIGINT, x DOUBLE"
+        )
+        back = custom.store_and_read_back(first, "t_store_helper", d, 7)
+        assert _store_dirs(back) == {path}
+        assert sorted(back.collect()) == sorted(first.collect())
+
+        second = spark.createDataFrame([(9, 4.75)], "id BIGINT, x DOUBLE")
+        back2 = custom.store_and_read_back(second, "t_store_helper", d + "/", 7)
+        assert _store_dirs(back2) == {path}
+        assert back2.collect() == second.collect()
+        files = {f for f in os.listdir(path) if f.endswith(".parquet")}
+        assert files == set(custom._read_manifest(path)["files"])
+    finally:
+        shutil.rmtree(path, ignore_errors=True)

@@ -98,9 +98,29 @@ def test_sizing_caches_are_registered_untraced():
     from aws_saas_etl_spark.operators import similarity  # noqa: F401
 
     by_name = {m.name: m for m in memo.all_memos()}
-    for expected in ("table_row_counts", "append_cut", "table_schemas"):
+    for expected in ("table_row_counts", "derived_cut", "table_schemas"):
         assert expected in by_name, expected
         assert by_name[expected].traced is False, expected
+
+
+def test_rank_cut_matches_reference_and_builds_once(spark, tmp_path):
+    """``rank_cut`` is the largest of the ``n − n//denom`` smallest
+    DISTINCT ids (duplicates count once, gaps do not matter), and a
+    repeated call under one name is served from the memo: no job."""
+    from tests.test_catalog import _jobs_launched
+
+    ids = [i * i % 97 for i in range(60)]  # duplicates and gaps
+    frame = spark.createDataFrame([(i,) for i in ids], "doc_id BIGINT")
+    distinct = sorted(set(ids))
+    n = len(distinct)
+    for denom in (2, 10):
+
+        def cut():
+            return memo.rank_cut(spark, str(tmp_path), f"t_cut_{denom}", frame, denom)
+
+        assert _jobs_launched(spark, cut) > 0
+        assert _jobs_launched(spark, cut) == 0
+        assert cut() == distinct[n - n // denom - 1]
 
 
 def _stub_spark(app_id: str):
