@@ -136,7 +136,7 @@ def table_row_count(spark: SparkSession, sf_dir: str, name: str) -> int:
     )
 
 
-def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
+def ensure_parallelism(df: DataFrame) -> DataFrame:
     """Repartition a scan that has too few input splits.
 
     Small single-file Parquet inputs arrive as ONE partition, which
@@ -146,7 +146,7 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> Data
     already has >= parallelism splits and this is a no-op — the shuffle
     only happens when the scan is pathologically under-split.
     """
-    target = min_partitions or df.sparkSession.sparkContext.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     # Cheap probe: count input files (driver-side listing, ~ms). The exact
     # check (df.rdd.getNumPartitions()) converts the plan to an RDD and
     # measured ~1s per call — pure per-query overhead. A table backed by

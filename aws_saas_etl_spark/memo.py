@@ -16,25 +16,30 @@ session is the faithful serving shape. Every such cache is a
   are separate ``parts``, never suffixes glued onto the path.
 - **Miss.** A private sentinel, not ``None``: a cached ``None`` (or any
   falsy scalar) is a hit, and ``build()`` runs once per key per session.
+- **Storage.** The one storage policy for session artifacts: a
+  DataFrame returned by ``build()`` is materialized once with
+  ``localCheckpoint()`` before it is stored, so no consumer re-executes
+  the build's lineage; any other value (a scalar, ``None``, a schema) is
+  stored as it is. A build returns a plan, and one key holds one frame.
 - **Tracing contract.** Each call makes exactly one ``self.get(key,
   _MISS)`` and, on a miss only, one ``self[key] = value`` after
-  ``build()`` returns. Those two calls are what ``track()`` records and
-  what an external tracer may patch on the class to time builds (the
-  miss-get → set interval on one key).
+  ``build()`` returns and its frame is materialized. Those two calls are
+  what ``track()`` records and what an external tracer may patch on the
+  class to time builds (the miss-get → set interval on one key covers
+  the build and its materialization).
 
 The registry lets ``session.clear_session_memos`` and the scale/plan
-tools purge ALL stored state without hand-curating a list, and
-``track()`` lets ``bench.py`` DERIVE which registered queries are
-memo-backed (two-regime cold/warm cost) instead of maintaining the set by
-hand (VERDICT r7 #4: the hand-curated six missed
-``ann_index_staleness_report`` and its 10.4 s canary spread masqueraded
-as noise).
+tools purge ALL stored state, and ``track()`` lets ``bench.py`` DERIVE
+which registered queries are memo-backed (two-regime cold/warm cost)
+instead of maintaining the set by hand.
 """
 
 from __future__ import annotations
 
 import os
 from typing import Any, Callable, Hashable
+
+from pyspark.sql import DataFrame
 
 _REGISTRY: list["MemoDict"] = []
 
@@ -99,11 +104,15 @@ class MemoDict(dict):
         self, spark, sf_dir: str, *parts: Hashable, build: Callable[[], Any]
     ) -> Any:
         """The session's artifact for ``(sf_dir, *parts)``, built by
-        ``build()`` on the first call and served from the memo after."""
+        ``build()`` on the first call and served from the memo after. A
+        DataFrame is stored materialized (``localCheckpoint()``), so a
+        warm call launches no job and returns the same object."""
         key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir), *parts)
         got = self.get(key, _MISS)
         if got is _MISS:
             got = build()
+            if isinstance(got, DataFrame):
+                got = got.localCheckpoint()
             self[key] = got
         return got
 
@@ -134,9 +143,7 @@ def all_memos() -> list[MemoDict]:
 #: Shared registry for DERIVED-SET sizing scalars (r14, VERDICT r13 #4):
 #: the lifecycle queries' base/delta boundaries (``rank_cut``) over id
 #: sets (vector ids, minhash signature ids, lexical postings ids,
-#: span-gram / BPE / logreg doc sets) each cost a count plus a sort/limit
-#: per derivation — and the minhash one executes the full signature
-#: chain twice just to size it. Untraced (no cold/warm membership
+#: span-gram / BPE / logreg doc sets). Untraced (no cold/warm membership
 #: change; surfaced via the sizing trace), cleared with the session memos
 #: so cold reps re-pay it.
 _DERIVED_CUT_CACHE = MemoDict("derived_cut", traced=False)
@@ -148,17 +155,25 @@ def rank_cut(spark, sf_dir: str, name: str, ids, denom: int = 10) -> int:
     frame). An exact integer-rank cut, no float percentile, so both
     engines agree on which rows are arrivals. It names stored base
     tables (``proc_dir`` tags embed it), so it is derived once per
-    session per ``name`` in ``_DERIVED_CUT_CACHE``."""
+    session per ``name`` in ``_DERIVED_CUT_CACHE``, from one pass over
+    the distinct ids: each id's rank and the id count are two windows
+    over the same ordered partition."""
 
     def build() -> int:
+        from pyspark.sql import Window
         from pyspark.sql import functions as F
 
         col = ids.columns[0]
-        distinct = ids.distinct()
-        n = distinct.count()
-        return (
-            distinct.orderBy(col).limit(n - n // denom).agg(F.max(col)).first()[0]
+        order = Window.orderBy(col)
+        ranked = ids.distinct().select(
+            col,
+            F.row_number().over(order).alias("_rank"),
+            F.count(F.lit(1))
+            .over(order.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing))
+            .alias("_n"),
         )
+        in_base = F.col("_rank") <= F.expr(f"_n - _n DIV {int(denom)}")
+        return ranked.agg(F.max(F.when(in_base, F.col(col)))).first()[0]
 
     return _DERIVED_CUT_CACHE.get_or_build(spark, sf_dir, name, build=build)
 

@@ -616,11 +616,16 @@ def training_manifest(spark, sf_dir: str) -> DataFrame:
 
 
 #: Session-scoped memo of manifest frames, one slot per artifact name
-#: ("full", "signals", "verdicts", "base", per-gate sets) — the manifest
-#: IS the stored pipeline artifact (in production it is read back from
-#: the manifest sink), so computing it once per session is the faithful
-#: model; the batch query and BOTH maintenance queries (arrival merge,
-#: deletion repair) consume the same frame.
+#: ("full", "signals", "keep_base", "sha_index", "base", per-gate sets)
+#: — the manifest IS the stored pipeline artifact (in production it is
+#: read back from the manifest sink), so computing it once per session
+#: is the faithful model; the batch query and BOTH maintenance queries
+#: (arrival merge, deletion repair) consume the same frame. Each gate's
+#: removal set or accounting table is a slot of its own (r14, VERDICT
+#: r13 #5): a new gate ships by writing its verdict table once, and
+#: every manifest version (solo gate, full pipeline, gateset v2, version
+#: diff) composes the stored sets instead of re-running the gate
+#: subtree. The registered solo gate queries stay pure.
 #: tools/scale_probe.py clears this cache per rep.
 _MANIFEST_CACHE = MemoDict("manifest")
 
@@ -636,7 +641,7 @@ def _full_manifest(spark, sf_dir: str) -> DataFrame:
         docs = ensure_parallelism(load_tables(spark, sf_dir).documents).na.drop("any")
         keep = doc_filter_pipeline(spark, sf_dir).where(F.col("verdict") == "keep")
         comp = content_clusters(spark, sf_dir)
-        return _manifest_frame(docs, keep, comp).localCheckpoint()
+        return _manifest_frame(docs, keep, comp)
 
     return _MANIFEST_CACHE.get_or_build(spark, sf_dir, "full", build=build)
 
@@ -895,7 +900,7 @@ def _stored_signals(spark, sf_dir: str) -> DataFrame:
         spark, sf_dir, "signals",
         build=lambda: gate_signals(
             ensure_parallelism(load_tables(spark, sf_dir).documents).na.drop("any")
-        ).localCheckpoint(),
+        ),
     )
 
 
@@ -953,9 +958,9 @@ def training_manifest_decontaminated(spark, sf_dir: str) -> DataFrame:
     deletion-repair property.
     """
     man = _full_manifest(spark, sf_dir)
-    contam = _gate_artifact_cached(
+    contam = _MANIFEST_CACHE.get_or_build(
         spark, sf_dir, "contam_ids",
-        lambda: _contam_train_ids(spark, sf_dir, man),
+        build=lambda: _contam_train_ids(spark, sf_dir, man),
     )
     return (
         _close_ranks(man.join(contam, "doc_id", "anti"))
@@ -964,35 +969,14 @@ def training_manifest_decontaminated(spark, sf_dir: str) -> DataFrame:
     )
 
 
-def _gate_artifact_cached(spark, sf_dir: str, which: str, build) -> DataFrame:
-    """Session memo for the per-gate REMOVAL-SET / accounting artifacts
-    (r14, VERDICT r13 #5): each gate's output is a stored artifact next
-    to the manifest in production (the ``_stored_signals`` /
-    ``_stored_base_verdicts`` argument — a new gate ships by WRITING its
-    verdict table once, and every manifest version composes the stored
-    sets), yet each of the solo-gate, full-pipeline, gateset-v2 and
-    version-diff constructions re-ran the full gate subtree: the winnow
-    fingerprint join (contam), the logreg calibration chain (quality),
-    the suffix-overlap span accounting, and the Gopher repetition scan
-    each executed up to 3× per bench sweep. One localCheckpoint per
-    session per corpus and gate — bounded (train-removal id sets) or
-    corpus-row narrow (span accounting, repetition verdicts). The
-    REGISTERED solo gate queries (doc_duplicate_span_removal,
-    doc_repetition_filter, ...) stay pure — only the manifest-level
-    consumers read the stored sets, exactly like production."""
-    return _MANIFEST_CACHE.get_or_build(
-        spark, sf_dir, which, build=lambda: build().localCheckpoint()
-    )
-
-
 def _span_accounting_cached(spark, sf_dir: str) -> DataFrame:
     """The span-rewrite token accounting (doc_id, kept_tokens,
-    removed_tokens), session-cached (see ``_gate_artifact_cached``)."""
+    removed_tokens), a stored gate artifact (see ``_MANIFEST_CACHE``)."""
     from aws_saas_etl_spark.operators.textops import doc_duplicate_span_removal
 
-    return _gate_artifact_cached(
+    return _MANIFEST_CACHE.get_or_build(
         spark, sf_dir, "span_accounting",
-        lambda: doc_duplicate_span_removal(spark, sf_dir).select(
+        build=lambda: doc_duplicate_span_removal(spark, sf_dir).select(
             "doc_id", "kept_tokens", "removed_tokens"
         ),
     )
@@ -1000,12 +984,12 @@ def _span_accounting_cached(spark, sf_dir: str) -> DataFrame:
 
 def _repetition_verdicts_cached(spark, sf_dir: str) -> DataFrame:
     """The Gopher repetition verdict table (doc_id, verdict),
-    session-cached (see ``_gate_artifact_cached``)."""
+    a stored gate artifact (see ``_MANIFEST_CACHE``)."""
     from aws_saas_etl_spark.operators.textops import doc_repetition_filter
 
-    return _gate_artifact_cached(
+    return _MANIFEST_CACHE.get_or_build(
         spark, sf_dir, "repetition_verdicts",
-        lambda: doc_repetition_filter(spark, sf_dir).select("doc_id", "verdict"),
+        build=lambda: doc_repetition_filter(spark, sf_dir).select("doc_id", "verdict"),
     )
 
 
@@ -1063,15 +1047,10 @@ def _contam_train_ids(spark, sf_dir: str, man: DataFrame) -> DataFrame:
 
 def _stored_base_verdicts(spark, sf_dir: str):
     """The stored verdict artifacts next to the manifest: the historical
-    keep-list and the sha → min(doc_id) keeper index, memoized per
-    session and localCheckpoint-ed. In production both are read back
-    from storage (they are what makes delta verdict repair a
-    signals-join instead of a corpus re-scan); in-session, before r7
-    each was an unmaterialized subtree re-executed per consumer — the
-    verdict windows over ``sig_base`` ran once for the stored-manifest
-    build, again for the survivor pool, and the sha index rebuilt from
-    scratch inside the broadcast — the bulk of the 38-shuffle
-    ``training_manifest_incremental`` plan the r6 verdict flagged.
+    keep-list and the sha → min(doc_id) keeper index, each memoized per
+    session in its own slot. In production both are read back from
+    storage: they are what makes delta verdict repair a signals-join
+    instead of a corpus re-scan.
 
     The base/delta cut is the SAME shingle-table percentile
     ``_tag_arrivals`` uses (NOT a per-doc percentile: the shingle table
@@ -1084,30 +1063,28 @@ def _stored_base_verdicts(spark, sf_dir: str):
     )
     from aws_saas_etl_spark.operators.textops import verdicts_from_signals
 
-    def build() -> tuple[DataFrame, DataFrame]:
-        sh = _shingle_table(spark, sf_dir)
-        cutoff = sh.agg(
+    def sig_base() -> DataFrame:
+        cutoff = _shingle_table(spark, sf_dir).agg(
             F.percentile("doc_id", 1.0 - DELTA_DOC_FRACTION).alias("cut")
         )
-        sig_base = (
+        return (
             _stored_signals(spark, sf_dir)
             .crossJoin(F.broadcast(cutoff))
             .where(F.col("doc_id") <= F.col("cut"))
             .drop("cut")
         )
-        keep_base = (
-            verdicts_from_signals(sig_base)
-            .where(F.col("verdict") == "keep")
-            .localCheckpoint()
-        )
-        sha_idx = (
-            sig_base.groupBy("sha")
-            .agg(F.min("doc_id").alias("base_min"))
-            .localCheckpoint()
-        )
-        return keep_base, sha_idx
 
-    return _MANIFEST_CACHE.get_or_build(spark, sf_dir, "verdicts", build=build)
+    keep_base = _MANIFEST_CACHE.get_or_build(
+        spark, sf_dir, "keep_base",
+        build=lambda: verdicts_from_signals(sig_base()).where(
+            F.col("verdict") == "keep"
+        ),
+    )
+    sha_idx = _MANIFEST_CACHE.get_or_build(
+        spark, sf_dir, "sha_index",
+        build=lambda: sig_base().groupBy("sha").agg(F.min("doc_id").alias("base_min")),
+    )
+    return keep_base, sha_idx
 
 
 def _stored_base_manifest(spark, sf_dir: str, cut=None) -> DataFrame:
@@ -1125,7 +1102,7 @@ def _stored_base_manifest(spark, sf_dir: str, cut=None) -> DataFrame:
         docs_base = docs.where(F.col("doc_id") <= F.lit(base_cut))
         base_labels = _base_assignment(spark, sf_dir)
         keep_base, _ = _stored_base_verdicts(spark, sf_dir)
-        return _manifest_frame(docs_base, keep_base, base_labels).localCheckpoint()
+        return _manifest_frame(docs_base, keep_base, base_labels)
 
     return _MANIFEST_CACHE.get_or_build(spark, sf_dir, "base", build=build)
 
@@ -1753,7 +1730,7 @@ def doc_quality_logreg(spark, sf_dir: str) -> DataFrame:
     'en'`` label; ``LOGREG_ITERS`` GD steps, then every doc is scored by
     the final weights.
 
-    Scale shape: one feature pass (localCheckpoint barrier — four
+    Scale shape: one feature pass (a stored artifact — four
     consumers: three gradient aggregates + scoring), then per iteration
     ONE map-side-combined aggregate producing a 1-row weight frame that
     broadcast-joins (on a constant key — BroadcastHashJoin, never a
@@ -1782,30 +1759,30 @@ def doc_quality_logreg(spark, sf_dir: str) -> DataFrame:
     return _logreg_serve(feats, wdf)
 
 
-#: Session memo of the trained quality classifier — (feature table,
-#: 1-row weight frame) per corpus. The r13 eager
-#: checkpoint on logreg_fit alone made every CONSTRUCTION of a
-#: quality-gated manifest re-run the feature pass + the serial GD chain
-#: (measured 5-6 s warm, 17 s cold per construction —
-#: manifest_gateset_version_diff regressed 10.3 → 17.3 s best-of-2
-#: before this memo). The classifier is a stored artifact in
-#: production (fit nightly, served all day — logreg_store_roundtrip
-#: proves the storage leg), so the session memo is the faithful model,
-#: exactly like _IVF_CACHE/_MANIFEST_CACHE: cold builds it once, every
-#: consumer (scores, calibration, quality gate, full pipeline, gateset
-#: v2, version diff, staleness fresh arm, stream scorer) serves from it.
+#: Session memo of the trained quality classifier per corpus: the
+#: feature table ("feats"), the 1-row weights fitted on it ("weights")
+#: and the stale fit on the base slice ("weights", "base"). The
+#: classifier is a stored artifact in production (fit nightly, served
+#: all day — logreg_store_roundtrip proves the storage leg): cold builds
+#: it once, and every consumer (scores, calibration, quality gate, full
+#: pipeline, gateset v2, version diff, staleness report, stream scorer)
+#: serves from it.
 _LOGREG_CACHE = MemoDict("logreg_artifacts")
 
 
 def _logreg_artifacts(spark, sf_dir: str):
     """(feats, weights) for the corpus at ``sf_dir``, fitted once per
     session."""
-
-    def build() -> tuple[DataFrame, DataFrame]:
-        feats = _logreg_feats(ensure_parallelism(load_tables(spark, sf_dir).documents))
-        return feats, logreg_fit(feats)
-
-    return _LOGREG_CACHE.get_or_build(spark, sf_dir, build=build)
+    feats = _LOGREG_CACHE.get_or_build(
+        spark, sf_dir, "feats",
+        build=lambda: _logreg_feats(
+            ensure_parallelism(load_tables(spark, sf_dir).documents)
+        ),
+    )
+    weights = _LOGREG_CACHE.get_or_build(
+        spark, sf_dir, "weights", build=lambda: logreg_fit(feats)
+    )
+    return feats, weights
 
 
 def logreg_scores(docs: DataFrame) -> DataFrame:
@@ -1837,14 +1814,14 @@ def _logreg_feat_exprs() -> list:
 
 
 def _logreg_feats(docs: DataFrame) -> DataFrame:
-    """(doc_id, x1..x4 exact-bigint features, y) — localCheckpoint'ed:
-    the three gradient aggregates and scoring all read it."""
+    """(doc_id, x1..x4 exact-bigint features, y): the three gradient
+    aggregates and scoring all read it."""
     docs = docs.where(
         F.col("doc_id").isNotNull()
         & F.col("text").isNotNull()
         & F.col("lang").isNotNull()
     )
-    return docs.select("doc_id", *_logreg_feat_exprs()).localCheckpoint()
+    return docs.select("doc_id", *_logreg_feat_exprs())
 
 
 def _logreg_z(w):
@@ -1859,18 +1836,7 @@ def _logreg_z(w):
 def logreg_fit(feats: DataFrame) -> DataFrame:
     """``LOGREG_ITERS`` full-batch GD steps → the 1-row weight frame
     (w1..w4). Each step is one map-side-combined aggregate; the weights
-    never leave the plan.
-
-    The returned frame is localCheckpoint-ed (r13 optimization, the
-    ``ivf_fit_cells`` precedent): it is ONE row, but its plan is the
-    whole serial GD chain, and consumers hang it under broadcast joins —
-    ``_quality_low_train_ids`` reads the scored frame three times (cut
-    aggregate, decile bucketing, threshold filter), which re-ran the
-    full fit chain per read (an unmaterialized broadcast subtree
-    re-executes per consumer — the exchange-reuse pitfall measured in
-    doc_tfidf_neighbors). Eager 1-row materialization runs the fit once;
-    every caller is a batch frame (the streaming scorer collect()s the
-    fit on a static frame before its query starts)."""
+    never leave the plan, which ``_LOGREG_CACHE`` stores materialized."""
 
     def pq_expr(w):
         p = F.lit(1.0) / (F.lit(1.0) + F.exp(-_logreg_z(w)))
@@ -1908,7 +1874,7 @@ def logreg_fit(feats: DataFrame) -> DataFrame:
                 for j in (1, 2, 3, 4)
             ]
         )
-    return wdf.localCheckpoint()
+    return wdf
 
 
 def _logreg_serve(feats: DataFrame, wdf: DataFrame) -> DataFrame:
@@ -2018,9 +1984,9 @@ def training_manifest_quality_filtered(spark, sf_dir: str) -> DataFrame:
     rewrite, the deletion-repair property.
     """
     man = _full_manifest(spark, sf_dir)
-    low = _gate_artifact_cached(
+    low = _MANIFEST_CACHE.get_or_build(
         spark, sf_dir, "quality_low_ids",
-        lambda: _quality_low_train_ids(spark, sf_dir, man),
+        build=lambda: _quality_low_train_ids(spark, sf_dir, man),
     )
     return (
         _close_ranks(man.join(low, "doc_id", "anti"))
@@ -2139,13 +2105,13 @@ def logreg_staleness_report(spark, sf_dir: str) -> DataFrame:
     Measured (r10): 4.8 s at sf0.1 (best-of-2, noop sink).
     """
     # full-corpus feats + fresh fit from the session artifact memo; the
-    # stale fit (base slice) is this report's own cost and re-fits
+    # stale fit (base slice) is its own memo slot
     feats, fresh = _logreg_artifacts(spark, sf_dir)
     cut = rank_cut(spark, sf_dir, "logreg_cut", feats.select("doc_id"))
-
-    stale = logreg_fit(feats.where(F.col("doc_id") <= F.lit(cut))).select(
-        *[F.col(f"w{j}").alias(f"v{j}") for j in (1, 2, 3, 4)]
-    )
+    stale = _LOGREG_CACHE.get_or_build(
+        spark, sf_dir, "weights", "base",
+        build=lambda: logreg_fit(feats.where(F.col("doc_id") <= F.lit(cut))),
+    ).select(*[F.col(f"w{j}").alias(f"v{j}") for j in (1, 2, 3, 4)])
     scored = (
         feats.withColumn("_k", F.lit(1))
         .join(F.broadcast(fresh.withColumn("_k", F.lit(1))), "_k")
@@ -2234,18 +2200,18 @@ def _gateset_v1_frame(spark, sf_dir: str) -> DataFrame:
     manifest in production, it does not re-run the pipeline — so the
     full-pipeline query and the version diff consume one checkpointed
     frame per session. The gate sets it composes come from their own
-    stored-set memos (``_gate_artifact_cached``)."""
+    stored-set slots in ``_MANIFEST_CACHE``."""
 
     def build() -> DataFrame:
         man = _full_manifest(spark, sf_dir)
         cleaned = _span_accounting_cached(spark, sf_dir)
-        contam = _gate_artifact_cached(
+        contam = _MANIFEST_CACHE.get_or_build(
             spark, sf_dir, "contam_ids",
-            lambda: _contam_train_ids(spark, sf_dir, man),
+            build=lambda: _contam_train_ids(spark, sf_dir, man),
         )
-        low = _gate_artifact_cached(
+        low = _MANIFEST_CACHE.get_or_build(
             spark, sf_dir, "quality_low_ids",
-            lambda: _quality_low_train_ids(spark, sf_dir, man),
+            build=lambda: _quality_low_train_ids(spark, sf_dir, man),
         )
         gated = (
             man.join(contam, "doc_id", "anti")
@@ -2263,7 +2229,7 @@ def _gateset_v1_frame(spark, sf_dir: str) -> DataFrame:
             "removed_tokens",
         )
 
-    return _gate_artifact_cached(spark, sf_dir, "fullpipe_v1", build)
+    return _MANIFEST_CACHE.get_or_build(spark, sf_dir, "fullpipe_v1", build=build)
 
 
 def _repetition_fail_train_ids(spark, sf_dir: str, man: DataFrame) -> DataFrame:
@@ -2314,17 +2280,17 @@ def training_manifest_gatesetv2(spark, sf_dir: str) -> DataFrame:
     """
     man = _full_manifest(spark, sf_dir)
     cleaned = _span_accounting_cached(spark, sf_dir)
-    contam = _gate_artifact_cached(
+    contam = _MANIFEST_CACHE.get_or_build(
         spark, sf_dir, "contam_ids",
-        lambda: _contam_train_ids(spark, sf_dir, man),
+        build=lambda: _contam_train_ids(spark, sf_dir, man),
     )
-    low = _gate_artifact_cached(
+    low = _MANIFEST_CACHE.get_or_build(
         spark, sf_dir, "quality_low_ids",
-        lambda: _quality_low_train_ids(spark, sf_dir, man),
+        build=lambda: _quality_low_train_ids(spark, sf_dir, man),
     )
-    rep_fail = _gate_artifact_cached(
+    rep_fail = _MANIFEST_CACHE.get_or_build(
         spark, sf_dir, "repetition_fail_ids",
-        lambda: _repetition_fail_train_ids(spark, sf_dir, man),
+        build=lambda: _repetition_fail_train_ids(spark, sf_dir, man),
     )
     gated = (
         man.join(contam, "doc_id", "anti")

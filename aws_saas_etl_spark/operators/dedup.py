@@ -538,10 +538,8 @@ def _shingle_table(spark, sf_dir: str) -> DataFrame:
     ``(doc_id, lang, sh, lb, sz)`` with ``sh`` the hash-sorted xxhash64
     shingle array and ``lb`` the token-count decade block. Shingles are
     hashed to int64 BEFORE any join: 8-byte compares and a narrow shuffle
-    instead of moving string arrays. localCheckpoint'ed once per session
-    per corpus — one materialization, many consumers (prefix posts, the
-    two verify sides, the delta-merge postings) — the measured barrier
-    pattern from minhash_signatures/tf-idf."""
+    instead of moving string arrays. Built once per session per corpus
+    (see ``_SHINGLE_CACHE``)."""
 
     def build() -> DataFrame:
         docs = ensure_parallelism(load_tables(spark, sf_dir).documents)
@@ -558,7 +556,6 @@ def _shingle_table(spark, sf_dir: str) -> DataFrame:
                 .alias("lb"),
             )
             .withColumn("sz", F.size("sh"))
-            .localCheckpoint()
         )
 
     return _SHINGLE_CACHE.get_or_build(spark, sf_dir, build=build)
@@ -782,9 +779,8 @@ def connected_components(
 #: entire top-3 of the bench (measured r6 at sf0.1: keep-best
 #: 5.20 → 0.70 s, cluster rows 4.59 → 0.14 s, split-leakage
 #: 4.48 → 0.19 s; the chain cost is paid once, by whichever consumer
-#: runs first). The cached value is a localCheckpoint'ed
-#: (node, comp) table: cluster-membership-sized, tiny relative to the
-#: corpus.
+#: runs first). The cached value is the (node, comp) table:
+#: cluster-membership-sized, tiny relative to the corpus.
 _CLUSTER_CACHE = MemoDict("clusters")
 
 
@@ -810,7 +806,7 @@ def content_clusters(spark, sf_dir: str, min_jaccard: float = 0.4) -> DataFrame:
         # exchange here
         sh = _shingle_table(spark, sf_dir)
         pairs = _verify_pairs(_prefix_candidates(sh, min_jaccard), sh, min_jaccard)
-        return connected_components(pairs, src="doc_a", dst="doc_b").localCheckpoint()
+        return connected_components(pairs, src="doc_a", dst="doc_b")
 
     return _CLUSTER_CACHE.get_or_build(spark, sf_dir, min_jaccard, build=build)
 
@@ -849,7 +845,7 @@ def _lsh_clusters_cached(spark, sf_dir: str) -> DataFrame:
         spark, sf_dir, "lsh",
         build=lambda: connected_components(
             minhash_lsh_pairs(spark, sf_dir), src="doc_a", dst="doc_b"
-        ).localCheckpoint(),
+        ),
     )
 
 
@@ -944,9 +940,7 @@ def _base_assignment(spark, sf_dir: str) -> DataFrame:
         tagged = _tag_arrivals(_shingle_table(spark, sf_dir))
         base_sh = tagged.where(~F.col("is_new")).drop("is_new", "cut")
         base_pairs = _verify_pairs(_prefix_candidates(base_sh, 0.4), base_sh, 0.4)
-        return connected_components(
-            base_pairs, src="doc_a", dst="doc_b"
-        ).localCheckpoint()
+        return connected_components(base_pairs, src="doc_a", dst="doc_b")
 
     return _BASE_LABELS_CACHE.get_or_build(spark, sf_dir, build=build)
 

@@ -549,12 +549,8 @@ def ivf_fit_cells(emb: DataFrame, n_cells: int, iters: int = IVF_ITERS) -> DataF
     engine-neutral: every arithmetic step is either exact integer math
     or a deterministic double op on identical inputs, so DuckDB
     replaying the same rounds lands on bit-identical centroids
-    (oracles.ANN_IVF_TOPK_SQL — the hash gate this enables). Only the
-    FINAL centroid set is localCheckpoint-ed: intermediate rounds are
-    consumed exactly once, but the returned table is broadcast into both
-    the corpus assignment and the query probe, and an unmaterialized
-    broadcast subtree re-executes per consumer (the exchange-reuse
-    pitfall measured in doc_tfidf_neighbors)."""
+    (oracles.ANN_IVF_TOPK_SQL — the hash gate this enables). Returns
+    the plan; ``_IVF_CACHE`` stores it materialized."""
     vectors = emb.select("vec_id", "embedding")
     n_rows, n_vecs, min_dim, dim, max_abs = vectors.agg(
         F.count(F.lit(1)),
@@ -602,7 +598,7 @@ def ivf_fit_cells(emb: DataFrame, n_cells: int, iters: int = IVF_ITERS) -> DataF
     for _ in range(iters):
         assigned = _assign_cells(vectors, centroids)
         centroids = assigned.groupBy("cell").agg(mean)
-    return centroids.localCheckpoint()
+    return centroids
 
 
 #: Session-scoped cache of fitted IVF centroids. A trained ANN index is a
@@ -665,9 +661,7 @@ def _ivf_index_cached(
     centroids = _ivf_centroids_cached(spark, sf_dir, emb, n_cells, base)
     cells = _ASSIGN_CACHE.get_or_build(
         spark, sf_dir, *_fit_slot(base), n_cells,
-        build=lambda: _assign_cells(
-            emb.select("vec_id", "embedding"), centroids
-        ).localCheckpoint(),
+        build=lambda: _assign_cells(emb.select("vec_id", "embedding"), centroids),
     )
     return centroids, cells
 
@@ -1179,8 +1173,7 @@ def _ladder_recall(spark, sf_dir: str, query_pred: Column | None = None) -> Data
     32 scans), because each hit join hangs a fresh copy of the truth
     plan under a different parent. Now (a) the truth top-k — a bounded
     ≤ queries × k frame, the audit's reference set — is materialized
-    ONCE via ``localCheckpoint`` (the ``embedding_semdedup_prune``
-    barrier precedent), and (b) all rung arms union into one tagged
+    ONCE, in ``_TRUTH_CACHE``, and (b) all rung arms union into one tagged
     frame that joins truth a single time, with per-rung hit counts
     recovered by conditional aggregation. Values are identical: each
     rung's count is still |rung-top-k ∩ truth-top-k| per query — the
@@ -1210,7 +1203,7 @@ def _ladder_recall(spark, sf_dir: str, query_pred: Column | None = None) -> Data
 #: never re-derived per audited index. Before r14 the seven audit queries
 #: (recall ladder ×3, staleness ladder ×3, index staleness) each re-ran
 #: the full corpus × queries brute-force scan per construction. The cache
-#: holds the bounded ≤ queries × k frame, localCheckpoint-ed; the sampled
+#: holds the bounded ≤ queries × k frame; the sampled
 #: audit forms filter it by their query predicate (per-query rows are
 #: independent — the subset relation their pytest pin asserts). The
 #: standalone ``knn_bruteforce`` QUERY deliberately bypasses this cache:
@@ -1222,9 +1215,7 @@ _TRUTH_CACHE = MemoDict("audit_truth_topk")
 def _truth_topk_cached(spark, sf_dir: str) -> DataFrame:
     return _TRUTH_CACHE.get_or_build(
         spark, sf_dir, TOP_K,
-        build=lambda: knn_bruteforce(spark, sf_dir)
-        .select("query_id", "neighbor_id")
-        .localCheckpoint(),
+        build=lambda: knn_bruteforce(spark, sf_dir).select("query_id", "neighbor_id"),
     )
 
 
@@ -1232,7 +1223,7 @@ def _hit_count_report(
     truth: DataFrame, arms: list[tuple[str, DataFrame]]
 ) -> DataFrame:
     """Per-query hit counts of every arm against the truth top-k, in one
-    join: truth (bounded ≤ queries × k rows) is localCheckpoint-ed so the
+    join: truth (bounded ≤ queries × k rows) is materialized so the
     brute-force scan behind it runs exactly once however many consumers
     hang off it; the arms union into a tagged frame (each arm's serving
     plan executes once, same as before) and per-arm counts come from one
@@ -1240,7 +1231,7 @@ def _hit_count_report(
     """
     key = ["query_id", "neighbor_id"]
     # truth arrives from the session ground-truth cache (r14), already
-    # localCheckpoint-ed — both consumers below (the hit join and the
+    # materialized — both consumers below (the hit join and the
     # n_truth aggregate) read the materialized bounded frame
     tagged = None
     for i, (_name, cand) in enumerate(arms):
@@ -1401,7 +1392,7 @@ def _ladder_staleness(spark, sf_dir: str, query_pred: Column | None = None) -> D
         truth = truth.where(query_pred)
         arms = [(name, cand.where(query_pred)) for name, cand in arms]
     # r13 optimization: same restructure as ``_ladder_recall`` — truth
-    # localCheckpoint-ed once instead of re-executed per arm (11× before:
+    # materialized once instead of re-executed per arm (11× before:
     # PLAN_AUDIT r12 read 68 shuffles / 64 scans), arms tagged-unioned
     # into ONE hit join + conditional aggregation. Identical values.
     return _hit_count_report(truth, arms)
@@ -1518,7 +1509,7 @@ def _lexical_postings(spark, sf_dir: str) -> tuple[DataFrame, DataFrame]:
         toks = docs.select(
             "doc_id", F.array_distinct(T.tokens("text")).alias("tk")
         ).where(F.size("tk") > 0)
-        return toks.select("doc_id", F.explode("tk").alias("token")).localCheckpoint()
+        return toks.select("doc_id", F.explode("tk").alias("token"))
 
     postings = _POSTINGS_CACHE.get_or_build(spark, sf_dir, build=build)
     # the store roundtrip's proven size derivation, over the checkpoint
@@ -2232,7 +2223,7 @@ def _pq_fit_from_subs(subs: DataFrame) -> DataFrame:
     for _ in range(PQ_ITERS):
         assigned = _pq_argmin(subs, cb)
         cb = assigned.groupBy("m", "code").agg(mean)
-    return cb.localCheckpoint()
+    return cb
 
 
 def _pq_codebooks_cached(
@@ -2251,8 +2242,8 @@ def _pq_codebooks_cached(
 #: table IS the stored index in a PQ deployment — FAISS persists the
 #: n·M uint8 codes and never re-encodes the corpus per query; only this
 #: repo's every-construction re-encode (a corpus × M×K broadcast argmin
-#: window) re-paid it. One checkpointed (vec_id, m, code) table per
-#: codebook serves every consumer of that codebook:
+#: window) re-paid it. One (vec_id, m, code) table per codebook serves
+#: every consumer of that codebook:
 #: the fresh codes feed ``ann_pq_adc_topk``, ``ann_ivfpq_topk``,
 #: ``ann_ivfpq_filtered_topk`` and the deletion repair (encoding is
 #: per-row, so filtering cached codes ≡ encoding the filtered corpus);
@@ -2274,7 +2265,7 @@ def _pq_index_cached(
     cb = _pq_codebooks_cached(spark, sf_dir, emb, base)
     codes = _PQ_CODES_CACHE.get_or_build(
         spark, sf_dir, *_fit_slot(base),
-        build=lambda: _pq_encode(emb, cb).localCheckpoint(),
+        build=lambda: _pq_encode(emb, cb),
     )
     return cb, codes
 
@@ -2551,8 +2542,7 @@ def ann_ivfpq_residual_topk(spark, sf_dir: str, k: int = TOP_K) -> DataFrame:
         build=lambda: _pq_argmin(rsubs.select("vec_id", "m", "sub"), cb)
         .select("vec_id", "m", "code")
         .join(assigned, "vec_id")
-        .select(F.col("vec_id").alias("neighbor_id"), "cell", "m", "code")
-        .localCheckpoint(),
+        .select(F.col("vec_id").alias("neighbor_id"), "cell", "m", "code"),
     )
     probe_cells = _probe_cells(_query_vectors(emb), coarse, nprobe).select(
         "query_id", "cell"

@@ -574,16 +574,13 @@ def stream_logreg_score_ingest(spark, sf_dir: str) -> DataFrame:
     that is order- and batching-invariant, re-derived by the oracle from
     the same unrolled-GD twin the batch queries hash against.
     """
-    from aws_saas_etl_spark.operators.curation import (
-        _logreg_feat_exprs,
-        _logreg_feats,
-        _logreg_z,
-        logreg_fit,
-    )
-
     # session-fitted artifact (curation._LOGREG_CACHE): the stream scores
     # against the same nightly weights every batch consumer reads
-    from aws_saas_etl_spark.operators.curation import _logreg_artifacts
+    from aws_saas_etl_spark.operators.curation import (
+        _logreg_artifacts,
+        _logreg_feat_exprs,
+        _logreg_z,
+    )
 
     wrow = _logreg_artifacts(spark, sf_dir)[1].collect()[0]
     w = {j: F.lit(float(wrow[f"w{j}"])) for j in (1, 2, 3, 4)}

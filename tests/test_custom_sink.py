@@ -240,6 +240,61 @@ def test_operator_store_legs_go_through_the_store_helper():
     assert found == []
 
 
+#: Fit functions that return plans: the memo that stores a fit
+#: materializes it.
+_FITS = {"ivf_fit_cells", "_pq_fit_from_subs", "logreg_fit", "_logreg_feats", "bpe_merges"}
+
+
+def test_stored_artifacts_are_materialized_only_by_the_memo():
+    """``MemoDict.get_or_build`` materializes every stored frame, so no
+    ``build`` argument under ``operators/`` (a lambda, or a nested
+    function passed by name) calls ``localCheckpoint``, and neither does
+    any fit function a build wraps."""
+    import ast
+    import glob
+
+    def checkpoints(node) -> bool:
+        return any(
+            isinstance(n, ast.Attribute) and n.attr == "localCheckpoint"
+            for n in ast.walk(node)
+        )
+
+    ops = os.path.join(os.path.dirname(custom.__file__), "..", "operators")
+    builds, fits, found = 0, set(), []
+    for path in sorted(glob.glob(os.path.join(ops, "*.py"))):
+        tree = ast.parse(open(path).read(), path)
+        where = os.path.basename(path)
+        for fn in tree.body:
+            if not isinstance(fn, ast.FunctionDef):
+                continue
+            if fn.name in _FITS:
+                fits.add(fn.name)
+                if checkpoints(fn):
+                    found.append(f"{where}:{fn.name}")
+            nested = {
+                d.name: d for d in ast.walk(fn) if isinstance(d, ast.FunctionDef)
+            }
+            for call in ast.walk(fn):
+                if not (
+                    isinstance(call, ast.Call)
+                    and isinstance(call.func, ast.Attribute)
+                    and call.func.attr == "get_or_build"
+                ):
+                    continue
+                for kw in call.keywords:
+                    if kw.arg != "build":
+                        continue
+                    body = nested.get(kw.value.id) if isinstance(kw.value, ast.Name) else kw.value
+                    if body is None:
+                        continue
+                    builds += 1
+                    if checkpoints(body):
+                        found.append(f"{where}:{call.lineno}")
+    assert fits == _FITS
+    assert builds >= 20
+    assert found == []
+
+
 def _store_dirs(df) -> set[str]:
     from urllib.parse import urlparse
 

@@ -227,3 +227,30 @@ def test_assignment_and_codes_are_keyed_by_their_fit(monkeypatch):
         for cache in caches:
             for k in [k for k in cache if k[0] == app]:
                 del cache[k]
+
+
+def test_get_or_build_materializes_a_stored_frame_once(spark, tmp_path):
+    """A build that returns a lazy DataFrame is materialized on the miss:
+    the miss launches the job, and the stored frame reads checkpointed
+    rows instead of the build's lineage. A warm call launches no job and
+    returns the same object."""
+    from tests.test_catalog import _jobs_launched
+
+    m = memo.MemoDict("t_materialize")
+    lazy = spark.range(60).selectExpr("id", "id * id AS sq").where("id % 3 = 0")
+    got = []
+
+    def call():
+        got.append(m.get_or_build(spark, str(tmp_path), build=lambda: lazy))
+
+    def plan(df) -> str:
+        return df._jdf.queryExecution().analyzed().toString()
+
+    assert _jobs_launched(spark, call) > 0
+    stored = got[0]
+    assert "Range" in plan(lazy)
+    assert "Range" not in plan(stored)
+    assert _jobs_launched(spark, call) == 0
+    assert got[1] is stored
+    assert sorted(stored.collect()) == sorted(lazy.collect())
+    m.clear()
