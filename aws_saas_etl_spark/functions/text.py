@@ -27,18 +27,79 @@ LANG_STOPWORDS: dict[str, tuple[str, ...]] = {
 }
 
 
-def tokens(col: Column | str) -> Column:
+# The per-document token features below are written as SQL text over a
+# column NAME (the ``*_sql`` emitters) and become a Column through ONE
+# ``F.expr`` each. A Python-lambda ``F.filter`` / ``F.aggregate`` calls
+# back into the JVM once per lambda, and each Column call is a handful of
+# py4j round trips; the parsed text gives the identical expression tree.
+
+
+def tokens_sql(col: str) -> str:
     """Lowercased alphabetic tokens of a text column (empties removed)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.filter(F.split(F.lower(c), TOKEN_SPLIT_RE), lambda t: t != "")
+    return f"filter(split(lower({col}), '{TOKEN_SPLIT_RE}'), t -> t != '')"
 
 
-def token_count(col: Column | str) -> Column:
-    return F.size(tokens(col))
+def token_count_sql(col: str) -> str:
+    return f"size({tokens_sql(col)})"
 
 
-def distinct_token_count(col: Column | str) -> Column:
-    return F.size(F.array_distinct(tokens(col)))
+def stopword_count_sql(col: str, lang: str = "en") -> str:
+    stops = ", ".join(f"'{w}'" for w in LANG_STOPWORDS[lang])
+    return f"size(filter({tokens_sql(col)}, t -> t IN ({stops})))"
+
+
+def stopword_ratio_sql(col: str, lang: str = "en") -> str:
+    n = token_count_sql(col)
+    return (
+        f"CASE WHEN {n} > 0 THEN {stopword_count_sql(col, lang)} / {n} "
+        "ELSE 0.0D END"
+    )
+
+
+def alpha_ratio_sql(col: str) -> str:
+    """Fraction of characters that are alphabetic — a quality signal."""
+    return (
+        f"CASE WHEN length({col}) > 0 THEN "
+        f"length(regexp_replace({col}, '[^a-zA-Z]', '')) / length({col}) "
+        "ELSE 0.0D END"
+    )
+
+
+def mean_token_length_sql(col: str) -> str:
+    ts = tokens_sql(col)
+    return (
+        f"CASE WHEN size({ts}) > 0 THEN "
+        f"CAST(aggregate({ts}, 0, (acc, t) -> acc + length(t)) AS DOUBLE) "
+        f"/ size({ts}) ELSE 0.0D END"
+    )
+
+
+def tokens(col: str) -> Column:
+    return F.expr(tokens_sql(col))
+
+
+def token_count(col: str) -> Column:
+    return F.expr(token_count_sql(col))
+
+
+def distinct_token_count(col: str) -> Column:
+    return F.expr(f"size(array_distinct({tokens_sql(col)}))")
+
+
+def stopword_count(col: str, lang: str = "en") -> Column:
+    return F.expr(stopword_count_sql(col, lang))
+
+
+def stopword_ratio(col: str, lang: str = "en") -> Column:
+    return F.expr(stopword_ratio_sql(col, lang))
+
+
+def alpha_ratio(col: str) -> Column:
+    return F.expr(alpha_ratio_sql(col))
+
+
+def mean_token_length(col: str) -> Column:
+    return F.expr(mean_token_length_sql(col))
 
 
 def whitespace_token_count(col: Column | str) -> Column:
@@ -71,32 +132,7 @@ def char_count(col: Column | str) -> Column:
     return F.length(c)
 
 
-def alpha_ratio(col: Column | str) -> Column:
-    """Fraction of characters that are alphabetic — a quality signal."""
-    c = F.col(col) if isinstance(col, str) else col
-    n_alpha = F.length(F.regexp_replace(c, "[^a-zA-Z]", ""))
-    return F.when(F.length(c) > 0, n_alpha / F.length(c)).otherwise(F.lit(0.0))
-
-
-def stopword_count(col: Column | str, lang: str = "en") -> Column:
-    stops = list(LANG_STOPWORDS[lang])
-    return F.size(F.filter(tokens(col), lambda t: t.isin(*stops)))
-
-
-def stopword_ratio(col: Column | str, lang: str = "en") -> Column:
-    n = token_count(col)
-    return F.when(n > 0, stopword_count(col, lang) / n).otherwise(F.lit(0.0))
-
-
-def mean_token_length(col: Column | str) -> Column:
-    ts = tokens(col)
-    total = F.aggregate(ts, F.lit(0), lambda acc, t: acc + F.length(t))
-    return F.when(F.size(ts) > 0, total.cast("double") / F.size(ts)).otherwise(
-        F.lit(0.0)
-    )
-
-
-def quality_score(col: Column | str) -> Column:
+def quality_score(col: str) -> Column:
     """Deterministic [0,1] quality heuristic combining length, alphabetic
     ratio, and lexical diversity — the shape of score LLM pipelines use to
     filter low-quality documents.
@@ -113,12 +149,12 @@ def quality_score(col: Column | str) -> Column:
     )
 
 
-def language_scores(col: Column | str) -> dict[str, Column]:
+def language_scores(col: str) -> dict[str, Column]:
     """Per-language stopword-hit counts (the language-ID signal)."""
     return {lang: stopword_count(col, lang) for lang in LANG_STOPWORDS}
 
 
-def language_id(col: Column | str) -> Column:
+def language_id(col: str) -> Column:
     """Argmax language by stopword hits; 'und' (undetermined) when no
     stopword of any language occurs. Ties break in LANG_STOPWORDS order
     (deterministic)."""

@@ -1735,9 +1735,10 @@ def doc_quality_logreg(spark, sf_dir: str) -> DataFrame:
     ONE map-side-combined aggregate producing a 1-row weight frame that
     broadcast-joins (on a constant key — BroadcastHashJoin, never a
     cartesian) back onto the features. Model size is corpus-independent
-    (4 doubles); iteration count is fixed; nothing is driver-side — the
-    weights live in the plan as a 1-row DataFrame, so the whole
-    train→score graph is ONE lazy plan at any corpus size.
+    (4 doubles) and the iteration count is fixed. The features and the
+    1-row weight frame are session artifacts (``_LOGREG_CACHE``), which
+    the memo materializes on a cold build; serving is one broadcast join.
+    Every expression is SQL text, one ``F.expr``/``selectExpr`` each.
 
     Determinism (the ``nb_lang_scores`` recipe, applied to GD): features
     are quantized to exact int64 (ratio × 10⁴ — each ratio is ONE IEEE
@@ -1796,82 +1797,80 @@ def logreg_scores(docs: DataFrame) -> DataFrame:
     return _logreg_serve(feats, logreg_fit(feats))
 
 
-def _logreg_feat_exprs() -> list:
-    """The quantized feature/label column expressions (x1..x4, y) — pure
-    stateless built-ins, shared by the batch fit (below) and the
+# The classifier's expressions are SQL text, one ``F.expr`` /
+# ``selectExpr`` each (see functions/text.py): per-weight Column
+# arithmetic costs several py4j round trips per operator, thousands per
+# fit.
+_LOGREG_J = (1, 2, 3, 4)
+
+
+def _logreg_feat_sql() -> list[str]:
+    """The quantized feature/label expressions (x1..x4, y) as SQL text —
+    pure stateless built-ins, shared by the batch fit (below) and the
     streaming scorer (streaming frames can't localCheckpoint)."""
 
-    def xq(col):
-        return F.round(col * F.lit(float(LOGREG_X_SCALE))).cast("bigint")
+    def xq(expr: str) -> str:
+        return f"CAST(round(({expr}) * {float(LOGREG_X_SCALE)!r}D) AS BIGINT)"
 
     return [
-        xq(T.stopword_ratio("text", "en")).alias("x1"),
-        xq(T.alpha_ratio("text")).alias("x2"),
-        xq(T.mean_token_length("text") / F.lit(10.0)).alias("x3"),
-        F.lit(LOGREG_X_SCALE).cast("bigint").alias("x4"),
-        (F.col("lang") == F.lit("en")).cast("bigint").alias("y"),
+        f"{xq(T.stopword_ratio_sql('text', 'en'))} AS x1",
+        f"{xq(T.alpha_ratio_sql('text'))} AS x2",
+        f"{xq(T.mean_token_length_sql('text') + ' / 10.0D')} AS x3",
+        f"CAST({LOGREG_X_SCALE} AS BIGINT) AS x4",
+        "CAST(lang = 'en' AS BIGINT) AS y",
     ]
+
+
+#: Rows a fit can use: every feature input present.
+_LOGREG_ROWS = "doc_id IS NOT NULL AND text IS NOT NULL AND lang IS NOT NULL"
 
 
 def _logreg_feats(docs: DataFrame) -> DataFrame:
     """(doc_id, x1..x4 exact-bigint features, y): the three gradient
     aggregates and scoring all read it."""
-    docs = docs.where(
-        F.col("doc_id").isNotNull()
-        & F.col("text").isNotNull()
-        & F.col("lang").isNotNull()
-    )
-    return docs.select("doc_id", *_logreg_feat_exprs())
+    return docs.where(_LOGREG_ROWS).selectExpr("doc_id", *_logreg_feat_sql())
 
 
-def _logreg_z(w):
-    """w·x in a FIXED left-associated order — mirrored textually by the
-    oracle twin."""
-    terms = [
-        w[j] * (F.col(f"x{j}") / F.lit(float(LOGREG_X_SCALE))) for j in (1, 2, 3, 4)
-    ]
-    return ((terms[0] + terms[1]) + terms[2]) + terms[3]
+def _logreg_p_sql(w) -> str:
+    """sigmoid(w·x) as SQL text, for SQL weight operands ``w[1..4]``
+    (column names or double literals). w·x is summed in a FIXED
+    left-associated order — mirrored textually by the oracle twin."""
+    t = [f"{w[j]} * (x{j} / {float(LOGREG_X_SCALE)!r}D)" for j in _LOGREG_J]
+    return f"1.0D / (1.0D + EXP(-(((({t[0]}) + ({t[1]})) + ({t[2]})) + ({t[3]}))))"
+
+
+def _with_weights(feats: DataFrame, *wdfs: DataFrame) -> DataFrame:
+    """``feats`` beside each 1-row weight frame: a broadcast join on a
+    constant key (BroadcastHashJoin, never a cartesian)."""
+    out = feats.selectExpr("*", "1 AS _k")
+    for wdf in wdfs:
+        out = out.join(F.broadcast(wdf.selectExpr("*", "1 AS _k")), "_k")
+    return out
 
 
 def logreg_fit(feats: DataFrame) -> DataFrame:
     """``LOGREG_ITERS`` full-batch GD steps → the 1-row weight frame
     (w1..w4). Each step is one map-side-combined aggregate; the weights
     never leave the plan, which ``_LOGREG_CACHE`` stores materialized."""
-
-    def pq_expr(w):
-        p = F.lit(1.0) / (F.lit(1.0) + F.exp(-_logreg_z(w)))
-        return F.round(p * F.lit(float(LOGREG_P_SCALE))).cast("bigint")
-
     wdf = None
     for _ in range(LOGREG_ITERS):
         if wdf is None:
-            src = feats
-            w = {j: F.lit(0.0) for j in (1, 2, 3, 4)}
+            src, w = feats, {j: "0.0D" for j in _LOGREG_J}
         else:
-            src = feats.withColumn("_k", F.lit(1)).join(
-                F.broadcast(wdf.withColumn("_k", F.lit(1))), "_k"
-            )
-            w = {j: F.col(f"w{j}") for j in (1, 2, 3, 4)}
-        resid = pq_expr(w) - F.col("y") * F.lit(LOGREG_P_SCALE)
-        agg = src.agg(
-            *[F.sum(resid * F.col(f"x{j}")).alias(f"s{j}") for j in (1, 2, 3, 4)],
-            F.count(F.lit(1)).alias("n"),
-            *[F.min(w[j]).alias(f"wp{j}") for j in (1, 2, 3, 4)],
+            src, w = _with_weights(feats, wdf), {j: f"w{j}" for j in _LOGREG_J}
+        pq = f"CAST(round({_logreg_p_sql(w)} * {float(LOGREG_P_SCALE)!r}D) AS BIGINT)"
+        resid = f"{pq} - y * {LOGREG_P_SCALE}"
+        agg = src.selectExpr(
+            *[f"sum(({resid}) * x{j}) AS s{j}" for j in _LOGREG_J],
+            "count(1) AS n",
+            *[f"min({w[j]}) AS wp{j}" for j in _LOGREG_J],
         )
-        wdf = agg.select(
+        denom = float(LOGREG_P_SCALE * LOGREG_X_SCALE)
+        wdf = agg.selectExpr(
             *[
-                (
-                    F.col(f"wp{j}")
-                    - F.lit(LOGREG_LR)
-                    * (
-                        F.col(f"s{j}").cast("double")
-                        / (
-                            F.col("n").cast("double")
-                            * F.lit(float(LOGREG_P_SCALE * LOGREG_X_SCALE))
-                        )
-                    )
-                ).alias(f"w{j}")
-                for j in (1, 2, 3, 4)
+                f"wp{j} - {LOGREG_LR!r}D * (CAST(s{j} AS DOUBLE) "
+                f"/ (CAST(n AS DOUBLE) * {denom!r}D)) AS w{j}"
+                for j in _LOGREG_J
             ]
         )
     return wdf
@@ -1881,16 +1880,13 @@ def _logreg_serve(feats: DataFrame, wdf: DataFrame) -> DataFrame:
     """Score every doc by a 1-row weight frame (broadcast join on a
     constant key) — shared by the in-plan fit and the stored-weights
     roundtrip."""
-    w = {j: F.col(f"w{j}") for j in (1, 2, 3, 4)}
-    scored = feats.withColumn("_k", F.lit(1)).join(
-        F.broadcast(wdf.withColumn("_k", F.lit(1))), "_k"
-    )
-    p = F.lit(1.0) / (F.lit(1.0) + F.exp(-_logreg_z(w)))
-    return scored.select(
+    p = _logreg_p_sql({j: f"w{j}" for j in _LOGREG_J})
+    return _with_weights(feats, wdf).selectExpr(
         "doc_id",
-        F.col("y").alias("label"),
-        N.dround(p, 6).alias("score"),
-        (p >= F.lit(0.5)).cast("bigint").alias("pred"),
+        "y AS label",
+        f"CAST(CAST(CAST({p} AS {N.DECIMAL_TYPE}) AS DECIMAL(38,6)) AS DOUBLE)"
+        " AS score",
+        f"CAST({p} >= 0.5D AS BIGINT) AS pred",
     ).orderBy("doc_id")
 
 
@@ -2111,23 +2107,9 @@ def logreg_staleness_report(spark, sf_dir: str) -> DataFrame:
     stale = _LOGREG_CACHE.get_or_build(
         spark, sf_dir, "weights", "base",
         build=lambda: logreg_fit(feats.where(F.col("doc_id") <= F.lit(cut))),
-    ).select(*[F.col(f"w{j}").alias(f"v{j}") for j in (1, 2, 3, 4)])
-    scored = (
-        feats.withColumn("_k", F.lit(1))
-        .join(F.broadcast(fresh.withColumn("_k", F.lit(1))), "_k")
-        .join(F.broadcast(stale.withColumn("_k", F.lit(1))), "_k")
-    )
-    wf = {j: F.col(f"w{j}") for j in (1, 2, 3, 4)}
-    ws = {j: F.col(f"v{j}") for j in (1, 2, 3, 4)}
-    pf = F.lit(1.0) / (F.lit(1.0) + F.exp(-_logreg_z(wf)))
-    ps = F.lit(1.0) / (F.lit(1.0) + F.exp(-_logreg_z(ws)))
+    ).selectExpr(*[f"w{j} AS v{j}" for j in _LOGREG_J])
     return (
-        scored.select(
-            F.col("y").alias("label"),
-            ((pf >= F.lit(0.5)) != (ps >= F.lit(0.5))).cast("int").alias("flip"),
-            F.round(pf * F.lit(1.0e6)).cast("bigint").alias("qf"),
-            F.round(ps * F.lit(1.0e6)).cast("bigint").alias("qs"),
-        )
+        _logreg_drift(feats, fresh, stale)
         .groupBy("label")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -2136,6 +2118,20 @@ def logreg_staleness_report(spark, sf_dir: str) -> DataFrame:
             F.sum("qs").cast("bigint").alias("sum_q_stale"),
         )
         .orderBy("label")
+    )
+
+
+def _logreg_drift(feats: DataFrame, fresh: DataFrame, stale: DataFrame) -> DataFrame:
+    """(label, flip, qf, qs) per doc: whether the fresh (w1..w4) and the
+    stale (v1..v4) weights disagree on the prediction, and each one's
+    score quantized to 10⁻⁶."""
+    pf = _logreg_p_sql({j: f"w{j}" for j in _LOGREG_J})
+    ps = _logreg_p_sql({j: f"v{j}" for j in _LOGREG_J})
+    return _with_weights(feats, fresh, stale).selectExpr(
+        "y AS label",
+        f"CAST(({pf} >= 0.5D) != ({ps} >= 0.5D) AS INT) AS flip",
+        f"CAST(round({pf} * 1000000.0D) AS BIGINT) AS qf",
+        f"CAST(round({ps} * 1000000.0D) AS BIGINT) AS qs",
     )
 
 

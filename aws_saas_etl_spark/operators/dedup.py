@@ -89,22 +89,32 @@ def md60(col):
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
-def shingles(col, size: int = SHINGLE_SIZE):
-    """Distinct word n-gram shingles as an array column (built-ins only):
-    zip each token with its offset-by-`size` successors."""
-    toks = T.tokens(col)
-    n = F.size(toks)
-    # For i in 0..n-size: concat(tokens[i..i+size-1]). Guard n < size —
-    # Spark's sequence(0, negative) would DESCEND, not return empty.
-    idx = F.sequence(F.lit(0), n - size)
-    grams = F.transform(
-        idx,
-        lambda i: F.concat_ws(
-            " ", *[F.element_at(toks, (i + j + 1).cast("int")) for j in range(size)]
-        ),
+def shingles_sql(col: str, size: int = SHINGLE_SIZE) -> str:
+    """Distinct word n-gram shingles of text column ``col`` as SQL text
+    (built-ins only): zip each token with its offset-by-`size`
+    successors. For i in 0..n-size: concat(tokens[i..i+size-1]). Guarded
+    by n >= size — Spark's sequence(0, negative) would DESCEND, not
+    return empty."""
+    toks = T.tokens_sql(col)
+    n = f"size({toks})"
+    grams = ", ".join(
+        f"element_at({toks}, CAST(i + {j} + 1 AS INT))" for j in range(size)
     )
-    empty = F.array().cast("array<string>")
-    return F.when(n >= size, F.array_distinct(grams)).otherwise(empty)
+    return (
+        f"CASE WHEN {n} >= {size} THEN array_distinct(transform("
+        f"sequence(0, {n} - {size}), i -> concat_ws(' ', {grams}))) "
+        "ELSE CAST(array() AS ARRAY<STRING>) END"
+    )
+
+
+def shingles(col: str, size: int = SHINGLE_SIZE) -> Column:
+    """``shingles_sql`` as one Column."""
+    return F.expr(shingles_sql(col, size))
+
+
+def hashed_shingles(col: str) -> Column:
+    """The xxhash64 of every distinct shingle of ``col``."""
+    return F.expr(f"transform({shingles_sql(col)}, s -> xxhash64(s))")
 
 
 def exact_dedup_groups(spark, sf_dir: str) -> DataFrame:
@@ -303,14 +313,14 @@ def minhash_signatures(docs: DataFrame) -> DataFrame:
     mins). All values stay < 2⁶² — overflow-free under ANSI — and are
     reproduced digit-for-digit by the DuckDB twin, which reads the same
     MINHASH_A/MINHASH_B constants."""
-    ex = docs.select("doc_id", F.explode(shingles(F.col("text"))).alias("s"))
+    ex = docs.select("doc_id", F.explode(shingles("text")).alias("s"))
     h = ex.select("doc_id", md60(F.col("s")).alias("h"))
-    h31 = F.col("h").bitwiseAND(F.lit(_M31))
     return h.groupBy("doc_id").agg(
-        F.array_sort(F.collect_list("h")).alias("sh"),
+        F.expr("array_sort(collect_list(h)) AS sh"),
         *[
-            F.min((h31 * F.lit(MINHASH_A[i]) + F.lit(MINHASH_B[i])) % F.lit(_M31)).alias(
-                f"h{i}"
+            F.expr(
+                f"min(((h & {_M31}) * {MINHASH_A[i]} + {MINHASH_B[i]}) % {_M31})"
+                f" AS h{i}"
             )
             for i in range(MINHASH_HASHES)
         ],
@@ -543,14 +553,11 @@ def _shingle_table(spark, sf_dir: str) -> DataFrame:
 
     def build() -> DataFrame:
         docs = ensure_parallelism(load_tables(spark, sf_dir).documents)
-        sh_hashed = F.array_sort(
-            F.transform(shingles(F.col("text")), lambda s: F.xxhash64(s))
-        )
         return (
             docs.select(
                 "doc_id",
                 "lang",
-                sh_hashed.alias("sh"),
+                F.array_sort(hashed_shingles("text")).alias("sh"),
                 (T.token_count("text").cast("int") / F.lit(LENGTH_BUCKET))
                 .cast("int")
                 .alias("lb"),
@@ -637,29 +644,26 @@ def simhash_fingerprints(docs: DataFrame) -> DataFrame:
     rows = docs.select(
         "doc_id", F.explode(F.array_distinct(T.tokens("text"))).alias("tok")
     )
-    hx = F.md5(F.col("tok"))
-    hi = F.conv(F.substring(hx, 1, 8), 16, 10).cast("long")  # bits 32..63
-    lo = F.conv(F.substring(hx, 9, 8), 16, 10).cast("long")  # bits 0..31
+    hx = "md5(tok)"
+    hi = f"CAST(conv(substring({hx}, 1, 8), 16, 10) AS BIGINT)"  # bits 32..63
+    lo = f"CAST(conv(substring({hx}, 9, 8), 16, 10) AS BIGINT)"  # bits 0..31
     votes = rows.groupBy("doc_id").agg(
         *[
-            F.sum(
-                F.when(
-                    F.shiftright(lo if j < 32 else hi, j % 32).bitwiseAND(F.lit(1))
-                    == 1,
-                    1,
-                ).otherwise(-1)
-            ).alias(f"v{j}")
+            F.expr(
+                f"sum(CASE WHEN (shiftright({lo if j < 32 else hi}, {j % 32}) & 1)"
+                f" = 1 THEN 1 ELSE -1 END) AS v{j}"
+            )
             for j in range(SIMHASH_BITS)
         ]
     )
     # Assemble: bit j set iff vote > 0. Bit 63 contributes the sign bit.
-    sig = F.lit(0).cast("long")
-    for j in range(SIMHASH_BITS):
-        bit_value = -(2**63) if j == 63 else 2**j
-        sig = sig + F.when(F.col(f"v{j}") > 0, F.lit(bit_value).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-    return votes.select("doc_id", sig.alias("simhash"))
+    bits = [
+        f"CASE WHEN v{j} > 0 THEN "
+        f"{'CAST(-9223372036854775808 AS BIGINT)' if j == 63 else f'{2**j}L'}"
+        " ELSE 0L END"
+        for j in range(SIMHASH_BITS)
+    ]
+    return votes.selectExpr("doc_id", f"{' + '.join(['0L', *bits])} AS simhash")
 
 
 def simhash_band_check(spark, sf_dir: str) -> DataFrame:

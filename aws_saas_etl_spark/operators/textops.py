@@ -739,16 +739,14 @@ def doc_common_ngram_ratio(spark, sf_dir: str) -> DataFrame:
     ratio on string shingles — equal modulo 2^-64 hash collisions, the
     same equivalence ngram_jaccard_pairs relies on.
     """
-    from aws_saas_etl_spark.operators.dedup import shingles
+    from aws_saas_etl_spark.operators.dedup import hashed_shingles
 
     docs = ensure_parallelism(load_tables(spark, sf_dir).documents).where(
         F.col("doc_id").isNotNull() & F.col("text").isNotNull()
     )
     sh = docs.select(
         "doc_id",
-        F.explode(
-            F.transform(shingles(F.col("text")), lambda s: F.xxhash64(s))
-        ).alias("fp"),
+        F.explode(hashed_shingles("text")).alias("fp"),
     )
     df_counts = sh.groupBy("fp").agg(F.count(F.lit(1)).alias("df"))
     return (

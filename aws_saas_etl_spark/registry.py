@@ -1545,61 +1545,59 @@ register(
 # --------------------------------------------------------------------------
 
 
-def _transitive_sources(fn) -> list[str]:
-    """Source text of *fn* plus every package-internal callable it reaches.
+#: Per-process memo of the walk below, one entry per callable reached:
+#: ``id(obj) → (obj, (key, source) or None, callables it references in
+#: walk order)``. Every query's walk reuses it, so each function's source
+#: is read and scanned once per process, not once per query that reaches
+#: it. Holding ``obj`` keeps its id from being reused.
+_WALK_MEMO: dict[int, tuple] = {}
 
-    Walks the code object's ``co_names`` (and nested code objects, so
-    closures and comprehensions count), resolves each name in the
-    function's globals, and recurses into functions/classes defined inside
-    ``aws_saas_etl_spark``. Module references are followed one attribute
-    hop (``dedup._prefix_candidates`` style calls list both names in
-    ``co_names``). The result is sorted + de-duplicated, so the fingerprint
-    is stable under reordering of the walk.
-    """
+
+def _walk_node(obj) -> tuple:
+    """``obj``'s memo entry (see ``_WALK_MEMO``): its source under its
+    ``module.qualname`` key, and the package-internal callables it
+    references, in the order the walk visits them."""
+    hit = _WALK_MEMO.get(id(obj))
+    if hit is not None and hit[0] is obj:
+        return hit
+    import importlib
     import inspect
+    import re
     import types
 
     pkg = __name__.split(".")[0]
-    seen: set[int] = set()
-    sources: dict[str, str] = {}
 
-    def in_pkg(obj) -> bool:
-        mod = getattr(obj, "__module__", None)
+    def in_pkg(val) -> bool:
+        mod = getattr(val, "__module__", None)
         return isinstance(mod, str) and mod.split(".")[0] == pkg
 
-    def visit(obj) -> None:
-        if id(obj) in seen:
-            return
-        seen.add(id(obj))
-        target = inspect.unwrap(obj)
-        fn_obj = getattr(target, "__func__", target)
-        code = getattr(fn_obj, "__code__", None)
-        src = None
-        try:
-            key = f"{target.__module__}.{target.__qualname__}"
-            src = inspect.getsource(target)
-            sources.setdefault(key, src)
-        except (OSError, TypeError, AttributeError):
-            pass
-        if src is not None:
-            # Function-body imports (`from <pkg>.x import helper`) bind
-            # locals, not globals — resolve them from the source text.
-            import importlib
-            import re as _re
-
-            for m in _re.finditer(
-                rf"from\s+({pkg}[.\w]*)\s+import\s+([\w,\s]+)", src
-            ):
-                try:
-                    mod = importlib.import_module(m.group(1))
-                except ImportError:
-                    continue
-                for attr in m.group(2).replace(",", " ").split():
-                    val = getattr(mod, attr, None)
-                    if val is not None and callable(val) and in_pkg(val):
-                        visit(val)
-        if code is None:
-            return
+    target = inspect.unwrap(obj)
+    fn_obj = getattr(target, "__func__", target)
+    code = getattr(fn_obj, "__code__", None)
+    entry = None
+    children: list = []
+    try:
+        entry = (
+            f"{target.__module__}.{target.__qualname__}",
+            inspect.getsource(target),
+        )
+    except (OSError, TypeError, AttributeError):
+        pass
+    if entry is not None:
+        # Function-body imports (`from <pkg>.x import helper`) bind
+        # locals, not globals — resolve them from the source text.
+        for m in re.finditer(
+            rf"from\s+({pkg}[.\w]*)\s+import\s+([\w,\s]+)", entry[1]
+        ):
+            try:
+                mod = importlib.import_module(m.group(1))
+            except ImportError:
+                continue
+            for attr in m.group(2).replace(",", " ").split():
+                val = getattr(mod, attr, None)
+                if val is not None and callable(val) and in_pkg(val):
+                    children.append(val)
+    if code is not None:
         globs = getattr(fn_obj, "__globals__", {})
         names: set[str] = set()
         stack = [code]
@@ -1615,7 +1613,7 @@ def _transitive_sources(fn) -> list[str]:
             except ValueError:
                 continue
             if callable(val) and in_pkg(val):
-                visit(val)
+                children.append(val)
         modules = []
         for n in names:
             val = globs.get(n)
@@ -1626,14 +1624,42 @@ def _transitive_sources(fn) -> list[str]:
             ).split(".")[0] == pkg:
                 modules.append(val)
             elif callable(val) and in_pkg(val):
-                visit(val)
+                children.append(val)
         for mod in modules:
             for n in names:
                 val = getattr(mod, n, None)
                 if val is not None and callable(val) and in_pkg(val):
-                    visit(val)
+                    children.append(val)
+    hit = _WALK_MEMO[id(obj)] = (obj, entry, tuple(children))
+    return hit
 
-    visit(fn)
+
+def _transitive_sources(fn) -> list[str]:
+    """Source text of *fn* plus every package-internal callable it reaches.
+
+    Walks the code object's ``co_names`` (and nested code objects, so
+    closures and comprehensions count), resolves each name in the
+    function's globals, and recurses into functions/classes defined inside
+    ``aws_saas_etl_spark``. Module references are followed one attribute
+    hop (``dedup._prefix_candidates`` style calls list both names in
+    ``co_names``). The result is sorted + de-duplicated, so the fingerprint
+    is stable under reordering of the walk. Each callable's source and
+    references are read once per process (``_walk_node``).
+    """
+    seen: set[int] = set()
+    sources: dict[str, str] = {}
+    stack = [fn]
+    # Depth-first in the order the references were found, so a key two
+    # callables share (same qualname) keeps the first one's source.
+    while stack:
+        obj = stack.pop()
+        if id(obj) in seen:
+            continue
+        seen.add(id(obj))
+        _obj, entry, children = _walk_node(obj)
+        if entry is not None:
+            sources.setdefault(*entry)
+        stack.extend(reversed(children))
     return [sources[k] for k in sorted(sources)]
 
 

@@ -577,13 +577,14 @@ def stream_logreg_score_ingest(spark, sf_dir: str) -> DataFrame:
     # session-fitted artifact (curation._LOGREG_CACHE): the stream scores
     # against the same nightly weights every batch consumer reads
     from aws_saas_etl_spark.operators.curation import (
+        _LOGREG_ROWS,
         _logreg_artifacts,
-        _logreg_feat_exprs,
-        _logreg_z,
+        _logreg_feat_sql,
+        _logreg_p_sql,
     )
 
     wrow = _logreg_artifacts(spark, sf_dir)[1].collect()[0]
-    w = {j: F.lit(float(wrow[f"w{j}"])) for j in (1, 2, 3, 4)}
+    w = {j: f"({float(wrow[f'w{j}'])!r}D)" for j in (1, 2, 3, 4)}
 
     path = _staged_table_dir(spark, sf_dir, "documents")
     stream = (
@@ -591,17 +592,16 @@ def stream_logreg_score_ingest(spark, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(path)
     )
-    feats = stream.where(
-        F.col("doc_id").isNotNull()
-        & F.col("text").isNotNull()
-        & F.col("lang").isNotNull()
-    ).select("doc_id", *_logreg_feat_exprs())
-    p = F.lit(1.0) / (F.lit(1.0) + F.exp(-_logreg_z(w)))
-    scored = feats.select(
-        "doc_id",
-        "y",
-        F.round(p * F.lit(1.0e6)).cast("bigint").alias("score_q"),
-        (p >= F.lit(0.5)).cast("bigint").alias("pred"),
+    p = _logreg_p_sql(w)
+    scored = (
+        stream.where(_LOGREG_ROWS)
+        .selectExpr("doc_id", *_logreg_feat_sql())
+        .selectExpr(
+            "doc_id",
+            "y",
+            f"CAST(round({p} * 1000000.0D) AS BIGINT) AS score_q",
+            f"CAST({p} >= 0.5D AS BIGINT) AS pred",
+        )
     )
     drained = _drain(scored, "append")
     return (

@@ -66,6 +66,67 @@ def pytest_collection_modifyitems(config, items):
             item.add_marker(skip_slow)
 
 
+def normalized_plan(df) -> str:
+    """The optimized plan with expression ids blanked and each lambda
+    variable (``x_1`` from PySpark, ``x`` from SQL text) renamed by the
+    order its id first appears, so operand order still counts."""
+    import re
+
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    ids: dict[str, int] = {}
+    plan = re.sub(
+        r"lambda \w+#(\d+)",
+        lambda m: f"lambda v{ids.setdefault(m.group(1), len(ids))}",
+        plan,
+    )
+    return re.sub(r"#\d+", "#", plan)
+
+
+def assert_same_tree(spark, cases: dict) -> None:
+    """Each ``name: (got, want)`` pair — a builder written as SQL text and
+    the Column-API formulation it replaced — has the same optimized plan
+    (``normalized_plan``) and the same rows."""
+    # plan strings elide long field lists unless this bound covers them
+    spark.conf.set("spark.sql.debug.maxToStringFields", "100000")
+    try:
+        for name, (got, want) in cases.items():
+            plan = normalized_plan(got)
+            assert "more fields" not in plan, name
+            assert plan == normalized_plan(want), name
+            keys = [f"c{i}" for i in range(len(got.columns))]
+            assert (
+                got.toDF(*keys).orderBy(*keys).collect()
+                == want.toDF(*keys).orderBy(*keys).collect()
+            ), name
+    finally:
+        spark.conf.unset("spark.sql.debug.maxToStringFields")
+
+
+def py4j_calls(build) -> int:
+    """Python→JVM round trips (py4j ``send_command`` calls) made by
+    ``build()`` on the calling thread. py4j's finalizer thread releases
+    garbage-collected Java references through the same method whenever
+    Python's collector runs; those calls are not ``build()``'s."""
+    import threading
+
+    from py4j.clientserver import ClientServerConnection
+
+    calls = [0]
+    real = ClientServerConnection.send_command
+    me = threading.get_ident()
+
+    def counting(self, command):
+        calls[0] += threading.get_ident() == me
+        return real(self, command)
+
+    ClientServerConnection.send_command = counting
+    try:
+        build()
+    finally:
+        ClientServerConnection.send_command = real
+    return calls[0]
+
+
 @pytest.fixture(scope="session")
 def spark():
     from aws_saas_etl_spark.session import get_spark

@@ -102,6 +102,98 @@ def test_fingerprint_covers_shared_helpers():
     assert "def bounded_self_pairs" in srcs or "def _bounded_self_pairs" in srcs
 
 
+def _reference_transitive_sources(fn) -> list[str]:
+    """The per-query walk ``registry._transitive_sources`` replaced:
+    every query re-reads the source of every callable it reaches."""
+    import importlib
+    import inspect
+    import re
+    import types
+
+    pkg = "aws_saas_etl_spark"
+    seen: set[int] = set()
+    sources: dict[str, str] = {}
+
+    def in_pkg(obj) -> bool:
+        mod = getattr(obj, "__module__", None)
+        return isinstance(mod, str) and mod.split(".")[0] == pkg
+
+    def visit(obj) -> None:
+        if id(obj) in seen:
+            return
+        seen.add(id(obj))
+        target = inspect.unwrap(obj)
+        fn_obj = getattr(target, "__func__", target)
+        code = getattr(fn_obj, "__code__", None)
+        src = None
+        try:
+            key = f"{target.__module__}.{target.__qualname__}"
+            src = inspect.getsource(target)
+            sources.setdefault(key, src)
+        except (OSError, TypeError, AttributeError):
+            pass
+        if src is not None:
+            for m in re.finditer(
+                rf"from\s+({pkg}[.\w]*)\s+import\s+([\w,\s]+)", src
+            ):
+                try:
+                    mod = importlib.import_module(m.group(1))
+                except ImportError:
+                    continue
+                for attr in m.group(2).replace(",", " ").split():
+                    val = getattr(mod, attr, None)
+                    if val is not None and callable(val) and in_pkg(val):
+                        visit(val)
+        if code is None:
+            return
+        globs = getattr(fn_obj, "__globals__", {})
+        names: set[str] = set()
+        stack = [code]
+        while stack:
+            c = stack.pop()
+            names.update(c.co_names)
+            names.update(c.co_freevars)
+            stack.extend(k for k in c.co_consts if isinstance(k, types.CodeType))
+        for cell in getattr(fn_obj, "__closure__", None) or ():
+            try:
+                val = cell.cell_contents
+            except ValueError:
+                continue
+            if callable(val) and in_pkg(val):
+                visit(val)
+        modules = []
+        for n in names:
+            val = globs.get(n)
+            if val is None:
+                continue
+            if isinstance(val, types.ModuleType) and getattr(
+                val, "__name__", ""
+            ).split(".")[0] == pkg:
+                modules.append(val)
+            elif callable(val) and in_pkg(val):
+                visit(val)
+        for mod in modules:
+            for n in names:
+                val = getattr(mod, n, None)
+                if val is not None and callable(val) and in_pkg(val):
+                    visit(val)
+
+    visit(fn)
+    return [sources[k] for k in sorted(sources)]
+
+
+def test_memoized_source_walk_equals_the_per_query_walk():
+    """The walk behind every query fingerprint reads each callable once
+    per process; for every registered query it must return exactly the
+    sources the per-query walk returns."""
+    from aws_saas_etl_spark import registry
+
+    for name, fn in registry.queries().items():
+        assert registry._transitive_sources(fn) == _reference_transitive_sources(
+            fn
+        ), name
+
+
 def test_no_query_stays_driver_invisible():
     """Every query registered ≥2 rounds ago (QUERY_ROUNDS.json, maintained
     by tools/update_fingerprints.py) must have a driver CORRECTNESS row by

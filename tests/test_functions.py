@@ -613,7 +613,7 @@ def test_minhash_signature_matches_pure_python(spark):
     sig_rows = {r.doc_id: r for r in minhash_signatures(docs).collect()}
     assert sig_rows
     shingle_rows = docs.select(
-        "doc_id", shingles(F.col("text")).alias("gr")
+        "doc_id", shingles("text").alias("gr")
     ).collect()
 
     def md60(s: str) -> int:
@@ -1399,3 +1399,303 @@ def test_repetition_filter_first_failing_gate(spark, tmp_path):
         2: "dup_5gram_token_frac",
         3: "keep",
     }, got
+
+
+# --------------------------------------------------------------------------
+# Builders written as SQL text: the Column-API formulations they replaced
+# are kept below as references. Each rewritten builder must give the
+# reference's optimized plan (expression ids and lambda variable names
+# normalized) and its rows.
+# --------------------------------------------------------------------------
+
+
+def _ref_tokens(c):
+    from aws_saas_etl_spark.functions.text import TOKEN_SPLIT_RE
+
+    return F.filter(F.split(F.lower(F.col(c)), TOKEN_SPLIT_RE), lambda t: t != "")
+
+
+def _ref_stopword_count(c, lang="en"):
+    from aws_saas_etl_spark.functions.text import LANG_STOPWORDS
+
+    stops = list(LANG_STOPWORDS[lang])
+    return F.size(F.filter(_ref_tokens(c), lambda t: t.isin(*stops)))
+
+
+def _ref_stopword_ratio(c, lang="en"):
+    n = F.size(_ref_tokens(c))
+    return F.when(n > 0, _ref_stopword_count(c, lang) / n).otherwise(F.lit(0.0))
+
+
+def _ref_alpha_ratio(c):
+    col = F.col(c)
+    n_alpha = F.length(F.regexp_replace(col, "[^a-zA-Z]", ""))
+    return F.when(F.length(col) > 0, n_alpha / F.length(col)).otherwise(F.lit(0.0))
+
+
+def _ref_mean_token_length(c):
+    ts = _ref_tokens(c)
+    total = F.aggregate(ts, F.lit(0), lambda acc, t: acc + F.length(t))
+    return F.when(F.size(ts) > 0, total.cast("double") / F.size(ts)).otherwise(
+        F.lit(0.0)
+    )
+
+
+def _ref_shingles(c, size=3):
+    toks = _ref_tokens(c)
+    n = F.size(toks)
+    idx = F.sequence(F.lit(0), n - size)
+    grams = F.transform(
+        idx,
+        lambda i: F.concat_ws(
+            " ", *[F.element_at(toks, (i + j + 1).cast("int")) for j in range(size)]
+        ),
+    )
+    empty = F.array().cast("array<string>")
+    return F.when(n >= size, F.array_distinct(grams)).otherwise(empty)
+
+
+def _ref_minhash_signatures(docs):
+    from aws_saas_etl_spark.operators.dedup import (
+        MINHASH_A,
+        MINHASH_B,
+        MINHASH_HASHES,
+        _M31,
+        md60,
+    )
+
+    ex = docs.select("doc_id", F.explode(_ref_shingles("text")).alias("s"))
+    h = ex.select("doc_id", md60(F.col("s")).alias("h"))
+    h31 = F.col("h").bitwiseAND(F.lit(_M31))
+    return h.groupBy("doc_id").agg(
+        F.array_sort(F.collect_list("h")).alias("sh"),
+        *[
+            F.min((h31 * F.lit(MINHASH_A[i]) + F.lit(MINHASH_B[i])) % F.lit(_M31)).alias(
+                f"h{i}"
+            )
+            for i in range(MINHASH_HASHES)
+        ],
+    )
+
+
+def _ref_simhash_fingerprints(docs):
+    from aws_saas_etl_spark.operators.dedup import SIMHASH_BITS
+
+    rows = docs.select(
+        "doc_id", F.explode(F.array_distinct(_ref_tokens("text"))).alias("tok")
+    )
+    hx = F.md5(F.col("tok"))
+    hi = F.conv(F.substring(hx, 1, 8), 16, 10).cast("long")
+    lo = F.conv(F.substring(hx, 9, 8), 16, 10).cast("long")
+    votes = rows.groupBy("doc_id").agg(
+        *[
+            F.sum(
+                F.when(
+                    F.shiftright(lo if j < 32 else hi, j % 32).bitwiseAND(F.lit(1))
+                    == 1,
+                    1,
+                ).otherwise(-1)
+            ).alias(f"v{j}")
+            for j in range(SIMHASH_BITS)
+        ]
+    )
+    sig = F.lit(0).cast("long")
+    for j in range(SIMHASH_BITS):
+        bit_value = -(2**63) if j == 63 else 2**j
+        sig = sig + F.when(F.col(f"v{j}") > 0, F.lit(bit_value).cast("long")).otherwise(
+            F.lit(0).cast("long")
+        )
+    return votes.select("doc_id", sig.alias("simhash"))
+
+
+def _ref_logreg_feats(docs):
+    from aws_saas_etl_spark.operators.curation import LOGREG_X_SCALE
+
+    def xq(col):
+        return F.round(col * F.lit(float(LOGREG_X_SCALE))).cast("bigint")
+
+    docs = docs.where(
+        F.col("doc_id").isNotNull()
+        & F.col("text").isNotNull()
+        & F.col("lang").isNotNull()
+    )
+    return docs.select(
+        "doc_id",
+        xq(_ref_stopword_ratio("text", "en")).alias("x1"),
+        xq(_ref_alpha_ratio("text")).alias("x2"),
+        xq(_ref_mean_token_length("text") / F.lit(10.0)).alias("x3"),
+        F.lit(LOGREG_X_SCALE).cast("bigint").alias("x4"),
+        (F.col("lang") == F.lit("en")).cast("bigint").alias("y"),
+    )
+
+
+def _ref_logreg_p(w):
+    from aws_saas_etl_spark.operators.curation import LOGREG_X_SCALE
+
+    t = [w[j] * (F.col(f"x{j}") / F.lit(float(LOGREG_X_SCALE))) for j in (1, 2, 3, 4)]
+    return F.lit(1.0) / (F.lit(1.0) + F.exp(-(((t[0] + t[1]) + t[2]) + t[3])))
+
+
+def _ref_with_weights(feats, *wdfs):
+    out = feats.withColumn("_k", F.lit(1))
+    for wdf in wdfs:
+        out = out.join(F.broadcast(wdf.withColumn("_k", F.lit(1))), "_k")
+    return out
+
+
+def _ref_logreg_fit(feats):
+    from aws_saas_etl_spark.operators.curation import (
+        LOGREG_ITERS,
+        LOGREG_LR,
+        LOGREG_P_SCALE,
+        LOGREG_X_SCALE,
+    )
+
+    wdf = None
+    for _ in range(LOGREG_ITERS):
+        if wdf is None:
+            src, w = feats, {j: F.lit(0.0) for j in (1, 2, 3, 4)}
+        else:
+            src = _ref_with_weights(feats, wdf)
+            w = {j: F.col(f"w{j}") for j in (1, 2, 3, 4)}
+        pq = F.round(_ref_logreg_p(w) * F.lit(float(LOGREG_P_SCALE))).cast("bigint")
+        resid = pq - F.col("y") * F.lit(LOGREG_P_SCALE)
+        agg = src.agg(
+            *[F.sum(resid * F.col(f"x{j}")).alias(f"s{j}") for j in (1, 2, 3, 4)],
+            F.count(F.lit(1)).alias("n"),
+            *[F.min(w[j]).alias(f"wp{j}") for j in (1, 2, 3, 4)],
+        )
+        wdf = agg.select(
+            *[
+                (
+                    F.col(f"wp{j}")
+                    - F.lit(LOGREG_LR)
+                    * (
+                        F.col(f"s{j}").cast("double")
+                        / (
+                            F.col("n").cast("double")
+                            * F.lit(float(LOGREG_P_SCALE * LOGREG_X_SCALE))
+                        )
+                    )
+                ).alias(f"w{j}")
+                for j in (1, 2, 3, 4)
+            ]
+        )
+    return wdf
+
+
+def _ref_logreg_serve(feats, wdf):
+    from aws_saas_etl_spark.functions import num as N
+
+    p = _ref_logreg_p({j: F.col(f"w{j}") for j in (1, 2, 3, 4)})
+    return _ref_with_weights(feats, wdf).select(
+        "doc_id",
+        F.col("y").alias("label"),
+        N.dround(p, 6).alias("score"),
+        (p >= F.lit(0.5)).cast("bigint").alias("pred"),
+    ).orderBy("doc_id")
+
+
+def _ref_logreg_drift(feats, fresh, stale):
+    pf = _ref_logreg_p({j: F.col(f"w{j}") for j in (1, 2, 3, 4)})
+    ps = _ref_logreg_p({j: F.col(f"v{j}") for j in (1, 2, 3, 4)})
+    return _ref_with_weights(feats, fresh, stale).select(
+        F.col("y").alias("label"),
+        ((pf >= F.lit(0.5)) != (ps >= F.lit(0.5))).cast("int").alias("flip"),
+        F.round(pf * F.lit(1.0e6)).cast("bigint").alias("qf"),
+        F.round(ps * F.lit(1.0e6)).cast("bigint").alias("qs"),
+    )
+
+
+def test_text_dedup_and_logreg_builders_keep_the_column_api_tree(spark):
+    """The token features, shingles, MinHash signatures, SimHash
+    fingerprints and the logistic-regression features, fit, sigmoid,
+    scorer and drift rows written as SQL text each optimize to the plan
+    of their Column-API form and return its rows on the sf0.001
+    documents."""
+    from aws_saas_etl_spark.catalog import load_tables
+    from aws_saas_etl_spark.functions import text as T
+    from aws_saas_etl_spark.operators import curation as C
+    from aws_saas_etl_spark.operators import dedup as D
+    from tests.conftest import SF_SMOKE, assert_same_tree
+
+    docs = load_tables(spark, SF_SMOKE).documents
+    feats = C._logreg_feats(docs)
+    fresh = C.logreg_fit(feats)
+    stale = C.logreg_fit(feats.where("doc_id <= 300")).selectExpr(
+        *[f"w{j} AS v{j}" for j in (1, 2, 3, 4)]
+    )
+    lit_w = {1: 0.25, 2: -1.5, 3: 1e-05, 4: -0.0}
+
+    def col_pair(name, got, want):
+        return (
+            docs.select("doc_id", got.alias(name)),
+            docs.select("doc_id", want.alias(name)),
+        )
+
+    cases = {
+        "tokens": col_pair("v", T.tokens("text"), _ref_tokens("text")),
+        "token_count": col_pair("v", T.token_count("text"), F.size(_ref_tokens("text"))),
+        "distinct_token_count": col_pair(
+            "v",
+            T.distinct_token_count("text"),
+            F.size(F.array_distinct(_ref_tokens("text"))),
+        ),
+        "stopword_count": col_pair(
+            "v", T.stopword_count("text", "de"), _ref_stopword_count("text", "de")
+        ),
+        "stopword_ratio": col_pair(
+            "v", T.stopword_ratio("text"), _ref_stopword_ratio("text")
+        ),
+        "alpha_ratio": col_pair("v", T.alpha_ratio("text"), _ref_alpha_ratio("text")),
+        "mean_token_length": col_pair(
+            "v", T.mean_token_length("text"), _ref_mean_token_length("text")
+        ),
+        "shingles": col_pair("v", D.shingles("text"), _ref_shingles("text")),
+        "hashed_shingles": col_pair(
+            "v",
+            D.hashed_shingles("text"),
+            F.transform(_ref_shingles("text"), lambda s: F.xxhash64(s)),
+        ),
+        "minhash": (D.minhash_signatures(docs), _ref_minhash_signatures(docs)),
+        "simhash": (D.simhash_fingerprints(docs), _ref_simhash_fingerprints(docs)),
+        "logreg_feats": (feats, _ref_logreg_feats(docs)),
+        "logreg_fit": (fresh, _ref_logreg_fit(feats)),
+        "logreg_sigmoid": (
+            feats.select(
+                "doc_id",
+                F.expr(
+                    C._logreg_p_sql({j: f"({v!r}D)" for j, v in lit_w.items()})
+                ).alias("p"),
+            ),
+            feats.select(
+                "doc_id",
+                _ref_logreg_p({j: F.lit(v) for j, v in lit_w.items()}).alias("p"),
+            ),
+        ),
+        "logreg_serve": (
+            C._logreg_serve(feats, fresh),
+            _ref_logreg_serve(feats, fresh),
+        ),
+        "logreg_drift": (
+            C._logreg_drift(feats, fresh, stale),
+            _ref_logreg_drift(feats, fresh, stale),
+        ),
+    }
+    assert_same_tree(spark, cases)
+
+
+def test_text_and_logreg_builders_cost_one_expression_of_round_trips(spark):
+    """A token feature costs what one ``F.expr`` costs, and the logreg
+    sigmoid is pure text: turning it into a Column is one ``F.expr``."""
+    from aws_saas_etl_spark.functions import text as T
+    from aws_saas_etl_spark.operators.curation import _logreg_p_sql
+    from tests.conftest import py4j_calls
+
+    one_expr = py4j_calls(lambda: F.expr("a + b"))
+    assert one_expr > 0
+    for build in (T.tokens, T.stopword_ratio, T.mean_token_length, T.alpha_ratio):
+        assert py4j_calls(lambda: build("text")) == one_expr, build.__name__
+    w = {j: f"w{j}" for j in (1, 2, 3, 4)}
+    assert py4j_calls(lambda: _logreg_p_sql(w)) == 0
+    assert py4j_calls(lambda: F.expr(_logreg_p_sql(w))) == one_expr

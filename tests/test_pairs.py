@@ -87,8 +87,8 @@ def test_prefix_filtered_jaccard_matches_quadratic_reference(spark):
     from aws_saas_etl_spark.functions import text as T
     from aws_saas_etl_spark.operators.dedup import (
         LENGTH_BUCKET,
+        hashed_shingles,
         ngram_jaccard_pairs,
-        shingles,
     )
     from aws_saas_etl_spark.catalog import load_tables
     from tests.conftest import SF_SMOKE
@@ -99,9 +99,7 @@ def test_prefix_filtered_jaccard_matches_quadratic_reference(spark):
     }
 
     docs = load_tables(spark, SF_SMOKE).documents
-    sh_hashed = F.array_sort(
-        F.transform(shingles(F.col("text")), lambda s: F.xxhash64(s))
-    )
+    sh_hashed = F.array_sort(hashed_shingles("text"))
     sh = docs.select(
         "doc_id",
         "lang",

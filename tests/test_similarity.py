@@ -13,7 +13,7 @@ from aws_saas_etl_spark.operators.similarity import (
     lsh_bucket_expr,
 )
 from aws_saas_etl_spark.catalog import load_tables
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, assert_same_tree, py4j_calls
 
 
 def test_lsh_bits_scale_with_corpus():
@@ -1333,20 +1333,216 @@ def _ref_rp(j):
     return dround(acc, 6)
 
 
-def _normalized_plan(df) -> str:
-    """The optimized plan with expression ids blanked and each lambda
-    variable (``x_1`` from PySpark, ``x`` from SQL text) renamed by the
-    order its id first appears, so operand order still counts."""
-    import re
+def _ref_query_vectors(emb):
+    from aws_saas_etl_spark.operators.similarity import N_QUERY_VECS
 
-    plan = df._jdf.queryExecution().optimizedPlan().toString()
-    ids: dict[str, int] = {}
-    plan = re.sub(
-        r"lambda \w+#(\d+)",
-        lambda m: f"lambda v{ids.setdefault(m.group(1), len(ids))}",
-        plan,
+    return emb.where(F.col("vec_id") < N_QUERY_VECS).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
     )
-    return re.sub(r"#\d+", "#", plan)
+
+
+def _ref_probe_cells(queries, centroids, nprobe):
+    from pyspark.sql import Window
+
+    from aws_saas_etl_spark.operators.similarity import dot, norm
+
+    queries = queries.withColumn("q_n", norm("q_emb"))
+    cols = queries.columns
+    cents = centroids.withColumn("_cn", norm("centroid"))
+    q_w = Window.partitionBy("query_id").orderBy(F.desc("cell_sim"), F.asc("cell"))
+    return (
+        queries.crossJoin(F.broadcast(cents))
+        .select(
+            *cols,
+            "cell",
+            (dot("q_emb", "centroid") / (F.col("q_n") * F.col("_cn"))).alias(
+                "cell_sim"
+            ),
+        )
+        .withColumn("probe_rank", F.row_number().over(q_w))
+        .where(F.col("probe_rank") <= nprobe)
+        .select(*cols, "cell")
+    )
+
+
+def _ref_assign_cells(vectors, centroids):
+    from aws_saas_etl_spark.operators.similarity import dot, norm
+
+    vec_n = vectors.withColumn("_vn", norm("embedding"))
+    cent_n = centroids.withColumn("_cn", norm("centroid"))
+    sim = dot("embedding", "centroid") / (F.col("_vn") * F.col("_cn"))
+    return (
+        vec_n.crossJoin(F.broadcast(cent_n))
+        .select("vec_id", "embedding", "cell", sim.alias("cell_sim"))
+        .groupBy("vec_id")
+        .agg(
+            F.first("embedding").alias("embedding"),
+            F.max_by(
+                "cell",
+                F.struct(F.col("cell_sim").alias("s"), (-F.col("cell")).alias("t")),
+            ).alias("cell"),
+        )
+    )
+
+
+def _ref_ivf_probe(emb, centroids, nprobe, k, queries=None):
+    from pyspark.sql import Window
+
+    from aws_saas_etl_spark.operators.similarity import _same_label, dot, norm
+
+    corpus_cells = _ref_assign_cells(emb.select("vec_id", "embedding"), centroids)
+    if queries is None:
+        queries = _ref_query_vectors(emb)
+    corpus = corpus_cells.select(
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("c_emb"),
+        norm("embedding").alias("c_n"),
+        "cell",
+    )
+    cands = corpus.join(
+        F.broadcast(_ref_probe_cells(queries, centroids, nprobe)), "cell"
+    )
+    carry = ()
+    if "q_label" in queries.columns:
+        cands, carry = _same_label(cands, emb), ("label",)
+    sim = F.round(dot("q_emb", "c_emb") / (F.col("q_n") * F.col("c_n")), 6)
+    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
+    return (
+        cands.where(F.col("neighbor_id") != F.col("query_id"))
+        .select("query_id", "neighbor_id", *carry, sim.alias("cos_sim"))
+        .withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .orderBy("query_id", "rank")
+    )
+
+
+def _ref_ivf_fit_stats(vectors):
+    return vectors.agg(
+        F.count(F.lit(1)),
+        F.count("embedding"),
+        F.min(F.size("embedding")),
+        F.max(F.size("embedding")),
+        F.expr(
+            "max(aggregate(embedding, 0.0D, "
+            "(acc, x) -> greatest(acc, abs(CAST(x AS DOUBLE)))))"
+        ),
+    )
+
+
+def _ref_ivf_fit(emb, n_cells, iters):
+    from pyspark.sql import Window
+
+    from aws_saas_etl_spark.operators.similarity import (
+        EMBED_DIM,
+        IVF_QUANT,
+        _quantized_mean,
+    )
+
+    vectors = emb.select("vec_id", "embedding")
+    h = F.md5(F.col("vec_id").cast("string")).alias("h")
+    seeds = (
+        vectors.select("vec_id", "embedding", h).orderBy("h", "vec_id").limit(n_cells)
+    )
+    centroids = seeds.select(
+        (F.row_number().over(Window.orderBy("h", "vec_id")) - 1).alias("cell"),
+        F.col("embedding").alias("centroid"),
+    )
+    mean = _quantized_mean("embedding", EMBED_DIM, IVF_QUANT).alias("centroid")
+    for _ in range(iters):
+        centroids = _ref_assign_cells(vectors, centroids).groupBy("cell").agg(mean)
+    return centroids
+
+
+def _ref_subspace_slices(df, col, extra=()):
+    from aws_saas_etl_spark.operators.similarity import PQ_M, PQ_SUBDIM
+
+    slices = F.array(
+        *[
+            F.struct(
+                F.lit(m).alias("m"),
+                F.slice(F.col(col), m * PQ_SUBDIM + 1, PQ_SUBDIM).alias("sub"),
+            )
+            for m in range(PQ_M)
+        ]
+    )
+    return df.select("vec_id", *extra, F.explode(slices).alias("s")).select(
+        "vec_id", *extra, F.col("s.m").alias("m"), F.col("s.sub").alias("sub")
+    )
+
+
+def _ref_lsh_probe_queries(bucketed, n_bits):
+    from aws_saas_etl_spark.operators.similarity import N_QUERY_VECS, norm
+
+    probes = [F.col("bucket")] + [
+        F.col("bucket").bitwiseXOR(F.lit(2**i)) for i in range(n_bits)
+    ]
+    return bucketed.where(F.col("vec_id") < N_QUERY_VECS).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("q_emb"),
+        norm("embedding").alias("q_n"),
+        F.explode(F.array(*probes)).alias("q_bucket"),
+    )
+
+
+def _ivf_test_centroids(emb):
+    """Eight corpus vectors as a (cell, centroid) table."""
+    return emb.where(F.col("vec_id").between(100, 107)).select(
+        (F.col("vec_id") - 100).cast("int").alias("cell"),
+        F.col("embedding").alias("centroid"),
+    )
+
+
+def test_ivf_serving_builders_keep_the_column_api_tree(spark):
+    """The IVF serving builders written as SQL text (query set, probe,
+    corpus assignment, the whole probe → refine path, the fit's
+    validation aggregate, seeds and Lloyd rounds), the PQ subspace
+    slices and the LSH multi-probe query rows each optimize to the plan
+    of their Column-API form and return its rows on the sf0.001
+    embeddings, with and without a label-filtered query set."""
+    from aws_saas_etl_spark.operators import similarity as S
+
+    emb = load_tables(spark, SF_SMOKE).embeddings
+    vecs = emb.select("vec_id", "embedding")
+    cents = _ivf_test_centroids(emb)
+    queries = S._query_vectors(emb)
+    fqueries = S._filter_queries(emb)
+    units = emb.select("vec_id", S._unit("embedding").alias("u"))
+    celled = units.withColumn("cell", F.col("vec_id") % 7)
+    bucketed = emb.select(
+        "vec_id", "embedding", S.lsh_bucket_expr("embedding", 6).alias("bucket")
+    )
+    cases = {
+        "query_vectors": (S._query_vectors(emb), _ref_query_vectors(emb)),
+        "probe_cells": (
+            S._probe_cells(queries, cents, 3),
+            _ref_probe_cells(queries, cents, 3),
+        ),
+        "probe_cells_filtered": (
+            S._probe_cells(fqueries, cents, 3),
+            _ref_probe_cells(fqueries, cents, 3),
+        ),
+        "assign_cells": (S._assign_cells(vecs, cents), _ref_assign_cells(vecs, cents)),
+        "ivf_probe": (S._ivf_probe(emb, cents, 3, 5), _ref_ivf_probe(emb, cents, 3, 5)),
+        "ivf_probe_filtered": (
+            S._ivf_probe(emb, cents, 3, 5, queries=fqueries),
+            _ref_ivf_probe(emb, cents, 3, 5, queries=fqueries),
+        ),
+        "ivf_fit_stats": (S._ivf_fit_stats(vecs), _ref_ivf_fit_stats(vecs)),
+        "ivf_fit": (S.ivf_fit_cells(emb, 8), _ref_ivf_fit(emb, 8, S.IVF_ITERS)),
+        "subspace_slices": (
+            S._subspace_slices(units, "u"),
+            _ref_subspace_slices(units, "u"),
+        ),
+        "subspace_slices_extra": (
+            S._subspace_slices(celled, "u", extra=("cell",)),
+            _ref_subspace_slices(celled, "u", extra=("cell",)),
+        ),
+        "lsh_probe_queries": (
+            S._lsh_probe_queries(bucketed, 6, True),
+            _ref_lsh_probe_queries(bucketed, 6),
+        ),
+    }
+    assert_same_tree(spark, cases)
 
 
 def test_sql_text_builders_keep_the_column_api_tree(spark):
@@ -1439,42 +1635,7 @@ def test_sql_text_builders_keep_the_column_api_tree(spark):
             ),
         ),
     }
-    # plan strings elide long field lists unless this bound covers them
-    spark.conf.set("spark.sql.debug.maxToStringFields", "100000")
-    try:
-        for name, (got, want) in cases.items():
-            plan = _normalized_plan(got)
-            assert "more fields" not in plan, name
-            assert plan == _normalized_plan(want), name
-            key = got.columns[0]
-            assert got.orderBy(key).collect() == want.orderBy(key).collect(), name
-    finally:
-        spark.conf.unset("spark.sql.debug.maxToStringFields")
-
-
-def _py4j_calls(build) -> int:
-    """Python→JVM round trips (py4j ``send_command`` calls) made by
-    ``build()`` on the calling thread. py4j's finalizer thread releases
-    garbage-collected Java references through the same method whenever
-    Python's collector runs; those calls are not ``build()``'s."""
-    import threading
-
-    from py4j.clientserver import ClientServerConnection
-
-    calls = [0]
-    real = ClientServerConnection.send_command
-    me = threading.get_ident()
-
-    def counting(self, command):
-        calls[0] += threading.get_ident() == me
-        return real(self, command)
-
-    ClientServerConnection.send_command = counting
-    try:
-        build()
-    finally:
-        ClientServerConnection.send_command = real
-    return calls[0]
+    assert_same_tree(spark, cases)
 
 
 def test_vector_builders_cost_one_expression_of_round_trips(spark):
@@ -1487,10 +1648,23 @@ def test_vector_builders_cost_one_expression_of_round_trips(spark):
         dot,
     )
 
-    one_expr = _py4j_calls(lambda: F.expr("a + b"))
+    one_expr = py4j_calls(lambda: F.expr("a + b"))
     assert one_expr > 0
-    assert _py4j_calls(lambda: _quantized_mean("embedding", 8, 10**9)) == one_expr
-    assert _py4j_calls(lambda: _quantized_mean("embedding", 64, 10**9)) == one_expr
-    assert _py4j_calls(lambda: dot("a", "b")) == one_expr
+    assert py4j_calls(lambda: _quantized_mean("embedding", 8, 10**9)) == one_expr
+    assert py4j_calls(lambda: _quantized_mean("embedding", 64, 10**9)) == one_expr
+    assert py4j_calls(lambda: dot("a", "b")) == one_expr
     for width in (8, 64):
-        assert _py4j_calls(lambda: dot("a", _double_array_sql([0.5] * width))) == one_expr
+        assert py4j_calls(lambda: dot("a", _double_array_sql([0.5] * width))) == one_expr
+
+
+def test_probe_builder_stays_within_its_round_trip_budget(spark):
+    """``_probe_cells`` is rebuilt by every ANN construction, cold or
+    warm. Written as SQL text it makes about 45 py4j round trips (its
+    Column-API form made about 180); 60 leaves room for call-site
+    capture, not for a Column-API step."""
+    from aws_saas_etl_spark.operators.similarity import _probe_cells, _query_vectors
+
+    emb = load_tables(spark, SF_SMOKE).embeddings
+    queries = _query_vectors(emb)
+    cents = _ivf_test_centroids(emb)
+    assert py4j_calls(lambda: _probe_cells(queries, cents, 3)) <= 60
