@@ -39,17 +39,6 @@ TABLES = (
     "embeddings",
 )
 
-# Dimension tables with FIXED cardinality (5 regions, 25 nations at any
-# scale factor) — the only tables safe to force-broadcast. `supplier` and
-# `part` GROW with scale factor (sf100 ⇒ 20M+ parts): hinting them would
-# override Spark's size threshold and OOM the driver at cluster scale, so
-# their joins carry no hint — the planner broadcasts them only while their
-# file-size stats fit `spark.sql.autoBroadcastJoinThreshold`, and AQE can
-# still convert to broadcast at runtime from actual shuffle sizes.
-BROADCAST_DIMS = frozenset({"region", "nation"})
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")

@@ -608,11 +608,7 @@ def training_manifest(spark, sf_dir: str) -> DataFrame:
     groups) and per-(split, shard) position (uniform by hash
     construction) — and nothing corpus×corpus.
     """
-    return (
-        _full_manifest(spark, sf_dir)
-        .select("doc_id", "split", "shard", "pos", "n_tokens")
-        .orderBy("split", "shard", "pos")
-    )
+    return _served(_full_manifest(spark, sf_dir))
 
 
 #: Session-scoped memo of manifest frames, one slot per artifact name
@@ -625,9 +621,43 @@ def training_manifest(spark, sf_dir: str) -> DataFrame:
 #: r13 #5): a new gate ships by writing its verdict table once, and
 #: every manifest version (solo gate, full pipeline, gateset v2, version
 #: diff) composes the stored sets instead of re-running the gate
-#: subtree. The registered solo gate queries stay pure.
+#: subtree. The registered solo gate queries stay pure. Each key is
+#: built at exactly one call site (an AST test pins it).
 #: tools/scale_probe.py clears this cache per rep.
 _MANIFEST_CACHE = MemoDict("manifest")
+
+#: Column order of the (split, shard)-partitioned manifest stores.
+MANIFEST_COLS = ["doc_id", "n_tokens", "split", "shard", "pos"]
+#: The served manifest row, and the span-cleaned versions' row with the
+#: span rewrite's token accounting.
+_SERVED_COLS = ("doc_id", "split", "shard", "pos", "n_tokens")
+_SPAN_COLS = (*_SERVED_COLS, "kept_tokens", "removed_tokens")
+
+
+def _served(man: DataFrame, cols=_SERVED_COLS) -> DataFrame:
+    """A manifest frame in its served shape: ``cols`` in (split, shard,
+    pos) order, the order loaders stream it in."""
+    return man.select(*cols).orderBy("split", "shard", "pos")
+
+
+def _write_partitioned(
+    df: DataFrame, path: str, mode: str = "overwrite", **options
+) -> None:
+    """Write manifest rows (``MANIFEST_COLS``) to a parquet store
+    partitioned by (split, shard)."""
+    df.select(*MANIFEST_COLS).write.partitionBy("split", "shard").options(
+        **options
+    ).mode(mode).parquet(path)
+
+
+def _compact_and_read_back(spark, src: str, dst: str) -> DataFrame:
+    """Rewrite the partitioned manifest store ``src`` to ONE file per
+    partition at ``dst`` (``sources.io.compact_parquet``) and read the
+    compacted store back."""
+    from aws_saas_etl_spark.sources.io import compact_parquet
+
+    compact_parquet(spark, src, dst, partition_cols=["split", "shard"])
+    return _read_partitioned_manifest(spark, dst)
 
 
 def _full_manifest(spark, sf_dir: str) -> DataFrame:
@@ -652,8 +682,11 @@ def _doc_feats(docs: DataFrame) -> DataFrame:
     )
 
 
-def _keeper_rank() -> Window:
-    return Window.partitionBy("ckey").orderBy(F.desc("n_chars"), F.asc("doc_id"))
+def _elect_keepers(pool: DataFrame) -> DataFrame:
+    """Keep-best within each cluster key (``ckey``): the longest member
+    by n_chars, ties to the min doc_id."""
+    w = Window.partitionBy("ckey").orderBy(F.desc("n_chars"), F.asc("doc_id"))
+    return pool.withColumn("rn", F.row_number().over(w)).where(F.col("rn") == 1)
 
 
 def _shard_cols(df: DataFrame) -> DataFrame:
@@ -687,10 +720,9 @@ def _manifest_frame(docs: DataFrame, keep: DataFrame, comp: DataFrame) -> DataFr
         .join(comp.select(F.col("node").alias("doc_id"), "comp"), "doc_id", "left")
         .withColumn("ckey", F.coalesce(F.col("comp"), F.col("doc_id")))
     )
-    kept = members.withColumn("rn", F.row_number().over(_keeper_rank())).where(
-        F.col("rn") == 1
+    return _shard_cols(_elect_keepers(members)).withColumn(
+        "pos", F.row_number().over(_pos_window())
     )
-    return _shard_cols(kept).withColumn("pos", F.row_number().over(_pos_window()))
 
 
 # Right-to-be-forgotten deletion set: every 7th doc_id — a deterministic
@@ -957,15 +989,8 @@ def training_manifest_decontaminated(spark, sf_dir: str) -> DataFrame:
     at 100 TB only shards that lost a row rewrite, exactly the
     deletion-repair property.
     """
-    man = _full_manifest(spark, sf_dir)
-    contam = _MANIFEST_CACHE.get_or_build(
-        spark, sf_dir, "contam_ids",
-        build=lambda: _contam_train_ids(spark, sf_dir, man),
-    )
-    return (
-        _close_ranks(man.join(contam, "doc_id", "anti"))
-        .select("doc_id", "split", "shard", "pos", "n_tokens")
-        .orderBy("split", "shard", "pos")
+    return _served(
+        _close_ranks(_full_manifest(spark, sf_dir), _contam_train_ids(spark, sf_dir))
     )
 
 
@@ -993,56 +1018,69 @@ def _repetition_verdicts_cached(spark, sf_dir: str) -> DataFrame:
     )
 
 
-def _close_ranks(man: DataFrame) -> DataFrame:
-    """Re-rank ``pos`` by the STORED pos within each (split, shard) —
-    the shared tail of every manifest removal gate. Removal preserves
-    relative order, so ranks simply close up; at 100 TB only shards
-    that lost a row rewrite (the deletion-repair property). Closing
-    ranks after EACH gate or ONCE after all gates is provably the same
-    map (row_number over a stored-pos order is order-preserving), which
-    is why the full-pipeline composition can close once at the end —
-    tests/test_functions.py pins that identity."""
+def _close_ranks(
+    man: DataFrame, *removals: DataFrame, span: DataFrame | None = None
+) -> DataFrame:
+    """The shared tail of every manifest gate: drop each removal set's
+    doc_ids, join the span rewrite's token accounting ``span`` (when
+    given) and drop the docs it empties, then re-rank ``pos`` by the
+    STORED pos within each (split, shard). Removal preserves relative
+    order, so ranks simply close up; at 100 TB only shards that lost a
+    row rewrite (the deletion-repair property). Closing ranks after EACH
+    gate or ONCE after all gates is provably the same map (row_number
+    over a stored-pos order is order-preserving), which is why the
+    full-pipeline composition closes once at the end and gate set v2
+    closes once more over the stored v1 — tests/test_functions.py pins
+    both identities."""
+    for ids in removals:
+        man = man.join(ids, "doc_id", "anti")
+    if span is not None:
+        man = man.join(span, "doc_id").where(F.col("kept_tokens") > 0)
     w = Window.partitionBy("split", "shard").orderBy("pos")
     return man.withColumn("pos", F.row_number().over(w))
 
 
-def _contam_train_ids(spark, sf_dir: str, man: DataFrame) -> DataFrame:
-    """The decontamination gate's removal set: train-split doc_ids
-    sharing ≥ CONTAM_MIN_SHARED rare winnowing fingerprints with any
-    val/test document. Split membership comes from the (gate-invariant)
-    split column of the manifest frame passed in, so the set is the
-    same whether computed against the base manifest or any gated
-    descendant — the property the full-pipeline composition relies on."""
+def _contam_train_ids(spark, sf_dir: str) -> DataFrame:
+    """The decontamination gate's stored removal set (``"contam_ids"``):
+    train-split doc_ids sharing ≥ CONTAM_MIN_SHARED rare winnowing
+    fingerprints with any val/test document. Split membership comes
+    from the (gate-invariant) split column of the base manifest, so the
+    set is the same against the base manifest or any gated descendant —
+    the property the full-pipeline composition relies on."""
     from aws_saas_etl_spark.operators.textops import (
         CONTAM_MAX_DF,
         CONTAM_MIN_SHARED,
         winnow_fingerprint_sets,
     )
 
-    docs = ensure_parallelism(load_tables(spark, sf_dir).documents).na.drop("any")
-    ex = winnow_fingerprint_sets(docs).select("doc_id", F.explode("fps").alias("fp"))
-    rare = ex.join(
-        ex.groupBy("fp")
-        .agg(F.count(F.lit(1)).alias("fp_df"))
-        .where(F.col("fp_df") <= CONTAM_MAX_DF)
-        .select("fp"),
-        "fp",
-    )
-    tr = rare.join(
-        man.where(F.col("split") == "train").select("doc_id"), "doc_id"
-    ).select(F.col("doc_id").alias("train_id"), "fp")
-    ev = rare.join(
-        man.where(F.col("split") != "train").select("doc_id"), "doc_id"
-    ).select(F.col("doc_id").alias("eval_id"), "fp")
-    return (
-        tr.join(ev, "fp")
-        .where(F.col("train_id") != F.col("eval_id"))
-        .groupBy("train_id", "eval_id")
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-        .where(F.col("n_shared") >= CONTAM_MIN_SHARED)
-        .select(F.col("train_id").alias("doc_id"))
-        .distinct()
-    )
+    def build() -> DataFrame:
+        man = _full_manifest(spark, sf_dir)
+        docs = ensure_parallelism(load_tables(spark, sf_dir).documents).na.drop("any")
+        ex = winnow_fingerprint_sets(docs).select("doc_id", F.explode("fps").alias("fp"))
+        rare = ex.join(
+            ex.groupBy("fp")
+            .agg(F.count(F.lit(1)).alias("fp_df"))
+            .where(F.col("fp_df") <= CONTAM_MAX_DF)
+            .select("fp"),
+            "fp",
+        )
+        tr = rare.join(
+            man.where(F.col("split") == "train").select("doc_id"), "doc_id"
+        ).select(F.col("doc_id").alias("train_id"), "fp")
+        ev = rare.join(
+            man.where(F.col("split") != "train").select("doc_id"), "doc_id"
+        ).select(F.col("doc_id").alias("eval_id"), "fp")
+        return (
+            tr.join(ev, "fp")
+            .where(F.col("train_id") != F.col("eval_id"))
+            .groupBy("train_id", "eval_id")
+            .agg(F.count(F.lit(1)).alias("n_shared"))
+            .where(F.col("n_shared") >= CONTAM_MIN_SHARED)
+            .select(F.col("train_id").alias("doc_id"))
+            .distinct()
+        )
+
+    return _MANIFEST_CACHE.get_or_build(spark, sf_dir, "contam_ids", build=build)
 
 
 def _stored_base_verdicts(spark, sf_dir: str):
@@ -1052,26 +1090,16 @@ def _stored_base_verdicts(spark, sf_dir: str):
     storage: they are what makes delta verdict repair a signals-join
     instead of a corpus re-scan.
 
-    The base/delta cut is the SAME shingle-table percentile
-    ``_tag_arrivals`` uses (NOT a per-doc percentile: the shingle table
-    weights docs by shingle count, and the oracle twin encodes exactly
-    that cut), so every consumer agrees on the split.
+    The base slice is every doc_id at or below ``dedup.delta_doc_cut``,
+    the one base/delta cut ``_tag_arrivals`` also compares against, so
+    every consumer agrees on the split.
     """
-    from aws_saas_etl_spark.operators.dedup import (
-        DELTA_DOC_FRACTION,
-        _shingle_table,
-    )
+    from aws_saas_etl_spark.operators.dedup import delta_doc_cut
     from aws_saas_etl_spark.operators.textops import verdicts_from_signals
 
     def sig_base() -> DataFrame:
-        cutoff = _shingle_table(spark, sf_dir).agg(
-            F.percentile("doc_id", 1.0 - DELTA_DOC_FRACTION).alias("cut")
-        )
-        return (
-            _stored_signals(spark, sf_dir)
-            .crossJoin(F.broadcast(cutoff))
-            .where(F.col("doc_id") <= F.col("cut"))
-            .drop("cut")
+        return _stored_signals(spark, sf_dir).where(
+            F.col("doc_id") <= F.lit(delta_doc_cut(spark, sf_dir))
         )
 
     keep_base = _MANIFEST_CACHE.get_or_build(
@@ -1087,19 +1115,17 @@ def _stored_base_verdicts(spark, sf_dir: str):
     return keep_base, sha_idx
 
 
-def _stored_base_manifest(spark, sf_dir: str, cut=None) -> DataFrame:
+def _stored_base_manifest(spark, sf_dir: str) -> DataFrame:
     """The stored PRE-MERGE manifest frame (internal columns retained),
     memoized per session under the 'base' key — the artifact both the
     incremental merge and the stream→compaction handoff treat as their
-    stored state. ``cut`` (the shared shingle-percentile base/delta
-    boundary) is fetched here if the caller hasn't already."""
+    stored state: the manifest over the doc_ids at or below
+    ``dedup.delta_doc_cut``."""
     from aws_saas_etl_spark.operators.dedup import _base_assignment, delta_doc_cut
 
     def build() -> DataFrame:
-        # session-cached boundary scalar (r14 — see dedup.delta_doc_cut)
-        base_cut = delta_doc_cut(spark, sf_dir) if cut is None else cut
         docs = ensure_parallelism(load_tables(spark, sf_dir).documents).na.drop("any")
-        docs_base = docs.where(F.col("doc_id") <= F.lit(base_cut))
+        docs_base = docs.where(F.col("doc_id") <= F.lit(delta_doc_cut(spark, sf_dir)))
         base_labels = _base_assignment(spark, sf_dir)
         keep_base, _ = _stored_base_verdicts(spark, sf_dir)
         return _manifest_frame(docs_base, keep_base, base_labels)
@@ -1107,13 +1133,23 @@ def _stored_base_manifest(spark, sf_dir: str, cut=None) -> DataFrame:
     return _MANIFEST_CACHE.get_or_build(spark, sf_dir, "base", build=build)
 
 
-def _rerank_touched(stored: DataFrame, new_rows: DataFrame, scope: DataFrame):
-    """The shared tail of the arrival and deletion repairs: stored rows
-    whose ``doc_id`` is in ``scope`` are replaced by ``new_rows``, and
-    ``pos`` re-ranks only in the (split, shard) groups that gained or
-    lost a row. Returns ``(re_ranked, kept_pos, touched)``: the touched
-    shards' re-ranked rows, the untouched shards' rows with their stored
-    pos, and the touched (split, shard) set."""
+def _rerank_touched(stored: DataFrame, pool: DataFrame, scope: DataFrame):
+    """The shared repair tail of the arrival merge and the deletion
+    repair: keepers re-elect over ``pool`` (the keep-best candidates of
+    the repaired scope, keyed by ``ckey``), stored rows whose ``doc_id``
+    is in ``scope`` are replaced by the elected rows, and ``pos``
+    re-ranks only in the (split, shard) groups that gained or lost a
+    row. Returns ``(re_ranked, kept_pos, touched)``: the touched shards'
+    re-ranked rows, the untouched shards' rows with their stored pos,
+    and the touched (split, shard) set."""
+    # the elected rows: consumed twice (the touched-shard set and the
+    # combined row set) — materialized once so the repair chain under
+    # the pool runs a single time; affected-set-sized
+    new_rows = (
+        _shard_cols(_elect_keepers(pool))
+        .select("doc_id", "ckey", "n_tokens", "split", "shuffle_key", "shard")
+        .localCheckpoint()
+    )
     untouched_stored = stored.join(scope, "doc_id", "anti")
     removed = stored.join(scope, "doc_id", "semi")
     touched = (
@@ -1159,19 +1195,14 @@ def _incremental_merge_parts(spark, sf_dir: str, keep_delta: DataFrame | None = 
         _merge_delta_into_labels,
         _shingle_table,
         _tag_arrivals,
-        DELTA_DOC_FRACTION,
+        delta_doc_cut,
     )
     from aws_saas_etl_spark.operators.textops import gate_verdict
 
     sh = _shingle_table(spark, sf_dir)
-    tagged = _tag_arrivals(sh)
-    # the shingle-percentile cut, fetched ONCE as a scalar: the lazy
-    # broadcast(cutoff) form re-executed the percentile agg per consumer
-    # (docs split ×2, signal split ×1 — three passes over the shingle
-    # table for one number; a double roundtrips F.lit exactly). r14:
-    # session-cached across constructions too (dedup.delta_doc_cut)
-    from aws_saas_etl_spark.operators.dedup import delta_doc_cut
-
+    tagged = _tag_arrivals(spark, sf_dir)
+    # the session's one base/delta cut, a double: F.lit roundtrips it
+    # exactly, so every split below is the comparison the oracle makes
     cut = delta_doc_cut(spark, sf_dir)
     docs = ensure_parallelism(load_tables(spark, sf_dir).documents).na.drop("any")
     docs_delta = docs.where(F.col("doc_id") > F.lit(cut))
@@ -1179,7 +1210,7 @@ def _incremental_merge_parts(spark, sf_dir: str, keep_delta: DataFrame | None = 
     # --- stored state (in production: read back from the manifest sink)
     base_labels = _base_assignment(spark, sf_dir)
     keep_base, sha_idx = _stored_base_verdicts(spark, sf_dir)
-    stored = _stored_base_manifest(spark, sf_dir, cut)
+    stored = _stored_base_manifest(spark, sf_dir)
 
     if keep_delta is None:
         # --- delta verdicts: keeper = min(stored index, delta-internal min)
@@ -1229,21 +1260,9 @@ def _incremental_merge_parts(spark, sf_dir: str, keep_delta: DataFrame | None = 
             | (F.col("is_delta").isNotNull() & F.col("comp").isNull())
         )
     )
-    re_elected = (
-        pool.withColumn("rn", F.row_number().over(_keeper_rank()))
-        .where(F.col("rn") == 1)
-    )
-    # the re-elected rows: consumed twice (the touched-shard set and the
-    # combined row set) — materialized once so the survivor-pool joins +
-    # keeper window run a single time; affected-set-sized
-    new_rows = (
-        _shard_cols(re_elected)
-        .select("doc_id", "ckey", "n_tokens", "split", "shuffle_key", "shard")
-        .localCheckpoint()
-    )
 
     # --- re-rank only touched shards; reuse stored pos elsewhere
-    re_ranked, kept_pos, touched = _rerank_touched(stored, new_rows, aff_nodes)
+    re_ranked, kept_pos, touched = _rerank_touched(stored, pool, aff_nodes)
     return stored, re_ranked, kept_pos, touched
 
 
@@ -1278,14 +1297,7 @@ def training_manifest_incremental(spark, sf_dir: str) -> DataFrame:
       claim with a dynamic-partition-overwrite store).
     """
     _, re_ranked, kept_pos, _ = _incremental_merge_parts(spark, sf_dir)
-    return (
-        re_ranked.unionByName(kept_pos)
-        .select("doc_id", "split", "shard", "pos", "n_tokens")
-        .orderBy("split", "shard", "pos")
-    )
-
-
-MANIFEST_COLS = ["doc_id", "n_tokens", "split", "shard", "pos"]
+    return _served(re_ranked.unionByName(kept_pos))
 
 
 def _read_partitioned_manifest(spark, path: str) -> DataFrame:
@@ -1333,9 +1345,7 @@ def _overwrite_touched_partitions(re_ranked, touched, path: str) -> None:
     emptied-key anti-join see ONE evaluation of the merge plan.
     """
     re_ranked = re_ranked.localCheckpoint(eager=True)
-    re_ranked.select(*MANIFEST_COLS).write.partitionBy("split", "shard").option(
-        "partitionOverwriteMode", "dynamic"
-    ).mode("overwrite").parquet(path)
+    _write_partitioned(re_ranked, path, partitionOverwriteMode="dynamic")
     emptied = touched.join(
         re_ranked.select("split", "shard").distinct(), ["split", "shard"], "anti"
     ).collect()
@@ -1392,9 +1402,7 @@ def manifest_partitioned_store_roundtrip(spark, sf_dir: str) -> DataFrame:
 
     stored, re_ranked, _, touched = _incremental_merge_parts(spark, sf_dir)
     path = proc_dir("manifest_part", os.path.abspath(sf_dir))
-    stored.select(*MANIFEST_COLS).write.partitionBy("split", "shard").mode(
-        "overwrite"
-    ).parquet(path)
+    _write_partitioned(stored, path)
     _overwrite_touched_partitions(re_ranked, touched, path)
     return _read_partitioned_manifest(spark, path)
 
@@ -1507,25 +1515,10 @@ def training_manifest_deletion_repair(spark, sf_dir: str) -> DataFrame:
         .join(sub_labels.select(F.col("node").alias("doc_id"), "comp"), "doc_id", "left")
         .withColumn("ckey", F.coalesce(F.col("comp"), F.col("doc_id")))
     )
-    re_elected = (
-        pool.withColumn("rn", F.row_number().over(_keeper_rank()))
-        .where(F.col("rn") == 1)
-    )
-    # consumed twice (touched-shard set + combined row set): materialized
-    # once so the sub-pair/CC repair chain runs a single time
-    new_rows = (
-        _shard_cols(re_elected)
-        .select("doc_id", "ckey", "n_tokens", "split", "shuffle_key", "shard")
-        .localCheckpoint()
-    )
 
-    # --- merge with stored rows; re-rank only touched shards
-    re_ranked, kept_pos, _ = _rerank_touched(stored, new_rows, scope_ids)
-    return (
-        re_ranked.unionByName(kept_pos)
-        .select("doc_id", "split", "shard", "pos", "n_tokens")
-        .orderBy("split", "shard", "pos")
-    )
+    # --- re-elect, merge with stored rows; re-rank only touched shards
+    re_ranked, kept_pos, _ = _rerank_touched(stored, pool, scope_ids)
+    return _served(re_ranked.unionByName(kept_pos))
 
 
 def manifest_store_compaction(spark, sf_dir: str) -> DataFrame:
@@ -1552,18 +1545,14 @@ def manifest_store_compaction(spark, sf_dir: str) -> DataFrame:
     """
     import os
 
-    from aws_saas_etl_spark.sources.io import compact_parquet
-
     repaired = training_manifest_deletion_repair(spark, sf_dir)
     src = proc_dir("manifest_churned", os.path.abspath(sf_dir))
     # the accreted state: per-task files inside each partition (the
     # round-robin repartition models successive maintenance writes)
-    repaired.repartition(4).write.partitionBy("split", "shard").mode(
-        "overwrite"
-    ).parquet(src)
-    dst = proc_dir("manifest_compacted", os.path.abspath(sf_dir))
-    compact_parquet(spark, src, dst, partition_cols=["split", "shard"])
-    return _read_partitioned_manifest(spark, dst)
+    _write_partitioned(repaired.repartition(4), src)
+    return _compact_and_read_back(
+        spark, src, proc_dir("manifest_compacted", os.path.abspath(sf_dir))
+    )
 
 
 # Constructing this query's DataFrame EXECUTES the fragmented store write
@@ -1615,7 +1604,6 @@ def manifest_stream_compaction_handoff(spark, sf_dir: str) -> DataFrame:
     """
     import os
 
-    from aws_saas_etl_spark.sources.io import compact_parquet
     from aws_saas_etl_spark.streaming.runners import _stream_manifest_delta_rows
 
     apath = os.path.abspath(sf_dir)
@@ -1625,12 +1613,10 @@ def manifest_stream_compaction_handoff(spark, sf_dir: str) -> DataFrame:
 
     # 2. accretion: base store + pos-less streamed appends
     src = proc_dir("manifest_stream_handoff", apath)
-    _stored_base_manifest(spark, sf_dir).select(
-        "doc_id", "n_tokens", F.col("pos").cast("int").alias("pos"), "split", "shard"
-    ).write.partitionBy("split", "shard").mode("overwrite").parquet(src)
-    appends.select(
-        "doc_id", "n_tokens", F.lit(None).cast("int").alias("pos"), "split", "shard"
-    ).write.partitionBy("split", "shard").mode("append").parquet(src)
+    _write_partitioned(_stored_base_manifest(spark, sf_dir), src)
+    _write_partitioned(
+        appends.withColumn("pos", F.lit(None).cast("int")), src, mode="append"
+    )
 
     # 3. nightly: read the store back; pos-less rows ARE the arrivals
     back = spark.read.parquet(src)
@@ -1638,17 +1624,14 @@ def manifest_stream_compaction_handoff(spark, sf_dir: str) -> DataFrame:
     _, re_ranked, kept_pos, _ = _incremental_merge_parts(
         spark, sf_dir, keep_delta=arrived
     )
-    merged = re_ranked.unionByName(kept_pos).select(
-        "doc_id", "n_tokens", "pos", "split", "shard"
-    )
 
     # 4. compaction: reconciled manifest → one file per partition → the
     # returned rows are the COMPACTED STORE's read-back
     mid = proc_dir("manifest_stream_handoff_merged", apath)
-    merged.write.partitionBy("split", "shard").mode("overwrite").parquet(mid)
-    dst = proc_dir("manifest_stream_handoff_compacted", apath)
-    compact_parquet(spark, mid, dst, partition_cols=["split", "shard"])
-    return _read_partitioned_manifest(spark, dst)
+    _write_partitioned(re_ranked.unionByName(kept_pos), mid)
+    return _compact_and_read_back(
+        spark, mid, proc_dir("manifest_stream_handoff_compacted", apath)
+    )
 
 
 # Constructing this query's DataFrame EXECUTES the stream drain, both
@@ -1979,62 +1962,61 @@ def training_manifest_quality_filtered(spark, sf_dir: str) -> DataFrame:
     reuse the stored-pos window — at 100 TB only shards that lost a row
     rewrite, the deletion-repair property.
     """
-    man = _full_manifest(spark, sf_dir)
-    low = _MANIFEST_CACHE.get_or_build(
-        spark, sf_dir, "quality_low_ids",
-        build=lambda: _quality_low_train_ids(spark, sf_dir, man),
-    )
-    return (
-        _close_ranks(man.join(low, "doc_id", "anti"))
-        .select("doc_id", "split", "shard", "pos", "n_tokens")
-        .orderBy("split", "shard", "pos")
+    return _served(
+        _close_ranks(_full_manifest(spark, sf_dir), _quality_low_train_ids(spark, sf_dir))
     )
 
 
-def _quality_low_train_ids(spark, sf_dir: str, man: DataFrame) -> DataFrame:
-    """The quality gate's removal set: train-split doc_ids at or below
-    the calibration-chosen score edge. The calibration (decile cuts,
-    rates, threshold) is computed over the FULL scored corpus —
-    independent of the manifest — and the train condition reads the
-    (gate-invariant) split column, so the set is identical against the
-    base manifest or any gated descendant."""
-    scored = doc_quality_logreg(spark, sf_dir).select("doc_id", "label", "score")
-    cuts = scored.agg(
-        F.percentile(
-            "score", F.array(*[F.lit(i / 10) for i in range(1, 10)])
-        ).alias("cuts")
-    )
-    dec = F.aggregate(
-        F.col("cuts"),
-        F.lit(0),
-        lambda acc, c: acc + F.when(F.col("score") > c, 1).otherwise(0),
-    )
-    bucketed = scored.crossJoin(F.broadcast(cuts)).select(
-        "doc_id", "label", "score", dec.alias("dec")
-    )
-    rates = bucketed.groupBy("dec").agg(
-        N.dround(F.sum("label").cast("double") / F.count(F.lit(1)), 6).alias(
-            "label_rate"
+def _quality_low_train_ids(spark, sf_dir: str) -> DataFrame:
+    """The quality gate's stored removal set (``"quality_low_ids"``):
+    train-split doc_ids at or below the calibration-chosen score edge.
+    The calibration (decile cuts, rates, threshold) is computed over the
+    FULL scored corpus — independent of the manifest — and the train
+    condition reads the (gate-invariant) split column of the base
+    manifest, so the set is identical against the base manifest or any
+    gated descendant."""
+
+    def build() -> DataFrame:
+        scored = doc_quality_logreg(spark, sf_dir).select("doc_id", "label", "score")
+        cuts = scored.agg(
+            F.percentile(
+                "score", F.array(*[F.lit(i / 10) for i in range(1, 10)])
+            ).alias("cuts")
         )
-    )
-    cutd = rates.where(
-        F.col("label_rate") >= F.lit(QUALITY_GATE_MIN_RATE)
-    ).agg(F.min("dec").alias("cut_dec"))
-    # lower edge of the chosen decile: dec(score) < cut_dec ⟺ score <=
-    # cuts[cut_dec] (cuts sorted ascending, strict-> membership), so one
-    # <= against the edge removes exactly the deciles below it; cut_dec
-    # NULL (no decile clears) or 0 (lowest already clears) gates nothing
-    thr = cutd.crossJoin(F.broadcast(cuts)).select(
-        F.when(
-            F.col("cut_dec") >= 1, F.element_at("cuts", F.col("cut_dec"))
-        ).alias("thr")
-    )
-    low = (
-        scored.crossJoin(F.broadcast(thr))
-        .where(F.col("score") <= F.col("thr"))
-        .select("doc_id")
-    )
-    return man.where(F.col("split") == "train").join(low, "doc_id").select("doc_id")
+        dec = F.aggregate(
+            F.col("cuts"),
+            F.lit(0),
+            lambda acc, c: acc + F.when(F.col("score") > c, 1).otherwise(0),
+        )
+        bucketed = scored.crossJoin(F.broadcast(cuts)).select(
+            "doc_id", "label", "score", dec.alias("dec")
+        )
+        rates = bucketed.groupBy("dec").agg(
+            N.dround(F.sum("label").cast("double") / F.count(F.lit(1)), 6).alias(
+                "label_rate"
+            )
+        )
+        cutd = rates.where(
+            F.col("label_rate") >= F.lit(QUALITY_GATE_MIN_RATE)
+        ).agg(F.min("dec").alias("cut_dec"))
+        # lower edge of the chosen decile: dec(score) < cut_dec ⟺ score <=
+        # cuts[cut_dec] (cuts sorted ascending, strict-> membership), so one
+        # <= against the edge removes exactly the deciles below it; cut_dec
+        # NULL (no decile clears) or 0 (lowest already clears) gates nothing
+        thr = cutd.crossJoin(F.broadcast(cuts)).select(
+            F.when(
+                F.col("cut_dec") >= 1, F.element_at("cuts", F.col("cut_dec"))
+            ).alias("thr")
+        )
+        low = (
+            scored.crossJoin(F.broadcast(thr))
+            .where(F.col("score") <= F.col("thr"))
+            .select("doc_id")
+        )
+        man = _full_manifest(spark, sf_dir)
+        return man.where(F.col("split") == "train").join(low, "doc_id").select("doc_id")
+
+    return _MANIFEST_CACHE.get_or_build(spark, sf_dir, "quality_low_ids", build=build)
 
 
 def training_manifest_span_cleaned(spark, sf_dir: str) -> DataFrame:
@@ -2061,20 +2043,11 @@ def training_manifest_span_cleaned(spark, sf_dir: str) -> DataFrame:
     noop), α 0.28 at 8× ≈ additive over the manifest chain (8.30 s,
     α 0.34) + the span rewrite (2.90 s, α 0.22) — see SCALE.md.
     """
-    man = _full_manifest(spark, sf_dir)
-    cleaned = _span_accounting_cached(spark, sf_dir)
-    return (
-        _close_ranks(man.join(cleaned, "doc_id").where(F.col("kept_tokens") > 0))
-        .select(
-            "doc_id",
-            "split",
-            "shard",
-            "pos",
-            "n_tokens",
-            "kept_tokens",
-            "removed_tokens",
-        )
-        .orderBy("split", "shard", "pos")
+    return _served(
+        _close_ranks(
+            _full_manifest(spark, sf_dir), span=_span_accounting_cached(spark, sf_dir)
+        ),
+        _SPAN_COLS,
     )
 
 
@@ -2198,53 +2171,39 @@ def _gateset_v1_frame(spark, sf_dir: str) -> DataFrame:
     frame per session. The gate sets it composes come from their own
     stored-set slots in ``_MANIFEST_CACHE``."""
 
-    def build() -> DataFrame:
-        man = _full_manifest(spark, sf_dir)
-        cleaned = _span_accounting_cached(spark, sf_dir)
-        contam = _MANIFEST_CACHE.get_or_build(
-            spark, sf_dir, "contam_ids",
-            build=lambda: _contam_train_ids(spark, sf_dir, man),
-        )
-        low = _MANIFEST_CACHE.get_or_build(
-            spark, sf_dir, "quality_low_ids",
-            build=lambda: _quality_low_train_ids(spark, sf_dir, man),
-        )
-        gated = (
-            man.join(contam, "doc_id", "anti")
-            .join(low, "doc_id", "anti")
-            .join(cleaned, "doc_id")
-            .where(F.col("kept_tokens") > 0)
-        )
-        return _close_ranks(gated).select(
-            "doc_id",
-            "split",
-            "shard",
-            "pos",
-            "n_tokens",
-            "kept_tokens",
-            "removed_tokens",
-        )
-
-    return _MANIFEST_CACHE.get_or_build(spark, sf_dir, "fullpipe_v1", build=build)
-
-
-def _repetition_fail_train_ids(spark, sf_dir: str, man: DataFrame) -> DataFrame:
-    """The v2 gate set's NEW removal set: train-split doc_ids whose
-    Gopher repetition verdict is not 'keep'. Like the decontamination
-    and quality sets, membership reads only gate-invariant inputs — the
-    repetition fractions are computed from ORIGINAL text (the same
-    gates-see-original convention the quality gate fixed in the full
-    pipeline) and the split column never changes across gates — so the
-    set is identical against the base manifest or any gated
-    descendant, which is what lets v2 compose it with the proven v1
-    gates in one pass."""
-    fail = (
-        _repetition_verdicts_cached(spark, sf_dir)
-        .where(F.col("verdict") != "keep")
-        .select("doc_id")
+    return _MANIFEST_CACHE.get_or_build(
+        spark, sf_dir, "fullpipe_v1",
+        build=lambda: _close_ranks(
+            _full_manifest(spark, sf_dir),
+            _contam_train_ids(spark, sf_dir),
+            _quality_low_train_ids(spark, sf_dir),
+            span=_span_accounting_cached(spark, sf_dir),
+        ).select(*_SPAN_COLS),
     )
-    return (
-        man.where(F.col("split") == "train").select("doc_id").join(fail, "doc_id")
+
+
+def _repetition_fail_train_ids(spark, sf_dir: str) -> DataFrame:
+    """The v2 gate set's NEW stored removal set (``"repetition_fail_ids"``):
+    train-split doc_ids whose Gopher repetition verdict is not 'keep'.
+    Like the decontamination and quality sets, membership reads only
+    gate-invariant inputs — the repetition fractions are computed from
+    ORIGINAL text (the same gates-see-original convention the quality
+    gate fixed in the full pipeline) and the split column never changes
+    across gates — so the set is identical against the base manifest or
+    any gated descendant, which is what lets v2 remove it from the
+    stored v1 manifest."""
+
+    def build() -> DataFrame:
+        fail = (
+            _repetition_verdicts_cached(spark, sf_dir)
+            .where(F.col("verdict") != "keep")
+            .select("doc_id")
+        )
+        man = _full_manifest(spark, sf_dir)
+        return man.where(F.col("split") == "train").select("doc_id").join(fail, "doc_id")
+
+    return _MANIFEST_CACHE.get_or_build(
+        spark, sf_dir, "repetition_fail_ids", build=build
     )
 
 
@@ -2260,53 +2219,25 @@ def training_manifest_gatesetv2(spark, sf_dir: str) -> DataFrame:
     This is the most common real event in a curation pipeline's life —
     a new gate ships — done the way production does it: as a NEW
     manifest version beside the old one. v1 stays registered, untouched
-    and hash-green; v2 composes the new removal set through the same
-    anti-join + close-ranks-once tail, so the proven v1 artifacts shift
-    by exactly the new gate's removals and nothing else.
-    tests/test_functions.py pins that identity: v2's removed set vs v1
-    IS v1's train-split survivors failing the repetition gate, and v2
-    ≡ the repetition gate applied sequentially to v1's output (ranks
-    re-closing once more — the ``_close_ranks`` idempotence the full
-    pipeline already proved).
+    and hash-green; v2 IS the stored v1 manifest (``_gateset_v1_frame``)
+    minus the new removal set, through the same anti-join + close-ranks
+    tail, so the proven v1 artifacts shift by exactly the new gate's
+    removals and nothing else. tests/test_functions.py pins that
+    identity: v2's removed set vs v1 IS v1's train-split survivors
+    failing the repetition gate, and v2 ≡ the repetition gate applied
+    sequentially to v1's output (ranks re-closing once more — the
+    ``_close_ranks`` idempotence the full pipeline already proved).
 
-    Scale shape: v1's plan plus ONE more corpus-linear gate family
-    (``doc_gopher_repetition``'s three word-count chains, measured 3.4 s
-    / α 0.04 solo at sf0.1 in r12) and one more broadcast-sized
-    anti-join; the rank close still runs once.
+    Scale shape: the stored v1 frame plus ONE more corpus-linear gate
+    family (``doc_gopher_repetition``'s three word-count chains,
+    measured 3.4 s / α 0.04 solo at sf0.1 in r12), one broadcast-sized
+    anti-join and one more rank close over v1's rows.
     """
-    man = _full_manifest(spark, sf_dir)
-    cleaned = _span_accounting_cached(spark, sf_dir)
-    contam = _MANIFEST_CACHE.get_or_build(
-        spark, sf_dir, "contam_ids",
-        build=lambda: _contam_train_ids(spark, sf_dir, man),
-    )
-    low = _MANIFEST_CACHE.get_or_build(
-        spark, sf_dir, "quality_low_ids",
-        build=lambda: _quality_low_train_ids(spark, sf_dir, man),
-    )
-    rep_fail = _MANIFEST_CACHE.get_or_build(
-        spark, sf_dir, "repetition_fail_ids",
-        build=lambda: _repetition_fail_train_ids(spark, sf_dir, man),
-    )
-    gated = (
-        man.join(contam, "doc_id", "anti")
-        .join(low, "doc_id", "anti")
-        .join(rep_fail, "doc_id", "anti")
-        .join(cleaned, "doc_id")
-        .where(F.col("kept_tokens") > 0)
-    )
-    return (
-        _close_ranks(gated)
-        .select(
-            "doc_id",
-            "split",
-            "shard",
-            "pos",
-            "n_tokens",
-            "kept_tokens",
-            "removed_tokens",
-        )
-        .orderBy("split", "shard", "pos")
+    return _served(
+        _close_ranks(
+            _gateset_v1_frame(spark, sf_dir), _repetition_fail_train_ids(spark, sf_dir)
+        ),
+        _SPAN_COLS,
     )
 
 

@@ -58,15 +58,6 @@ JOB_EVENT_SCHEMA = StructType(
     ]
 )
 
-USER_SCHEMA = StructType(
-    [
-        StructField("id", LongType(), False),
-        StructField("username", StringType(), False),
-        StructField("password_hash", StringType(), False),
-        StructField("created_at", TimestampType(), False),
-    ]
-)
-
 
 class JobStore:
     """Append-only job-event log at ``path`` with a latest-wins view."""

@@ -33,16 +33,6 @@ from pyspark.sql.types import (
 
 from aws_saas_etl_spark.catalog import ensure_parallelism, load_tables
 
-# Typed metadata carried beside every payload (the "columns" a catalog
-# would index without touching bytes).
-MEDIA_META_SCHEMA = StructType(
-    [
-        StructField("media_type", StringType(), True),  # image|audio|video
-        StructField("format", StringType(), True),
-        StructField("n_bytes", LongType(), True),
-    ]
-)
-
 FEATURE_SCHEMA = StructType(
     [
         StructField("doc_id", LongType(), True),

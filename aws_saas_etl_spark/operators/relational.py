@@ -41,6 +41,14 @@ from aws_saas_etl_spark.functions.num import (
 # differential comparison against other engines is ulp-stable.
 MONEY = 2
 
+# Broadcast hints: only `region` and `nation` (5 and 25 rows at every scale
+# factor) carry `F.broadcast`. `supplier` and `part` grow with scale factor
+# (sf100 ⇒ 20M+ parts): a hint would override Spark's size threshold and OOM
+# the driver at cluster scale, so their joins carry none — the planner
+# broadcasts them only while their file-size stats fit
+# `spark.sql.autoBroadcastJoinThreshold`, and AQE can still convert to
+# broadcast at runtime from actual shuffle sizes.
+
 
 def pricing_summary(spark, sf_dir: str) -> DataFrame:
     """TPC-H Q1-shaped pricing summary (flagship query).

@@ -823,14 +823,6 @@ def ann_ivf_store_roundtrip(spark, sf_dir: str) -> DataFrame:
 ann_ivf_store_roundtrip.side_effecting = True
 
 
-#: Fraction of the vector corpus treated as the "arriving" batch in the
-#: stale-index serving demonstration — same append-only convention as
-#: ``dedup.DELTA_DOC_FRACTION`` (high ids arrive last), but cut by exact
-#: integer rank (the largest ``n − n//10`` ids form the base), so both
-#: engines agree on the split without any float percentile.
-IVF_DELTA_FRACTION = 0.1
-
-
 def ann_ivf_incremental_append(spark, sf_dir: str, k: int = TOP_K) -> DataFrame:
     """STALE-INDEX serving — the intra-day half of the production ANN
     cycle (``ann_ivf_store_roundtrip`` is the nightly half): the IVF

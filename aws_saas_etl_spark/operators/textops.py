@@ -431,9 +431,6 @@ def doc_sequence_packing(spark, sf_dir: str) -> DataFrame:
     )
 
 
-LENGTH_HIST_BUCKETS = 8  # power-of-2 token-length buckets: [1,2), [2,4), ...
-
-
 def doc_length_histogram(spark, sf_dir: str) -> DataFrame:
     """Corpus token-length histogram in power-of-2 buckets — the length
     profile a context-length / curriculum decision reads. Map-side bucket

@@ -99,6 +99,18 @@ def _stream(spark: SparkSession, sf_dir: str, max_files_per_trigger: int = 10) -
     )
 
 
+def _staged_stream(spark: SparkSession, path: str) -> DataFrame:
+    """A file stream over a staged parquet dir, one file per micro-batch.
+    The schema comes from the staged files' own footers: a hardcoded DDL
+    would desync from a regenerated fixture (e.g. double embeddings) on
+    the streaming rung alone."""
+    return (
+        spark.readStream.schema(parquet_schema(spark, path))
+        .option("maxFilesPerTrigger", 1)
+        .parquet(path)
+    )
+
+
 def stream_hourly_stats(spark, sf_dir: str) -> DataFrame:
     """Watermarked tumbling-window aggregate, drained availableNow
     (streaming twin of ``events_hourly_stats``).
@@ -490,11 +502,7 @@ def stream_sq8_code_ingest(spark, sf_dir: str) -> DataFrame:
     from aws_saas_etl_spark.operators.similarity import _sq8_codes
 
     path = _staged_table_dir(spark, sf_dir, "embeddings")
-    stream = (
-        spark.readStream.schema(parquet_schema(spark, path))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path)
-    )
+    stream = _staged_stream(spark, path)
     c8 = _sq8_codes("embedding")
     code_sum = F.aggregate(
         c8, F.lit(0).cast("long"), lambda acc, v: acc + v
@@ -536,14 +544,7 @@ def stream_bq_signature_ingest(spark, sf_dir: str) -> DataFrame:
     from aws_saas_etl_spark.operators.similarity import _bq_sig_exprs
 
     path = _staged_table_dir(spark, sf_dir, "embeddings")
-    # Schema comes from the staged batch frame's parquet footers (ADVICE
-    # r9) — a hardcoded DDL would desync from a regenerated fixture (e.g.
-    # double embeddings) on the streaming rung alone.
-    stream = (
-        spark.readStream.schema(parquet_schema(spark, path))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path)
-    )
+    stream = _staged_stream(spark, path)
     sig_lo, sig_hi = _bq_sig_exprs("embedding")
     drained = _drain(stream.select("vec_id", "label", sig_lo, sig_hi), "append")
     return (
@@ -587,11 +588,7 @@ def stream_logreg_score_ingest(spark, sf_dir: str) -> DataFrame:
     w = {j: f"({float(wrow[f'w{j}'])!r}D)" for j in (1, 2, 3, 4)}
 
     path = _staged_table_dir(spark, sf_dir, "documents")
-    stream = (
-        spark.readStream.schema(parquet_schema(spark, path))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path)
-    )
+    stream = _staged_stream(spark, path)
     p = _logreg_p_sql(w)
     scored = (
         stream.where(_LOGREG_ROWS)
@@ -720,11 +717,7 @@ def stream_minhash_signature_ingest(spark, sf_dir: str) -> DataFrame:
         )
 
     path = _staged_table_dir(spark, sf_dir, "documents")
-    stream = (
-        spark.readStream.schema(parquet_schema(spark, path))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path)
-    )
+    stream = _staged_stream(spark, path)
     rows = (
         stream.where(
             F.col("doc_id").isNotNull()
@@ -777,11 +770,7 @@ def stream_lexical_postings_ingest(spark, sf_dir: str) -> DataFrame:
     from aws_saas_etl_spark.operators.dedup import md60
 
     path = _staged_table_dir(spark, sf_dir, "documents")
-    stream = (
-        spark.readStream.schema(parquet_schema(spark, path))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path)
-    )
+    stream = _staged_stream(spark, path)
     postings = (
         stream.na.drop("any")
         .select("doc_id", F.array_distinct(T.tokens("text")).alias("tk"))
@@ -804,8 +793,8 @@ def stream_lexical_postings_ingest(spark, sf_dir: str) -> DataFrame:
 
 
 def _staged_delta_documents_dir(spark, sf_dir: str, cut: float) -> str:
-    """Stage the ARRIVING document slice (doc_id > the shared
-    shingle-percentile cut — the same base/delta boundary the batch
+    """Stage the ARRIVING document slice (doc_id > ``cut``, the session's
+    ``dedup.delta_doc_cut`` — the same base/delta boundary the batch
     incremental manifest uses) as a multi-file parquet directory. The
     cut is part of the key (ADVICE r12: omitting it would silently serve
     a stale slice if DELTA_DOC_FRACTION were varied in-session)."""
@@ -825,8 +814,8 @@ def _staged_delta_documents_dir(spark, sf_dir: str, cut: float) -> str:
 def _stream_manifest_delta_rows(spark, sf_dir: str) -> DataFrame:
     """STREAMING MANIFEST maintenance — the pipeline-artifact family's
     streaming leg (VERDICT r11 #6; dedup/ANN/lexical got theirs in
-    r10/r11): ARRIVING documents (the same ``doc_id > shingle-percentile
-    cut`` delta slice the batch incremental manifest absorbs) flow as a
+    r10/r11): ARRIVING documents (the same ``doc_id > delta_doc_cut``
+    delta slice the batch incremental manifest absorbs) flow as a
     file stream through the STATELESS gate chain — per-row heuristic
     gates (too-short / unknown-language / low-quality, byte-identical
     expressions to ``gate_signals``) plus an exact-dup check as a
@@ -873,17 +862,12 @@ def _stream_manifest_delta_rows(spark, sf_dir: str) -> DataFrame:
         FILTER_MIN_TOKENS,
     )
 
-    # the shared base/delta boundary, a bounded scalar — session-cached
-    # across constructions since r14 (dedup.delta_doc_cut)
+    # the session's one base/delta cut (a memoized scalar)
     cut = delta_doc_cut(spark, sf_dir)
     _, sha_idx = _stored_base_verdicts(spark, sf_dir)
 
     path = _staged_delta_documents_dir(spark, sf_dir, cut)
-    stream = (
-        spark.readStream.schema(parquet_schema(spark, path))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path)
-    )
+    stream = _staged_stream(spark, path)
     rows = stream.na.drop("any").select(
         "doc_id",
         F.sha2("text", 256).alias("sha"),

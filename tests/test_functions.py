@@ -187,6 +187,39 @@ def test_clusters_incremental_merge_equals_full_recompute(spark):
     assert inc  # non-vacuous: the smoke corpus has near-dup clusters
 
 
+def test_tag_arrivals_matches_the_in_plan_percentile_cut(spark):
+    """``_tag_arrivals`` compares doc_id against the session's one
+    ``delta_doc_cut`` double; its rows equal the old form's, which joined
+    the shingle-weighted percentile in-plan as a broadcast 1-row frame
+    (kept here as the reference). Both compare bigint > double."""
+    from pyspark.sql import functions as F
+
+    from aws_saas_etl_spark.operators.dedup import (
+        DELTA_DOC_FRACTION,
+        _shingle_table,
+        _tag_arrivals,
+    )
+    from tests.conftest import SF_SMOKE
+
+    sh = _shingle_table(spark, SF_SMOKE)
+    cutoff = sh.agg(F.percentile("doc_id", 1.0 - DELTA_DOC_FRACTION).alias("cut"))
+    old = (
+        sh.crossJoin(F.broadcast(cutoff))
+        .withColumn("is_new", F.col("doc_id") > F.col("cut"))
+        .drop("cut")
+    )
+    new = _tag_arrivals(spark, SF_SMOKE)
+    assert new.columns == old.columns
+
+    def rows(df):
+        return sorted(repr(tuple(r)) for r in df.collect())
+
+    got = rows(new)
+    assert got == rows(old)
+    flags = {r.is_new for r in new.select("is_new").distinct().collect()}
+    assert flags == {True, False}  # non-vacuous: both slices present
+
+
 def test_merge_delta_unites_base_clusters_via_arrival(spark):
     """The hard incremental case: an arriving document that bridges TWO
     existing clusters must unite them under the global min label — the

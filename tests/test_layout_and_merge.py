@@ -252,3 +252,34 @@ def test_overwrite_drops_touched_partition_that_became_empty(spark, tmp_path):
         for r in spark.read.parquet(path).collect()
     )
     assert back == [(1, "train", 0, 1), (3, "train", 0, 2), (4, "val", 0, 1)]
+
+
+def test_each_manifest_memo_key_is_built_at_one_site():
+    """Each ``_MANIFEST_CACHE`` slot has one builder: every key passed to
+    ``_MANIFEST_CACHE.get_or_build`` in ``curation.py`` appears at
+    exactly one call site, so two closures can never build one slot two
+    ways (whichever query ran first would decide its content)."""
+    import ast
+    from collections import Counter
+
+    from aws_saas_etl_spark.operators import curation
+
+    tree = ast.parse(open(curation.__file__).read())
+    sites = Counter()
+    for call in ast.walk(tree):
+        if (
+            isinstance(call, ast.Call)
+            and isinstance(call.func, ast.Attribute)
+            and call.func.attr == "get_or_build"
+            and isinstance(call.func.value, ast.Name)
+            and call.func.value.id == "_MANIFEST_CACHE"
+        ):
+            key = tuple(
+                a.value
+                for a in call.args
+                if isinstance(a, ast.Constant) and isinstance(a.value, str)
+            )
+            assert key, f"line {call.lineno}: key is not a string literal"
+            sites[key] += 1
+    assert len(sites) >= 10
+    assert {k: n for k, n in sites.items() if n > 1} == {}
