@@ -54,6 +54,7 @@ BACKOFF_LAMBDA = 0.4
 # SemDeDup within-cluster similarity threshold: reuse the repo-wide
 # fixture-calibrated near-dup cosine (real corpora run ~0.95+).
 from aws_saas_etl_spark.operators.similarity import (  # noqa: E402
+    DELETION_MOD,
     NEARDUP_COS_MIN,
     dot,
     norm,
@@ -723,14 +724,6 @@ def _manifest_frame(docs: DataFrame, keep: DataFrame, comp: DataFrame) -> DataFr
     return _shard_cols(_elect_keepers(members)).withColumn(
         "pos", F.row_number().over(_pos_window())
     )
-
-
-# Right-to-be-forgotten deletion set: every 7th doc_id — a deterministic
-# stand-in for an arriving deletion list (a source-keyed set would be the
-# realistic correlated shape, but the fixtures' clusters are built from
-# cross-source near-dups, so source-keyed deletions never hit a cluster
-# and the query would be vacuous at sf0.01)
-DELETION_MOD = 7
 
 
 def cluster_deletion_repair(spark, sf_dir: str) -> DataFrame:
@@ -1744,13 +1737,13 @@ def doc_quality_logreg(spark, sf_dir: str) -> DataFrame:
 
 
 #: Session memo of the trained quality classifier per corpus: the
-#: feature table ("feats"), the 1-row weights fitted on it ("weights")
-#: and the stale fit on the base slice ("weights", "base"). The
-#: classifier is a stored artifact in production (fit nightly, served
-#: all day — logreg_store_roundtrip proves the storage leg): cold builds
-#: it once, and every consumer (scores, calibration, quality gate, full
-#: pipeline, gateset v2, version diff, staleness report, stream scorer)
-#: serves from it.
+#: feature table ("feats"), the 1-row weights fitted on it ("weights"),
+#: those as SQL literals ("weights", "sql") and the stale fit on the base
+#: slice ("weights", "base"). The classifier is a stored artifact in
+#: production (fit nightly, served all day — logreg_store_roundtrip proves
+#: the storage leg): cold builds it once, and every consumer (scores,
+#: calibration, quality gate, full pipeline, gateset v2, version diff,
+#: staleness report, stream scorer) serves from it.
 _LOGREG_CACHE = MemoDict("logreg_artifacts")
 
 
@@ -1767,6 +1760,18 @@ def _logreg_artifacts(spark, sf_dir: str):
         spark, sf_dir, "weights", build=lambda: logreg_fit(feats)
     )
     return feats, weights
+
+
+def _logreg_weight_sql(spark, sf_dir: str) -> dict[int, str]:
+    """The fitted weights as SQL double literals ``{j: "(w_jD)"}``,
+    collected once per session (the stream scorer embeds them)."""
+    return _LOGREG_CACHE.get_or_build(
+        spark, sf_dir, "weights", "sql",
+        build=lambda: {
+            j: f"({float(w)!r}D)"
+            for j, w in zip(_LOGREG_J, _logreg_artifacts(spark, sf_dir)[1].collect()[0])
+        },
+    )
 
 
 def logreg_scores(docs: DataFrame) -> DataFrame:

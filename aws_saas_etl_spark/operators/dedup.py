@@ -44,7 +44,7 @@ from aws_saas_etl_spark.catalog import (
 )
 from aws_saas_etl_spark.functions import num as N
 from aws_saas_etl_spark.functions import text as T
-from aws_saas_etl_spark.sources.custom import store_and_read_back
+from aws_saas_etl_spark.sources.custom import store_and_read_back, store_base_with_delta
 
 # MinHash parameters: 16 bands × 4 rows = 64 hashes → candidate threshold
 # s ≈ (1/16)^(1/4) ≈ 0.5 Jaccard. Verified pairs filter at JACCARD_MIN.
@@ -462,10 +462,9 @@ def minhash_lsh_incremental_pairs(spark, sf_dir: str) -> DataFrame:
     # count + sort/limit sizing jobs each re-executed the full signature
     # chain per construction (VERDICT r13 #4); one session-cached scalar
     cut = rank_cut(spark, sf_dir, "minhash_sig_cut", sig.select("doc_id"))
-    base = sig.where(F.col("doc_id") <= F.lit(cut))
-    stored = store_and_read_back(base, "minhash_sig_base", sf_dir, cut)
-    merged = stored.unionByName(sig.where(F.col("doc_id") > F.lit(cut)))
-    return _lsh_pairs_serve(merged)
+    return _lsh_pairs_serve(
+        store_base_with_delta(sig, "minhash_sig_base", sf_dir, "doc_id", cut)
+    )
 
 
 # Constructing this query's DataFrame EXECUTES the base-signature build

@@ -35,7 +35,7 @@ from aws_saas_etl_spark.catalog import (
     table_row_count,
 )
 from aws_saas_etl_spark.functions.num import davg_rounded, dround
-from aws_saas_etl_spark.sources.custom import store_and_read_back
+from aws_saas_etl_spark.sources.custom import store_and_read_back, store_base_with_delta
 
 N_QUERY_VECS = 10  # queries = vec_id < 10 (deterministic demo query set)
 TOP_K = 5
@@ -628,20 +628,41 @@ def ivf_fit_cells(emb: DataFrame, n_cells: int, iters: int = IVF_ITERS) -> DataF
 _IVF_CACHE = MemoDict("ivf_centroids")
 
 
-def _fit_slot(base: DataFrame | None) -> tuple[str, ...]:
+def _fit_slot(stale: bool) -> tuple[str, ...]:
     """Key parts naming the corpus slice a fit was trained on: none for
-    the full corpus, ``"base"`` for the stale pre-arrival slice."""
-    return () if base is None else ("base",)
+    the full corpus, ``"base"`` for the stale slice (``_fit_rows``)."""
+    return ("base",) if stale else ()
 
 
-def _ivf_centroids_cached(
-    spark, sf_dir, emb, n_cells, base: DataFrame | None = None
-) -> DataFrame:
-    """Centroids fitted on ``emb`` — or, given ``base``, on that
-    pre-arrival slice (the stale index, its own memo slot)."""
+def _vec_cut(spark, sf_dir: str, emb: DataFrame) -> int:
+    """The vector base/delta cut: the largest of the ``n − n//10``
+    smallest vec_ids (``memo.rank_cut``), derived once per session."""
+    return rank_cut(spark, sf_dir, "vec_cut", emb.select("vec_id"))
+
+
+def _fit_rows(spark, sf_dir: str, emb: DataFrame, stale: bool) -> DataFrame:
+    """The rows a fit trains on: all of ``emb``, or for the stale index
+    the historical slice at or below the vector cut (``_vec_cut``)."""
+    if not stale:
+        return emb
+    return emb.where(F.col("vec_id") <= F.lit(_vec_cut(spark, sf_dir, emb)))
+
+
+def _ivf_geometry(spark, sf_dir: str, stale: bool = False) -> tuple[int, int]:
+    """(n_cells, nprobe) of the IVF index over the full corpus or, for
+    the stale index, over its ``n − n//10``-row base slice."""
+    n = table_row_count(spark, sf_dir, "embeddings")
+    n_cells = ivf_cells_for(n - n // 10 if stale else n)
+    return n_cells, ivf_nprobe_for(n_cells)
+
+
+def _ivf_centroids_cached(spark, sf_dir, emb, stale: bool = False) -> DataFrame:
+    """Centroids fitted on ``emb`` — or, when ``stale``, on its base
+    slice (the stale index, its own memo slot)."""
+    n_cells, _ = _ivf_geometry(spark, sf_dir, stale)
     return _IVF_CACHE.get_or_build(
-        spark, sf_dir, *_fit_slot(base), n_cells,
-        build=lambda: ivf_fit_cells(emb if base is None else base, n_cells),
+        spark, sf_dir, *_fit_slot(stale), n_cells,
+        build=lambda: ivf_fit_cells(_fit_rows(spark, sf_dir, emb, stale), n_cells),
     )
 
 
@@ -664,27 +685,23 @@ _ASSIGN_CACHE = MemoDict("ivf_assignment")
 
 
 def _ivf_index_cached(
-    spark, sf_dir, emb: DataFrame, n_cells: int, base: DataFrame | None = None
-) -> tuple[DataFrame, DataFrame]:
-    """Both stored halves of the IVF index over ``emb``: the centroids
-    (see ``_ivf_centroids_cached``) and ``emb``'s corpus→cell assignment
-    against exactly those centroids. The assignment is keyed by its
-    fit's key parts, so it can never be stored beside another fit."""
-    centroids = _ivf_centroids_cached(spark, sf_dir, emb, n_cells, base)
+    spark, sf_dir, emb: DataFrame, stale: bool = False
+) -> tuple[DataFrame, DataFrame, int]:
+    """Both stored halves of the IVF index over ``emb`` and its probe
+    width: the centroids (see ``_ivf_centroids_cached``), ``emb``'s
+    corpus→cell assignment against exactly those centroids, and
+    ``nprobe``. The assignment is keyed by its fit's key parts, so it
+    can never be stored beside another fit."""
+    n_cells, nprobe = _ivf_geometry(spark, sf_dir, stale)
+    centroids = _ivf_centroids_cached(spark, sf_dir, emb, stale)
     cells = _ASSIGN_CACHE.get_or_build(
-        spark, sf_dir, *_fit_slot(base), n_cells,
+        spark, sf_dir, *_fit_slot(stale), n_cells,
         build=lambda: _assign_cells(emb.select("vec_id", "embedding"), centroids),
     )
-    return centroids, cells
+    return centroids, cells, nprobe
 
 
-def ann_ivf_topk(
-    spark,
-    sf_dir: str,
-    k: int = TOP_K,
-    n_cells: int | None = None,
-    nprobe: int | None = None,
-) -> DataFrame:
+def ann_ivf_topk(spark, sf_dir: str, k: int = TOP_K) -> DataFrame:
     """Approximate top-k via IVF: k-means cells partition the corpus; each
     query exactly re-ranks only the vectors in its ``nprobe`` nearest
     cells.
@@ -719,11 +736,7 @@ def ann_ivf_topk(
     exchanges per round.
     """
     emb = ensure_parallelism(load_tables(spark, sf_dir).embeddings)
-    if n_cells is None:
-        n_cells = ivf_cells_for(table_row_count(spark, sf_dir, "embeddings"))
-    if nprobe is None:
-        nprobe = ivf_nprobe_for(n_cells)
-    centroids, cells = _ivf_index_cached(spark, sf_dir, emb, n_cells)
+    centroids, cells, nprobe = _ivf_index_cached(spark, sf_dir, emb)
     return _ivf_probe(emb, centroids, nprobe, k, corpus_cells=cells)
 
 
@@ -785,7 +798,7 @@ def _ivf_probe(
     )
 
 
-def ann_ivf_store_roundtrip(spark, sf_dir: str) -> DataFrame:
+def ann_ivf_store_roundtrip(spark, sf_dir: str, k: int = TOP_K) -> DataFrame:
     """The PERSISTED ANN index — the storage half a 100 TB vector corpus
     actually runs: the fitted IVF centroid table is WRITTEN through the
     exactly-once manifest sink (atomic commit, crash-invisible staging —
@@ -807,12 +820,10 @@ def ann_ivf_store_roundtrip(spark, sf_dir: str) -> DataFrame:
     in-session memoization alone (r6) never proved the storage leg.
     """
     emb = ensure_parallelism(load_tables(spark, sf_dir).embeddings)
-    n_cells = ivf_cells_for(table_row_count(spark, sf_dir, "embeddings"))
-    nprobe = ivf_nprobe_for(n_cells)
-    fitted = _ivf_centroids_cached(spark, sf_dir, emb, n_cells)
-
+    n_cells, nprobe = _ivf_geometry(spark, sf_dir)
+    fitted = _ivf_centroids_cached(spark, sf_dir, emb)
     stored = store_and_read_back(fitted, "ivf_index", sf_dir, n_cells)
-    return _ivf_probe(emb, stored, nprobe, k=TOP_K)
+    return _ivf_probe(emb, stored, nprobe, k)
 
 
 # Constructing this query's DataFrame EXECUTES work (emb.count() sizing
@@ -833,10 +844,11 @@ def ann_ivf_incremental_append(spark, sf_dir: str, k: int = TOP_K) -> DataFrame:
     would cost a full corpus scan × iters; assignment costs the delta
     one broadcast-centroid pass.
 
-    What the hash gate proves: fit-on-base (exact integer-rank cut,
-    ``n − n//10`` smallest vec_ids) + assign-all + probe-all is
-    bit-reproducible end to end (oracles.ANN_IVF_INCREMENTAL_SQL re-runs
-    the same rounds with the fit CTEs restricted to the base slice).
+    What the hash gate proves: fit-on-base (``_fit_rows``: the exact
+    integer-rank cut, ``n − n//10`` smallest vec_ids) + assign-all +
+    probe-all is bit-reproducible end to end
+    (oracles.ANN_IVF_INCREMENTAL_SQL re-runs the same rounds with the fit
+    CTEs restricted to the base slice).
     What it deliberately does NOT equal is a fresh refit over the full
     corpus — the gap between this query's recall and ``ann_ivf_topk``'s
     IS index staleness, the quantity that tells an operator when the
@@ -848,30 +860,31 @@ def ann_ivf_incremental_append(spark, sf_dir: str, k: int = TOP_K) -> DataFrame:
     rescans the historical corpus.
     """
     emb = ensure_parallelism(load_tables(spark, sf_dir).embeddings)
-    n = table_row_count(spark, sf_dir, "embeddings")
-    n_base = n - n // 10
-    # the n_base-th smallest vec_id — exact integer rank, no percentile
-    cut = rank_cut(spark, sf_dir, "vec_cut", emb.select("vec_id"))
-    base = emb.where(F.col("vec_id") <= F.lit(cut))
-    n_cells = ivf_cells_for(n_base)
-    nprobe = ivf_nprobe_for(n_cells)
-    # the stale fit (its own "base" memo slot) and the FULL corpus
-    # assigned into its cells — the invlists of the stale index; shared
-    # with the stale IVF-PQ arm (r14)
-    centroids, cells = _ivf_index_cached(spark, sf_dir, emb, n_cells, base)
+    # the stale fit (its own "base" memo slot, sized for the base slice)
+    # and the FULL corpus assigned into its cells — the invlists of the
+    # stale index; shared with the stale IVF-PQ arm (r14)
+    centroids, cells, nprobe = _ivf_index_cached(spark, sf_dir, emb, stale=True)
     return _ivf_probe(emb, centroids, nprobe, k, corpus_cells=cells)
 
 
-#: Deletion-list convention shared with the manifest layer
-#: (curation.DELETION_MOD — defined locally because curation imports this
-#: module): every 7th vec_id is the arriving right-to-be-forgotten set.
-VEC_DELETION_MOD = 7
+#: Right-to-be-forgotten deletion list, shared by the ANN, lexical and
+#: manifest layers: every 7th vec_id / doc_id — a deterministic stand-in
+#: for an arriving deletion list (a source-keyed set would be the
+#: realistic correlated shape, but the fixtures' clusters are built from
+#: cross-source near-dups, so source-keyed deletions never hit a cluster
+#: and the manifest repair would be vacuous at sf0.01).
+DELETION_MOD = 7
+
+
+def _survives(id_col: str) -> Column:
+    """The rows the deletion list keeps: ``id_col % DELETION_MOD != 0``."""
+    return F.col(id_col) % DELETION_MOD != 0
 
 
 def ann_ivf_deletion_repair(spark, sf_dir: str, k: int = TOP_K) -> DataFrame:
     """GDPR / license-revocation propagated through the ANN index — the
     vector-side twin of ``training_manifest_deletion_repair``: the
-    deletion list's vectors (vec_id % VEC_DELETION_MOD == 0) drop out of
+    deletion list's vectors (vec_id % DELETION_MOD == 0) drop out of
     the POSTINGS (corpus assignment) and the query set, while the
     TRAINED CENTROIDS stay as stored — cell means are aggregates over
     thousands of vectors, carry no recoverable per-item content, and
@@ -884,17 +897,16 @@ def ann_ivf_deletion_repair(spark, sf_dir: str, k: int = TOP_K) -> DataFrame:
     ``ann_index_staleness_report`` exists to watch.
     """
     emb = ensure_parallelism(load_tables(spark, sf_dir).embeddings)
-    n_cells = ivf_cells_for(table_row_count(spark, sf_dir, "embeddings"))
-    nprobe = ivf_nprobe_for(n_cells)
     # the stored index: same memo slots the batch query uses (fit sees
     # the full corpus — deletions arrive AFTER the nightly fit)
-    centroids, cells = _ivf_index_cached(spark, sf_dir, emb, n_cells)
-    surviving = emb.where(F.col("vec_id") % VEC_DELETION_MOD != 0)
+    centroids, cells, nprobe = _ivf_index_cached(spark, sf_dir, emb)
+    alive = _survives("vec_id")
     # postings repair = anti-join on the stored invlists (r14): assignment
     # is a per-row argmax, so filtering the cached assignment is
     # bit-identical to assigning the filtered corpus
-    cells = cells.where(F.col("vec_id") % VEC_DELETION_MOD != 0)
-    return _ivf_probe(surviving, centroids, nprobe, k, corpus_cells=cells)
+    return _ivf_probe(
+        emb.where(alive), centroids, nprobe, k, corpus_cells=cells.where(alive)
+    )
 
 
 def knn_filtered_bruteforce(spark, sf_dir: str, k: int = TOP_K) -> DataFrame:
@@ -987,9 +999,7 @@ def ann_ivf_filtered_topk(spark, sf_dir: str, k: int = TOP_K) -> DataFrame:
     postings at 100 TB (filter pushdown into the index scan).
     """
     emb = ensure_parallelism(load_tables(spark, sf_dir).embeddings)
-    n_cells = ivf_cells_for(table_row_count(spark, sf_dir, "embeddings"))
-    nprobe = ivf_nprobe_for(n_cells)
-    centroids, cells = _ivf_index_cached(spark, sf_dir, emb, n_cells)
+    centroids, cells, nprobe = _ivf_index_cached(spark, sf_dir, emb)
     return _ivf_probe(
         emb, centroids, nprobe, k, corpus_cells=cells, queries=_filter_queries(emb)
     )
@@ -1033,9 +1043,7 @@ def ann_filtered_switch_topk(
     q_cols = ["query_id", "q_emb", "q_label"]
     q_pre = qb.where(~is_post).select(*q_cols)
     q_post = qb.where(is_post).select(*q_cols)
-    n_cells = ivf_cells_for(n)
-    nprobe = ivf_nprobe_for(n_cells)
-    centroids, cells = _ivf_index_cached(spark, sf_dir, emb, n_cells)
+    centroids, cells, nprobe = _ivf_index_cached(spark, sf_dir, emb)
     pre = _knn_filtered_serve(emb, q_pre, k).withColumn(
         "branch", F.lit("pre")
     )
@@ -1068,11 +1076,11 @@ def ann_index_staleness_report(spark, sf_dir: str) -> DataFrame:
     key = ["query_id", "neighbor_id"]
     truth = _truth_topk_cached(spark, sf_dir)
     fresh = _SERVED_CACHE.get_or_build(
-        spark, sf_dir, "ivf", *_fit_slot(None), TOP_K,
+        spark, sf_dir, "ivf", *_fit_slot(False), TOP_K,
         build=lambda: ann_ivf_topk(spark, sf_dir).select(*key),
     )
     stale = _SERVED_CACHE.get_or_build(
-        spark, sf_dir, "ivf", "base", TOP_K,
+        spark, sf_dir, "ivf", *_fit_slot(True), TOP_K,
         build=lambda: ann_ivf_incremental_append(spark, sf_dir).select(*key),
     )
 
@@ -1676,12 +1684,9 @@ def doc_lexical_incremental_append(spark, sf_dir: str, k: int = TOP_K) -> DataFr
     store write; the serve leg matches ``doc_lexical_topk_indexed``.
     """
     postings, _ = _lexical_postings(spark, sf_dir)
-
     # base/delta boundary over the postings id set
     cut = rank_cut(spark, sf_dir, "lex_postings_cut", postings.select("doc_id"))
-    base = postings.where(F.col("doc_id") <= F.lit(cut))
-    stored = store_and_read_back(base, "lex_postings_base", sf_dir, cut)
-    merged = stored.unionByName(postings.where(F.col("doc_id") > F.lit(cut)))
+    merged = store_base_with_delta(postings, "lex_postings_base", sf_dir, "doc_id", cut)
     sizes = merged.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_tk"))
     return _lexical_indexed_serve(merged, sizes, k)
 
@@ -1693,9 +1698,8 @@ doc_lexical_incremental_append.side_effecting = True
 
 def doc_lexical_deletion_repair(spark, sf_dir: str, k: int = TOP_K) -> DataFrame:
     """GDPR propagated through the lexical postings table: the deletion
-    list's documents (doc_id % 7 == 0 — the manifest layer's
-    ``curation.DELETION_MOD`` convention, numerically equal to
-    ``VEC_DELETION_MOD``) drop out of the postings, the size table, and
+    list's documents (doc_id % DELETION_MOD == 0 — the convention the
+    manifest layer shares) drop out of the postings, the size table, and
     the query set. Postings are per-row, so the repair is a pure
     anti-join on the stored index — provably identical to re-tokenizing
     the surviving corpus (``DOC_LEXICAL_DELETION_SQL``). With this pair
@@ -1703,7 +1707,7 @@ def doc_lexical_deletion_repair(spark, sf_dir: str, k: int = TOP_K) -> DataFrame
     every arm of the hybrid retrieval stack.
     """
     postings, sizes = _lexical_postings(spark, sf_dir)
-    alive = F.col("doc_id") % VEC_DELETION_MOD != 0
+    alive = _survives("doc_id")
     return _lexical_indexed_serve(
         postings.where(alive), sizes.where(alive), k
     )
@@ -1734,33 +1738,34 @@ def ann_hybrid_rrf(spark, sf_dir: str, k: int = TOP_K) -> DataFrame:
     The fusion stage costs nothing beyond the serving paths it combines
     — at 100 TB its inputs are the index probes, never the corpus.
     """
-    lsh = ann_lsh_topk(spark, sf_dir, k).select(
-        "query_id", "neighbor_id", F.col("rank").alias("lsh_rank")
+    return _rrf_fuse(
+        ann_lsh_topk(spark, sf_dir, k),
+        ann_ivf_topk(spark, sf_dir, k),
+        doc_lexical_topk(spark, sf_dir, k),
+        k,
     )
-    ivf = ann_ivf_topk(spark, sf_dir, k).select(
-        "query_id", "neighbor_id", F.col("rank").alias("ivf_rank")
-    )
-    lex = doc_lexical_topk(spark, sf_dir, k).select(
-        "query_id", "neighbor_id", F.col("rank").alias("lex_rank")
-    )
-    return _rrf_fuse(lsh, ivf, lex, k)
 
 
 def _rrf_fuse(
     lsh: DataFrame, ivf: DataFrame, lex: DataFrame, k: int
 ) -> DataFrame:
-    """The RRF fusion stage over three already-ranked arm frames
-    (query_id, neighbor_id, {lsh,ivf,lex}_rank) — split from
-    ``ann_hybrid_rrf`` so the stored-artifact stack
+    """The RRF fusion stage over the three served arms (query_id,
+    neighbor_id, rank, ...), each projected to its ``{arm}_rank`` —
+    split from ``ann_hybrid_rrf`` so the stored-artifact stack
     (``ann_hybrid_rrf_stored``) fuses through the IDENTICAL plan."""
     one = F.lit(1.0)
+    key = ["query_id", "neighbor_id"]
+
+    def ranked(arm: DataFrame, name: str) -> DataFrame:
+        return arm.select(*key, F.col("rank").alias(f"{name}_rank"))
 
     def term(c: str):
         return F.coalesce(one / (F.lit(RRF_K) + F.col(c)), F.lit(0.0))
 
     fused = (
-        lsh.join(ivf, ["query_id", "neighbor_id"], "full_outer")
-        .join(lex, ["query_id", "neighbor_id"], "full_outer")
+        ranked(lsh, "lsh")
+        .join(ranked(ivf, "ivf"), key, "full_outer")
+        .join(ranked(lex, "lex"), key, "full_outer")
         .select(
             "query_id",
             "neighbor_id",
@@ -1790,15 +1795,15 @@ def ann_hybrid_rrf_stored(spark, sf_dir: str, k: int = TOP_K) -> DataFrame:
     the production serving topology: indexes trained/built nightly and
     persisted, queries served all day against the stored tables.
 
-    - IVF arm: the fitted centroids roundtrip the manifest store (the
-      ``ann_ivf_store_roundtrip`` plumbing, same per-pid store) and the
-      probe consumes ONLY what came back from storage.
-    - Lexical arm: the postings table roundtrips the store (the
-      ``doc_lexical_store_roundtrip`` plumbing) and serves through the
-      INDEXED probe plan — hence the twin's lexical CTE is the
-      positive-overlap variant (an index cannot reach a zero-overlap
-      candidate; the fused scores differ from ``ann_hybrid_rrf`` exactly
-      where brute-force lexical ranked zero-jaccard tail rows).
+    - IVF arm: ``ann_ivf_store_roundtrip`` — the fitted centroids
+      roundtrip the manifest store (same per-pid store) and the probe
+      consumes ONLY what came back from storage.
+    - Lexical arm: ``doc_lexical_store_roundtrip`` — the postings table
+      roundtrips the store and serves through the INDEXED probe plan —
+      hence the twin's lexical CTE is the positive-overlap variant (an
+      index cannot reach a zero-overlap candidate; the fused scores
+      differ from ``ann_hybrid_rrf`` exactly where brute-force lexical
+      ranked zero-jaccard tail rows).
     - LSH arm: derivation-free by design (signatures are a deterministic
       per-row function — the 'index' IS the bucket expression), so there
       is nothing to store; it recomputes, as it would at serving time.
@@ -1807,24 +1812,9 @@ def ann_hybrid_rrf_stored(spark, sf_dir: str, k: int = TOP_K) -> DataFrame:
     the in-session hybrid's 4.7 s — the storage premium is the two
     manifest roundtrips, not the serving plans.
     """
-    emb = ensure_parallelism(load_tables(spark, sf_dir).embeddings)
-    n_cells = ivf_cells_for(table_row_count(spark, sf_dir, "embeddings"))
-    nprobe = ivf_nprobe_for(n_cells)
-    fitted = _ivf_centroids_cached(spark, sf_dir, emb, n_cells)
-    stored_i = store_and_read_back(fitted, "ivf_index", sf_dir, n_cells)
-    ivf = _ivf_probe(emb, stored_i, nprobe, k=k).select(
-        "query_id", "neighbor_id", F.col("rank").alias("ivf_rank")
-    )
-    postings, _ = _lexical_postings(spark, sf_dir)
-    stored_p = store_and_read_back(postings, "lex_postings", sf_dir)
-    sizes = stored_p.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_tk"))
-    lex = _lexical_indexed_serve(stored_p, sizes, k).select(
-        "query_id", "neighbor_id", F.col("rank").alias("lex_rank")
-    )
-    lsh = ann_lsh_topk(spark, sf_dir, k).select(
-        "query_id", "neighbor_id", F.col("rank").alias("lsh_rank")
-    )
-    return _rrf_fuse(lsh, ivf, lex, k)
+    ivf = ann_ivf_store_roundtrip(spark, sf_dir, k)
+    lex = doc_lexical_store_roundtrip(spark, sf_dir, k)
+    return _rrf_fuse(ann_lsh_topk(spark, sf_dir, k), ivf, lex, k)
 
 
 # Constructing this query's DataFrame EXECUTES the IVF fit + two real
@@ -2242,13 +2232,13 @@ def _pq_fit_from_subs(subs: DataFrame) -> DataFrame:
 
 
 def _pq_codebooks_cached(
-    spark, sf_dir: str, emb: DataFrame, base: DataFrame | None = None
+    spark, sf_dir: str, emb: DataFrame, stale: bool = False
 ) -> DataFrame:
-    """Codebooks fitted on ``emb`` — or, given ``base``, on that
-    pre-arrival slice (the stale codebooks, their own memo slot)."""
+    """Codebooks fitted on ``emb`` — or, when ``stale``, on its base
+    slice (``_fit_rows``; the stale codebooks, their own memo slot)."""
     return _PQ_CACHE.get_or_build(
-        spark, sf_dir, *_fit_slot(base),
-        build=lambda: pq_fit_codebooks(emb if base is None else base),
+        spark, sf_dir, *_fit_slot(stale),
+        build=lambda: pq_fit_codebooks(_fit_rows(spark, sf_dir, emb, stale)),
     )
 
 
@@ -2271,15 +2261,15 @@ _PQ_CODES_CACHE = MemoDict("pq_codes")
 
 
 def _pq_index_cached(
-    spark, sf_dir: str, emb: DataFrame, base: DataFrame | None = None
+    spark, sf_dir: str, emb: DataFrame, stale: bool = False
 ) -> tuple[DataFrame, DataFrame]:
     """Both stored halves of the PQ index over ``emb``: the codebooks
     (see ``_pq_codebooks_cached``) and ``emb``'s code table encoded with
     exactly those codebooks. The code table is keyed by its codebook's
     key parts, so it can never be stored beside another fit."""
-    cb = _pq_codebooks_cached(spark, sf_dir, emb, base)
+    cb = _pq_codebooks_cached(spark, sf_dir, emb, stale)
     codes = _PQ_CODES_CACHE.get_or_build(
-        spark, sf_dir, *_fit_slot(base),
+        spark, sf_dir, *_fit_slot(stale),
         build=lambda: _pq_encode(emb, cb),
     )
     return cb, codes
@@ -2364,12 +2354,10 @@ def ann_ivfpq_topk(spark, sf_dir: str, k: int = TOP_K) -> DataFrame:
     stage recovers the gap here at equal oracle complexity.
     """
     emb = ensure_parallelism(load_tables(spark, sf_dir).embeddings)
-    n_cells = ivf_cells_for(table_row_count(spark, sf_dir, "embeddings"))
-    nprobe = ivf_nprobe_for(n_cells)
     # both persisted halves of the composed index, from their session
     # caches (r14): the SAME invlists ann_ivf_topk probes and the SAME
     # code table ann_pq_adc_topk scans
-    coarse, cells = _ivf_index_cached(spark, sf_dir, emb, n_cells)
+    coarse, cells, nprobe = _ivf_index_cached(spark, sf_dir, emb)
     cb, codes = _pq_index_cached(spark, sf_dir, emb)
     return _ivfpq_serve(emb, coarse, nprobe, cb, k, corpus_cells=cells, codes=codes)
 
@@ -2435,26 +2423,20 @@ def ann_ivfpq_incremental_append(spark, sf_dir: str, k: int = TOP_K) -> DataFram
     vs the fresh composition is the composed-staleness quantity the
     ladder report bounds per-rung.
 
-    Both stale artifacts come from the SAME ``"base"`` memo slots the
-    per-rung append queries use (one shared base fit, not a third), and
-    everything downstream is the shared ``_ivfpq_serve`` plan. The twin
-    composes the two proven stale chains: the IVF graph with
-    ``fit_src="base"`` and the PQ chain with ``fit_base="reuse"`` (fit
-    CTEs reading the same integer-rank cut), spliced by the byte-shared
-    IVF-PQ tail.
+    Both stale artifacts come from the SAME ``stale=True`` index
+    functions the per-rung append queries call (one shared base fit, not
+    a third), and everything downstream is the shared ``_ivfpq_serve``
+    plan. The twin composes the two proven stale chains: the IVF graph
+    with ``fit_src="base"`` and the PQ chain with ``fit_base="reuse"``
+    (fit CTEs reading the same integer-rank cut), spliced by the
+    byte-shared IVF-PQ tail.
     """
     emb = ensure_parallelism(load_tables(spark, sf_dir).embeddings)
-    n = table_row_count(spark, sf_dir, "embeddings")
-    n_base = n - n // 10
-    cut = rank_cut(spark, sf_dir, "vec_cut", emb.select("vec_id"))
-    base = emb.where(F.col("vec_id") <= F.lit(cut))
-    n_cells = ivf_cells_for(n_base)
-    nprobe = ivf_nprobe_for(n_cells)
     # the SAME stale invlists / stale code table the per-rung appends
     # serve from (r14) — one shared assignment + encode per session, not
     # a third copy of each
-    coarse, cells = _ivf_index_cached(spark, sf_dir, emb, n_cells, base)
-    cb, codes = _pq_index_cached(spark, sf_dir, emb, base)
+    coarse, cells, nprobe = _ivf_index_cached(spark, sf_dir, emb, stale=True)
+    cb, codes = _pq_index_cached(spark, sf_dir, emb, stale=True)
     return _ivfpq_serve(emb, coarse, nprobe, cb, k, corpus_cells=cells, codes=codes)
 
 
@@ -2481,11 +2463,9 @@ def ann_ivfpq_filtered_topk(spark, sf_dir: str, k: int = TOP_K) -> DataFrame:
     index scan, as the IVF filtered docstring documents).
     """
     emb = ensure_parallelism(load_tables(spark, sf_dir).embeddings)
-    n_cells = ivf_cells_for(table_row_count(spark, sf_dir, "embeddings"))
-    nprobe = ivf_nprobe_for(n_cells)
     # the session-cached invlists and code table (r14) — the same fresh
     # artifacts the plain IVF-PQ path serves from
-    coarse, cells = _ivf_index_cached(spark, sf_dir, emb, n_cells)
+    coarse, cells, nprobe = _ivf_index_cached(spark, sf_dir, emb)
     cb, codes = _pq_index_cached(spark, sf_dir, emb)
     return _ivfpq_serve(
         emb, coarse, nprobe, cb, k, corpus_cells=cells, codes=codes,
@@ -2524,11 +2504,10 @@ def ann_ivfpq_residual_topk(spark, sf_dir: str, k: int = TOP_K) -> DataFrame:
     stay probed-candidates × M, never corpus × M.
     """
     emb = ensure_parallelism(load_tables(spark, sf_dir).embeddings)
-    n_cells = ivf_cells_for(table_row_count(spark, sf_dir, "embeddings"))
-    nprobe = ivf_nprobe_for(n_cells)
+    n_cells, _ = _ivf_geometry(spark, sf_dir)
     # session-cached invlists (r14) — the same fresh assignment every
     # serving path over this coarse index probes
-    coarse, assigned = _ivf_index_cached(spark, sf_dir, emb, n_cells)
+    coarse, assigned, nprobe = _ivf_index_cached(spark, sf_dir, emb)
     assigned = assigned.select("vec_id", "cell")
     ncent = coarse.select(
         "cell",
@@ -2625,25 +2604,24 @@ def ann_pq_incremental_append(spark, sf_dir: str, k: int = TOP_K) -> DataFrame:
     and ``ann_pq_adc_topk`` IS codebook staleness — the quantity the
     ladder staleness report watches.
 
-    Scale shape: the base fit comes from its own memo slot (in
-    production: the stored codebook ``ann_pq_store_roundtrip`` proves);
-    everything downstream is the shared ``_pq_adc_refined`` plan —
-    codes n·M narrow rows, broadcast query tables, bounded refine.
+    Scale shape: the base fit comes from its own ``stale=True`` memo
+    slot (in production: the stored codebook ``ann_pq_store_roundtrip``
+    proves); everything downstream is the shared ``_pq_adc_refined``
+    plan — codes n·M narrow rows, broadcast query tables, bounded
+    refine.
     """
     emb = ensure_parallelism(load_tables(spark, sf_dir).embeddings)
-    cut = rank_cut(spark, sf_dir, "vec_cut", emb.select("vec_id"))
-    base = emb.where(F.col("vec_id") <= F.lit(cut))
-    # the stale codebooks (their own "base" memo slot) and the FULL
-    # corpus encoded with them — the stored code table of the stale
-    # index; shared with the stale IVF-PQ arm (r14)
-    cb, codes = _pq_index_cached(spark, sf_dir, emb, base)
+    # the stale codebooks (fitted on the base slice, their own memo
+    # slot) and the FULL corpus encoded with them — the stored code table
+    # of the stale index; shared with the stale IVF-PQ arm (r14)
+    cb, codes = _pq_index_cached(spark, sf_dir, emb, stale=True)
     return _pq_adc_refined(emb, cb, k, codes=codes)
 
 
 def ann_pq_deletion_repair(spark, sf_dir: str, k: int = TOP_K) -> DataFrame:
     """GDPR propagated through the PQ code table — the PQ analog of
     ``ann_ivf_deletion_repair`` (VERDICT r8 #2b): the deletion list's
-    vectors (vec_id % VEC_DELETION_MOD == 0) drop out of the CODE TABLE
+    vectors (vec_id % DELETION_MOD == 0) drop out of the CODE TABLE
     and the query set while the trained codebooks stay as stored —
     codewords are per-subspace means over many vectors, carry no
     recoverable per-item content, and refitting per deletion batch would
@@ -2658,13 +2636,12 @@ def ann_pq_deletion_repair(spark, sf_dir: str, k: int = TOP_K) -> DataFrame:
     """
     emb = ensure_parallelism(load_tables(spark, sf_dir).embeddings)
     cb, codes = _pq_index_cached(spark, sf_dir, emb)
-    surviving = emb.where(F.col("vec_id") % VEC_DELETION_MOD != 0)
+    alive = _survives("vec_id")
     # code-table repair = anti-join on the stored codes (r14): encoding
     # is per-row, so filtering the cached code table is bit-identical to
     # encoding the surviving corpus — the equivalence the docstring
     # documents, now executed as the stored-artifact anti-join it is
-    codes = codes.where(F.col("vec_id") % VEC_DELETION_MOD != 0)
-    return _pq_adc_refined(surviving, cb, k, codes=codes)
+    return _pq_adc_refined(emb.where(alive), cb, k, codes=codes.where(alive))
 
 
 #: SQ8 shortlist size (the scalar-quantization refine budget — the same
@@ -2684,6 +2661,13 @@ def _sq8_codes(emb_col):
     doubles back into the hot loop."""
     return F.transform(
         _unit(emb_col), lambda x: F.floor(x * 127.0 + 0.5).cast("long")
+    )
+
+
+def _sq8_table(emb: DataFrame) -> DataFrame:
+    """``emb``'s SQ8 code table (neighbor_id, c8)."""
+    return emb.select(
+        F.col("vec_id").alias("neighbor_id"), _sq8_codes("embedding").alias("c8")
     )
 
 
@@ -2709,10 +2693,7 @@ def ann_sq8_topk(spark, sf_dir: str, k: int = TOP_K) -> DataFrame:
     fraction, SQ8 cuts the bytes per candidate.
     """
     emb = ensure_parallelism(load_tables(spark, sf_dir).embeddings)
-    corpus = emb.select(
-        F.col("vec_id").alias("neighbor_id"), _sq8_codes("embedding").alias("c8")
-    )
-    return _sq8_serve(emb, corpus, k)
+    return _sq8_serve(emb, _sq8_table(emb), k)
 
 
 def _sq8_serve(emb: DataFrame, corpus: DataFrame, k: int) -> DataFrame:
@@ -2722,8 +2703,8 @@ def _sq8_serve(emb: DataFrame, corpus: DataFrame, k: int) -> DataFrame:
     plan the in-session derivation does (the ``_bq_serve`` convention).
     Query codes always re-derive from the query vectors (queries arrive
     at search time; only the corpus table is a maintained artifact)."""
-    queries = emb.where(F.col("vec_id") < N_QUERY_VECS).select(
-        F.col("vec_id").alias("query_id"), _sq8_codes("embedding").alias("q8")
+    queries = _sq8_table(emb.where(F.col("vec_id") < N_QUERY_VECS)).select(
+        F.col("neighbor_id").alias("query_id"), F.col("c8").alias("q8")
     )
     idot = F.aggregate(
         F.zip_with(F.col("c8"), F.col("q8"), lambda a, b: a * b),
@@ -2760,15 +2741,11 @@ def ann_sq8_incremental_append(spark, sf_dir: str, k: int = TOP_K) -> DataFrame:
     roundtrip, never a refit.
     """
     emb = ensure_parallelism(load_tables(spark, sf_dir).embeddings)
-    cut = rank_cut(spark, sf_dir, "vec_cut", emb.select("vec_id"))
-    base_codes = emb.where(F.col("vec_id") <= F.lit(cut)).select(
-        F.col("vec_id").alias("neighbor_id"), _sq8_codes("embedding").alias("c8")
+    codes = store_base_with_delta(
+        _sq8_table(emb), "sq8_codes_base", sf_dir, "neighbor_id",
+        _vec_cut(spark, sf_dir, emb),
     )
-    stored = store_and_read_back(base_codes, "sq8_codes_base", sf_dir, cut)
-    delta_codes = emb.where(F.col("vec_id") > F.lit(cut)).select(
-        F.col("vec_id").alias("neighbor_id"), _sq8_codes("embedding").alias("c8")
-    )
-    return _sq8_serve(emb, stored.unionByName(delta_codes), k)
+    return _sq8_serve(emb, codes, k)
 
 
 # Constructing this query's DataFrame EXECUTES the base-code build and a
@@ -2778,7 +2755,7 @@ ann_sq8_incremental_append.side_effecting = True
 
 def ann_sq8_deletion_repair(spark, sf_dir: str, k: int = TOP_K) -> DataFrame:
     """GDPR propagated through the SQ8 code table: the deletion list's
-    vectors (vec_id % VEC_DELETION_MOD == 0) drop out of the code table
+    vectors (vec_id % DELETION_MOD == 0) drop out of the code table
     and the query set. Codes are PER-VECTOR (one row each), so the
     repair is a pure anti-join on the stored table — filtering stored
     codes is IDENTICAL to re-encoding the surviving corpus (no shared
@@ -2787,11 +2764,8 @@ def ann_sq8_deletion_repair(spark, sf_dir: str, k: int = TOP_K) -> DataFrame:
     its serve CTEs (``ANN_SQ8_DELETION_SQL``).
     """
     emb = ensure_parallelism(load_tables(spark, sf_dir).embeddings)
-    surviving = emb.where(F.col("vec_id") % VEC_DELETION_MOD != 0)
-    codes = surviving.select(
-        F.col("vec_id").alias("neighbor_id"), _sq8_codes("embedding").alias("c8")
-    )
-    return _sq8_serve(surviving, codes, k)
+    surviving = emb.where(_survives("vec_id"))
+    return _sq8_serve(surviving, _sq8_table(surviving), k)
 
 
 #: Binary-quantization shortlist size (the BQ refine budget — same
@@ -2818,6 +2792,11 @@ def _bq_sig_exprs(emb_col):
     return half(0).alias("sig_lo"), half(32).alias("sig_hi")
 
 
+def _bq_table(emb: DataFrame) -> DataFrame:
+    """``emb``'s BQ signature table (neighbor_id, sig_lo, sig_hi)."""
+    return emb.select(F.col("vec_id").alias("neighbor_id"), *_bq_sig_exprs("embedding"))
+
+
 def ann_bq_hamming_topk(spark, sf_dir: str, k: int = TOP_K) -> DataFrame:
     """Binary quantization + Hamming shortlist + exact refine — the
     third rung of the quantization ladder (float → PQ 4-bit → BQ 1-bit):
@@ -2840,11 +2819,7 @@ def ann_bq_hamming_topk(spark, sf_dir: str, k: int = TOP_K) -> DataFrame:
     IVF routing the same way PQ does (``ann_ivfpq_topk``).
     """
     emb = ensure_parallelism(load_tables(spark, sf_dir).embeddings)
-    sig_lo, sig_hi = _bq_sig_exprs("embedding")
-    corpus = emb.select(
-        F.col("vec_id").alias("neighbor_id"), sig_lo, sig_hi
-    )
-    return _bq_serve(emb, corpus, k)
+    return _bq_serve(emb, _bq_table(emb), k)
 
 
 def _bq_serve(emb: DataFrame, corpus: DataFrame, k: int) -> DataFrame:
@@ -2855,15 +2830,10 @@ def _bq_serve(emb: DataFrame, corpus: DataFrame, k: int) -> DataFrame:
     convention). Query signatures always re-derive from the query
     vectors (queries arrive at search time; only the corpus table is a
     stored artifact)."""
-    sig_lo, sig_hi = _bq_sig_exprs("embedding")
-    queries = (
-        emb.where(F.col("vec_id") < N_QUERY_VECS)
-        .select(F.col("vec_id").alias("query_id"), sig_lo, sig_hi)
-        .select(
-            "query_id",
-            F.col("sig_lo").alias("q_lo"),
-            F.col("sig_hi").alias("q_hi"),
-        )
+    queries = _bq_table(emb.where(F.col("vec_id") < N_QUERY_VECS)).select(
+        F.col("neighbor_id").alias("query_id"),
+        F.col("sig_lo").alias("q_lo"),
+        F.col("sig_hi").alias("q_hi"),
     )
     ham = (
         F.bit_count(F.col("sig_lo").bitwiseXOR(F.col("q_lo")))
@@ -2889,11 +2859,7 @@ def ann_bq_store_roundtrip(spark, sf_dir: str, k: int = TOP_K) -> DataFrame:
     lossless end to end.
     """
     emb = ensure_parallelism(load_tables(spark, sf_dir).embeddings)
-    sig_lo, sig_hi = _bq_sig_exprs("embedding")
-    corpus = emb.select(
-        F.col("vec_id").alias("neighbor_id"), sig_lo, sig_hi
-    )
-    stored = store_and_read_back(corpus, "bq_signatures", sf_dir)
+    stored = store_and_read_back(_bq_table(emb), "bq_signatures", sf_dir)
     return _bq_serve(emb, stored, k)
 
 
@@ -2918,16 +2884,11 @@ def ann_bq_incremental_append(spark, sf_dir: str, k: int = TOP_K) -> DataFrame:
     sign pass, no corpus scan, no refit ever.
     """
     emb = ensure_parallelism(load_tables(spark, sf_dir).embeddings)
-    cut = rank_cut(spark, sf_dir, "vec_cut", emb.select("vec_id"))
-    sig_lo, sig_hi = _bq_sig_exprs("embedding")
-    base_sigs = emb.where(F.col("vec_id") <= F.lit(cut)).select(
-        F.col("vec_id").alias("neighbor_id"), sig_lo, sig_hi
+    sigs = store_base_with_delta(
+        _bq_table(emb), "bq_sigs_base", sf_dir, "neighbor_id",
+        _vec_cut(spark, sf_dir, emb),
     )
-    stored = store_and_read_back(base_sigs, "bq_sigs_base", sf_dir, cut)
-    delta_sigs = emb.where(F.col("vec_id") > F.lit(cut)).select(
-        F.col("vec_id").alias("neighbor_id"), sig_lo, sig_hi
-    )
-    return _bq_serve(emb, stored.unionByName(delta_sigs), k)
+    return _bq_serve(emb, sigs, k)
 
 
 # Constructing this query's DataFrame EXECUTES the base-signature build
@@ -2937,7 +2898,7 @@ ann_bq_incremental_append.side_effecting = True
 
 def ann_bq_deletion_repair(spark, sf_dir: str, k: int = TOP_K) -> DataFrame:
     """GDPR propagated through the BQ signature table: the deletion
-    list's vectors (vec_id % VEC_DELETION_MOD == 0) drop out of the
+    list's vectors (vec_id % DELETION_MOD == 0) drop out of the
     signature table and the query set. Signatures are PER-VECTOR, so the
     repair is a pure anti-join on the stored table — filtering stored
     signatures ≡ re-signing the surviving corpus — and the twin is the
@@ -2948,9 +2909,5 @@ def ann_bq_deletion_repair(spark, sf_dir: str, k: int = TOP_K) -> DataFrame:
     lifecycle × rung grid.
     """
     emb = ensure_parallelism(load_tables(spark, sf_dir).embeddings)
-    surviving = emb.where(F.col("vec_id") % VEC_DELETION_MOD != 0)
-    sig_lo, sig_hi = _bq_sig_exprs("embedding")
-    sigs = surviving.select(
-        F.col("vec_id").alias("neighbor_id"), sig_lo, sig_hi
-    )
-    return _bq_serve(surviving, sigs, k)
+    surviving = emb.where(_survives("vec_id"))
+    return _bq_serve(surviving, _bq_table(surviving), k)

@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 from aws_saas_etl_spark.catalog import ensure_parallelism, load_tables
 from aws_saas_etl_spark.functions import num as N
 from aws_saas_etl_spark.functions import text as T
-from aws_saas_etl_spark.sources.custom import store_and_read_back
+from aws_saas_etl_spark.sources.custom import store_and_read_back, store_base_with_delta
 
 TFIDF_TOP_K = 5
 
@@ -1333,9 +1333,7 @@ def span_gram_index_incremental(spark, sf_dir: str) -> DataFrame:
     # (r14, VERDICT r13 #4; one count + one sort/limit job per session,
     # not per construction)
     cut = rank_cut(spark, sf_dir, "span_gram_cut", base.select("doc_id"))
-    hist = grams.where(F.col("doc_id") <= F.lit(cut))
-    stored = store_and_read_back(hist, "span_gram_index", sf_dir, cut)
-    merged = stored.unionByName(grams.where(F.col("doc_id") > F.lit(cut)))
+    merged = store_base_with_delta(grams, "span_gram_index", sf_dir, "doc_id", cut)
     return _span_removal_serve(base, merged)
 
 

@@ -1123,7 +1123,7 @@ DOC_LEXICAL_PRUNED_SQL = _doc_lexical_pruned_sql()
 
 
 def _doc_lexical_deletion_sql() -> str:
-    from aws_saas_etl_spark.operators.curation import DELETION_MOD
+    from aws_saas_etl_spark.operators.similarity import DELETION_MOD
 
     return _doc_lexical_topk_sql(
         positive_only=True, serve_where=f"doc_id % {DELETION_MOD} <> 0"
@@ -1653,9 +1653,9 @@ def _ann_pq_deletion_sql() -> str:
     encoded corpus and query set are filtered to survivors — serving
     over the repaired code table provably equals encoding a corpus that
     never held the deleted vectors against the same codebooks."""
-    from aws_saas_etl_spark.operators.similarity import VEC_DELETION_MOD
+    from aws_saas_etl_spark.operators.similarity import DELETION_MOD
 
-    return _ann_pq_adc_sql(serve_where=f"vec_id % {VEC_DELETION_MOD} <> 0")
+    return _ann_pq_adc_sql(serve_where=f"vec_id % {DELETION_MOD} <> 0")
 
 
 ANN_PQ_DELETION_SQL = _ann_pq_deletion_sql()
@@ -1967,18 +1967,18 @@ ANN_SQ8_SQL = _ann_sq8_sql()
 
 
 def _ann_sq8_deletion_sql() -> str:
-    from aws_saas_etl_spark.operators.similarity import VEC_DELETION_MOD
+    from aws_saas_etl_spark.operators.similarity import DELETION_MOD
 
-    return _ann_sq8_sql(serve_where=f"vec_id % {VEC_DELETION_MOD} <> 0")
+    return _ann_sq8_sql(serve_where=f"vec_id % {DELETION_MOD} <> 0")
 
 
 ANN_SQ8_DELETION_SQL = _ann_sq8_deletion_sql()
 
 
 def _ann_bq_deletion_sql() -> str:
-    from aws_saas_etl_spark.operators.similarity import VEC_DELETION_MOD
+    from aws_saas_etl_spark.operators.similarity import DELETION_MOD
 
-    return _ann_bq_hamming_sql(serve_where=f"vec_id % {VEC_DELETION_MOD} <> 0")
+    return _ann_bq_hamming_sql(serve_where=f"vec_id % {DELETION_MOD} <> 0")
 
 
 ANN_BQ_DELETION_SQL = _ann_bq_deletion_sql()
@@ -2161,9 +2161,9 @@ def _ann_ivf_deletion_sql() -> str:
     """Twin of the vector-side deletion repair: fit over ALL vectors
     (the stored index predates the deletion batch), postings and query
     set filtered to survivors."""
-    from aws_saas_etl_spark.operators.similarity import VEC_DELETION_MOD
+    from aws_saas_etl_spark.operators.similarity import DELETION_MOD
 
-    return _ann_ivf_topk_sql(serve_where=f"vec_id % {VEC_DELETION_MOD} <> 0")
+    return _ann_ivf_topk_sql(serve_where=f"vec_id % {DELETION_MOD} <> 0")
 
 
 ANN_IVF_DELETION_SQL = _ann_ivf_deletion_sql()
@@ -4464,7 +4464,7 @@ def _deletion_manifest_sql() -> str:
     manifest pipeline over the corpus MINUS the deletion list — pair
     space, closure, verdicts, keep-best, split, shard and positions all
     re-derived from surviving documents only."""
-    from aws_saas_etl_spark.operators.curation import DELETION_MOD
+    from aws_saas_etl_spark.operators.similarity import DELETION_MOD
 
     return _training_manifest_sql(
         f"(SELECT * FROM documents WHERE doc_id % {DELETION_MOD} <> 0)"
@@ -4600,7 +4600,7 @@ def _cluster_deletion_repair_sql() -> str:
     """Twin of the deletion repair: the same recursive-CTE closure, the
     same keep-best rank over all members and over survivors, NULL new
     keeper when a cluster is fully deleted."""
-    from aws_saas_etl_spark.operators.curation import DELETION_MOD
+    from aws_saas_etl_spark.operators.similarity import DELETION_MOD
 
     return f"""
     WITH RECURSIVE

@@ -426,6 +426,20 @@ def store_and_read_back(df, kind: str, sf_dir: str, *tags):
     return read_manifest_parquet(df.sparkSession, path)
 
 
+def store_base_with_delta(rows, kind: str, sf_dir: str, id_col: str, cut: int):
+    """A per-row artifact kept as a stored base plus a live delta: the
+    rows with ``id_col <= cut`` go through ``store_and_read_back`` into
+    the store tagged with ``cut``, and the rows above the cut union onto
+    the stored read-back. ``cut`` comes from the caller's own id set
+    (``memo.rank_cut``); the result holds every row of ``rows``."""
+    from pyspark.sql import functions as F
+
+    stored = store_and_read_back(
+        rows.where(F.col(id_col) <= F.lit(cut)), kind, sf_dir, cut
+    )
+    return stored.unionByName(rows.where(F.col(id_col) > F.lit(cut)))
+
+
 def custom_sink_roundtrip(spark, sf_dir: str):
     """Registry query for the WRITER half: the synthetic source is pushed
     through the custom ``manifest_parquet`` sink (executor-side Arrow →

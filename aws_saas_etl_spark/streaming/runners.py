@@ -579,14 +579,12 @@ def stream_logreg_score_ingest(spark, sf_dir: str) -> DataFrame:
     # against the same nightly weights every batch consumer reads
     from aws_saas_etl_spark.operators.curation import (
         _LOGREG_ROWS,
-        _logreg_artifacts,
         _logreg_feat_sql,
         _logreg_p_sql,
+        _logreg_weight_sql,
     )
 
-    wrow = _logreg_artifacts(spark, sf_dir)[1].collect()[0]
-    w = {j: f"({float(wrow[f'w{j}'])!r}D)" for j in (1, 2, 3, 4)}
-
+    w = _logreg_weight_sql(spark, sf_dir)
     path = _staged_table_dir(spark, sf_dir, "documents")
     stream = _staged_stream(spark, path)
     p = _logreg_p_sql(w)

@@ -240,6 +240,74 @@ def test_operator_store_legs_go_through_the_store_helper():
     assert found == []
 
 
+def test_operators_never_union_a_store_read_back_by_hand():
+    """A stored base + live delta is ``store_base_with_delta``: no
+    operator function calls ``.unionByName`` on a ``store_and_read_back``
+    result, or passes one to it, itself."""
+    import ast
+    import glob
+
+    def is_store(node) -> bool:
+        return (
+            isinstance(node, ast.Call)
+            and getattr(node.func, "id", getattr(node.func, "attr", None))
+            == "store_and_read_back"
+        )
+
+    ops = os.path.join(os.path.dirname(custom.__file__), "..", "operators")
+    stores, found = 0, []
+    for path in sorted(glob.glob(os.path.join(ops, "*.py"))):
+        tree = ast.parse(open(path).read(), path)
+        for fn in ast.walk(tree):
+            if not isinstance(fn, ast.FunctionDef):
+                continue
+            stored = {
+                t.id
+                for node in ast.walk(fn)
+                if isinstance(node, ast.Assign) and is_store(node.value)
+                for t in node.targets
+                if isinstance(t, ast.Name)
+            }
+            stores += sum(is_store(node) for node in ast.walk(fn))
+            for call in ast.walk(fn):
+                if not (
+                    isinstance(call, ast.Call)
+                    and isinstance(call.func, ast.Attribute)
+                    and call.func.attr == "unionByName"
+                ):
+                    continue
+                for operand in (call.func.value, *call.args):
+                    if is_store(operand) or (
+                        isinstance(operand, ast.Name) and operand.id in stored
+                    ):
+                        found.append(f"{os.path.basename(path)}:{call.lineno}")
+    assert stores >= 5
+    assert found == []
+
+
+def test_store_base_with_delta_stores_the_base_and_returns_every_row(spark, tmp_path):
+    """The store holds exactly the rows with ``id <= cut``, in the dir
+    tagged with the cut; the result equals the input rows."""
+    rows = spark.range(20).selectExpr("id AS doc_id", "id * 3 AS v")
+    sf_dir = str(tmp_path)
+    dirs = [custom.proc_dir("t_base_delta", os.path.abspath(sf_dir), c) for c in (13, 4)]
+    try:
+        out = custom.store_base_with_delta(rows, "t_base_delta", sf_dir, "doc_id", 13)
+        assert sorted(map(tuple, out.collect())) == [(i, i * 3) for i in range(20)]
+        base = custom.read_manifest_parquet(spark, dirs[0])
+        assert sorted(r.doc_id for r in base.collect()) == list(range(14))
+        # another cut is another store: the first one keeps its base
+        out = custom.store_base_with_delta(rows, "t_base_delta", sf_dir, "doc_id", 4)
+        assert sorted(r.doc_id for r in out.collect()) == list(range(20))
+        base = custom.read_manifest_parquet(spark, dirs[1])
+        assert sorted(r.doc_id for r in base.collect()) == list(range(5))
+        base = custom.read_manifest_parquet(spark, dirs[0])
+        assert sorted(r.doc_id for r in base.collect()) == list(range(14))
+    finally:
+        for d in dirs:
+            shutil.rmtree(d, ignore_errors=True)
+
+
 #: Fit functions that return plans: the memo that stores a fit
 #: materializes it.
 _FITS = {"ivf_fit_cells", "_pq_fit_from_subs", "logreg_fit", "_logreg_feats", "bpe_merges"}

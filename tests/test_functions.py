@@ -486,10 +486,8 @@ def test_cluster_deletion_repair_invariants(spark):
     cluster is deleted; (3) keeper_changed is true iff the keeper was
     deleted (the keep-best rank of survivors is a suffix of the full
     rank, so an undeleted old keeper always stays keeper)."""
-    from aws_saas_etl_spark.operators.curation import (
-        DELETION_MOD,
-        cluster_deletion_repair,
-    )
+    from aws_saas_etl_spark.operators.curation import cluster_deletion_repair
+    from aws_saas_etl_spark.operators.similarity import DELETION_MOD
     from aws_saas_etl_spark.operators.dedup import content_clusters
     from tests.conftest import SF_SMOKE
 
@@ -580,7 +578,6 @@ def test_deletion_repair_manifest_equals_full_recompute(spark):
     reuses the batch pipeline core over a filtered docs frame."""
     from aws_saas_etl_spark.catalog import ensure_parallelism, load_tables
     from aws_saas_etl_spark.operators.curation import (
-        DELETION_MOD,
         _manifest_frame,
         training_manifest_deletion_repair,
     )
@@ -590,6 +587,7 @@ def test_deletion_repair_manifest_equals_full_recompute(spark):
         _verify_pairs,
         connected_components,
     )
+    from aws_saas_etl_spark.operators.similarity import DELETION_MOD
     from aws_saas_etl_spark.operators.textops import filter_verdicts
     from pyspark.sql import functions as F
     from tests.conftest import SF_SMOKE

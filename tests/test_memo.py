@@ -123,6 +123,36 @@ def test_rank_cut_matches_reference_and_builds_once(spark, tmp_path):
         assert cut() == distinct[n - n // denom - 1]
 
 
+def test_each_rank_cut_name_is_derived_at_one_site():
+    """``rank_cut``'s memo key holds the cut's name, not its ids frame,
+    so each name passed to ``rank_cut`` in the engine appears at exactly
+    one call site: two sites could derive one name from two id sets, and
+    whichever ran first would decide the cut for both."""
+    import ast
+    import glob
+    import os
+    from collections import Counter
+
+    import aws_saas_etl_spark
+
+    root = os.path.dirname(aws_saas_etl_spark.__file__)
+    sites = Counter()
+    for path in glob.glob(os.path.join(root, "**", "*.py"), recursive=True):
+        for call in ast.walk(ast.parse(open(path).read(), path)):
+            if not (
+                isinstance(call, ast.Call)
+                and getattr(call.func, "id", getattr(call.func, "attr", None))
+                == "rank_cut"
+            ):
+                continue
+            name = call.args[2] if len(call.args) > 2 else None
+            where = f"{os.path.basename(path)}:{call.lineno}"
+            assert isinstance(name, ast.Constant) and isinstance(name.value, str), where
+            sites[name.value] += 1
+    assert len(sites) >= 6
+    assert {k: n for k, n in sites.items() if n > 1} == {}
+
+
 def _stub_spark(app_id: str):
     """Just enough of a SparkSession for ``get_or_build``'s key."""
     from types import SimpleNamespace
@@ -194,6 +224,10 @@ def test_assignment_and_codes_are_keyed_by_their_fit(monkeypatch):
         def localCheckpoint(self):
             return self
 
+    monkeypatch.setattr(S, "_ivf_geometry", lambda spark, sf_dir, stale=False: (4, 2))
+    monkeypatch.setattr(
+        S, "_fit_rows", lambda spark, sf_dir, emb, stale: Frame("base") if stale else emb
+    )
     monkeypatch.setattr(S, "ivf_fit_cells", lambda emb, n: Frame(("ivf", emb.tag, n)))
     monkeypatch.setattr(S, "_assign_cells", lambda emb, c: Frame(("cells", emb.tag, c.tag)))
     monkeypatch.setattr(S, "pq_fit_codebooks", lambda emb: Frame(("pq", emb.tag)))
@@ -201,18 +235,18 @@ def test_assignment_and_codes_are_keyed_by_their_fit(monkeypatch):
     monkeypatch.setattr(S, "_pq_argmin", lambda subs, cb: Frame(("codes", subs.tag, cb.tag)))
     app = "app-fit-keys"
     spark = _stub_spark(app)
-    emb, base = Frame("emb"), Frame("base")
+    emb = Frame("emb")
     caches = (S._IVF_CACHE, S._ASSIGN_CACHE, S._PQ_CACHE, S._PQ_CODES_CACHE)
     try:
         for _ in range(2):  # cold, then warm
-            fresh = S._ivf_index_cached(spark, "/sf", emb, 4)
-            stale = S._ivf_index_cached(spark, "/sf/", emb, 4, base)
+            fresh = S._ivf_index_cached(spark, "/sf", emb)
+            stale = S._ivf_index_cached(spark, "/sf/", emb, stale=True)
             assert fresh[0].tag == ("ivf", "emb", 4)
             assert fresh[1].tag == ("cells", "emb", fresh[0].tag)
             assert stale[0].tag == ("ivf", "base", 4)
             assert stale[1].tag == ("cells", "emb", stale[0].tag)
             cb, codes = S._pq_index_cached(spark, "/sf", emb)
-            scb, scodes = S._pq_index_cached(spark, "/sf/../sf", emb, base)
+            scb, scodes = S._pq_index_cached(spark, "/sf/../sf", emb, stale=True)
             assert codes.tag == ("codes", "emb", cb.tag) == ("codes", "emb", ("pq", "emb"))
             assert scodes.tag == ("codes", "emb", scb.tag) == ("codes", "emb", ("pq", "base"))
 

@@ -417,8 +417,8 @@ def test_ivf_deletion_repair_forgets_deleted_vectors(spark):
 
     out = S.ann_ivf_deletion_repair(spark, SF_SMOKE).collect()
     assert out
-    assert all(r["neighbor_id"] % S.VEC_DELETION_MOD != 0 for r in out)
-    assert all(r["query_id"] % S.VEC_DELETION_MOD != 0 for r in out)
+    assert all(r["neighbor_id"] % S.DELETION_MOD != 0 for r in out)
+    assert all(r["query_id"] % S.DELETION_MOD != 0 for r in out)
     # a neighbor that replaced a deleted one: some rank is occupied by an
     # id absent from the unfiltered top-k at the same rank position
     full = {
@@ -524,8 +524,8 @@ def test_pq_deletion_repair_forgets_deleted_vectors(spark):
 
     out = S.ann_pq_deletion_repair(spark, SF_SMOKE).collect()
     assert out
-    assert all(r["neighbor_id"] % S.VEC_DELETION_MOD != 0 for r in out)
-    assert all(r["query_id"] % S.VEC_DELETION_MOD != 0 for r in out)
+    assert all(r["neighbor_id"] % S.DELETION_MOD != 0 for r in out)
+    assert all(r["query_id"] % S.DELETION_MOD != 0 for r in out)
     full = {
         (r["query_id"], r["rank"]): r["neighbor_id"]
         for r in S.ann_pq_adc_topk(spark, SF_SMOKE).collect()
@@ -1103,7 +1103,7 @@ def test_lexical_lifecycle_exactness(spark):
     doc from results and equal nothing less than the survivor rebuild
     (no deleted id on either side of any returned pair)."""
     from aws_saas_etl_spark.operators.similarity import (
-        VEC_DELETION_MOD,
+        DELETION_MOD,
         doc_lexical_deletion_repair,
         doc_lexical_incremental_append,
         doc_lexical_topk_indexed,
@@ -1119,8 +1119,8 @@ def test_lexical_lifecycle_exactness(spark):
     repaired = doc_lexical_deletion_repair(spark, SF_SMOKE).collect()
     assert repaired
     for r in repaired:
-        assert r.query_id % VEC_DELETION_MOD != 0
-        assert r.neighbor_id % VEC_DELETION_MOD != 0
+        assert r.query_id % DELETION_MOD != 0
+        assert r.neighbor_id % DELETION_MOD != 0
 
 
 def test_lexical_pruning_drops_hot_tokens(spark):
